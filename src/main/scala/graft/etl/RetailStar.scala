@@ -152,8 +152,7 @@ object RetailStar {
     * scan instead of re-deriving the 31-column cleaning pipeline per
     * query. */
   def servedStar(spark: SparkSession, dir: String): Star = {
-    val root = graft.ArtifactRoots.tagged("graft_star_v1", dir)
-    graft.ArtifactRoots.touchServed(root)
+    val root = graft.store.served("graft_star_v1", dir)
     // lazily shared single cleaning pass: evaluated only if some
     // table is missing, materialized once across the three builders
     // (and ONE shared dim-attribute dedup feeding both dims — r18,
@@ -161,58 +160,30 @@ object RetailStar {
     lazy val cleaned =
       RetailClean.clean(stagingFromTpch(spark, dir)).localCheckpoint()
     lazy val attrs = dimAttrs(cleaned)
-    def ensure(table: String)(build: => DataFrame): DataFrame =
-      graft.ext.Pipeline.ensureArtifactAtRoot(spark, root, table)(build)
     Star(
-      ensure("fact")(Warehouse.factSalesInline(cleaned)),
-      ensure("dim_product")(Warehouse.dimProduct(attrs)),
-      ensure("dim_shipping")(Warehouse.dimShipping(attrs)))
+      graft.store.table(spark, root, "fact")(Warehouse.factSalesInline(cleaned)),
+      graft.store.table(spark, root, "dim_product")(Warehouse.dimProduct(attrs)),
+      graft.store.table(spark, root, "dim_shipping")(Warehouse.dimShipping(attrs)))
   }
 
-  private val WarehouseSubstrateMarker = "_GRAFT_SUBSTRATE_OK"
-
   /** The STANDING month-partitioned warehouse every star maintenance
-    * verb starts from (q56/q57/q58/st25's shared scenario) — staged
-    * ONCE per corpus fingerprint and CLONED to each verb's scratch
-    * root (r17 optimization; the st21/st23 retract-substrate and
-    * s21/s22/s30 index-clone precedent at the star tier: the standing
-    * state is a pure function of the corpus, so re-running the
-    * 80-partition writeFactPartitioned per invocation re-derived the
-    * identical tree every time). The verbs mutate the CLONE; the
-    * substrate itself is never touched. Staleness is ArtifactRoots'
-    * corpus fingerprint; a crash before the marker rebuilds whole. */
+    * verb starts from (q56/q57/q58/st25's shared scenario) — a
+    * [[graft.store.tree]] staged ONCE per corpus fingerprint and CLONED
+    * to each verb's scratch root: the standing state is a pure function
+    * of the corpus, so re-running the 80-partition writeFactPartitioned
+    * per invocation would re-derive the identical tree every time. The
+    * verbs mutate the CLONE; the substrate itself is never touched. */
   private[graft] def warehouseSubstrate(spark: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val root = graft.ArtifactRoots.tagged("graft_starwh_v1", dir)
-    graft.ArtifactRoots.touchServed(root)
-    val marker = new Path(s"$root/$WarehouseSubstrateMarker")
-    val fs = FileSystem.get(marker.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      fs.delete(new Path(root), true) // crashed partial: rebuild whole
-      Warehouse.writeFactPartitioned(servedStar(spark, dir).fact,
-        s"$root/fact_by_month")
-      fs.create(marker, true).close()
+    val root = graft.store.tree(spark, "graft_starwh_v1", dir) { r =>
+      Warehouse.writeFactPartitioned(servedStar(spark, dir).fact, s"$r/fact_by_month")
     }
     s"$root/fact_by_month"
   }
 
-  /** Clone the standing warehouse into `target`, clearing any previous
-    * occupant — driver-routed FileUtil bytes (the tree is MB-sized at
-    * spec SFs; Similarity.cloneIndexTree's documented posture: at
-    * 100 TB the clone is a distcp-style parallel copy, or the verb
-    * runs directly on the serving root under operator exclusivity —
-    * the production posture q56/q57 document). */
+  /** Clone the standing warehouse into `target` ([[graft.store.cloneTree]]). */
   private[graft] def cloneWarehouse(spark: SparkSession, dir: String,
-                                    target: String): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new Path(warehouseSubstrate(spark, dir))
-    val dst = new Path(target)
-    val fs = FileSystem.get(dst.toUri, conf)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    if (!FileUtil.copy(fs, src, fs, dst, false, conf))
-      throw new java.io.IOException(s"warehouse clone failed: $src -> $dst")
-  }
+                                    target: String): Unit =
+    graft.store.cloneTree(spark, warehouseSubstrate(spark, dir), target)
 
   /** q27 — reference query 5.1 (README.md:208-214): total sales by
     * hour of day through DimTimeOfDay, joined on the seconds-first

@@ -98,57 +98,12 @@ object Pipeline {
   private[graft] def eArtifactRoot(dir: String): String =
     graft.ArtifactRoots.tagged(s"graft_e_artifacts_v$EArtifactVersion", dir)
 
-  /** Build `table` under the artifact root iff its _SUCCESS marker is
-    * absent, then return the frame READ FROM PARQUET (so every
-    * consumer serves from the artifact, never the build plan).
-    *
-    * The builder's schema is persisted beside the data (an
-    * underscore-prefixed sidecar, invisible to the parquet reader)
-    * and replayed into the read: a build whose frame is EMPTY — zero
-    * s5 survivors in a delta slice, a retired source covering the
-    * whole delta — writes only _SUCCESS with no data files, and a
-    * schema-less read of that tree would fail with "unable to infer
-    * schema" while the marker makes the failure sticky. With the
-    * sidecar an empty artifact serves as a well-typed empty frame,
-    * this run and every later one. */
+  /** Build `table` under the e-artifact root unless it is complete,
+    * then serve it from parquet ([[graft.store.table]]). */
   private[graft] def ensureArtifact(spark: SparkSession, dir: String, table: String,
                              partitionCols: Seq[String] = Nil)
                             (build: => DataFrame): DataFrame =
-    ensureArtifactAtRoot(spark, eArtifactRoot(dir), table, partitionCols)(build)
-
-  /** The marker+sidecar ensure discipline over an EXPLICIT artifact
-    * root — shared by the e-family DAG above and the kNN-graph
-    * artifact family (ext/Similarity's graft_knng root). */
-  private[graft] def ensureArtifactAtRoot(spark: SparkSession, root: String,
-                             table: String, partitionCols: Seq[String] = Nil)
-                            (build: => DataFrame): DataFrame = {
-    graft.ArtifactRoots.touchServed(root) // last-use heartbeat for the GC bound
-    val path = s"$root/$table"
-    val ok = new Path(s"$path/_SUCCESS")
-    val schemaFile = new Path(s"$path/_graft_schema.ddl")
-    val fs = FileSystem.get(ok.toUri, spark.sparkContext.hadoopConfiguration)
-    // completeness = marker AND sidecar: the sidecar is written after
-    // Spark's job commit places _SUCCESS, so a crash between the two
-    // must read as incomplete — marker-only serving would reinstate
-    // the sticky empty-tree failure for exactly the crashed build the
-    // sidecar exists to survive. (Every tree under the current
-    // EArtifactVersion root was written by sidecar-aware code, so
-    // sidecar-absent ⇒ crashed, never legacy.)
-    if (!fs.exists(ok) || !fs.exists(schemaFile)) {
-      val b = build
-      val w = b.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path)
-      val out = fs.create(schemaFile, true)
-      try out.write(b.schema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val in = fs.open(schemaFile)
-    val ddl =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)).parquet(path)
-  }
+    graft.store.table(spark, eArtifactRoot(dir), table, partitionCols)(build)
 
   /** The MinHash signature table — the md5-dominated corpus pass at
     * the root of the DAG, banded by the pairs build below and
@@ -1737,117 +1692,27 @@ object Pipeline {
   /** PRODUCTION CUTOVER — the verb the e15 docs named ("production
     * swaps the offboarded subtree over the live one with s22's
     * aside-first discipline") made executable: every layer of
-    * `$root/$fromTag/` is promoted over the live table under `root`,
-    * aside-first and RESUMABLE at every crash window. The protocol
-    * keeps each layer in exactly one of {offboard, live, aside} at
-    * all times (renames are same-filesystem moves; a layer's offboard
-    * tree is consumed only by its own promote rename), so a re-run
-    * after any crash completes forward: offboard present → promote it
-    * (aside the live copy first); offboard gone + live present →
-    * already promoted, skip; all three present is protocol-impossible
-    * and throws rather than guessing which copy is authoritative.
-    * Cleanup (aside + the emptied generation dir) happens only after
-    * every layer landed. Exclusivity is s22's posture: the cutover is
-    * an operator action on the serving root — readers must not race
-    * it. Note the promoted bins tree is epoch-partitioned (e10's
-    * shape): production readers follow it the way e10's combined read
-    * does; the flat pre-offboard bins table leaves with the old
-    * generation. */
+    * `$root/$fromTag/` is promoted over the live table under `root` by
+    * [[graft.store.cutover]], RESUMABLE at every crash window; the
+    * emptied generation dir is removed with the asides. The
+    * generation DIR outlives every layer promote, so a missing one
+    * without the done marker means it was never built (or the tag is
+    * mistyped) — unlike [[modelCutover]], a leftover aside is NOT
+    * accepted as a tail witness here, or a manually mangled tree would
+    * defensively restore the OLD generation and then stamp it done.
+    * Each promoted layer is sealed as a complete table: the bins
+    * generation keeps its markers INSIDE epoch subdirs, and the
+    * promoted manifest keeps the epoch-order checksums. Production
+    * readers follow the epoch-partitioned bins tree the way e10's
+    * combined read does; the flat pre-offboard bins table leaves with
+    * the old generation. */
   private[graft] def cutoverSubtree(spark: SparkSession, root: String,
                                     fromTag: String): Unit = {
-    val rp = new Path(root)
-    val fs = FileSystem.get(rp.toUri, spark.sparkContext.hadoopConfiguration)
-    val done = new Path(s"$root/cutover_done_$fromTag")
-    val aside = new Path(s"$root/cutover_old_$fromTag")
-    val gen = new Path(s"$root/$fromTag")
-    // a MISSING generation is ambiguous without a witness: either this
-    // cutover already completed (the generation dir is consumed) or it
-    // was never built / the tag is a typo — and "report success, serve
-    // the unretracted tree" is the one wrong answer. The done marker
-    // disambiguates. The generation DIR itself outlives every layer
-    // promote (only the post-marker cleanup removes it), so there is
-    // no marker-less tail state to resume from here — the marker is
-    // written BEFORE the cleanup below precisely so a crash during
-    // cleanup reads as complete, and the completed-path early return
-    // finishes any cleanup that crash skipped. (modelCutover differs:
-    // its "generation" is the refreshed tables themselves, consumed by
-    // the promotes, so IT accepts a leftover aside as the tail
-    // witness; accepting one here would let a manually-mangled tree
-    // defensively restore the OLD generation and then stamp it done.)
-    if (!fs.exists(gen)) {
-      if (fs.exists(done)) { fs.delete(aside, true); return }
-      throw new java.io.IOException(
-        s"cutover: no generation at $root/$fromTag and no completion marker — " +
-          "nothing to promote (unbuilt generation or mistyped tag?)")
-    }
-    fs.delete(done, false) // a re-cutover of a REBUILT generation starts fresh
-    fs.mkdirs(aside)
-    DagLayers.foreach { layer =>
-      promoteLayer(spark, fs, new Path(s"$root/$fromTag/$layer"),
-        new Path(s"$root/$layer"), new Path(aside, layer))
-    }
-    fs.create(done, true).close() // the completion witness, BEFORE cleanup
-    fs.delete(aside, true)
-    fs.delete(gen, true) // the emptied generation
-    ()
-  }
-
-  /** ONE layer's aside-first promotion — the shared kernel of the
-    * e18 offboard cutover and the e19 model cutover: offboard present
-    * → promote it (aside the live copy first; a stale aside copy from
-    * a crashed run superseded by this re-cutover is cleared — see the
-    * three-way note below); offboard gone + live present → already
-    * promoted, skip; both gone + aside present → defensive restore.
-    * Ends by witnessing the promoted layer's root completeness
-    * (marker + schema sidecar — the bins generation keeps its
-    * markers INSIDE epoch subdirs, and a promoted tree without a root
-    * witness would read as incomplete to the next ensureArtifact
-    * consumer, whose overwrite-rebuild would FLATTEN the epoch tree
-    * while the promoted manifest keeps the epoch-order checksums). */
-  private def promoteLayer(spark: SparkSession, fs: FileSystem,
-                           off: Path, live: Path, old: Path): Unit = {
-    val layer = live.getName
-    if (fs.exists(off)) {
-      if (fs.exists(live)) {
-        // live AND aside AND offboard is REACHABLE, not impossible:
-        // a run that crashed after promoting this layer leaves its
-        // pre-promotion live copy in the aside slot (aside is only
-        // cleaned after ALL layers land), and if the operator then
-        // REBUILDS the offboard generation and re-runs, all three
-        // are present. The aside copy is safe to clear because
-        // live+aside together pin live's identity: aside(L) only
-        // comes into existence by renaming live away, and live(L)
-        // only reappears via a promote — so live IS a previously
-        // promoted generation and the aside copy is two generations
-        // old, exactly what this fresh re-cutover (the done-marker
-        // delete above) supersedes.
-        if (fs.exists(old) && !fs.delete(old, true))
-          throw new java.io.IOException(
-            s"cutover: could not clear stale aside copy of $layer " +
-              "(leftover of a crashed run superseded by this re-cutover)")
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"cutover aside failed: $layer")
-      }
-      if (!fs.rename(off, live))
-        throw new java.io.IOException(s"cutover promote failed: $layer")
-    } else if (!fs.exists(live) && fs.exists(old)) {
-      // defensive restore: unreachable under the protocol (promote's
-      // rename is atomic), kept so a manually-mangled tree heals
-      // toward the old world rather than serving a missing layer
-      if (!fs.rename(old, live))
-        throw new java.io.IOException(s"cutover restore failed: $layer")
-    } // else: already promoted by a previous attempt — skip
-    if (fs.exists(live)) {
-      val ok = new Path(live, "_SUCCESS")
-      val sc = new Path(live, "_graft_schema.ddl")
-      if (!fs.exists(ok)) fs.create(ok, true).close()
-      if (!fs.exists(sc)) {
-        val ddl = spark.read.parquet(live.toString).schema.toDDL
-        val out = fs.create(sc, true)
-        try out.write(ddl.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
+    val aside = s"$root/cutover_old_$fromTag"
+    graft.store.cutover(spark, new Path(s"$root/cutover_done_$fromTag"), new Path(aside),
+      DagLayers.map(l => graft.store.Layer(new Path(s"$root/$fromTag/$l"),
+        new Path(s"$root/$l"), new Path(s"$aside/$l"))),
+      generation = Some(new Path(s"$root/$fromTag")), tables = true)
   }
 
   /** E18 — the cutover run for real and served: both generations are
@@ -1879,19 +1744,8 @@ object Pipeline {
     offboardPairs(spark, dir)
     offboardManifest(spark, dir)
     manifestArtifact(spark, dir) // live chain is linear down to signatures
-    val src = eArtifactRoot(dir)
     val scratch = graft.ArtifactRoots.tagged("graft_e18_cutover", dir)
-    val sp = new Path(scratch)
-    val fs = FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sp)) fs.delete(sp, true)
-    fs.mkdirs(sp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    DagLayers.foreach { layer =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/$layer"),
-        fs, new Path(s"$scratch/$layer"), false, conf)
-    }
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/$offboardTag"),
-      fs, new Path(s"$scratch/$offboardTag"), false, conf)
+    graft.store.cloneTree(spark, eArtifactRoot(dir), scratch, DagLayers :+ offboardTag)
     scratch
   }
 
@@ -1900,67 +1754,39 @@ object Pipeline {
 
   /** PRODUCTION MODEL CUTOVER — the verb t30's retrain decision
     * implies, executable: the REFRESHED model generation (the
-    * root-level dsir_perdoc/dsir_cut full-retrain tables) is promoted
-    * over the FROZEN root (the model_frozen subtree) with the same aside-first,
-    * crash-resumable discipline as e18 ([[promoteLayer]] — offboard
-    * position is played by the refreshed tables, which the promotion
-    * CONSUMES; the next ensureArtifact of the refreshed generation
+    * root-level tables of `layers`) is promoted over the FROZEN root
+    * (the model_frozen subtree) by [[graft.store.cutover]], each layer
+    * sealed as a complete table. The promotion CONSUMES the refreshed
+    * tables; the next ensureArtifact of the refreshed generation
     * rebuilds it from the corpus, which is exactly the "models forget
     * on the retrain cadence" law: post-cutover, frozen ≡ the retrain,
-    * and the next delta epoch accumulates against it). A re-run after
-    * any crash completes forward; a re-cutover of a REBUILT refreshed
-    * generation starts fresh (done-marker delete); exclusivity is
-    * e18's (operator action on the serving root — readers must not
-    * race it). */
+    * and the next delta epoch accumulates against it. With no
+    * generation dir to outlive the promotes, a leftover aside is the
+    * tail-crash witness and completes forward. Exclusivity is e18's
+    * (operator action on the serving root — readers must not race
+    * it).
+    *
+    * The done marker and aside dir are KEYED BY LAYER SET: on a shared
+    * serving root the DSIR and BPE cutovers are independent verbs, and
+    * a shared marker would let one verb's crashed-tail state (aside
+    * present, marker unwritten) be read by the OTHER verb's "nothing
+    * to promote" guard — which would then no-op-promote, write a done
+    * marker for a cutover that never ran, and delete the first verb's
+    * rollback copies. The two shipped sets keep their names (markers
+    * already on serving roots must keep resolving); any other set gets
+    * a content-keyed namespace (String.hashCode is JVM-spec-stable,
+    * masked to unsigned hex so the dir name is filesystem-clean). */
   private[graft] def modelCutover(spark: SparkSession, root: String,
                                   layers: Seq[String] = ModelLayers): Unit = {
-    val rp = new Path(root)
-    val fs = FileSystem.get(rp.toUri, spark.sparkContext.hadoopConfiguration)
-    // the done marker and aside dir are KEYED BY LAYER SET (r15
-    // ADVICE): on a shared serving root the DSIR and BPE cutovers are
-    // independent verbs, and a shared marker let one verb's
-    // crashed-tail state (aside present, marker unwritten) be read by
-    // the OTHER verb's "nothing to promote" guard — which would then
-    // no-op-promote, write a done marker for a cutover that never ran,
-    // and delete the first verb's aside rollback copies. Keying by the
-    // layer set makes each verb's crash state invisible to the other.
-    // the tag derives from the layer set's CONTENT (r15 ADVICE): the
-    // two shipped sets keep their historical names (markers already on
-    // serving roots must keep resolving), and any FUTURE layer set
-    // gets its own content-keyed namespace instead of silently
-    // aliasing the DSIR verb's crash state — String.hashCode is
-    // JVM-spec-stable, masked to an unsigned hex so the dir name is
-    // filesystem-clean
     val tag =
       if (layers == BpeModelLayers) "bpe"
       else if (layers == ModelLayers) "model"
       else f"ls_${layers.mkString("\u0000").hashCode & 0xffffffffL}%08x"
-    val done = new Path(s"$root/${tag}_cutover_done")
-    val aside = new Path(s"$root/${tag}_cutover_old")
-    // same resume discipline as cutoverSubtree: the refreshed tables
-    // play the generation's role, and since there is no generation
-    // DIR to outlive the per-layer renames, the tail crash window
-    // (every layer consumed, marker not yet written) is recognized by
-    // the leftover aside dir and completes forward; the marker is
-    // written BEFORE the aside cleanup so a crash during cleanup
-    // reads as complete.
-    if (!layers.exists(l => fs.exists(new Path(s"$root/$l")))) {
-      if (fs.exists(done)) { fs.delete(aside, true); return }
-      if (!fs.exists(aside))
-        throw new java.io.IOException(
-          s"model cutover: no refreshed generation under $root and no " +
-            "completion marker — nothing to promote")
-    } else {
-      fs.delete(done, false) // a rebuilt refreshed generation starts fresh
-    }
-    fs.mkdirs(aside)
-    layers.foreach { layer =>
-      promoteLayer(spark, fs, new Path(s"$root/$layer"),
-        new Path(s"$root/model_frozen/$layer"), new Path(aside, layer))
-    }
-    fs.create(done, true).close() // the completion witness, BEFORE cleanup
-    fs.delete(aside, true)
-    ()
+    val aside = s"$root/${tag}_cutover_old"
+    graft.store.cutover(spark, new Path(s"$root/${tag}_cutover_done"), new Path(aside),
+      layers.map(l => graft.store.Layer(new Path(s"$root/$l"),
+        new Path(s"$root/model_frozen/$l"), new Path(s"$aside/$l"))),
+      tables = true)
   }
 
   /** The tokenizer model layer's two tables — the e20 cutover's swap
@@ -1968,29 +1794,28 @@ object Pipeline {
     * per-layer promotion over it). */
   private[graft] val BpeModelLayers = Seq("bpe_merges", "bpe_encoded_words")
 
-  /** Clone BOTH model generations into the e19 scratch root (rebuilt
-    * per invocation — the gate must not mutate the shared tree the
-    * other entries serve from; production runs [[modelCutover]] on
-    * the serving root itself). */
+  /** Clone BOTH generations of a model layer set — each layer's
+    * root-level table and its model_frozen twin, forced first — into
+    * the scratch root under `prefix` (rebuilt per invocation: the gate
+    * must not mutate the shared tree the other entries serve from;
+    * production runs [[modelCutover]] on the serving root itself). */
   private[graft] def stageModelClone(spark: SparkSession, dir: String,
+                                     layers: Seq[String] = ModelLayers,
                                      prefix: String = "graft_e19_model"): String = {
-    dsirPerDocArtifact(spark, dir)
-    dsirCutArtifact(spark, dir)
-    frozenDsirPerDocArtifact(spark, dir)
-    frozenDsirCutArtifact(spark, dir)
-    val src = eArtifactRoot(dir)
-    val scratch = graft.ArtifactRoots.tagged(prefix, dir)
-    val sp = new Path(scratch)
-    val fs = FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sp)) fs.delete(sp, true)
-    fs.mkdirs(sp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    ModelLayers.foreach { layer =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/$layer"),
-        fs, new Path(s"$scratch/$layer"), false, conf)
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/model_frozen/$layer"),
-        fs, new Path(s"$scratch/model_frozen/$layer"), false, conf)
+    if (layers == BpeModelLayers) {
+      bpeMergesArtifact(spark, dir)
+      bpeEncodedWordsArtifact(spark, dir)
+      frozenBpeMergesArtifact(spark, dir)
+      frozenBpeEncodedWordsArtifact(spark, dir)
+    } else {
+      dsirPerDocArtifact(spark, dir)
+      dsirCutArtifact(spark, dir)
+      frozenDsirPerDocArtifact(spark, dir)
+      frozenDsirCutArtifact(spark, dir)
     }
+    val scratch = graft.ArtifactRoots.tagged(prefix, dir)
+    graft.store.cloneTree(spark, eArtifactRoot(dir), scratch,
+      layers ++ layers.map(l => s"model_frozen/$l"))
     scratch
   }
 
@@ -2064,32 +1889,6 @@ object Pipeline {
          ORDER BY source"""
   }
 
-  /** Clone BOTH tokenizer generations into the e20 scratch root
-    * (e19's gate discipline at the tokenizer layer — rebuilt per
-    * invocation; production runs [[modelCutover]] with
-    * [[BpeModelLayers]] on the serving root itself). */
-  private[graft] def stageBpeModelClone(spark: SparkSession, dir: String,
-                                        prefix: String = "graft_e20_model"): String = {
-    bpeMergesArtifact(spark, dir)
-    bpeEncodedWordsArtifact(spark, dir)
-    frozenBpeMergesArtifact(spark, dir)
-    frozenBpeEncodedWordsArtifact(spark, dir)
-    val src = eArtifactRoot(dir)
-    val scratch = graft.ArtifactRoots.tagged(prefix, dir)
-    val sp = new Path(scratch)
-    val fs = FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sp)) fs.delete(sp, true)
-    fs.mkdirs(sp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    BpeModelLayers.foreach { layer =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/$layer"),
-        fs, new Path(s"$scratch/$layer"), false, conf)
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$src/model_frozen/$layer"),
-        fs, new Path(s"$scratch/model_frozen/$layer"), false, conf)
-    }
-    scratch
-  }
-
   /** E20 — the drift-gated TOKENIZER-GENERATION CUTOVER run for real
     * and served (e19's verb at the tokenizer layer — t31 measures,
     * this entry executes): both tokenizer generations are forced and
@@ -2135,7 +1934,7 @@ object Pipeline {
     // FIRED: stage the clone, execute the swap, and re-census FROM
     // THE POST-VERB frozen tree — the swap itself must be witnessed
     // by the served rows, not inferred from the decision
-    val scratch = stageBpeModelClone(spark, dir)
+    val scratch = stageModelClone(spark, dir, BpeModelLayers, "graft_e20_model")
     modelCutover(spark, scratch, BpeModelLayers)
     val encPost = spark.read.parquet(s"$scratch/model_frozen/bpe_encoded_words")
       .select(col("word"), size(col("toks")).cast("long").as("ptok1"))
@@ -2357,7 +2156,7 @@ object Pipeline {
                             fired: Boolean): Long = {
     val (perdoc, cut) =
       if (fired) {
-        val scratch = stageModelClone(spark, dir, "graft_e22_model")
+        val scratch = stageModelClone(spark, dir, prefix = "graft_e22_model")
         modelCutover(spark, scratch)
         (spark.read.parquet(s"$scratch/model_frozen/dsir_perdoc"),
           spark.read.parquet(s"$scratch/model_frozen/dsir_cut"))
@@ -2376,7 +2175,7 @@ object Pipeline {
     * rows). */
   private[graft] def e22BpeFiredServed(spark: SparkSession, dir: String,
                                 deltaChars: Map[String, Long]): Long = {
-    val scratch = stageBpeModelClone(spark, dir, "graft_e22_bpe")
+    val scratch = stageModelClone(spark, dir, BpeModelLayers, "graft_e22_bpe")
     modelCutover(spark, scratch, BpeModelLayers)
     val encPost = spark.read.parquet(s"$scratch/model_frozen/bpe_encoded_words")
       .select(col("word"), size(col("toks")).cast("long").as("ptok1"))

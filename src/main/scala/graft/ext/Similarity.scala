@@ -88,10 +88,10 @@ object Similarity {
   // version audit passes.
   // ---------------------------------------------------------------
 
-  private def ivfqRoot(dir: String): String = servedIdxDir("graft_ivfq_v1", dir)
+  private def ivfqRoot(dir: String): String = graft.store.served("graft_ivfq_v1", dir)
   private def ensureIvfq(spark: SparkSession, dir: String, table: String)
                         (build: => DataFrame): DataFrame =
-    Pipeline.ensureArtifactAtRoot(spark, ivfqRoot(dir), table)(build)
+    graft.store.table(spark, ivfqRoot(dir), table)(build)
 
   /** s1's exact cosine top-k PERSISTED (`exact_cos`) — the grading
     * truth of the cosine-metric family. */
@@ -1170,19 +1170,9 @@ object Similarity {
   /** One FIXED index location per (JVM, sf dir): repeated gate
     * invocations overwrite in place (the build's overwrite clears the
     * codes table before the append re-adds the held-out slice), so
-    * Verify/Bench loops no longer accumulate unbounded /tmp disk —
-    * one index per scale factor, ever. */
-  /** Resolve a persisted-index root AND advertise it as actively
-    * served (heartbeat for the 4×-grace GC bound — every lifecycle
-    * verb resolves its root through here, so a session serving an
-    * index keeps its tree's last-use mtime fresh). */
-  private def servedIdxDir(prefix: String, dir: String): String = {
-    val r = graft.ArtifactRoots.tagged(prefix, dir)
-    graft.ArtifactRoots.touchServed(r)
-    r
-  }
-
-  private def s13IdxDir(dir: String): String = servedIdxDir("graft_s13_idx", dir)
+    * Verify/Bench loops never accumulate unbounded /tmp disk — one
+    * index per scale factor, ever. */
+  private def s13IdxDir(dir: String): String = graft.store.served("graft_s13_idx", dir)
 
   def s13PersistedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val idxDir = s13IdxDir(dir)
@@ -1209,55 +1199,27 @@ object Similarity {
   //
   // Two tiers so training is paid once: `base` = base-trained model
   // + base codes (st17's starting state); `full` = base cloned +
-  // the frozen-model append slice (everyone else's). Staleness is
-  // ArtifactRoots' corpus fingerprint (a regenerated corpus re-keys
-  // the root); a crash before the marker rebuilds from scratch on
-  // the next ensure (buildIvfPqIndex overwrites).
+  // the frozen-model append slice (everyone else's). Each tier is a
+  // [[graft.store.tree]]: staleness is ArtifactRoots' corpus
+  // fingerprint, and a crash before the marker rebuilds whole.
   // ---------------------------------------------------------------
 
-  private val SubstrateMarker = "_GRAFT_SUBSTRATE_OK"
-
-  /** Clone a persisted index tree's three tables (model + codes)
-    * into `dstRoot`, clearing any previous occupant. The copy is
-    * driver-routed FileUtil bytes — gate-scale posture (the trees
-    * are MB-sized parquet at spec SFs; s29/e19's precedent); at
-    * 100 TB the clone is a distcp-style parallel copy, or the verb
-    * runs directly on the serving root under operator exclusivity
-    * (the production posture the s30/e18 entries document). Sidecar
-    * state (markers, heartbeats, deletes/codes_gen ledgers) is NOT
-    * copied — a clone starts as a clean, sealed generation. */
-  private[graft] def cloneIndexTree(spark: SparkSession, srcRoot: String,
-                                    dstRoot: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(dstRoot)
-    val fs = FileSystem.get(dst.toUri, conf)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.mkdirs(dst)
-    Seq("coarse_centroids", "pq_codebooks", "codes").foreach { t =>
-      val s = new Path(s"$srcRoot/$t")
-      val sfs = FileSystem.get(s.toUri, conf)
-      if (!org.apache.hadoop.fs.FileUtil.copy(sfs, s, fs, new Path(dst, t),
-          false, conf))
-        throw new java.io.IOException(s"substrate clone failed: $s -> $dstRoot/$t")
-    }
-  }
+  /** The persisted index tree's three tables (model + codes) — what a
+    * clone copies. Sidecar state (markers, heartbeats, deletes/codes_gen
+    * ledgers) is NOT copied: a clone starts as a clean, sealed
+    * generation. */
+  private[graft] val IndexTables = Seq("coarse_centroids", "pq_codebooks", "codes")
 
   /** The BASE substrate: model trained on the ~90% base slice, base
-    * slice coded — the state a streaming ingest starts from. */
+    * slice coded — the state a streaming ingest starts from. The
+    * _v1 suffix is the root's builder-semantics re-key trigger (the
+    * graft_ivfq_v1/graft_knng_v3 convention); the sweep retires the
+    * pre-suffix generation's disk. */
   private[graft] def baseSubstrate(spark: SparkSession, dir: String): String = {
-    // _v1-suffixed like graft_ivfq_v1/graft_knng_v3 (r15 ADVICE): a
-    // builder-semantics change re-keys by bumping the suffix, the
-    // same named trigger every other versioned root has; the sweep
-    // retires the pre-suffix generation's disk (r16 review)
     graft.ArtifactRoots.retireLegacy("graft_ivfsub_base", "graft_ivfsub_base_v1")
-    val root = servedIdxDir("graft_ivfsub_base_v1", dir)
-    val done = new Path(s"$root/$SubstrateMarker")
-    val fs = FileSystem.get(done.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) {
+    graft.store.tree(spark, "graft_ivfsub_base_v1", dir) { root =>
       buildIvfPqIndex(spark, dir, root, s13BasePred, s13BasePred)
-      fs.create(done, true).close()
     }
-    root
   }
 
   /** The DRIFTED substrate: the base substrate plus the held-out
@@ -1267,15 +1229,10 @@ object Similarity {
     * (training paid once across both tiers) and appending. */
   private[graft] def driftedSubstrate(spark: SparkSession, dir: String): String = {
     graft.ArtifactRoots.retireLegacy("graft_ivfsub_full", "graft_ivfsub_full_v1")
-    val root = servedIdxDir("graft_ivfsub_full_v1", dir)
-    val done = new Path(s"$root/$SubstrateMarker")
-    val fs = FileSystem.get(done.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) {
-      cloneIndexTree(spark, baseSubstrate(spark, dir), root)
+    graft.store.tree(spark, "graft_ivfsub_full_v1", dir) { root =>
+      graft.store.cloneTree(spark, baseSubstrate(spark, dir), root, IndexTables)
       appendIvfPqIndex(spark, dir, root, !s13BasePred)
-      fs.create(done, true).close()
     }
-    root
   }
 
   /** S20 — approximate kNN-GRAPH construction: every vector's top-k
@@ -1462,7 +1419,7 @@ object Similarity {
   // v3: exact_q + graph_compacted join the tree; the compaction kernel
   // includes the localized descent hop (a v2 tree without it must never
   // serve a compacted table built by the hop-less kernel)
-  private def knngRoot(dir: String): String = servedIdxDir("graft_knng_v3", dir)
+  private def knngRoot(dir: String): String = graft.store.served("graft_knng_v3", dir)
 
   /** Round14Spec seam: the resolved knng artifact root (the delete
     * verbs are root-addressed). */
@@ -1470,7 +1427,7 @@ object Similarity {
 
   private def ensureKnng(spark: SparkSession, dir: String, table: String)
                         (build: => DataFrame): DataFrame =
-    Pipeline.ensureArtifactAtRoot(spark, knngRoot(dir), table)(build)
+    graft.store.table(spark, knngRoot(dir), table)(build)
 
   /** Arrival slice for the graph-append lifecycle — the same held-out
     * digit as s13's append (queries vec_id < QueryCount stay base). */
@@ -1888,24 +1845,6 @@ object Similarity {
         quantVecs(spark, dir).cache())
     }
 
-  /** CRASH RECOVERY for the compaction swap: a crash between
-    * "live renamed aside" and "next renamed in" leaves the live slot
-    * empty — without this, the ensure would REBUILD from the builder
-    * (the gate-slice compaction of graph_full), silently discarding
-    * every later delete batch the aside copy had folded. Restore the
-    * aside when the live slot is empty; clear a stale aside when the
-    * live slot is present (the rename-in happens only after the next
-    * tree is complete, so live-present means the swap finished). */
-  private def recoverKnngCompactSwap(fs: FileSystem, live: Path): Unit = {
-    val aside = new Path(live.toString + ".old")
-    if (fs.exists(aside)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(aside, live))
-          throw new java.io.IOException(s"compact-swap recovery failed: $aside")
-      } else fs.delete(aside, true)
-    }
-  }
-
   /** Apply any PENDING tombstone ledger to the compacted artifact —
     * s18's compaction discipline at the graph tier: the kernel runs
     * against the CURRENT compacted table (deletion composes: ids the
@@ -1918,11 +1857,17 @@ object Similarity {
   private[graft] def compactKnnGraphDeletes(spark: SparkSession, dir: String): Unit = {
     val root = knngRoot(dir)
     val live = new Path(s"$root/graph_compacted")
+    val next = new Path(live.toString + ".next")
+    val aside = new Path(live.toString + ".old")
     val ledger = new Path(s"$root/graph_deletes")
     val fs = FileSystem.get(live.toUri, spark.sparkContext.hadoopConfiguration)
-    recoverKnngCompactSwap(fs, live)
+    // recover BEFORE the ensure: a crash mid-swap leaves the live slot
+    // empty, and the ensure would then REBUILD from the builder (the
+    // gate-slice compaction of graph_full), silently discarding every
+    // later delete batch the aside copy had folded
+    graft.store.recover(fs, live, next, aside)
     if (!fs.exists(ledger)) return
-    val comp = knngCompactedGraph(spark, dir) // ensure (recovery above ran)
+    val comp = knngCompactedGraph(spark, dir)
     val del = spark.read.parquet(ledger.toString).select(col("vec_id")).distinct()
     // already-applied ids (a crash between swap and ledger clear, or
     // the builder's own first batch) leave no endpoint behind — skip
@@ -1934,26 +1879,11 @@ object Similarity {
         .select(col("vec_id")))
       .limit(1).count()
     if (offenders > 0) {
-      val next = new Path(live.toString + ".next")
-      fs.delete(next, true)
-      knngCompactKernel(comp, del, quantVecs(spark, dir).cache())
-        .write.mode("overwrite").parquet(next.toString)
-      // carry the schema sidecar (schema unchanged by the fold) so the
-      // ensure's marker+sidecar completeness check keeps serving the
+      // written as a complete table, so the ensure keeps serving the
       // swapped tree instead of rebuilding
-      val sc = new Path(live, "_graft_schema.ddl")
-      org.apache.hadoop.fs.FileUtil.copy(fs, sc, fs,
-        new Path(next, "_graft_schema.ddl"), false,
-        spark.sparkContext.hadoopConfiguration)
-      val aside = new Path(live.toString + ".old")
-      fs.delete(aside, true)
-      if (!fs.rename(live, aside))
-        throw new java.io.IOException(s"compact swap failed: $live aside")
-      if (!fs.rename(next, live)) {
-        fs.rename(aside, live)
-        throw new java.io.IOException(s"compact swap failed: $next -> $live")
-      }
-      fs.delete(aside, true)
+      graft.store.writeTable(
+        knngCompactKernel(comp, del, quantVecs(spark, dir).cache()), next.toString)
+      graft.store.swap(fs, live, next, aside)
     }
     fs.delete(ledger, true) // tombstones applied
   }
@@ -2212,8 +2142,7 @@ object Similarity {
     knngExactTruth(spark, dir) // the drift grade's truth, ensured up front
     val scratch = graft.ArtifactRoots.tagged(prefix, dir)
     val sp = new Path(scratch)
-    val fs = FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sp)) fs.delete(sp, true)
+    graft.store.clear(FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration), sp)
     app.select(col("vec_id"), col("nb_id").as("neighbor_id"), col("d2_fp"),
         col("rank"))
       .write.mode("overwrite").parquet(s"$scratch/serve")
@@ -2224,53 +2153,14 @@ object Similarity {
 
   /** PRODUCTION GRAPH-GENERATION CUTOVER — the verb s27's trigger
     * implies, executable: promote the `refreshed` graph generation
-    * over the `serve` slot under `root`, aside-first and
-    * crash-resumable (modelCutover's discipline at one layer: the
-    * promotion CONSUMES the refreshed table; the done marker is
-    * written BEFORE aside cleanup so a crash during cleanup reads as
-    * complete and every earlier window re-runs forward; a re-cutover
-    * of a REBUILT refreshed generation starts fresh via the marker
-    * delete; exclusivity is the operator's — readers must not race
-    * the verb). */
+    * over the `serve` slot under `root` — [[graft.store.cutover]] at
+    * one layer, crash-resumable, the promotion CONSUMING the refreshed
+    * table. Exclusivity is the operator's: readers must not race the
+    * verb. */
   private[graft] def graphGenerationCutover(spark: SparkSession, root: String): Unit = {
-    val fs = FileSystem.get(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val refreshed = new Path(s"$root/refreshed")
-    val live = new Path(s"$root/serve")
-    val done = new Path(s"$root/graph_cutover_done")
     val old = new Path(s"$root/graph_cutover_old")
-    if (!fs.exists(refreshed)) {
-      if (fs.exists(done)) { fs.delete(old, true); return }
-      // tail-crash window (refreshed consumed, marker unwritten) is
-      // recognized by the leftover aside and completes forward below;
-      // anything else is an operator error — nothing to promote
-      if (!fs.exists(old))
-        throw new java.io.IOException(
-          s"graph cutover: no refreshed generation under $root and no " +
-            "completion marker — nothing to promote")
-    } else {
-      fs.delete(done, false) // a rebuilt refreshed generation starts fresh
-    }
-    if (fs.exists(refreshed)) {
-      if (fs.exists(live)) {
-        if (fs.exists(old) && !fs.delete(old, true))
-          throw new java.io.IOException(
-            "graph cutover: could not clear stale aside copy (leftover " +
-              "of a crashed run superseded by this re-cutover)")
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"graph cutover aside failed: $live")
-      }
-      if (!fs.rename(refreshed, live))
-        throw new java.io.IOException(s"graph cutover promote failed: $refreshed")
-    } else if (!fs.exists(live) && fs.exists(old)) {
-      // defensive restore: heal a manually-mangled tree toward the
-      // old world rather than serve a missing slot
-      if (!fs.rename(old, live))
-        throw new java.io.IOException(s"graph cutover restore failed: $old")
-    } // else: already promoted by a previous attempt — complete forward
-    fs.create(done, true).close() // the completion witness, BEFORE cleanup
-    fs.delete(old, true)
-    ()
+    graft.store.cutover(spark, new Path(s"$root/graph_cutover_done"), old,
+      Seq(graft.store.Layer(new Path(s"$root/refreshed"), new Path(s"$root/serve"), old)))
   }
 
   /** The s29 decision in bounded integers: total truth-hits of the
@@ -2736,23 +2626,21 @@ object Similarity {
     * clear the aside/staging trees. Shared by the delete and the
     * deferred-update compactions. */
   private def recoverCompactScratch(fs: FileSystem, codesDir: String): Unit = {
-    val oldRootIn = new Path(codesDir + ".del_old")
-    if (fs.exists(oldRootIn)) {
-      fs.listStatus(oldRootIn).foreach { st =>
-        val home = new Path(codesDir, st.getPath.getName)
-        if (!fs.exists(home) && !fs.rename(st.getPath, home))
-          throw new java.io.IOException(
-            s"delete-compact recovery failed: ${st.getPath} -> $home")
+    val oldRoot = new Path(codesDir + ".del_old")
+    val tmpRoot = new Path(codesDir + ".del_tmp")
+    if (fs.exists(oldRoot))
+      fs.listStatus(oldRoot).foreach { st =>
+        val ccid = st.getPath.getName
+        graft.store.recover(fs, new Path(codesDir, ccid), new Path(tmpRoot, ccid),
+          st.getPath)
       }
-      fs.delete(oldRootIn, true)
-    }
     // staging cleanup is UNCONDITIONAL, not tied to the re-run finding
-    // affected lists: a crash between "delete aside" and "delete
-    // staging" leaves codes.del_tmp with the aside gone and the rows
-    // already compacted — the affected set comes back empty and the
-    // branch below that would clear tmpRoot never runs
-    val tmpRootIn = new Path(codesDir + ".del_tmp")
-    if (fs.exists(tmpRootIn)) fs.delete(tmpRootIn, true)
+    // affected lists: a crash between the last swap and the staging
+    // delete leaves codes.del_tmp with no aside and the rows already
+    // compacted — the affected set comes back empty and compactOutIds
+    // never reaches its own cleanup
+    graft.store.clear(fs, oldRoot)
+    graft.store.clear(fs, tmpRoot)
   }
 
   /** Physically drop every row whose vec_id is in `del` by rewriting
@@ -2786,26 +2674,20 @@ object Similarity {
       // never leave a non-partition directory where the reader would
       // parse it as a (null-valued) partition
       val oldRoot = new Path(codesDir + ".del_old")
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      fs.mkdirs(oldRoot)
       affected.foreach { ccid =>
         val p = new Path(s"$codesDir/ccid=$ccid")
         val t = new Path(s"$tmpRoot/ccid=$ccid")
         val old = new Path(s"$oldRoot/ccid=$ccid")
-        if (!fs.rename(p, old))
-          throw new java.io.IOException(s"delete-compact swap failed: $p")
-        if (fs.exists(t) && !fs.rename(t, p)) {
-          fs.rename(old, p)
-          throw new java.io.IOException(s"delete-compact swap failed: $t -> $p")
-        }
+        if (fs.exists(t)) graft.store.swap(fs, p, t, old)
+        else graft.store.retire(fs, p, old)
       }
-      fs.delete(oldRoot, true)
-      fs.delete(tmpRoot, true)
+      graft.store.clear(fs, oldRoot)
+      graft.store.clear(fs, tmpRoot)
     }
   }
 
   private def s18IdxDir(dir: String): String =
-    servedIdxDir("graft_s18_idx", dir)
+    graft.store.served("graft_s18_idx", dir)
 
   /** S18 — the full delete lifecycle as the gate entry: s13's
     * build-on-base + frozen-model append, then a slice of the corpus
@@ -2821,7 +2703,7 @@ object Similarity {
     // clone the shared drifted substrate (r15) — the clone clears the
     // previous occupant wholesale, so stale tombstones and compaction
     // scratch from a crashed prior run are gone with it
-    cloneIndexTree(spark, driftedSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     deleteFromIvfPqIndex(spark,
       Tables.embeddings(spark, dir).filter(s18DeletePred), idxDir)
     compactIvfPqDeletes(spark, idxDir)
@@ -3010,7 +2892,7 @@ object Similarity {
       .withColumn("embedding", reverse(col("embedding")))
 
   private def s21IdxDir(dir: String): String =
-    servedIdxDir("graft_s21_idx", dir)
+    graft.store.served("graft_s21_idx", dir)
 
   /** S21 — the full update lifecycle as the gate entry: s13's
     * build-on-base + frozen-model append, then the appended slice is
@@ -3023,7 +2905,7 @@ object Similarity {
     val idxDir = s21IdxDir(dir)
     // clone the shared drifted substrate (r15); the clone is a clean
     // sealed generation, so no stale-tombstone hazard
-    cloneIndexTree(spark, driftedSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     updateIvfPqIndex(spark, s21NewEmbeddings(spark, dir), idxDir)
     queryIvfPqIndex(spark, dir, idxDir)
   }
@@ -3062,29 +2944,20 @@ object Similarity {
     val staging = new Path(idxDir + ".retrain_tmp")
     val oldRoot = new Path(idxDir + ".retrain_old")
     val fs = FileSystem.get(idxPath.toUri, spark.sparkContext.hadoopConfiguration)
-    // CRASH RECOVERY from a previous retrain's swap window: a missing
-    // root with a COMPLETE staging present is completed forward; with
-    // only the aside present it rolls back. Completeness is witnessed
-    // by the codes table's _SUCCESS marker — codes is the LAST table
-    // the staging build writes — because in the create path (no live
-    // index yet) a missing root no longer implies the staging build
-    // finished: a crash mid-build leaves a partial tree that must be
-    // discarded (cleared below), never promoted to serve.
-    if (!fs.exists(idxPath)) {
-      if (fs.exists(new Path(s"$staging/codes/_SUCCESS"))) {
-        if (!fs.rename(staging, idxPath))
-          throw new java.io.IOException(s"retrain recovery failed: $staging")
-        // forward completion PROMOTED a complete staging tree — the
-        // crashed retrain's goal (fresh model over the live set) is
-        // achieved; rebuilding again here would pay a redundant full
-        // staging build. Drop the stranded aside (its old index is
-        // superseded by the promoted tree) and serve.
-        if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-        return
-      } else if (fs.exists(oldRoot) && !fs.rename(oldRoot, idxPath))
-        throw new java.io.IOException(s"retrain recovery failed: $oldRoot")
+    // CRASH RECOVERY (graft.store.recover) with one difference: a
+    // missing root with a COMPLETE staging tree is completed forward —
+    // the crashed retrain's goal (fresh model over the live set) is
+    // achieved, and rebuilding would pay a redundant full staging
+    // build. Completeness is witnessed by the codes table's job commit
+    // — codes is the LAST table the staging build writes — because in
+    // the create path (no live index yet) a missing root does not imply
+    // the staging build finished: a partial tree must be discarded,
+    // never promoted to serve.
+    if (!fs.exists(idxPath) && graft.store.committed(fs, new Path(staging, "codes"))) {
+      graft.store.swap(fs, idxPath, staging, oldRoot)
+      return
     }
-    if (fs.exists(staging)) fs.delete(staging, true)
+    graft.store.recover(fs, idxPath, staging, oldRoot)
     // the live set as a broadcast ANTI-JOIN against the tombstone
     // table (r15) — the delete set is compaction-cadence-bounded
     // (s18's argument) but never round-trips the driver as a literal
@@ -3096,32 +2969,14 @@ object Similarity {
         .join(broadcast(spark.read.parquet(delPath.toString)
           .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
     buildIvfPqIndexOn(spark, liveEmb, staging.toString, lit(true), lit(true))
-    // atomic root swap, aside-first: a crash at any point leaves a
-    // recoverable state (see the recovery block above). A missing live
-    // root is NOT an error — retrain doubles as CREATE (no prior index
-    // to set aside; the staging tree renames straight into place, and
-    // a crash before that rename is completed forward by the recovery
-    // block) — so a fresh-dir call doesn't waste the full staging
-    // build on a spurious swap failure.
-    if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-    val hadLive = fs.exists(idxPath)
-    if (hadLive && !fs.rename(idxPath, oldRoot))
-      throw new java.io.IOException(s"retrain swap failed: $idxPath aside")
-    if (!fs.rename(staging, idxPath)) {
-      // restore the live index before failing — and if the restore
-      // itself fails, SAY SO: the live index is stranded at
-      // .retrain_old and the next retrain's recovery block is what
-      // brings it back, which the operator must know
-      val restored = !hadLive || fs.rename(oldRoot, idxPath)
-      throw new java.io.IOException(
-        s"retrain swap failed: $staging -> $idxPath" +
-          (if (restored) "" else s"; RESTORE ALSO FAILED — live index stranded at $oldRoot"))
-    }
-    if (hadLive) fs.delete(oldRoot, true)
+    // a missing live root is NOT an error — retrain doubles as CREATE
+    // (the staging tree renames straight into place, and a crash before
+    // that rename is completed forward by the recovery above)
+    graft.store.swap(fs, idxPath, staging, oldRoot)
   }
 
   private def s22IdxDir(dir: String): String =
-    servedIdxDir("graft_s22_idx", dir)
+    graft.store.served("graft_s22_idx", dir)
 
   /** S22 — the retrain lifecycle as the gate entry: the drifted state
     * s14 measures (base-trained model, frozen-coded append slice) is
@@ -3142,7 +2997,7 @@ object Similarity {
     // clean sealed generation (no stale tombstones — the seal the
     // build used to provide). The verb being benchmarked, the FULL
     // retrain over everything, still runs below unchanged.
-    cloneIndexTree(spark, driftedSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     retrainIvfPqIndex(spark, dir, idxDir)
     queryIvfPqIndex(spark, dir, idxDir)
   }
@@ -3154,7 +3009,7 @@ object Similarity {
   val S30DriftBp: Long = math.round(S14RetrainDrift * 10000)
 
   private def s30IdxDir(dir: String): String =
-    servedIdxDir("graft_s30_idx", dir)
+    graft.store.served("graft_s30_idx", dir)
 
   /** Round14Spec seam: the s30 serving root (the forced-fire pin runs
     * the verb on it directly; the gate's build overwrites, so the
@@ -3218,7 +3073,7 @@ object Similarity {
       // the drifted starting state comes from the shared substrate
       // (r15): clone, don't rebuild — the clone also clears any
       // crashed prior occupant of this root wholesale
-      cloneIndexTree(spark, driftedSubstrate(spark, dir), idxDir)
+      graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
       if (fired) retrainIvfPqIndex(spark, dir, idxDir)
       fs.create(donep, true).close()
     }
@@ -3247,8 +3102,8 @@ object Similarity {
     * decision (e20's witness discipline). Round17Spec pins it equal
     * to the standalone retrained world's hits. */
   private[graft] def e22IvfFiredApply(spark: SparkSession, dir: String): Long = {
-    val root = servedIdxDir("graft_e22_idx", dir)
-    cloneIndexTree(spark, driftedSubstrate(spark, dir), root)
+    val root = graft.store.served("graft_e22_idx", dir)
+    graft.store.cloneTree(spark, driftedSubstrate(spark, dir), root, IndexTables)
     retrainIvfPqIndex(spark, dir, root)
     ivfTruthHits(spark, dir, queryIvfPqIndex(spark, dir, root))
   }
@@ -3285,7 +3140,7 @@ object Similarity {
   val S23TwiceDigit = 19
 
   private def s23IdxDir(dir: String): String =
-    servedIdxDir("graft_s23_idx", dir)
+    graft.store.served("graft_s23_idx", dir)
 
   /** S23 — the DEFERRED-update serve path AS a gate entry: s13's
     * build-on-base + frozen-model append, then TWO deferred update
@@ -3304,7 +3159,7 @@ object Similarity {
     val idxDir = s23IdxDir(dir)
     // clone the shared drifted substrate (r15); the clone is a clean
     // sealed generation, so no stale-ledger hazard
-    cloneIndexTree(spark, driftedSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     deferUpdateIvfPqIndex(spark, s21NewEmbeddings(spark, dir), idxDir)
     deferUpdateIvfPqIndex(spark,
       Tables.embeddings(spark, dir).filter(col("vec_id") % 20 === S23TwiceDigit),

@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * Rewrites a parquet directory into ⌈totalBytes/targetBytes⌉ files.
   * `shuffle = false` (default) coalesces — merges co-located
   * partitions with NO shuffle; `shuffle = true` pays one round-robin
-  * shuffle to rebalance skewed inputs evenly. The swap is the same
-  * aside-first discipline as the streaming snapshot merge: a crash at
-  * any point leaves either the old or the new copy recoverable.
+  * shuffle to rebalance skewed inputs evenly. The swap is
+  * [[graft.store.swap]]: a crash at any point leaves either the old or
+  * the new copy recoverable.
   */
 object Compact {
 
@@ -32,17 +32,13 @@ object Compact {
               targetBytes: Long = DefaultTargetBytes,
               shuffle: Boolean = false): Unit = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    // crash recovery, same as the streaming snapshot merge: a death
-    // between the two swap renames leaves only the .compact_old copy —
-    // restore it before reading, or stats() fails unhelpfully and the
-    // stranded data is one cleanup away from deletion
-    locally {
-      val p = new Path(dir)
-      val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-      val old = new Path(dir + ".compact_old")
-      if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-        throw new java.io.IOException(s"recovery failed: $old -> $dir")
-    }
+    val p = new Path(dir)
+    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dir + ".compact_tmp")
+    val old = new Path(dir + ".compact_old")
+    // a crash mid-swap may leave only the .compact_old copy — restore
+    // it before stats() reads the directory
+    graft.store.recover(fs, p, tmp, old)
     val (totalBytes, nFiles) = stats(spark, dir)
     // a partitioned table has its part files in key= subdirectories —
     // compacting it flat would silently drop the partition layout;
@@ -53,19 +49,7 @@ object Compact {
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val df = spark.read.parquet(dir)
     val out = if (shuffle) df.repartition(n) else df.coalesce(n)
-    val tmp = dir + ".compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    val p = new Path(dir)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val old = new Path(dir + ".compact_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compaction swap failed: $dir -> $old")
-    if (!fs.rename(new Path(tmp), p)) {
-      fs.rename(old, p) // restore before failing
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $dir")
-    }
-    fs.delete(old, true)
-    ()
+    out.write.mode("overwrite").parquet(tmp.toString)
+    graft.store.swap(fs, p, tmp, old)
   }
 }

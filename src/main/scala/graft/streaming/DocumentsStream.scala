@@ -612,32 +612,22 @@ object DocumentsStream {
                              base: String, inDir: String, wave: Int): Unit =
     WaveLedger.stageFrameWave(spark, part, base, inDir, wave)
 
-  private val SubstrateMarker = "_GRAFT_SUBSTRATE_OK"
-
-  /** st21's RETRACT-LEDGER SUBSTRATE (r16 — the shared-substrate
-    * precedent at the stream tier): the tombstone manifest's streamed
+  /** st21's RETRACT-LEDGER SUBSTRATE (the shared-substrate precedent
+    * at the stream tier): the tombstone manifest's streamed
     * intake is a pure function of the corpus (the d22 edit slice's
     * ids through st19's intake machinery), so the committed id ledger
-    * is staged ONCE per corpus version behind a completion marker and
+    * is staged ONCE per corpus version as a [[graft.store.tree]] and
     * every st21 invocation reads it instead of re-running the retract
     * stream — the entry's cost drops to the content phase + fold.
     * st19's own row keeps paying full streamed intake honestly (the
     * intake benchmark), and the restart-law coverage for retract
     * intake is st19's pinned coverage of the same WaveLedger
     * protocol. The ledger is READ-ONLY at serve (an id union), so
-    * consumers reference the root directly — no clone. Staleness is
-    * ArtifactRoots' corpus fingerprint; a crash before the marker
-    * rebuilds from scratch. */
+    * consumers reference the root directly — no clone. */
   private[graft] def st21RetractSubstrate(spark: SparkSession,
                                           dir: String): String = {
     graft.ArtifactRoots.retireLegacy("graft_st21ret", "graft_st21ret_v1")
-    val root = graft.ArtifactRoots.tagged("graft_st21ret_v1", dir)
-    graft.ArtifactRoots.touchServed(root)
-    val marker = new Path(s"$root/$SubstrateMarker")
-    val f = fsOf(spark, marker)
-    if (!f.exists(marker)) {
-      f.delete(new Path(root), true) // crashed partial: rebuild whole
-      f.mkdirs(new Path(s"$root/in"))
+    graft.store.tree(spark, "graft_st21ret_v1", dir) { root =>
       val editedIds = Tables.documents(spark, dir).select(col("doc_id"))
         .filter(col("doc_id") % 10 === Dedup.D22EditDigit)
       stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 === 0),
@@ -645,9 +635,7 @@ object DocumentsStream {
       stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 =!= 0),
         root, s"$root/in", 1)
       runDocRetract(spark, root, s"$root/cp").stop()
-      f.create(marker, true).close()
     }
-    root
   }
 
   /** The ST21 gate entry — streaming UPDATE for the candidate-pair

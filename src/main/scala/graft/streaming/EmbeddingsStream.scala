@@ -343,7 +343,8 @@ object EmbeddingsStream {
     val idxDir = s"$base/idx"
     // the base-only starting state comes from the shared substrate
     // (r15): clone, don't rebuild per invocation
-    Similarity.cloneIndexTree(spark, Similarity.baseSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, Similarity.baseSubstrate(spark, dir), idxDir,
+      Similarity.IndexTables)
     stageWave(spark, dir, base, 0)
     runIngest(spark, dir, base, idxDir, s"$base/cp").stop()
     stageWave(spark, dir, base, 1)
@@ -370,7 +371,8 @@ object EmbeddingsStream {
     val idxDir = s"$base/idx"
     // the drifted (base build + frozen append) starting state comes
     // from the shared substrate (r15): clone, don't rebuild
-    Similarity.cloneIndexTree(spark, Similarity.driftedSubstrate(spark, dir), idxDir)
+    graft.store.cloneTree(spark, Similarity.driftedSubstrate(spark, dir), idxDir,
+      Similarity.IndexTables)
     stageRetractWave(spark, dir, base, 0)
     runRetract(spark, base, s"$base/cp").stop()
     stageRetractWave(spark, dir, base, 1)
@@ -456,25 +458,17 @@ object EmbeddingsStream {
                              base: String, inDir: String, wave: Int): Unit =
     WaveLedger.stageFrameWave(spark, part, base, inDir, wave)
 
-  private val SubstrateMarker = "_GRAFT_SUBSTRATE_OK"
-
-  /** st23's RETRACT-LEDGER SUBSTRATE (r16 — st21's precedent at the
-    * vector tier): the update slice's tombstone manifest is a pure
-    * function of the corpus (the s28 digit slice through the shared
-    * id-wave intake), so its committed ledger stages once per corpus
-    * version behind a completion marker; every st23 invocation reads
+  /** st23's RETRACT-LEDGER SUBSTRATE (st21's precedent at the vector
+    * tier): the update slice's tombstone manifest is a pure function
+    * of the corpus (the s28 digit slice through the shared id-wave
+    * intake), so its committed ledger stages once per corpus version
+    * as a [[graft.store.tree]]; every st23 invocation reads
     * it and pays only the content phase + fold. Intake-restart
     * coverage remains st16/st19's pinned law of the same protocol. */
   private[graft] def st23RetractSubstrate(spark: SparkSession,
                                           dir: String): String = {
     graft.ArtifactRoots.retireLegacy("graft_st23ret", "graft_st23ret_v1")
-    val root = graft.ArtifactRoots.tagged("graft_st23ret_v1", dir)
-    graft.ArtifactRoots.touchServed(root)
-    val marker = new Path(s"$root/$SubstrateMarker")
-    val f = fsOf(spark, marker)
-    if (!f.exists(marker)) {
-      f.delete(new Path(root), true) // crashed partial: rebuild whole
-      f.mkdirs(new Path(s"$root/in"))
+    graft.store.tree(spark, "graft_st23ret_v1", dir) { root =>
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
         .filter(col("vec_id") % 10 === Similarity.S28UpdateDigit)
       stageFrameWave(spark, ids.filter(col("vec_id") % 3 === 0),
@@ -482,9 +476,7 @@ object EmbeddingsStream {
       stageFrameWave(spark, ids.filter(col("vec_id") % 3 =!= 0),
         root, s"$root/in", 1)
       runRetract(spark, root, s"$root/cp").stop()
-      f.create(marker, true).close()
     }
-    root
   }
 
   /** The ST23 gate entry — streaming UPDATE for the kNN graph: s28's

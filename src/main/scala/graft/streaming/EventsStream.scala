@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.Tables
 
@@ -387,31 +387,21 @@ object EventsStream {
     // warehouse filesystem and the swap renames stay same-FS atomic
     val dir = new Path(target)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a death between "rename target aside" and
-    // "promote tmp" leaves only the .old copy — restore it BEFORE
-    // looking at dir, or this batch would rebuild from itself and the
-    // cleanup below would delete the sole surviving snapshot
+    val tmp = new Path(target + ".tmp")
     val old = new Path(target + ".old")
-    if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
-      throw new java.io.IOException(s"recovery failed: $old -> $target")
+    // crash recovery BEFORE looking at dir: a death mid-swap can leave
+    // only the .old copy, and this batch would otherwise rebuild from
+    // itself; it also reaps a stranded full-size .tmp or superseded
+    // .old that the empty-batch skip below would never rewrite
+    graft.store.recover(fs, dir, tmp, old)
     // an empty batch on an EXISTING snapshot is a no-op — skip the
     // corpus-sized read + rewrite + swap (and its crash window) a
     // watermark-advance batch on a restarted stream would otherwise
-    // pay (r16 review). On a FRESH target it still writes: unlike the
-    // partitioned form, an empty non-partitioned write emits a
-    // schema-carrying part file, and an empty events table must
-    // converge to a READABLE empty snapshot (Round10Spec's law).
-    // Before the no-op returns, still reap crash-stranded copies — a
-    // death mid-swap leaves a full-size .tmp (or a superseded .old
-    // beside the live dir) that the skipped rewrite used to clean;
-    // with only watermark-advance batches following, nothing else
-    // would ever reclaim that extra snapshot copy.
-    val tmpStale = new Path(target + ".tmp")
-    if (batch.isEmpty && fs.exists(dir)) {
-      if (fs.exists(tmpStale)) fs.delete(tmpStale, true)
-      if (fs.exists(old)) fs.delete(old, true)
-      return
-    }
+    // pay. On a FRESH target it still writes: unlike the partitioned
+    // form, an empty non-partitioned write emits a schema-carrying
+    // part file, and an empty events table must converge to a
+    // READABLE empty snapshot (Round10Spec's law).
+    if (batch.isEmpty && fs.exists(dir)) return
     val cols = batch.columns.map(col).toSeq
     val merged =
       if (!fs.exists(dir)) batch.select(cols: _*)
@@ -419,21 +409,8 @@ object EventsStream {
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .select(cols: _*)
         .union(batch.select(cols: _*))
-    val tmp = new Path(target + ".tmp")
     merged.write.mode("overwrite").parquet(tmp.toString)
-    // swap order matters for crash-safety: rename the live snapshot
-    // ASIDE first, then promote tmp, then drop the old copy — a crash
-    // at any point leaves either the old or the new snapshot intact
-    // and recoverable (delete-then-rename would lose the snapshot if
-    // the rename failed or the process died between the two).
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dir) && !fs.rename(dir, old))
-      throw new java.io.IOException(s"swap failed: $target -> $old")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // restore the previous snapshot before failing
-      throw new java.io.IOException(s"swap failed: $tmp -> $target")
-    }
-    if (fs.exists(old)) fs.delete(old, true)
+    graft.store.swap(fs, dir, tmp, old)
   }
 
   /** The PARTITION-SCOPED merge — st11's documented 100 TB swap made
@@ -600,16 +577,8 @@ object EventsStream {
       .coalesce(1).write.mode("overwrite").parquet(s"$base/f2")
     // stage with increasing mtimes so the file source orders the two
     // micro-batches deterministically
-    def stage(src: String, dst: String, mtime: Long): Unit = {
-      val part = fs.listStatus(new Path(src)).map(_.getPath)
-        .find(_.getName.endsWith(".parquet")).get
-      val to = new Path(inDir, dst)
-      FileUtil.copy(fs, part, fs, to, false,
-        spark.sparkContext.hadoopConfiguration)
-      fs.setTimes(to, mtime, -1); ()
-    }
-    stage(s"$base/f1", "a.parquet", 1000000L)
-    stage(s"$base/f2", "b.parquet", 2000000L)
+    WaveLedger.stagePart(spark, s"$base/f1", inDir, "a.parquet", 1000000L)
+    WaveLedger.stagePart(spark, s"$base/f2", inDir, "b.parquet", 2000000L)
     val target = s"$base/snapshot"
     val q = runSnapshotUpsert(
       readEventsStream(spark, inDir.toString, maxFilesPerTrigger = 1), target,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,27 +20,9 @@ import graft.etl.RetailStar
   */
 object StarStream {
 
-  /** Copy the single parquet part file of `src` into the stream's
-    * input dir as `dst` with a pinned mtime (the file source orders
-    * micro-batches by it). Fails with a message naming the missing
-    * file rather than a bare NoSuchElementException if a write ever
-    * stops producing a part (e.g. an empty-partition-skipping
-    * committer). */
-  private def stageFile(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-                        inDir: Path)(src: String, dst: String, mtime: Long): Unit = {
-    val part = fs.listStatus(new Path(src)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part file under $src to stage as $dst"))
-    val to = new Path(inDir, dst)
-    FileUtil.copy(fs, part, fs, to, false, conf)
-    fs.setTimes(to, mtime, -1); ()
-  }
-
-  private val SubstrateMarker = "_GRAFT_SUBSTRATE_OK"
-
   /** st24's two load files (history; the arriving month) — pure
-    * functions of the corpus, staged ONCE per corpus fingerprint under
-    * their own root (the st21/st23 retract-substrate precedent) and
+    * functions of the corpus, staged ONCE per corpus fingerprint as a
+    * [[graft.store.tree]] (the st21/st23 retract-substrate precedent) and
     * byte-copied into each invocation's arrivals dir. The two
     * single-file stagings are independent jobs; submitted from two
     * driver threads (guide §2.6 tail back-fill). repartition(1), not
@@ -48,13 +30,8 @@ object StarStream {
     * upstream scan+filter into the same single task as the write —
     * repartition keeps the read parallel and pays only a ~25MB/0.1-sf
     * shuffle (measured 1.8s → 1.4s for the full-fact single file). */
-  private def loadFilesSubstrate(spark: SparkSession, dir: String): String = {
-    val root = graft.ArtifactRoots.tagged("graft_st24ld_v1", dir)
-    graft.ArtifactRoots.touchServed(root)
-    val marker = new Path(s"$root/$SubstrateMarker")
-    val fs = FileSystem.get(marker.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      fs.delete(new Path(root), true) // crashed partial: rebuild whole
+  private def loadFilesSubstrate(spark: SparkSession, dir: String): String =
+    graft.store.tree(spark, "graft_st24ld_v1", dir) { root =>
       val fact = RetailStar.servedStar(spark, dir).fact
       val lastKey = RetailStar.arrivingMonthKey(spark, dir) // q56's pick
       import scala.concurrent.{Await, Future}
@@ -69,10 +46,7 @@ object StarStream {
           fact.filter(col("month_key") === lastKey)
             .repartition(1).write.mode("overwrite").parquet(s"$root/f2")
         }).foreach(Await.result(_, Duration.Inf))
-      fs.create(marker, true).close()
     }
-    root
-  }
 
   /** ST24 — streamed star-fact month loads AS a gate entry: the fact
     * (from the inline ETL build) is staged as TWO load files split at
@@ -110,7 +84,7 @@ object StarStream {
     // stage with increasing mtimes so the file source orders the
     // micro-batches deterministically; c = the DUPLICATE delivery of
     // the arriving month (same bytes, later arrival)
-    val stage = stageFile(fs, spark.sparkContext.hadoopConfiguration, inDir) _
+    val stage = WaveLedger.stagePart(spark, _: String, inDir, _: String, _: Long)
     stage(s"$sub/f1", "a.parquet", 1000000L)
     stage(s"$sub/f2", "b.parquet", 2000000L)
     stage(s"$sub/f2", "c.parquet", 3000000L)
@@ -186,7 +160,7 @@ object StarStream {
     // each wave's staging follows its own write inside its leg, and
     // the stream starts only after all three complete. mtimes pin the
     // delivery order regardless of staging order.
-    val stage = stageFile(fs, spark.sparkContext.hadoopConfiguration, inDir) _
+    val stage = WaveLedger.stagePart(spark, _: String, inDir, _: String, _: Long)
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global

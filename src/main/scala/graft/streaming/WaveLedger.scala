@@ -54,21 +54,34 @@ private[graft] object WaveLedger {
 
   /** Stage one single-file wave of `part` into `inDir` for a
     * file-source stream — the gate entries' shared stager: coalesce
-    * to one parquet file, copy it in, and force the mtime to the wave
-    * index so maxFilesPerTrigger=1 delivers waves in a deterministic
-    * order when several are staged at once. (Gate staging only — a
-    * production stream's files arrive from the ingest system.) */
+    * to one parquet file and [[stagePart]] it as `wave<N>.parquet`,
+    * mtime pinned to the wave index so maxFilesPerTrigger=1 delivers
+    * waves in a deterministic order when several are staged at once.
+    * (Gate staging only — a production stream's files arrive from the
+    * ingest system.) */
   def stageFrameWave(spark: SparkSession, part: org.apache.spark.sql.DataFrame,
                      base: String, inDir: String, wave: Int): Unit = {
     val scratch = s"$base/w$wave"
     part.coalesce(1).write.mode("overwrite").parquet(scratch)
-    val f = fsOf(spark, new Path(scratch))
-    val src = f.listStatus(new Path(scratch)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")).get
-    val dst = new Path(s"$inDir/wave$wave.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false,
-      spark.sparkContext.hadoopConfiguration)
-    f.setTimes(dst, 1000000L * (wave + 1), -1); ()
+    stagePart(spark, scratch, new Path(inDir), s"wave$wave.parquet", 1000000L * (wave + 1))
+  }
+
+  /** Copy the single parquet part file of the table at `src` into
+    * `inDir` as `name`, with a pinned mtime (the file source orders
+    * micro-batches by it). Fails with a message naming the table if a
+    * write ever stops producing a part (e.g. an empty-partition-
+    * skipping committer). */
+  def stagePart(spark: SparkSession, src: String, inDir: Path, name: String,
+                mtime: Long): Unit = {
+    val to = new Path(inDir, name)
+    val f = fsOf(spark, to)
+    val part = f.listStatus(new Path(src)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part file under $src to stage as $to"))
+    if (!org.apache.hadoop.fs.FileUtil.copy(f, part, f, to, false,
+        spark.sparkContext.hadoopConfiguration))
+      throw new java.io.IOException(s"staging failed: $part -> $to")
+    f.setTimes(to, mtime, -1)
   }
 
   /** Drain everything available, STOPPING the query if the drain

@@ -9,7 +9,7 @@ import graft.streaming.EventsStream
 
 /** Correctness oracle for the streaming path: the SAME transform over
   * a file-source stream must converge to the batch answer. */
-class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   /** No streaming query may outlive this suite (r18): a query leaked
     * by a failing test keeps its micro-batch thread alive into the
@@ -35,7 +35,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** File stream sources require a directory — stage the single
     * events.parquet into one. */
   lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("events_stream")
+    val d = tempDir("events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
@@ -139,7 +139,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.SaveMode
     // split events into two time-ordered files so the upsert sees two
     // micro-batches with re-emitted (refined) windows in between
-    val splitDir = java.nio.file.Files.createTempDirectory("events_split").toString
+    val splitDir = tempDir("events_split").toString
     // split from the RAW representation so the staged files carry the
     // same ts encoding the stream's sniffed schema expects (the legacy
     // conf makes this read nanos drops as raw longs; on micros drops
@@ -151,7 +151,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val secondHalf = all.join(firstHalf.select("event_id"), Seq("event_id"), "left_anti")
     firstHalf.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$splitDir/f1")
     secondHalf.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$splitDir/f2")
-    val inDir = java.nio.file.Files.createTempDirectory("events_in")
+    val inDir = tempDir("events_in")
     def stage(src: String, dst: String, mtime: Long): Unit = {
       val part = new java.io.File(src).listFiles().find(_.getName.endsWith(".parquet")).get
       val to = inDir.resolve(dst)
@@ -161,7 +161,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     stage(s"$splitDir/f1", "a.parquet", 1000000L)
     stage(s"$splitDir/f2", "b.parquet", 2000000L)
 
-    val target = java.nio.file.Files.createTempDirectory("snap").toString + "/snapshot"
+    val target = tempDir("snap").toString + "/snapshot"
     val stream = EventsStream.readEventsStream(spark, inDir.toString, maxFilesPerTrigger = 1)
     val q = EventsStream.runSnapshotUpsert(stream, target)
     try {
@@ -362,7 +362,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream starts on an EMPTY directory (schema fallback) and picks up late files") {
-    val emptyDir = java.nio.file.Files.createTempDirectory("events_late")
+    val emptyDir = tempDir("events_late")
     // classic file-source lifecycle: the query starts before any file
     // exists — the footer sniff cannot work, the explicit fallback
     // schema must carry it
@@ -387,7 +387,7 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("snapshot swap recovers from a crash between the two renames") {
     import spark.implicits._
-    val target = java.nio.file.Files.createTempDirectory("swap").toString + "/snap"
+    val target = tempDir("swap").toString + "/snap"
     val merge = EventsStream.mergeIntoParquet(target, Seq("k")) _
     merge(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), 0L)
     // simulate dying after "rename target aside" but before "promote
@@ -406,19 +406,19 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one trigger and the restarted run has genuinely unseen input
     val e = Tables.events(spark, dir)
     val half = e.count() / 2
-    val splitDir = java.nio.file.Files.createTempDirectory("events_ckpt_split").toString
+    val splitDir = tempDir("events_ckpt_split").toString
     e.filter(col("event_id") < half).coalesce(1)
       .write.mode("overwrite").parquet(s"$splitDir/f1")
     e.filter(col("event_id") >= half).coalesce(1)
       .write.mode("overwrite").parquet(s"$splitDir/f2")
-    val inDir = java.nio.file.Files.createTempDirectory("events_ckpt_in")
+    val inDir = tempDir("events_ckpt_in")
     def stage(src: String, dst: String): Unit = {
       val part = new java.io.File(src).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.copy(part.toPath, inDir.resolve(dst)); ()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("events_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("events_ckpt_out").toString + "/dedup"
+    val ckpt = tempDir("events_ckpt").toString
+    val out = tempDir("events_ckpt_out").toString + "/dedup"
     def run(): org.apache.spark.sql.streaming.StreamingQuery =
       EventsStream.dedupEvents(
           EventsStream.readEventsStream(spark, inDir.toString))
@@ -476,8 +476,8 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         .find(i => hourOf(orderedIds(i - 1)._2) == hourOf(orderedIds(i)._2)))
       .getOrElse(fail("no 1-hour window holds two events — cannot exercise restart"))
     val bounds = Seq(0, mid / 2, mid, (mid + n) / 2, n)
-    val splitDir = java.nio.file.Files.createTempDirectory("events_rs_split").toString
-    val inDir = java.nio.file.Files.createTempDirectory("events_rs_in")
+    val splitDir = tempDir("events_rs_split").toString
+    val inDir = tempDir("events_rs_in")
     (0 until 4).foreach { k =>
       val ids = orderedIds.slice(bounds(k), bounds(k + 1)).map(_._1)
       all.filter(col("event_id").isin(ids: _*))
@@ -490,8 +490,8 @@ class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.copy(part.toPath, to)
       to.toFile.setLastModified((k + 1) * 1000000L); ()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("events_rs_ckpt").toString
-    val target = java.nio.file.Files.createTempDirectory("events_rs_out").toString + "/snapshot"
+    val ckpt = tempDir("events_rs_ckpt").toString
+    val target = tempDir("events_rs_out").toString + "/snapshot"
     def run(): org.apache.spark.sql.streaming.StreamingQuery =
       EventsStream.runSnapshotUpsert(
         EventsStream.readEventsStream(spark, inDir.toString, maxFilesPerTrigger = 1),

@@ -13,7 +13,7 @@ import graft.etl.Warehouse
   * same code viable at 100 TB, and they are checkable at any scale
   * because they are plan shapes, not timings.
   */
-class PhysicalLayoutSpec extends AnyFunSuite {
+class PhysicalLayoutSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +23,7 @@ class PhysicalLayoutSpec extends AnyFunSuite {
     .getOrCreate()
 
   val dir = "/root/testdata/sf0.001"
-  lazy val tmp: String = java.nio.file.Files.createTempDirectory("layout").toString
+  lazy val tmp: String = tempDir("layout").toString
 
   test("month-partitioned fact scan prunes partitions") {
     val fact = Tables.orders(spark, dir)
@@ -130,7 +130,7 @@ class PhysicalLayoutSpec extends AnyFunSuite {
 
   test("schema evolution: merged read defaults the evolved column for pre-evolution files") {
     import graft.etl.Warehouse
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve").toString
     import spark.implicits._
     // generation 1: no `channel` column; generation 2 adds it
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "amount")

@@ -13,7 +13,7 @@ import graft.etl.{RetailClean, Warehouse}
   * snapshot, each checked over ScalaCheck-generated inputs with a
   * fixed seed (deterministic across rounds).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -526,7 +526,7 @@ class PropertySpec extends AnyFunSuite {
       rows    <- Gen.nonEmptyListOf(rowGen)
       victims <- Gen.someOf(1L to 6L)
     } yield (rows, victims.toSet)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("erase_prop").toString
+    val tmpRoot = tempDir("erase_prop").toString
     var n = 0
     check("erasure", Prop.forAll(caseGen) { case (rows, victims) =>
       n += 1
@@ -579,7 +579,7 @@ class PropertySpec extends AnyFunSuite {
       ghosts <- Gen.listOf(Gen.zip(Gen.chooseNum(1L, 6L),
         Gen.chooseNum(1, 500)).map { case (c, a) => (c, "122019", a / 100.0) })
     } yield (rows, fates, ghosts)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("fresh_prop").toString
+    val tmpRoot = tempDir("fresh_prop").toString
     var n = 0
     // no shrinking: shrunk strings leave the month domain (an empty
     // month key round-trips as a null hive-default partition)

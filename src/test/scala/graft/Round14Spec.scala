@@ -444,7 +444,7 @@ class Round14Spec extends AnyFunSuite {
         s"quiet branch must serve the frozen fertility for ${r.getAs[String]("source")}")
     }
     // forced promotion on a fresh scratch clone
-    val scratch = Pipeline.stageBpeModelClone(spark, dir)
+    val scratch = Pipeline.stageModelClone(spark, dir, Pipeline.BpeModelLayers, "graft_e20_model")
     val fs = FileSystem.get(new Path(scratch).toUri,
       spark.sparkContext.hadoopConfiguration)
     Pipeline.modelCutover(spark, scratch, Pipeline.BpeModelLayers)

@@ -64,7 +64,7 @@ class Round15Spec extends AnyFunSuite {
     "travel — no deletes/codes_gen ledgers, no markers, no heartbeat") {
     val sub = Similarity.driftedSubstrate(spark, dir)
     val clone = graft.ArtifactRoots.tagged("graft_r15spec_clone", dir)
-    Similarity.cloneIndexTree(spark, sub, clone)
+    graft.store.cloneTree(spark, sub, clone, Similarity.IndexTables)
     val fs = FileSystem.get(new Path(clone).toUri,
       spark.sparkContext.hadoopConfiguration)
     val names = fs.listStatus(new Path(clone)).map(_.getPath.getName).toSet
@@ -336,7 +336,7 @@ class Round15Spec extends AnyFunSuite {
   test("cutover crash state is keyed by layer set: a BPE tail-crash " +
     "aside is invisible to the DSIR verb, and the BPE verb completes " +
     "its own window forward") {
-    val scratch = Pipeline.stageBpeModelClone(spark, dir)
+    val scratch = Pipeline.stageModelClone(spark, dir, Pipeline.BpeModelLayers, "graft_e20_model")
     val fs = FileSystem.get(new Path(scratch).toUri,
       spark.sparkContext.hadoopConfiguration)
     try {

@@ -25,7 +25,7 @@ import graft.ext.{Pipeline, Similarity, TextAnalysis}
   *     retrained world, s29's rebuilt generation, e20's current
   *     tokenizer fertility).
   */
-class Round17Spec extends AnyFunSuite {
+class Round17Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -248,7 +248,7 @@ class Round17Spec extends AnyFunSuite {
     "not survive as a ghost partition (the dynamic-overwrite deletion gap)") {
     import spark.implicits._
     import graft.etl.Warehouse
-    val tmp = java.nio.file.Files.createTempDirectory("erase_gap").toString
+    val tmp = tempDir("erase_gap").toString
     val target = s"$tmp/fact"
     val df = Seq(
       (1L, "012020", 10.0), // month 012020: ONLY victim rows

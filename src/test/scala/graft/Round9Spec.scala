@@ -22,7 +22,7 @@ import graft.ext.Pipeline
   *     source has base mass), so the new column changes nothing for
   *     the existing gate entry.
   */
-class Round9Spec extends AnyFunSuite {
+class Round9Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -747,7 +747,7 @@ class Round9Spec extends AnyFunSuite {
     "untouched lists keep their very files; the ledger clears") {
     import graft.ext.Similarity
     import org.apache.hadoop.fs.{FileSystem, Path}
-    val idx = java.nio.file.Files.createTempDirectory("s18spec").toString
+    val idx = tempDir("s18spec").toString
     Similarity.buildIvfPqIndex(spark, dir, idx, lit(true), lit(true))
     // delete three specific vectors — small enough that most inverted
     // lists are untouched, so the untouched-files pin is non-vacuous
@@ -792,7 +792,7 @@ class Round9Spec extends AnyFunSuite {
       "physical compaction must not change a single served answer")
     // rebuild-without-deleted: same frozen model (train on everything),
     // codes only over survivors — the oracle's statement, re-proven here
-    val idx2 = java.nio.file.Files.createTempDirectory("s18spec2").toString
+    val idx2 = tempDir("s18spec2").toString
     Similarity.buildIvfPqIndex(spark, dir, idx2, lit(true),
       !col("vec_id").isin(delIds: _*))
     val rebuilt = Similarity.queryIvfPqIndex(spark, dir, idx2).collect()

@@ -1,0 +1,252 @@
+package graft
+
+import java.io.IOException
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, Path => JPath}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A local filesystem under the private `crashfs` scheme that injects
+  * one fault into its mutating calls (create, mkdirs, rename, delete,
+  * setTimes) once [[CrashFs.arm]]'s budget of calls has passed: the
+  * next call either CRASHES — it and every later call throw, as if the
+  * process died — or answers `false` once (create and setTimes cannot,
+  * so they throw) while later calls succeed. */
+class CrashFs extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = URI.create("crashfs:///")
+}) {
+  private def refuse(what: String): Nothing =
+    throw new IOException(s"injected fault on $what")
+
+  override def create(f: Path, p: FsPermission, overwrite: Boolean, buf: Int,
+                      rep: Short, block: Long, prog: Progressable): FSDataOutputStream = {
+    if (CrashFs.fault()) refuse(s"create $f")
+    super.create(f, p, overwrite, buf, rep, block, prog)
+  }
+  override def mkdirs(f: Path, p: FsPermission): Boolean = !CrashFs.fault() && super.mkdirs(f, p)
+  override def mkdirs(f: Path): Boolean = !CrashFs.fault() && super.mkdirs(f)
+  override def rename(src: Path, dst: Path): Boolean = !CrashFs.fault() && super.rename(src, dst)
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    !CrashFs.fault() && super.delete(f, recursive)
+  override def setTimes(f: Path, mtime: Long, atime: Long): Unit = {
+    if (CrashFs.fault()) refuse(s"setTimes $f")
+    super.setTimes(f, mtime, atime)
+  }
+}
+
+object CrashFs {
+  private var left = Int.MaxValue
+  private var answerFalse = false
+  private var faulted = false
+  private var dead = false
+
+  /** Let `calls` mutating calls pass, then inject the fault. */
+  def arm(calls: Int, falseMode: Boolean): Unit = synchronized {
+    left = calls; answerFalse = falseMode; faulted = false; dead = false
+  }
+
+  /** Stop injecting; true iff a fault was injected since [[arm]]. */
+  def disarm(): Boolean = synchronized {
+    val f = faulted
+    arm(Int.MaxValue, falseMode = false)
+    f
+  }
+
+  /** True when this call must answer `false`; throws on a crash. */
+  def fault(): Boolean = synchronized {
+    if (dead) throw new IOException("injected crash (process dead)")
+    if (left > 0) { left -= 1; false }
+    else if (faulted) false
+    else {
+      faulted = true
+      if (!answerFalse) { dead = true; throw new IOException("injected crash") }
+      true
+    }
+  }
+}
+
+/** The artifact store's crash law ([[graft.store]]) as one property,
+  * plus the guard that keeps swaps and tree copies inside the store. */
+class StoreSpec extends AnyFunSuite with TempDirs {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def check(name: String, prop: Prop, n: Int = 30): Unit = {
+    val res = SCTest.check(
+      SCTest.Parameters.default
+        .withMinSuccessfulTests(n)
+        .withInitialSeed(Seed(42L)),
+      prop)
+    assert(res.passed, s"$name: $res")
+  }
+
+  /** Every file (with its content) and every empty directory under
+    * `dir`, keyed by relative path. */
+  private def snapshot(dir: JPath): Map[String, String] = {
+    def empty(p: JPath): Boolean = {
+      val l = Files.list(p)
+      try !l.findAny().isPresent finally l.close()
+    }
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_ != dir).collect {
+      case p if Files.isRegularFile(p) => dir.relativize(p).toString -> Files.readString(p)
+      case p if empty(p) => dir.relativize(p).toString + "/" -> ""
+    }.toMap
+    finally s.close()
+  }
+
+  private def put(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(body.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** One store verb over a fresh trial root: `setup` lays down the old
+    * world, `run` is the verb, `done` is the whole trial root after a
+    * successful run, `between` the states a reader may see after a
+    * crashed run once `recovered` has brought the slot back. */
+  private case class Verb(setup: (FileSystem, String) => Unit,
+                          run: (FileSystem, String) => Unit,
+                          done: Map[String, String],
+                          recovered: Option[(FileSystem, String) => Unit] = None,
+                          between: Set[Map[String, String]] = Set.empty)
+
+  private val sealedLayer = Map("_SUCCESS" -> "", "_graft_schema.ddl" -> "v STRING")
+
+  private def layerFiles(name: String, body: String): Map[String, String] =
+    (sealedLayer + ("data" -> body)).map { case (f, c) => s"$name/$f" -> c }
+
+  private def putLayer(fs: FileSystem, dir: String, body: String): Unit =
+    (sealedLayer + ("data" -> body)).foreach { case (f, c) => put(fs, new Path(s"$dir/$f"), c) }
+
+  private def swapPaths(r: String) =
+    (new Path(s"$r/live"), new Path(s"$r/live.tmp"), new Path(s"$r/live.old"))
+
+  private val swapVerb = Verb(
+    setup = (fs, r) => put(fs, new Path(s"$r/live/a"), "old"),
+    run = { (fs, r) =>
+      val (live, stage, aside) = swapPaths(r)
+      store.recover(fs, live, stage, aside)
+      put(fs, new Path(stage, "a"), "new")
+      put(fs, new Path(stage, "b"), "new")
+      store.swap(fs, live, stage, aside)
+    },
+    done = Map("live/a" -> "new", "live/b" -> "new"),
+    recovered = Some { (fs, r) =>
+      val (live, stage, aside) = swapPaths(r)
+      store.recover(fs, live, stage, aside)
+    },
+    between = Set(Map("live/a" -> "old"), Map("live/a" -> "new", "live/b" -> "new")))
+
+  private val srcFiles = Map("src/x/1" -> "1", "src/x/2" -> "2", "src/y" -> "3", "src/z" -> "4")
+
+  private val cloneVerb = Verb(
+    setup = { (fs, r) =>
+      srcFiles.foreach { case (f, c) => put(fs, new Path(s"$r/$f"), c) }
+      put(fs, new Path(s"$r/dst/stale"), "stale")
+    },
+    run = (_, r) => store.cloneTree(spark, s"$r/src", s"$r/dst", Seq("x", "y")),
+    done = srcFiles ++ Map("dst/x/1" -> "1", "dst/x/2" -> "2", "dst/y" -> "3"))
+
+  private val Layers = Seq("l1", "l2")
+
+  private def cutoverVerb(withGeneration: Boolean): Verb = {
+    def staged(r: String, l: String) = if (withGeneration) s"$r/gen/$l" else s"$r/next_$l"
+    Verb(
+      setup = { (fs, r) =>
+        Layers.foreach { l => putLayer(fs, s"$r/$l", s"old $l"); putLayer(fs, staged(r, l), s"new $l") }
+      },
+      run = (_, r) => store.cutover(spark, new Path(s"$r/done"), new Path(s"$r/asides"),
+        Layers.map(l => store.Layer(new Path(staged(r, l)), new Path(s"$r/$l"),
+          new Path(s"$r/asides/$l"))),
+        generation = if (withGeneration) Some(new Path(s"$r/gen")) else None, tables = true),
+      done = Layers.flatMap(l => layerFiles(l, s"new $l")).toMap + ("done" -> ""))
+  }
+
+  private val treeVerb = Verb(
+    setup = (fs, r) => put(fs, new Path(s"$r/t/part"), "partial"),
+    run = { (fs, r) =>
+      store.ensureTree(spark, s"$r/t") {
+        put(fs, new Path(s"$r/t/a"), "new")
+        put(fs, new Path(s"$r/t/b"), "new")
+      }
+    },
+    done = Map("t/a" -> "new", "t/b" -> "new", "t/_GRAFT_SUBSTRATE_OK" -> ""))
+
+  private val verbs = Map("swap" -> swapVerb, "clone" -> cloneVerb,
+    "cutover" -> cutoverVerb(withGeneration = false),
+    "cutover_gen" -> cutoverVerb(withGeneration = true), "tree" -> treeVerb)
+
+  test("crash-point property: for a fault after k mutating calls, every store " +
+    "verb fails loudly, a reader after recovery sees the old or the new slot " +
+    "whole, and a re-run converges to the new content with no aside, stage " +
+    "or tmp sibling left") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    conf.setBoolean("fs.crashfs.impl.disable.cache", true)
+    val base = tempDir("store_crash")
+    var trial = 0
+    try {
+      val gen = for {
+        name <- Gen.oneOf(verbs.keys.toSeq.sorted)
+        k <- Gen.chooseNum(0, 12)
+        answerFalse <- Gen.oneOf(false, true)
+      } yield (name, k, answerFalse)
+      check("crash-point", Prop.forAllNoShrink(gen) { case (name, k, answerFalse) =>
+        val verb = verbs(name)
+        trial += 1
+        val local = base.resolve(s"t$trial")
+        val root = s"crashfs://$local"
+        val fs = FileSystem.get(URI.create(root), conf)
+        verb.setup(fs, root)
+        CrashFs.arm(k, answerFalse)
+        val threw =
+          try { verb.run(fs, root); false }
+          catch { case NonFatal(_) => true }
+        val faulted = CrashFs.disarm()
+        val loud = !faulted || threw
+        val readable = !threw || verb.recovered.forall { rec =>
+          rec(fs, root)
+          verb.between.contains(snapshot(local))
+        }
+        verb.run(fs, root)
+        val converged = snapshot(local) == verb.done
+        Prop(loud && readable && converged) :|
+          s"$name k=$k false=$answerFalse threw=$threw faulted=$faulted " +
+            s"state=${snapshot(local)}"
+      }, n = 200)
+    } finally CrashFs.disarm()
+  }
+
+  test("only the artifact store renames or copies trees: no `.rename(` in " +
+    "src/main outside graft/store.scala, and no FileUtil.copy outside it and " +
+    "the part-file stager") {
+    val main = Paths.get("src/main/scala")
+    val s = Files.walk(main)
+    val sources =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    def offenders(needle: String, allowed: Set[String]): Seq[String] =
+      sources.filter(p => !allowed.contains(main.relativize(p).toString) &&
+        Files.readString(p).contains(needle)).map(_.toString)
+    assert(offenders(".rename(", Set("graft/store.scala")).isEmpty,
+      "hand-rolled rename: route swaps through graft.store")
+    assert(offenders("FileUtil.copy", Set("graft/store.scala",
+      "graft/streaming/WaveLedger.scala")).isEmpty,
+      "hand-rolled tree copy: route clones through graft.store.cloneTree")
+  }
+}
