@@ -314,12 +314,7 @@ object RetailStar {
     * values stay strings (inference would parse "092023" as an
     * integer and drop the pad). */
   def q56StarRefresh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val root = graft.ArtifactRoots.tagged("graft_starref_v1", dir)
-    val target = s"$root/fact_by_month"
-    val rp = new Path(root)
-    val fs = FileSystem.get(rp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rp)) fs.delete(rp, true) // fresh scratch per invocation
+    val target = s"${graft.store.scratch(spark, "graft_starref_v1", dir)}/fact_by_month"
     // the maintenance verb operates on the WAREHOUSE (the persisted
     // star artifact), not on a fresh ETL derivation — star_build
     // benchmarks the ETL; this row benchmarks the load mechanics
@@ -328,9 +323,9 @@ object RetailStar {
     // the pre-load standing state (every month but the arriving one) =
     // the cloned substrate minus the arriving month's partition dir —
     // partition dirs hold exactly their month's rows, so the delete is
-    // the filter (r17 optimization; was a fresh 80-partition write)
+    // the filter (no fresh 80-partition write)
     cloneWarehouse(spark, dir, target)
-    fs.delete(new Path(s"$target/month_key=$lastKey"), true)
+    graft.store.clear(spark, s"$target/month_key=$lastKey")
     val arriving = fact.filter(col("month_key") === lastKey)
     Warehouse.withDynamicOverwrite(spark) {
       arriving.write.mode("overwrite").partitionBy("month_key").parquet(target)
@@ -392,14 +387,9 @@ object RetailStar {
     * (repack of already-clean partitions — Round17Spec pins untouched
     * months byte-identical across the re-run). */
   def q57FactRetention(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val root = graft.ArtifactRoots.tagged("graft_starret_v1", dir)
-    val target = s"$root/fact_by_month"
-    val rp = new Path(root)
-    val fs = FileSystem.get(rp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rp)) fs.delete(rp, true) // fresh scratch per invocation
+    val target = s"${graft.store.scratch(spark, "graft_starret_v1", dir)}/fact_by_month"
     // operate on the persisted warehouse fact (q56's discipline); the
-    // standing warehouse is the cloned once-per-corpus substrate (r17)
+    // standing warehouse is the cloned once-per-corpus substrate
     val fact = servedStar(spark, dir).fact
     cloneWarehouse(spark, dir, target)
     // victim surrogate keys (bounded: the erasure request's subjects);
@@ -433,20 +423,16 @@ object RetailStar {
     * apply law drift from the scenario q58 actually gates). */
   private[graft] def stageStaleWarehouse(spark: SparkSession, dir: String,
                                          target: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
     val fact = servedStar(spark, dir).fact
     val lateKeys = arrivingMonthKeys(spark, dir, Q58LateMonths)
     // clone the standing substrate and repack ONLY the late-window
-    // months without their late slice (r17 optimization — the late
-    // slice lives exclusively in lateKeys months, so every other
-    // month's partition is already the stale content verbatim; was a
-    // fresh 80-partition write of fact.filter(!isLate)). The dirs are
-    // deleted first so a month whose every row were late would stay
+    // months without their late slice — the late slice lives
+    // exclusively in lateKeys months, so every other month's partition
+    // is already the stale content verbatim. The dirs are deleted
+    // first, checked, so a month whose every row were late stays
     // absent rather than surviving as a ghost partition.
     cloneWarehouse(spark, dir, target)
-    val fs = FileSystem.get(new Path(target).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    lateKeys.foreach(k => fs.delete(new Path(s"$target/month_key=$k"), true))
+    lateKeys.foreach(k => graft.store.clear(spark, s"$target/month_key=$k"))
     Warehouse.withDynamicOverwrite(spark) {
       fact.filter(col("month_key").isin(lateKeys: _*) &&
           pmod(col("transaction_id"), lit(Q58LateMod)) =!= Q58LateDigit)
@@ -479,12 +465,7 @@ object RetailStar {
     * full source re-scan); the apply cost ∝ fired months only, never
     * history depth; the fired set is month-bounded driver state. */
   def q58StarFreshness(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val root = graft.ArtifactRoots.tagged("graft_starfr_v1", dir)
-    val target = s"$root/fact_by_month"
-    val rp = new Path(root)
-    val fs = FileSystem.get(rp.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rp)) fs.delete(rp, true) // fresh scratch per invocation
+    val target = s"${graft.store.scratch(spark, "graft_starfr_v1", dir)}/fact_by_month"
     val fact = stageStaleWarehouse(spark, dir, target)
     // measure → fire → gated refresh live in
     // [[Warehouse.refreshDriftedMonths]] (the erasure-helper

@@ -1744,7 +1744,7 @@ object Pipeline {
     offboardPairs(spark, dir)
     offboardManifest(spark, dir)
     manifestArtifact(spark, dir) // live chain is linear down to signatures
-    val scratch = graft.ArtifactRoots.tagged("graft_e18_cutover", dir)
+    val scratch = graft.store.scratch(spark, "graft_e18_cutover", dir)
     graft.store.cloneTree(spark, eArtifactRoot(dir), scratch, DagLayers :+ offboardTag)
     scratch
   }
@@ -1813,7 +1813,7 @@ object Pipeline {
       frozenDsirPerDocArtifact(spark, dir)
       frozenDsirCutArtifact(spark, dir)
     }
-    val scratch = graft.ArtifactRoots.tagged(prefix, dir)
+    val scratch = graft.store.scratch(spark, prefix, dir)
     graft.store.cloneTree(spark, eArtifactRoot(dir), scratch,
       layers ++ layers.map(l => s"model_frozen/$l"))
     scratch
@@ -2196,12 +2196,7 @@ object Pipeline {
     * source's (gate ∘ refresh ≡ rebuild, pinned). */
   private[graft] def e22StarFiredApply(spark: SparkSession, dir: String): Long = {
     import graft.etl.{RetailStar, Warehouse}
-    val root = graft.ArtifactRoots.tagged("graft_e22_star", dir)
-    val target = s"$root/fact_by_month"
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = org.apache.hadoop.fs.FileSystem.get(rp.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rp)) fs.delete(rp, true)
+    val target = s"${graft.store.scratch(spark, "graft_e22_star", dir)}/fact_by_month"
     // q58's exact staging (one shared definition — the forced-apply
     // law must exercise the scenario q58 actually gates)
     val fact = RetailStar.stageStaleWarehouse(spark, dir, target)

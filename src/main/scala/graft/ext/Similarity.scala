@@ -1614,35 +1614,6 @@ object Similarity {
     (waveAssign, pairs)
   }
 
-  /** PlanSnap-only: the arrive-wave PAIRS frame with the r18 broadcast
-    * hints (production form) or the pre-r18 unhinted joins — the
-    * before/after evidence for the in-batch plan change
-    * (plans/r18/st15_batch_pairs_*). Never called from a query path. */
-  private[graft] def knngWavePairsForSnap(spark: SparkSession, dir: String,
-                                          waveEmb: DataFrame,
-                                          preR18: Boolean): DataFrame = {
-    if (!preR18)
-      return knngArriveWaveTables(spark, dir, waveEmb,
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          new org.apache.spark.sql.types.StructType()
-            .add("vec_id", org.apache.spark.sql.types.LongType)
-            .add("cid", org.apache.spark.sql.types.LongType)
-            .add("r", org.apache.spark.sql.types.IntegerType)))._2
-    val waveAssign = rankCentroids(quantVecsOf(waveEmb),
-        knngBaseCentroids(spark, dir))
-      .filter(col("r") <= S20Probes)
-      .select(col("vec_id"), col("cid"), col("r"))
-      .localCheckpoint()
-    val allAssign = knngBaseAssignArtifact(spark, dir).unionByName(waveAssign)
-    def probes(a: DataFrame) = a.select(col("vec_id"), col("cid"))
-    def prims(a: DataFrame) = a.filter(col("r") === 1)
-      .select(col("vec_id").as("nb_id"), col("cid"))
-    probes(waveAssign).join(prims(allAssign), Seq("cid"))
-      .union(probes(allAssign).join(prims(waveAssign), Seq("cid")))
-      .filter(col("vec_id") =!= col("nb_id"))
-      .select(col("vec_id"), col("nb_id")).distinct()
-  }
-
   /** Spec-only: the graph at an arbitrary (probes, rounds) operating
     * point — Round13Spec's recall/cost frontier sweep (the SURVEY
     * note "past the knee, widen probes before round 3" measured). */
@@ -2140,9 +2111,7 @@ object Similarity {
     val app = knngAppendedGraph(spark, dir)
     val full = knngGraphArtifact(spark, dir)
     knngExactTruth(spark, dir) // the drift grade's truth, ensured up front
-    val scratch = graft.ArtifactRoots.tagged(prefix, dir)
-    val sp = new Path(scratch)
-    graft.store.clear(FileSystem.get(sp.toUri, spark.sparkContext.hadoopConfiguration), sp)
+    val scratch = graft.store.scratch(spark, prefix, dir)
     app.select(col("vec_id"), col("nb_id").as("neighbor_id"), col("d2_fp"),
         col("rank"))
       .write.mode("overwrite").parquet(s"$scratch/serve")

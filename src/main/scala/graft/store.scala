@@ -60,15 +60,38 @@ object store {
   def clear(fs: FileSystem, p: Path): Unit =
     if (fs.exists(p) && !fs.delete(p, true)) fail(s"delete failed: $p")
 
+  /** [[clear]] on the filesystem that holds `path`. */
+  def clear(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    clear(fsOf(spark, p), p)
+  }
+
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) fail(s"rename failed: $from -> $to")
 
-  private def mkdirs(fs: FileSystem, p: Path): Unit =
+  /** Create `p` and its parents; a `false` from the filesystem fails. */
+  def mkdirs(fs: FileSystem, p: Path): Unit =
     if (!fs.mkdirs(p)) fail(s"mkdirs failed: $p")
 
   // ------------------------------------------------------------------
   // Roots and marker-gated builds
   // ------------------------------------------------------------------
+
+  /** A fresh SCRATCH root for one invocation of a maintenance verb: the
+    * tagged root under `prefix`, cleared (a delete that answers `false`
+    * fails the verb rather than letting it run over the previous
+    * invocation's leftovers), with each of `subdirs` created under it,
+    * checked. The root holds only this invocation's working state and
+    * is never served, so unlike [[served]] it writes no heartbeat. */
+  def scratch(spark: SparkSession, prefix: String, dir: String,
+              subdirs: String*): String = {
+    val root = ArtifactRoots.tagged(prefix, dir)
+    val rp = new Path(root)
+    val fs = fsOf(spark, rp)
+    clear(fs, rp)
+    subdirs.foreach(s => mkdirs(fs, new Path(rp, s)))
+    root
+  }
 
   /** Resolve an artifact root and advertise it as actively served
     * (the last-use heartbeat the 4×-grace GC bound keys on). */

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -42,57 +42,20 @@ import graft.ext.{Dedup, Pipeline}
   * corpus beyond the endpoint-bounded verify. */
 object DocumentsStream {
 
-  /** File-source stream of document rows. The schema comes from the
-    * CORPUS documents table — the authority the waves are slices of —
-    * not from sniffing the arrivals dir, so a (re)start against a
-    * still-empty arrivals dir idles for files like a production
-    * ingest job instead of failing schema inference. */
-  def readDocumentsStream(spark: SparkSession, corpusDir: String, inDir: String,
-                          maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(Tables.documents(spark, corpusDir).schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-
-  /** Written LAST into a ledger batch dir: its presence is the
-    * batch's commit. (Parquet's own _SUCCESS is per-table; a batch
-    * may write TWO tables, so completeness needs one marker after
-    * both — the per-batch commit rule, not a root marker vouching
-    * for later batches.) ONE shared protocol, [[WaveLedger]]. */
-  private val CommitMarker = WaveLedger.CommitMarker
-
   private val pairsSchema = StructType(Seq(
     StructField("a_id", LongType), StructField("b_id", LongType),
     StructField("jaccard", DoubleType)))
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-
-  /** Committed (marker-present) ledger batch dirs, name-ordered so
-    * every reader sees one deterministic sequence. */
-  private[graft] def committedBatches(spark: SparkSession, base: String): Seq[Path] =
-    WaveLedger.committedBatches(spark, base)
-
   // ---------------------------------------------------------------
   // Ledger COMPACTION — the fold verb: without it the ledger
   // accumulates one dir per wave forever and every serve (and every
-  // batch's banding base) re-folds all of it. Since r16 the whole
-  // mechanism (cumulative marker-gated generations + folded-tag
-  // vouching + crash-window GC) lives in [[WaveLedger]], shared by
-  // every ledger tier; this tier folds {sigs, pairs} — pairs are
-  // unioned, never re-derived (e13's refresh law — signatures are
-  // arrival-invariant, so the fold IS the merge). The thin names
-  // below keep this tier's call sites (and Round12Spec's pins) on
-  // the one shared definition.
+  // batch's banding base) re-folds all of it. The mechanism
+  // (cumulative marker-gated generations + folded-tag vouching +
+  // crash-window GC) lives in [[WaveLedger]], shared by every ledger
+  // tier; this tier folds {sigs, pairs} — pairs are unioned, never
+  // re-derived (e13's refresh law — signatures are arrival-invariant,
+  // so the fold IS the merge).
   // ---------------------------------------------------------------
-
-  private[graft] def committedGens(spark: SparkSession, base: String): Seq[Path] =
-    WaveLedger.committedGens(spark, base)
-
-  private[graft] type LedgerState = WaveLedger.LedgerState
-
-  private[graft] def ledgerState(spark: SparkSession, base: String): LedgerState =
-    WaveLedger.ledgerState(spark, base)
 
   /** Fold the committed live waves into the next compacted
     * generation and clear them. Marker-gated and idempotent: with no
@@ -144,7 +107,7 @@ object DocumentsStream {
     // set and the prior-wave dirs come from the same listing —
     // foreachBatch is sequential and compaction never runs inside a
     // batch, so the state cannot move between the vouch and the work
-    val st = ledgerState(spark, base)
+    val st = WaveLedger.ledgerState(spark, base)
     // the folded-tag set vouches for waves whose dirs a compaction
     // cleared — their re-delivery must skip without re-deriving a pair
     WaveLedger.waveCommit(spark, base, batch,
@@ -195,15 +158,12 @@ object DocumentsStream {
     * e13's law, read at serve time. */
   private[graft] def labelsFromLedger(spark: SparkSession, dir: String,
                                       base: String): DataFrame = {
-    val waveDirs = ledgerState(spark, base).dirs("pairs")
     // ONE multi-path relation (not N unions); the explicit schema
     // keeps the zero-wave case a well-typed empty frame
-    val fresh =
-      if (waveDirs.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](), pairsSchema)
-      else spark.read.schema(pairsSchema).parquet(waveDirs: _*)
+    val fresh = WaveLedger.readOrEmpty(spark,
+      WaveLedger.ledgerState(spark, base).dirs("pairs"), pairsSchema)
     // yesterday's labeling served from the persisted base labeling
-    // (r15 — one CC per serve, not two)
+    // (one CC per serve, not two)
     Dedup.incrementalFoldFrom(Pipeline.baseLabelsArtifact(spark, dir),
       fresh.select(col("a_id"), col("b_id")))
   }
@@ -211,14 +171,9 @@ object DocumentsStream {
   /** Start (or RESUME — same checkpoint) the maintenance stream over
     * the staged arrivals dir and drain everything available. */
   private[graft] def runMaintain(spark: SparkSession, dir: String, base: String,
-                                 checkpoint: String): StreamingQuery = {
-    val q = readDocumentsStream(spark, dir, s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(maintainBatch(spark, dir, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                                 checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, Tables.documents(spark, dir).schema, s"$base/in",
+      checkpoint)(maintainBatch(spark, dir, base))
 
   /** Stage one wave of the e4 delta slice into the arrivals dir.
     * Wave 0 = doc_id % 3 == 0, wave 1 = the rest — a modulus coprime
@@ -244,11 +199,7 @@ object DocumentsStream {
     * verbatim. Scratch lives at one FIXED location per corpus,
     * rebuilt per invocation (st11's no-accumulation discipline). */
   def st13GraphMaintain(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st13", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st13", dir, "in")
     stageWave(spark, dir, base, 0)
     runMaintain(spark, dir, base, s"$base/cp").stop()
     stageWave(spark, dir, base, 1)
@@ -268,11 +219,7 @@ object DocumentsStream {
     * the crash window (marker present, waves not yet deleted — no
     * double-serve) and the post-compaction replay skip. */
   def st14LedgerCompact(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st14", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st14", dir, "in")
     stageWave(spark, dir, base, 0)
     runMaintain(spark, dir, base, s"$base/cp").stop()
     compactLedger(spark, base) // wave A → gen 0, ledger cleared
@@ -304,7 +251,7 @@ object DocumentsStream {
       xxhash64(col("doc_id")), xxhash64(col("doc_id"), lit(19L)),
       // a compacted id wave's re-delivery is vouched by the folded set
       // (r16 — the id tiers run the same compaction verb)
-      alsoCommitted = ledgerState(spark, base).folded) { bdir =>
+      alsoCommitted = WaveLedger.ledgerState(spark, base).folded) { bdir =>
       ids.distinct().write.mode("overwrite")
         .parquet(new Path(bdir, "ids").toString)
     }
@@ -319,15 +266,9 @@ object DocumentsStream {
       Seq("ids" -> Some(retractIdSchema)))
 
   private[graft] def runDocRetract(spark: SparkSession, base: String,
-                                   checkpoint: String): StreamingQuery = {
-    val q = spark.readStream.schema(retractIdSchema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(docRetractBatch(spark, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                                   checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, retractIdSchema, s"$base/in", checkpoint)(
+      docRetractBatch(spark, base))
 
   /** Stage one takedown wave (the [[St19RetractDigit]] slice, %3
     * split — st13's coprime wave split and mtime-forced order). */
@@ -340,13 +281,11 @@ object DocumentsStream {
   }
 
   /** The union of every committed takedown wave's ids — read through
-    * the ledger STATE (latest compacted generation + live tail, r16). */
+    * the ledger STATE (latest compacted generation + live tail). */
   private[graft] def retiredFromLedger(spark: SparkSession,
                                        base: String): DataFrame = {
-    val dirs = ledgerState(spark, base).dirs("ids")
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), retractIdSchema)
-    else spark.read.schema(retractIdSchema).parquet(dirs: _*).distinct()
+    WaveLedger.readOrEmpty(spark,
+      WaveLedger.ledgerState(spark, base).dirs("ids"), retractIdSchema).distinct()
   }
 
   /** The ST19 gate entry — streaming RETRACT for the candidate-pair
@@ -362,11 +301,7 @@ object DocumentsStream {
     * pair table with slice-endpoint rows removed — stream-fold ≡
     * rebuild-without-retired, e14's law under streaming intake. */
   def st19PairRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st19", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st19", dir, "in")
     stageDocRetractWave(spark, dir, base, 0)
     runDocRetract(spark, base, s"$base/cp").stop()
     stageDocRetractWave(spark, dir, base, 1)
@@ -402,7 +337,7 @@ object DocumentsStream {
     WaveLedger.waveCommit(spark, base, batch,
       xxhash64(col("doc_id"), col("text")),
       xxhash64(col("text"), col("doc_id")),
-      alsoCommitted = ledgerState(spark, base).folded) { bdir =>
+      alsoCommitted = WaveLedger.ledgerState(spark, base).folded) { bdir =>
       Pipeline.docFlagsForWave(spark, dir, batch)
         .write.mode("overwrite").parquet(new Path(bdir, "flags").toString)
     }
@@ -413,24 +348,17 @@ object DocumentsStream {
     WaveLedger.compactLedger(spark, base, Seq("flags" -> Some(flagsSchema)))
 
   private[graft] def runFlags(spark: SparkSession, dir: String, base: String,
-                              checkpoint: String): StreamingQuery = {
-    val q = readDocumentsStream(spark, dir, s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(flagsBatch(spark, dir, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                              checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, Tables.documents(spark, dir).schema, s"$base/in",
+      checkpoint)(flagsBatch(spark, dir, base))
 
   /** The union of every committed wave's flags — st20's serve input
     * (the streamed equivalent of `docflags.filter(e4DeltaPred)`),
-    * read through the ledger STATE (gen + tail, r16). */
+    * read through the ledger STATE (gen + tail). */
   private[graft] def flagsFromLedger(spark: SparkSession,
                                      base: String): DataFrame = {
-    val dirs = ledgerState(spark, base).dirs("flags")
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), flagsSchema)
-    else spark.read.schema(flagsSchema).parquet(dirs: _*)
+    WaveLedger.readOrEmpty(spark,
+      WaveLedger.ledgerState(spark, base).dirs("flags"), flagsSchema)
   }
 
   /** The ST20 gate entry — streaming ARRIVAL for the docflags→bins
@@ -449,11 +377,7 @@ object DocumentsStream {
     * frame-for-frame. Scratch lives at one fixed location per corpus,
     * rebuilt per invocation (st11's no-accumulation discipline). */
   def st20BinsArrive(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st20", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st20", dir, "in")
     stageWave(spark, dir, base, 0)
     runFlags(spark, dir, base, s"$base/cp").stop()
     stageWave(spark, dir, base, 1)
@@ -504,7 +428,7 @@ object DocumentsStream {
     // the kernel re-unioned every prior wave's dirs per wave, an
     // unbounded list between full rebuilds), and the folded set
     // vouches for compacted re-deliveries
-    val st = ledgerState(spark, s"$base/arrive")
+    val st = WaveLedger.ledgerState(spark, s"$base/arrive")
     WaveLedger.waveCommit(spark, s"$base/arrive", batch,
       xxhash64(col("doc_id"), col("text")),
       xxhash64(col("text"), col("doc_id")),
@@ -597,20 +521,9 @@ object DocumentsStream {
     // micro-batch; the checkpoint block is freed when the query's
     // closure is unreferenced
     lazy val retired = retiredFromLedger(spark, rb).localCheckpoint()
-    val q = spark.readStream.schema(updateDocSchema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/arrive/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(updateArriveBatch(spark, dir, base, rb, () => retired) _)
-      .start()
-    WaveLedger.drain(q)
+    WaveLedger.run(spark, updateDocSchema, s"$base/arrive/in", checkpoint)(
+      updateArriveBatch(spark, dir, base, rb, () => retired))
   }
-
-  /** Stage one single-file wave of `part` into `inDir` — the shared
-    * [[WaveLedger.stageFrameWave]] stager. */
-  private def stageFrameWave(spark: SparkSession, part: DataFrame,
-                             base: String, inDir: String, wave: Int): Unit =
-    WaveLedger.stageFrameWave(spark, part, base, inDir, wave)
 
   /** st21's RETRACT-LEDGER SUBSTRATE (the shared-substrate precedent
     * at the stream tier): the tombstone manifest's streamed
@@ -630,9 +543,9 @@ object DocumentsStream {
     graft.store.tree(spark, "graft_st21ret_v1", dir) { root =>
       val editedIds = Tables.documents(spark, dir).select(col("doc_id"))
         .filter(col("doc_id") % 10 === Dedup.D22EditDigit)
-      stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 === 0),
+      WaveLedger.stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 === 0),
         root, s"$root/in", 0)
-      stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 =!= 0),
+      WaveLedger.stageFrameWave(spark, editedIds.filter(col("doc_id") % 3 =!= 0),
         root, s"$root/in", 1)
       runDocRetract(spark, root, s"$root/cp").stop()
     }
@@ -650,19 +563,15 @@ object DocumentsStream {
     * VERBATIM; Round15Spec pins stream-fold ≡ the batch d22 verb
     * engine-side. */
   def st21PairUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st21", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/arrive/in"))
+    val base = graft.store.scratch(spark, "graft_st21", dir, "arrive/in")
     // phase 1 — the tombstone manifest: the staged substrate ledger
     val rBase = st21RetractSubstrate(spark, dir)
     // phase 2 — the re-edited content (d22's batch, new text), restart
     val newDocs = Dedup.d22EditedBatch(spark, dir)
-    stageFrameWave(spark, newDocs.filter(col("doc_id") % 3 === 0),
+    WaveLedger.stageFrameWave(spark, newDocs.filter(col("doc_id") % 3 === 0),
       base, s"$base/arrive/in", 2)
     runUpdateArrive(spark, dir, base, s"$base/arrive/cp", rBase).stop()
-    stageFrameWave(spark, newDocs.filter(col("doc_id") % 3 =!= 0),
+    WaveLedger.stageFrameWave(spark, newDocs.filter(col("doc_id") % 3 =!= 0),
       base, s"$base/arrive/in", 3)
     runUpdateArrive(spark, dir, base, s"$base/arrive/cp", rBase).stop()
     st21Serve(spark, dir, base, rBase)
@@ -682,15 +591,11 @@ object DocumentsStream {
       Pipeline.pairsArtifact(spark, dir).select(col("a_id"), col("b_id")),
       Pipeline.labelsArtifact(spark, dir),
       retiredFromLedger(spark, rb))
-    // gen + tail (r16): the serve reads ONE compacted generation plus
+    // gen + tail: the serve reads ONE compacted generation plus
     // the live wave tail, never an unbounded per-wave dir list
-    val pairDirs = ledgerState(spark, s"$base/arrive").dirs("pairs")
-    val newPairs =
-      if (pairDirs.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](), pairsSchema)
-          .select(col("a_id"), col("b_id"))
-      else spark.read.schema(pairsSchema).parquet(pairDirs: _*)
-        .select(col("a_id"), col("b_id"))
+    val newPairs = WaveLedger.readOrEmpty(spark,
+      WaveLedger.ledgerState(spark, s"$base/arrive").dirs("pairs"), pairsSchema)
+      .select(col("a_id"), col("b_id"))
     Dedup.connectedComponents(
       untouched.select(col("doc_id").as("a_id"), col("cluster_id").as("b_id"))
         .unionByName(survivors).unionByName(newPairs), "a_id", "b_id")
@@ -723,16 +628,12 @@ object DocumentsStream {
     * docflags scan + per-shard packing windows (e11's shape) at
     * takedown cadence. */
   def st22BinsRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st22", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st22", dir, "in")
     val ids = Tables.documents(spark, dir).select(col("doc_id"))
       .filter(col("doc_id") % 10 === St22RetireDigit)
-    stageFrameWave(spark, ids.filter(col("doc_id") % 3 === 0),
+    WaveLedger.stageFrameWave(spark, ids.filter(col("doc_id") % 3 === 0),
       base, s"$base/in", 0)
-    stageFrameWave(spark, ids.filter(col("doc_id") % 3 =!= 0),
+    WaveLedger.stageFrameWave(spark, ids.filter(col("doc_id") % 3 =!= 0),
       base, s"$base/in", 1)
     runDocRetract(spark, base, s"$base/cp").stop()
     Pipeline.retentionReport(

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -56,39 +56,6 @@ object EmbeddingsStream {
   private val pairSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("nb_id", LongType)))
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    org.apache.hadoop.fs.FileSystem.get(p.toUri,
-      spark.sparkContext.hadoopConfiguration)
-
-  /** File-source stream of (vec_id, embedding) rows; schema from the
-    * corpus embeddings table (the authority the waves are slices of). */
-  def readEmbeddingsStream(spark: SparkSession, corpusDir: String,
-                           inDir: String): DataFrame =
-    spark.readStream
-      .schema(Tables.embeddings(spark, corpusDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-
-  private[graft] def committedBatches(spark: SparkSession, base: String): Seq[Path] =
-    WaveLedger.committedBatches(spark, base)
-
-  private def readOrEmpty(spark: SparkSession, dirs: Seq[String],
-                          schema: StructType): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
-
-  /** The content-keyed wave gate (st13's exactly-once discipline) —
-    * ONE shared definition for every ledger family, [[WaveLedger]].
-    * `ck`/`cs` feed the content key — id-only waves key on the id,
-    * embedding waves fold the vector in so a re-embedded wave under
-    * unchanged ids keys differently. */
-  private def waveCommit(spark: SparkSession, base: String, batch: DataFrame,
-                         ck: Column, cs: Column,
-                         alsoCommitted: String => Boolean = _ => false)
-                        (work: Path => Unit): Unit =
-    WaveLedger.waveCommit(spark, base, batch, ck, cs, alsoCommitted)(work)
-
   private def embWaveKey(c: Column*): Column = xxhash64(c: _*)
 
   /** One arrival micro-batch: the wave's work under the content gate —
@@ -101,11 +68,11 @@ object EmbeddingsStream {
   private[graft] def arriveBatch(spark: SparkSession, dir: String, base: String)
                                 (batch: DataFrame, batchId: Long): Unit = {
     val st = WaveLedger.ledgerState(spark, base)
-    waveCommit(spark, base, batch,
+    WaveLedger.waveCommit(spark, base, batch,
       embWaveKey(col("vec_id"), col("embedding")),
       embWaveKey(col("embedding"), col("vec_id")),
       alsoCommitted = st.folded) { bdir =>
-      val priorAssign = readOrEmpty(spark, st.dirs("assign"), assignSchema)
+      val priorAssign = WaveLedger.readOrEmpty(spark, st.dirs("assign"), assignSchema)
       val (assign, pairs) =
         Similarity.knngArriveWaveTables(spark, dir, batch, priorAssign)
       // assign is checkpointed by the kernel, so the two writes are
@@ -138,21 +105,16 @@ object EmbeddingsStream {
   private[graft] def appendedFromLedger(spark: SparkSession, dir: String,
                                         base: String): DataFrame = {
     val st = WaveLedger.ledgerState(spark, base)
-    val c1 = readOrEmpty(spark, st.dirs("pairs"), pairSchema)
-    val arrIds = readOrEmpty(spark, st.dirs("assign"), assignSchema)
+    val c1 = WaveLedger.readOrEmpty(spark, st.dirs("pairs"), pairSchema)
+    val arrIds = WaveLedger.readOrEmpty(spark, st.dirs("assign"), assignSchema)
       .select(col("vec_id")).distinct()
     Similarity.appendedGraphFromParts(spark, dir, c1, arrIds)
   }
 
   private[graft] def runArrive(spark: SparkSession, dir: String, base: String,
-                               checkpoint: String): StreamingQuery = {
-    val q = readEmbeddingsStream(spark, dir, s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(arriveBatch(spark, dir, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                               checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, Tables.embeddings(spark, dir).schema, s"$base/in",
+      checkpoint)(arriveBatch(spark, dir, base))
 
   /** Stage one wave of the arrival slice (s25's vec_id%10=9, split by
     * %3 — coprime to every power-of-2 shard split; mtimes force the
@@ -183,11 +145,7 @@ object EmbeddingsStream {
     * round). Scratch lives at one fixed location per corpus, rebuilt
     * per invocation (st11's no-accumulation discipline). */
   def st15GraphArrive(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st15", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st15", dir, "in")
     stageWave(spark, dir, base, 0)
     runArrive(spark, dir, base, s"$base/cp").stop()
     stageWave(spark, dir, base, 1)
@@ -206,7 +164,7 @@ object EmbeddingsStream {
     * O(deletes) (s18's law); the fold runs at serve cadence. */
   private[graft] def retractBatch(spark: SparkSession, base: String)
                                  (batch: DataFrame, batchId: Long): Unit =
-    waveCommit(spark, base, batch.select(col("vec_id")),
+    WaveLedger.waveCommit(spark, base, batch.select(col("vec_id")),
       embWaveKey(col("vec_id")), embWaveKey(col("vec_id"), lit(16L)),
       alsoCommitted = WaveLedger.ledgerState(spark, base).folded) { bdir =>
       batch.select(col("vec_id")).distinct()
@@ -220,22 +178,15 @@ object EmbeddingsStream {
     WaveLedger.compactLedger(spark, base, Seq("ids" -> Some(idSchema)))
 
   private[graft] def runRetract(spark: SparkSession, base: String,
-                                checkpoint: String): StreamingQuery = {
-    val q = spark.readStream.schema(idSchema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(retractBatch(spark, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                                checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, idSchema, s"$base/in", checkpoint)(retractBatch(spark, base))
 
   /** The union of every committed tombstone wave's ids — st16's and
     * st18's serve input, read through the ledger STATE (latest
-    * compacted generation + live tail, r16). */
+    * compacted generation + live tail). */
   private[graft] def retractIdsFromLedger(spark: SparkSession,
                                           base: String): DataFrame =
-    readOrEmpty(spark,
+    WaveLedger.readOrEmpty(spark,
       WaveLedger.ledgerState(spark, base).dirs("ids"), idSchema).distinct()
 
   /** The compacted graph served FROM the ledger: one application of
@@ -265,11 +216,7 @@ object EmbeddingsStream {
     * Scratch lives at one fixed location per corpus, rebuilt per
     * invocation (st11's no-accumulation discipline). */
   def st16GraphRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st16", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st16", dir, "in")
     stageRetractWave(spark, dir, base, 0)
     runRetract(spark, base, s"$base/cp").stop()
     stageRetractWave(spark, dir, base, 1)
@@ -305,23 +252,18 @@ object EmbeddingsStream {
   private[graft] def ingestBatch(spark: SparkSession, base: String,
                                  idxDir: String)
                                 (batch: DataFrame, batchId: Long): Unit =
-    waveCommit(spark, base, batch,
+    WaveLedger.waveCommit(spark, base, batch,
       embWaveKey(col("vec_id"), col("embedding")),
       embWaveKey(col("embedding"), col("vec_id"))) { bdir =>
-      fsOf(spark, bdir).mkdirs(bdir)
+      graft.store.mkdirs(WaveLedger.fsOf(spark, bdir), bdir)
       Similarity.deferUpdateIvfPqIndex(spark, batch, idxDir)
     }
 
   private[graft] def runIngest(spark: SparkSession, dir: String, base: String,
                                idxDir: String,
-                               checkpoint: String): StreamingQuery = {
-    val q = readEmbeddingsStream(spark, dir, s"$base/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(ingestBatch(spark, base, idxDir) _)
-      .start()
-    WaveLedger.drain(q)
-  }
+                               checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, Tables.embeddings(spark, dir).schema, s"$base/in",
+      checkpoint)(ingestBatch(spark, base, idxDir))
 
   /** The ST17 gate entry — streaming UPSERT ingest for the persisted
     * IVF index, restart inside the entry (st13's shape): the index is
@@ -335,11 +277,7 @@ object EmbeddingsStream {
     * rows). Scratch (index tree included) lives at one fixed location
     * per corpus, rebuilt per invocation. */
   def st17IndexIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st17", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st17", dir, "in")
     val idxDir = s"$base/idx"
     // the base-only starting state comes from the shared substrate
     // (r15): clone, don't rebuild per invocation
@@ -363,11 +301,7 @@ object EmbeddingsStream {
     * compacted answers, and s18's own row covers that path). Oracle =
     * s18's chain VERBATIM. */
   def st18IndexRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st18", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/in"))
+    val base = graft.store.scratch(spark, "graft_st18", dir, "in")
     val idxDir = s"$base/idx"
     // the drifted (base build + frozen append) starting state comes
     // from the shared substrate (r15): clone, don't rebuild
@@ -406,11 +340,11 @@ object EmbeddingsStream {
                                     base: String)
                                    (batch: DataFrame, batchId: Long): Unit = {
     val st = WaveLedger.ledgerState(spark, s"$base/arrive")
-    waveCommit(spark, s"$base/arrive", batch,
+    WaveLedger.waveCommit(spark, s"$base/arrive", batch,
       embWaveKey(col("vec_id"), col("embedding")),
       embWaveKey(col("embedding"), col("vec_id")),
       alsoCommitted = st.folded) { bdir =>
-      val priorAssign = readOrEmpty(spark, st.dirs("assign"), assignSchema)
+      val priorAssign = WaveLedger.readOrEmpty(spark, st.dirs("assign"), assignSchema)
       val (assign, pairs) = Similarity.knngArriveWaveTablesOn(
         Similarity.knngUpdCentroids(spark, dir),
         Similarity.knngUpdAssignArtifact(spark, dir),
@@ -443,20 +377,9 @@ object EmbeddingsStream {
         "emb" -> None))
 
   private[graft] def runUpdArrive(spark: SparkSession, dir: String, base: String,
-                                  checkpoint: String): StreamingQuery = {
-    val q = readEmbeddingsStream(spark, dir, s"$base/arrive/in")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(updArriveBatch(spark, dir, base) _)
-      .start()
-    WaveLedger.drain(q)
-  }
-
-  /** Stage one single-file wave of `part` into `inDir` — the shared
-    * [[WaveLedger.stageFrameWave]] stager. */
-  private def stageFrameWave(spark: SparkSession, part: DataFrame,
-                             base: String, inDir: String, wave: Int): Unit =
-    WaveLedger.stageFrameWave(spark, part, base, inDir, wave)
+                                  checkpoint: String): StreamingQuery =
+    WaveLedger.run(spark, Tables.embeddings(spark, dir).schema, s"$base/arrive/in",
+      checkpoint)(updArriveBatch(spark, dir, base))
 
   /** st23's RETRACT-LEDGER SUBSTRATE (st21's precedent at the vector
     * tier): the update slice's tombstone manifest is a pure function
@@ -471,9 +394,9 @@ object EmbeddingsStream {
     graft.store.tree(spark, "graft_st23ret_v1", dir) { root =>
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
         .filter(col("vec_id") % 10 === Similarity.S28UpdateDigit)
-      stageFrameWave(spark, ids.filter(col("vec_id") % 3 === 0),
+      WaveLedger.stageFrameWave(spark, ids.filter(col("vec_id") % 3 === 0),
         root, s"$root/in", 0)
-      stageFrameWave(spark, ids.filter(col("vec_id") % 3 =!= 0),
+      WaveLedger.stageFrameWave(spark, ids.filter(col("vec_id") % 3 =!= 0),
         root, s"$root/in", 1)
       runRetract(spark, root, s"$root/cp").stop()
     }
@@ -495,21 +418,17 @@ object EmbeddingsStream {
     * compact+integrate is |U|-bounded (s28's bound), paid at update
     * cadence. */
   def st23GraphUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ArtifactRoots.tagged("graft_st23", dir)
-    val bp = new Path(base)
-    val f = fsOf(spark, bp)
-    if (f.exists(bp)) f.delete(bp, true)
-    f.mkdirs(new Path(s"$base/arrive/in"))
+    val base = graft.store.scratch(spark, "graft_st23", dir, "arrive/in")
     val slice = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 10 === Similarity.S28UpdateDigit)
     // phase 1 — the tombstone manifest: the staged substrate ledger
     val rBase = st23RetractSubstrate(spark, dir)
     // phase 2 — the re-embedded content (reversed vectors), restart
     val newEmb = slice.select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-    stageFrameWave(spark, newEmb.filter(col("vec_id") % 3 === 0),
+    WaveLedger.stageFrameWave(spark, newEmb.filter(col("vec_id") % 3 === 0),
       base, s"$base/arrive/in", 2)
     runUpdArrive(spark, dir, base, s"$base/arrive/cp").stop()
-    stageFrameWave(spark, newEmb.filter(col("vec_id") % 3 =!= 0),
+    WaveLedger.stageFrameWave(spark, newEmb.filter(col("vec_id") % 3 =!= 0),
       base, s"$base/arrive/in", 3)
     runUpdArrive(spark, dir, base, s"$base/arrive/cp").stop()
     st23Serve(spark, dir, base, rBase)
@@ -525,12 +444,11 @@ object EmbeddingsStream {
                                rBase: String = ""): DataFrame = {
     val rb = if (rBase.isEmpty) s"$base/retract" else rBase
     val stArr = WaveLedger.ledgerState(spark, s"$base/arrive")
-    val c1 = readOrEmpty(spark, stArr.dirs("pairs"), pairSchema)
+    val c1 = WaveLedger.readOrEmpty(spark, stArr.dirs("pairs"), pairSchema)
     // readOrEmpty (not a bare parquet(paths: _*)) so an all-empty
     // update slice serves the no-op fold instead of throwing on a
-    // zero-path read — the same guard the c1 read above uses (r15
-    // ADVICE)
-    val ledgerEmb = readOrEmpty(spark, stArr.dirs("emb"),
+    // zero-path read — the same guard the c1 read above uses
+    val ledgerEmb = WaveLedger.readOrEmpty(spark, stArr.dirs("emb"),
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding")).schema)
     Similarity.knngUpdateFold(spark, dir,

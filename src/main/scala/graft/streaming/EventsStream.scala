@@ -458,6 +458,27 @@ object EventsStream {
     finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
 
+  /** Stateful-stream state partitioning: a streaming aggregation keys
+    * its state store count off `spark.sql.shuffle.partitions` AT FIRST
+    * START (the checkpoint bakes it in), and the session default is
+    * sized for BATCH shuffles — cores on this library's sessions.
+    * State here is windows × event_types (catalog-sized), so paying
+    * one state-store instance + delta file per batch per core is pure
+    * overhead (measured on st11: 5.1s → 2.8s at 8 partitions on
+    * local[32]). The count is sized to state volume (≈ state bytes / a
+    * store's working size), not to the session's core count, and is
+    * applied BEFORE the query's first start, because the checkpoint
+    * pins it for the query's lifetime. */
+  private val StatePartitions = 8
+
+  private[graft] def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, StatePartitions.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+  }
+
   /** Drive the windowed-counts stream into a parquet snapshot via the
     * foreachBatch merge; update mode so refined windows re-emit.
     * Pass `checkpoint` for the production posture — a durable
@@ -468,28 +489,6 @@ object EventsStream {
     * this with a real stop/stage-more-files/restart cycle). Without
     * it Spark uses a temp checkpoint that dies with the query —
     * fine only for one-shot converge-and-read use. */
-  /** Stateful-stream state partitioning (r17): a streaming aggregation
-    * keys its state store count off `spark.sql.shuffle.partitions` AT
-    * FIRST START (the checkpoint bakes it in), and the session default
-    * is sized for BATCH shuffles — cores on this library's sessions.
-    * State here is windows × event_types (catalog-sized), so paying
-    * one state-store instance + delta file per batch per core is pure
-    * overhead (measured on st11: 5.1s → 2.8s at 8 partitions on
-    * local[32]). The knob is the production control: size it to state
-    * volume (≈ state bytes / a store's working size), not to the
-    * session's core count — and set it BEFORE the query's first start,
-    * because the checkpoint pins it for the query's lifetime. */
-  private[graft] val StatePartitionsKey = "spark.graft.stream.statePartitions"
-
-  private[graft] def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
-    val n = spark.conf.getOption(StatePartitionsKey).getOrElse("8")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n)
-    try body
-    finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
-
   def runSnapshotUpsert(events: DataFrame, target: String,
                         checkpoint: Option[String] = None,
                         partitioned: Boolean = false): StreamingQuery = {
@@ -537,11 +536,10 @@ object EventsStream {
     * are byte-identical across a merge). */
   private[graft] def st11SnapshotMergeVia(spark: SparkSession, dir: String,
                                           partitioned: Boolean): DataFrame = {
-    val base = new Path(graft.ArtifactRoots.tagged(
-      if (partitioned) "graft_st11p" else "graft_st11", dir))
+    val base = new Path(graft.store.scratch(spark,
+      if (partitioned) "graft_st11p" else "graft_st11", dir, "in"))
     val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    val inDir = new Path(base, "in"); fs.mkdirs(inDir)
+    val inDir = new Path(base, "in")
     // split from the RAW representation so the staged files carry the
     // ts encoding the stream's sniffed schema expects
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

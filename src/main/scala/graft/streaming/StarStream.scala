@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,15 +70,12 @@ object StarStream {
     * location per scale factor, rebuilt per invocation (s13's
     * no-tmp-accumulation discipline). */
   def st24FactLoads(spark: SparkSession, dir: String): DataFrame = {
-    val base = new Path(graft.ArtifactRoots.tagged("graft_st24", dir))
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    val inDir = new Path(base, "in"); fs.mkdirs(inDir)
+    val base = graft.store.scratch(spark, "graft_st24", dir, "in")
+    val inDir = new Path(base, "in")
     // the load stream draws from the persisted warehouse fact (q56's
     // discipline) — star_build benchmarks the ETL, this row the loader.
     // The two load FILES are pure functions of the corpus: staged once
-    // per corpus fingerprint (r17 optimization; was two single-file
-    // writes per invocation) and byte-copied into the arrivals dir.
+    // per corpus fingerprint and byte-copied into the arrivals dir.
     val fact = RetailStar.servedStar(spark, dir).fact
     val sub = loadFilesSubstrate(spark, dir)
     // stage with increasing mtimes so the file source orders the
@@ -89,28 +86,20 @@ object StarStream {
     stage(s"$sub/f2", "b.parquet", 2000000L)
     stage(s"$sub/f2", "c.parquet", 3000000L)
     val target = s"$base/fact_by_month"
-    val stream = spark.readStream
-      .schema(fact.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // empty-batch guard (st11's): a zero-row partitionBy write
-        // would poison a fresh target with a schema-less dir
-        if (!batch.isEmpty)
-          graft.etl.Warehouse.withDynamicOverwrite(batch.sparkSession) {
-            // one writer per month (writeFactPartitioned's rationale
-            // inside the micro-batch): the load file arrives as ONE
-            // input split, so without the repartition a single task
-            // writes every touched month sequentially — measured
-            // 2.8s → 1.1s for the 79-month history batch
-            batch.repartition(col("month_key")).write.mode("overwrite")
-              .partitionBy("month_key").parquet(target)
-          }
-      }
-      .start()
-    WaveLedger.drain(q).stop()
+    WaveLedger.run(spark, fact.schema, inDir.toString, s"$base/cp") { (batch, _) =>
+      // empty-batch guard (st11's): a zero-row partitionBy write
+      // would poison a fresh target with a schema-less dir
+      if (!batch.isEmpty)
+        graft.etl.Warehouse.withDynamicOverwrite(batch.sparkSession) {
+          // one writer per month (writeFactPartitioned's rationale
+          // inside the micro-batch): the load file arrives as ONE
+          // input split, so without the repartition a single task
+          // writes every touched month sequentially — measured
+          // 2.8s → 1.1s for the 79-month history batch
+          batch.repartition(col("month_key")).write.mode("overwrite")
+            .partitionBy("month_key").parquet(target)
+        }
+    }.stop()
     // converged census, schema-pinned read (q56's discipline: the
     // zero-padded MMyyyy partition values must stay strings)
     graft.etl.Warehouse.monthCensus(
@@ -143,10 +132,8 @@ object StarStream {
     * not corpus rows); redelivered/replayed requests are free
     * (semi-join finds nothing, no write happens). */
   def st25FactErasure(spark: SparkSession, dir: String): DataFrame = {
-    val base = new Path(graft.ArtifactRoots.tagged("graft_st25", dir))
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    val inDir = new Path(base, "in"); fs.mkdirs(inDir)
+    val base = graft.store.scratch(spark, "graft_st25", dir, "in")
+    val inDir = new Path(base, "in")
     val fact = RetailStar.servedStar(spark, dir).fact
     val target = s"$base/fact_by_month"
     // two disjoint erasure requests as surrogate-key files (the
@@ -156,7 +143,7 @@ object StarStream {
       .select(xxhash64(col("o_custkey")).as("customer_key")).distinct()
     // the three setup legs are independent — the warehouse clone is
     // driver-FS bytes, the two request derivations are small Spark
-    // jobs — so they run from three driver threads (r18, guide §2.6);
+    // jobs — so they run from three driver threads (guide §2.6);
     // each wave's staging follows its own write inside its leg, and
     // the stream starts only after all three complete. mtimes pin the
     // delivery order regardless of staging order.
@@ -166,9 +153,8 @@ object StarStream {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       Seq(
-        // the standing warehouse = the cloned once-per-corpus substrate
-        // (r17 optimization; was a fresh 80-partition write per
-        // invocation)
+        // the standing warehouse = the cloned once-per-corpus substrate,
+        // not a fresh 80-partition write per invocation
         Future(RetailStar.cloneWarehouse(spark, dir, target)),
         Future {
           victims(RetailStar.Q57ErasureDigit)
@@ -186,21 +172,13 @@ object StarStream {
     val factSchema = fact.schema
     val requestSchema = new org.apache.spark.sql.types.StructType()
       .add("customer_key", org.apache.spark.sql.types.LongType)
-    val stream = spark.readStream
-      .schema(requestSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.etl.Warehouse.eraseFromPartitionedFact(
-            batch.sparkSession, target, factSchema, batch)
-          ()
-        }
+    WaveLedger.run(spark, requestSchema, inDir.toString, s"$base/cp") { (batch, _) =>
+      if (!batch.isEmpty) {
+        graft.etl.Warehouse.eraseFromPartitionedFact(
+          batch.sparkSession, target, factSchema, batch)
+        ()
       }
-      .start()
-    WaveLedger.drain(q).stop()
+    }.stop()
     graft.etl.Warehouse.monthCensus(
       spark.read.schema(factSchema).parquet(target))
   }

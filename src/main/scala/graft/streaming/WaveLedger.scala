@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** The content-keyed, marker-gated WAVE-COMMIT protocol — ONE
@@ -11,7 +12,9 @@ import org.apache.spark.sql.types.StructType
   * index's st17/st18, the bins tier's st20). Two copies of the
   * tag/commit discipline drifting independently would silently break
   * replay dedup for one family (r14 ADVICE), so the protocol lives
-  * here and the stream objects call it.
+  * here and the stream objects call it — together with the file-source
+  * stream every wave verb starts ([[run]]) and the ledger reads
+  * ([[ledgerState]], [[readOrEmpty]]).
   *
   * The gate (st13's exactly-once discipline, honest under BOTH
   * failure modes — a checkpoint replay re-delivers a wave under the
@@ -35,6 +38,10 @@ import org.apache.spark.sql.types.StructType
   *    its tables exist. */
 private[graft] object WaveLedger {
 
+  /** Written LAST into a ledger batch dir: its presence is the batch's
+    * commit. Parquet's own `_SUCCESS` is per table and a wave may
+    * write several tables, so completeness needs one marker after all
+    * of them. */
   val CommitMarker = "_GRAFT_COMMIT"
 
   def fsOf(spark: SparkSession, p: Path): FileSystem =
@@ -59,7 +66,7 @@ private[graft] object WaveLedger {
     * waves in a deterministic order when several are staged at once.
     * (Gate staging only — a production stream's files arrive from the
     * ingest system.) */
-  def stageFrameWave(spark: SparkSession, part: org.apache.spark.sql.DataFrame,
+  def stageFrameWave(spark: SparkSession, part: DataFrame,
                      base: String, inDir: String, wave: Int): Unit = {
     val scratch = s"$base/w$wave"
     part.coalesce(1).write.mode("overwrite").parquet(scratch)
@@ -85,14 +92,12 @@ private[graft] object WaveLedger {
   }
 
   /** Drain everything available, STOPPING the query if the drain
-    * throws (r18): every run* helper used to call
-    * `q.processAllAvailable(); q` bare — a throw there leaks a live
-    * query whose micro-batch thread later races SparkContext.stop at
+    * throws: a bare `q.processAllAvailable(); q` leaks a live query on
+    * failure, whose micro-batch thread later races SparkContext.stop at
     * session teardown (`SparkContext.broadcast` after
-    * `assertNotStopped`, the r17 driver-red `sbt test` signature).
-    * On success the query is returned still running; callers stop it. */
-  private[graft] def drain(q: org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+    * `assertNotStopped`). On success the query is returned still
+    * running; callers stop it. */
+  private[graft] def drain(q: StreamingQuery): StreamingQuery = {
     try q.processAllAvailable()
     catch { case t: Throwable =>
       try q.stop() catch { case s: Throwable => t.addSuppressed(s) }
@@ -100,6 +105,38 @@ private[graft] object WaveLedger {
     }
     q
   }
+
+  /** Start (or RESUME — same `checkpoint`) the file-source stream over
+    * `inDir` that every wave verb runs, hand each micro-batch to
+    * `batch`, and [[drain]] it. What it fixes, and why:
+    *  - ONE FILE PER TRIGGER (`maxFilesPerTrigger = 1`): each staged
+    *    wave file is its own micro-batch, delivered in mtime order, so
+    *    the wave the ledger content-keys and commits is exactly the
+    *    file that was staged, whatever else is already waiting;
+    *  - the schema is GIVEN (the corpus table the waves are slices
+    *    of), never sniffed, so a (re)start against a still-empty
+    *    arrivals dir idles for files like a production ingest job
+    *    instead of failing schema inference;
+    *  - the drain stops the query if it throws, so a failed batch never
+    *    leaves a live query behind.
+    * On success the query is returned still running; callers stop it. */
+  def run(spark: SparkSession, schema: StructType, inDir: String, checkpoint: String)
+         (batch: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(inDir)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(batch)
+      .start())
+
+  /** The tables at `dirs` (ledger sub-table dirs, typically
+    * [[LedgerState.dirs]]) read as one multi-path relation under
+    * `schema`; no dirs reads as a well-typed EMPTY frame, where a
+    * zero-path parquet read would throw. */
+  def readOrEmpty(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
 
   /** Run `work` for this wave exactly once (see object doc). An
     * empty wave contributes nothing and is not committed. */

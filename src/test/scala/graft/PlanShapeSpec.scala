@@ -11,7 +11,7 @@ import graft.queries.{CoreQueries, InventoryQueries}
   * parquet scan, dim joins broadcasting, top-k avoiding a global
   * sort, and shuffle counts staying at their minimum.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -97,7 +97,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("st10: the streaming outer join plans a state-store symmetric hash join under watermarks") {
     import graft.streaming.EventsStream
     import org.apache.spark.sql.functions.col
-    val sd = java.nio.file.Files.createTempDirectory("events_stream_plan")
+    val sd = tempDir("events_stream_plan")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       sd.resolve("events.parquet"))
@@ -124,7 +124,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("st12: the streaming FULL OUTER join keeps the symmetric state-store shape") {
     import graft.streaming.EventsStream
     import org.apache.spark.sql.functions.col
-    val sd = java.nio.file.Files.createTempDirectory("events_stream_plan12")
+    val sd = tempDir("events_stream_plan12")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       sd.resolve("events.parquet"))

@@ -29,11 +29,12 @@ object PlanSnap {
         // r18 tranche 3 evidence: the stream rows' optimization lives
         // INSIDE foreachBatch (the serve frames are shape-identical),
         // so these two names snapshot the per-batch frames themselves.
-        // With suffix "_before" they reproduce the pre-tranche form
+        // With suffix "_before", st13 reproduces the pre-tranche form
         // (broadcastNew=false is the unchanged default arm e13/d22
-        // still run; the st15 before-join is the pre-3a expression
-        // verbatim — cross-check against git history of
-        // Similarity.knngArriveWaveTablesOn).
+        // still run); st15 always snapshots the production kernel —
+        // its pre-tranche form is the committed
+        // plans/r18/st15_batch_pairs_before.txt (see the git history
+        // of Similarity.knngArriveWaveTablesOn).
         case "st13_batch_candidates" =>
           import org.apache.spark.sql.functions._
           // the wave's signatures DERIVE from the micro-batch (an
@@ -61,8 +62,13 @@ object PlanSnap {
           val waveEmb = Tables.embeddings(spark, sfDir)
             .filter(col("vec_id") % 10 === graft.ext.Similarity.S13AppendDigit)
             .filter(col("vec_id") % 3 === 0)
-          planOf(graft.ext.Similarity.knngWavePairsForSnap(spark, sfDir,
-            waveEmb, preR18 = suffix == "_before"))
+          val noPriorArrivals = graft.streaming.WaveLedger.readOrEmpty(spark, Nil,
+            new org.apache.spark.sql.types.StructType()
+              .add("vec_id", org.apache.spark.sql.types.LongType)
+              .add("cid", org.apache.spark.sql.types.LongType)
+              .add("r", org.apache.spark.sql.types.IntegerType))
+          planOf(graft.ext.Similarity.knngArriveWaveTables(spark, sfDir,
+            waveEmb, noPriorArrivals)._2)
         case "star_build" =>
           // the bench row's form (materializeStar since r17)
           val st = graft.etl.RetailStar.materializeStar(spark, sfDir)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{Dedup, Graph, Pipeline}
+import graft.streaming.WaveLedger
 
 /** Round-11 pins — the candidate-pair artifact DAG extension
   * (signatures → pairs → labels now root the persisted tree, and the
@@ -333,7 +334,7 @@ class Round11Spec extends AnyFunSuite {
     import graft.streaming.DocumentsStream
     val maintained = rows(DocumentsStream.st13GraphMaintain(spark, dir))
     val base = ArtifactRoots.tagged("graft_st13", dir)
-    val waves = DocumentsStream.committedBatches(spark, base)
+    val waves = WaveLedger.committedBatches(spark, base)
     assert(waves.size === 2, s"expected two committed wave dirs, got $waves")
     val rebuilt = rows(Dedup.d7DedupComponents(spark, dir))
     assert(maintained === rebuilt, "maintained labeling != full rebuild")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{Dedup, Pipeline, Similarity}
+import graft.streaming.WaveLedger
 
 /** Round-12 pins — the r11 ADVICE hardenings plus the retirement
   * lifecycle closure:
@@ -285,15 +286,15 @@ class Round12Spec extends AnyFunSuite {
       .filter(Pipeline.e4DeltaPred).limit(2).cache()
     try {
       DocumentsStream.maintainBatch(spark, dir, base)(wave, 0L)
-      assert(DocumentsStream.committedBatches(spark, base).size === 1)
+      assert(WaveLedger.committedBatches(spark, base).size === 1)
       // identical re-delivery: skipped (idempotence unchanged)
       DocumentsStream.maintainBatch(spark, dir, base)(wave, 1L)
-      assert(DocumentsStream.committedBatches(spark, base).size === 1,
+      assert(WaveLedger.committedBatches(spark, base).size === 1,
         "identical wave re-committed")
       // same ids, edited text: a DIFFERENT wave, must commit
       val edited = wave.withColumn("text", concat(col("text"), lit(" edited")))
       DocumentsStream.maintainBatch(spark, dir, base)(edited, 2L)
-      assert(DocumentsStream.committedBatches(spark, base).size === 2,
+      assert(WaveLedger.committedBatches(spark, base).size === 2,
         "edited wave aliased the committed one — stale pairs would serve")
     } finally { wave.unpersist(); fs.delete(bp, true); () }
   }
@@ -343,20 +344,20 @@ class Round12Spec extends AnyFunSuite {
           all += s"${ids.min}:${ids.max}"
           if (rnd.nextBoolean()) {
             DocumentsStream.compactLedger(spark, base)
-            assert(DocumentsStream.committedGens(spark, base).size === 1,
+            assert(WaveLedger.committedGens(spark, base).size === 1,
               s"seed $seed wave $w: more than one live generation")
           }
           // the INVARIANT every reader depends on: gen + live tail
           // serves each committed pair exactly once, at every step
           val served = spark.read
-            .parquet(DocumentsStream.ledgerState(spark, base).dirs("pairs"): _*)
+            .parquet(WaveLedger.ledgerState(spark, base).dirs("pairs"): _*)
             .select(concat_ws(":", col("a_id"), col("b_id")))
             .as[String].collect()
           assert(served.sorted.toSeq === all.toSeq.sorted,
             s"seed $seed wave $w: served pairs != committed pairs (dup or loss)")
         }
         DocumentsStream.compactLedger(spark, base)
-        val st = DocumentsStream.ledgerState(spark, base)
+        val st = WaveLedger.ledgerState(spark, base)
         assert(st.waves.isEmpty && st.folded.size === 6,
           s"seed $seed: final compact must fold all six waves")
       } finally { fs.delete(bp, true); () }
@@ -477,18 +478,18 @@ class Round12Spec extends AnyFunSuite {
     val rebuilt = rows(Dedup.d7DedupComponents(spark, dir))
     assert(maintained === rebuilt, "compacted serve != full rebuild")
     val base = ArtifactRoots.tagged("graft_st14", dir)
-    assert(DocumentsStream.committedBatches(spark, base).isEmpty,
+    assert(WaveLedger.committedBatches(spark, base).isEmpty,
       "compaction must clear the folded wave dirs")
-    assert(DocumentsStream.committedGens(spark, base).size === 1,
+    assert(WaveLedger.committedGens(spark, base).size === 1,
       "cumulative compaction keeps exactly one live generation")
-    val st = DocumentsStream.ledgerState(spark, base)
+    val st = WaveLedger.ledgerState(spark, base)
     assert(st.folded.size === 2, s"both wave tags must be folded: ${st.folded}")
 
     // fresh-checkpoint replay: the file source re-delivers BOTH waves;
     // their ledger dirs are GONE but the folded set vouches for them —
     // zero dirs recreated, zero pairs re-derived, serve unchanged
     DocumentsStream.runMaintain(spark, dir, base, s"$base/cp_replay").stop()
-    assert(DocumentsStream.committedBatches(spark, base).isEmpty,
+    assert(WaveLedger.committedBatches(spark, base).isEmpty,
       "a compacted wave was re-derived on fresh-checkpoint re-delivery")
     assert(rows(DocumentsStream.labelsFromLedger(spark, dir, base)) === rebuilt,
       "serve drifted after the post-compaction replay")
@@ -504,17 +505,17 @@ class Round12Spec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite")
       .parquet(new Path(ghost, "pairs").toString)
     hfs.create(new Path(ghost, "_GRAFT_COMMIT"), true).close()
-    assert(DocumentsStream.committedBatches(spark, base).size === 1,
+    assert(WaveLedger.committedBatches(spark, base).size === 1,
       "precondition: the ghost wave is marker-committed")
-    assert(DocumentsStream.ledgerState(spark, base).waves.isEmpty,
+    assert(WaveLedger.ledgerState(spark, base).waves.isEmpty,
       "a folded wave leaked back into the live tail")
     assert(rows(DocumentsStream.labelsFromLedger(spark, dir, base)) === rebuilt,
       "the crash-window leftover was double-served (poison pair read)")
     DocumentsStream.compactLedger(spark, base)
-    assert(DocumentsStream.committedBatches(spark, base).isEmpty,
+    assert(WaveLedger.committedBatches(spark, base).isEmpty,
       "the crash-window leftover was not GC'd")
-    assert(DocumentsStream.committedGens(spark, base).size === 1 &&
-      DocumentsStream.ledgerState(spark, base).folded.size === 2,
+    assert(WaveLedger.committedGens(spark, base).size === 1 &&
+      WaveLedger.ledgerState(spark, base).folded.size === 2,
       "a GC-only compact must not mint a new generation")
   }
 
@@ -540,17 +541,17 @@ class Round12Spec extends AnyFunSuite {
       }
       commitWave("b_wave_a", Seq(100L, 200L), (100L, 200L))
       DocumentsStream.compactLedger(spark, base)
-      val s1 = DocumentsStream.ledgerState(spark, base)
+      val s1 = WaveLedger.ledgerState(spark, base)
       assert(s1.gen.isDefined && s1.waves.isEmpty && s1.folded === Set("b_wave_a"))
       assert(spark.read.parquet(s1.dirs("sigs"): _*)
         .select("doc_id").as[Long].collect().toSet === Set(100L, 200L),
         "gen 0 must carry wave A's sigs (the post-compaction banding base)")
       commitWave("b_wave_b", Seq(300L), (200L, 300L))
       DocumentsStream.compactLedger(spark, base)
-      val s2 = DocumentsStream.ledgerState(spark, base)
+      val s2 = WaveLedger.ledgerState(spark, base)
       assert(s2.folded === Set("b_wave_a", "b_wave_b"),
         "the folded set must be cumulative")
-      assert(DocumentsStream.committedGens(spark, base).size === 1,
+      assert(WaveLedger.committedGens(spark, base).size === 1,
         "the superseded generation must be GC'd")
       assert(spark.read.parquet(s2.dirs("sigs"): _*)
         .select("doc_id").as[Long].collect().toSet === Set(100L, 200L, 300L),
@@ -559,9 +560,9 @@ class Round12Spec extends AnyFunSuite {
         .select(col("a_id"), col("b_id"))) === Set("[100,200]", "[200,300]"),
         "gen 1 must carry both waves' pairs exactly once")
       // idempotent third compact: nothing live — no new generation
-      val before = DocumentsStream.committedGens(spark, base).map(_.getName)
+      val before = WaveLedger.committedGens(spark, base).map(_.getName)
       DocumentsStream.compactLedger(spark, base)
-      assert(DocumentsStream.committedGens(spark, base).map(_.getName) === before,
+      assert(WaveLedger.committedGens(spark, base).map(_.getName) === before,
         "a no-op compact minted or renamed a generation")
       // THIRD compaction WITH live waves — the generation-numbering
       // collision case: superseded gens were GC'd, so a count-derived
@@ -570,8 +571,8 @@ class Round12Spec extends AnyFunSuite {
       // dirs are long cleared); suffix+1 numbering must mint gen_00002
       commitWave("b_wave_d", Seq(400L), (300L, 400L))
       DocumentsStream.compactLedger(spark, base)
-      val s3 = DocumentsStream.ledgerState(spark, base)
-      assert(DocumentsStream.committedGens(spark, base).map(_.getName) ===
+      val s3 = WaveLedger.ledgerState(spark, base)
+      assert(WaveLedger.committedGens(spark, base).map(_.getName) ===
         Seq("gen_00002"), "third compaction must mint gen_00002, not collide")
       assert(s3.folded === Set("b_wave_a", "b_wave_b", "b_wave_d"))
       assert(spark.read.parquet(s3.dirs("sigs"): _*)
@@ -585,7 +586,7 @@ class Round12Spec extends AnyFunSuite {
         .write.mode("overwrite").parquet(new Path(stale, "pairs").toString)
       fs.create(new Path(stale, "_GRAFT_COMMIT"), true).close()
       DocumentsStream.compactLedger(spark, base)
-      assert(DocumentsStream.committedGens(spark, base).map(_.getName) ===
+      assert(WaveLedger.committedGens(spark, base).map(_.getName) ===
         Seq("gen_00002"), "a no-work compact must GC superseded generations")
     } finally { fs.delete(bp, true); () }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{Pipeline, Similarity, TextAnalysis}
+import graft.streaming.WaveLedger
 
 /** Round-14 pins — the r13 ADVICE hardenings plus the round's
   * structural items:
@@ -477,10 +478,10 @@ class Round14Spec extends AnyFunSuite {
     // fresh-checkpoint replay: both waves re-delivered under a NEW
     // batch numbering — the content-keyed ledger skips them whole
     val base = ArtifactRoots.tagged("graft_st15", dir)
-    val n0 = EmbeddingsStream.committedBatches(spark, base).size
+    val n0 = WaveLedger.committedBatches(spark, base).size
     assert(n0 === 2, s"two committed waves expected, saw $n0")
     EmbeddingsStream.runArrive(spark, dir, base, s"$base/cp_fresh").stop()
-    val n1 = EmbeddingsStream.committedBatches(spark, base).size
+    val n1 = WaveLedger.committedBatches(spark, base).size
     assert(n1 === n0, "re-delivered waves must not commit new ledger dirs")
     val served = rows(EmbeddingsStream.appendedFromLedger(spark, dir, base)
       .select(col("vec_id"), col("nb_id").as("neighbor_id"), col("d2_fp"), col("rank"))
@@ -503,10 +504,10 @@ class Round14Spec extends AnyFunSuite {
     // fresh-checkpoint replay: both waves re-delivered under a NEW
     // batch numbering — the content-keyed ledger skips them whole
     val base = ArtifactRoots.tagged("graft_st16", dir)
-    val n0 = EmbeddingsStream.committedBatches(spark, base).size
+    val n0 = WaveLedger.committedBatches(spark, base).size
     assert(n0 === 2, s"two committed tombstone waves expected, saw $n0")
     EmbeddingsStream.runRetract(spark, base, s"$base/cp_fresh").stop()
-    val n1 = EmbeddingsStream.committedBatches(spark, base).size
+    val n1 = WaveLedger.committedBatches(spark, base).size
     assert(n1 === n0, "re-delivered waves must not commit new ledger dirs")
     val served = rows(EmbeddingsStream.retractedFromLedger(spark, dir, base)
       .select(col("vec_id"), col("nb_id").as("neighbor_id"), col("d2_fp"), col("rank"))
@@ -525,10 +526,10 @@ class Round14Spec extends AnyFunSuite {
     assert(first.nonEmpty)
     assert(first === batch, "stream-ingested index must answer like the batch chain")
     val base = ArtifactRoots.tagged("graft_st17", dir)
-    val n0 = EmbeddingsStream.committedBatches(spark, base).size
+    val n0 = WaveLedger.committedBatches(spark, base).size
     assert(n0 === 2, s"two committed arrival waves expected, saw $n0")
     EmbeddingsStream.runIngest(spark, dir, base, s"$base/idx", s"$base/cp_fresh").stop()
-    assert(EmbeddingsStream.committedBatches(spark, base).size === n0,
+    assert(WaveLedger.committedBatches(spark, base).size === n0,
       "re-delivered waves must not commit new ledger dirs")
     val again = rows(Similarity.queryIvfPqIndex(spark, dir, s"$base/idx"))
     assert(again === first, "replayed stream must serve the identical answers")
@@ -553,10 +554,10 @@ class Round14Spec extends AnyFunSuite {
     assert(first === batch,
       "tombstone-served answers must equal the compacted batch chain's")
     val base = ArtifactRoots.tagged("graft_st18", dir)
-    val n0 = EmbeddingsStream.committedBatches(spark, base).size
+    val n0 = WaveLedger.committedBatches(spark, base).size
     assert(n0 === 2, s"two committed tombstone waves expected, saw $n0")
     EmbeddingsStream.runRetract(spark, base, s"$base/cp_fresh").stop()
-    assert(EmbeddingsStream.committedBatches(spark, base).size === n0,
+    assert(WaveLedger.committedBatches(spark, base).size === n0,
       "re-delivered waves must not commit new ledger dirs")
     EmbeddingsStream.retractIdsFromLedger(spark, base)
       .write.mode("overwrite").parquet(s"$base/idx/deletes")
@@ -591,10 +592,10 @@ class Round14Spec extends AnyFunSuite {
     assert(first.length < live, "the retraction must shrink the labeling")
     // fresh-checkpoint re-delivery: content-keyed skip
     val base = ArtifactRoots.tagged("graft_st19", dir)
-    val n0 = DocumentsStream.committedBatches(spark, base).size
+    val n0 = WaveLedger.committedBatches(spark, base).size
     assert(n0 === 2, s"two committed takedown waves expected, saw $n0")
     DocumentsStream.runDocRetract(spark, base, s"$base/cp_fresh").stop()
-    assert(DocumentsStream.committedBatches(spark, base).size === n0,
+    assert(WaveLedger.committedBatches(spark, base).size === n0,
       "re-delivered waves must not commit new ledger dirs")
   }
 }

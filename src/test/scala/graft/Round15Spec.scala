@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{Dedup, Pipeline, Similarity}
+import graft.streaming.WaveLedger
 
 /** Round-15 pins — the shared-IVF-substrate refactor (VERDICT r14
   * item 1) and the round's structural additions:
@@ -214,18 +215,18 @@ class Round15Spec extends AnyFunSuite {
     // under a NEW checkpoint numbering
     DocumentsStream.st20BinsArrive(spark, dir).collect()
     val aBase = ArtifactRoots.tagged("graft_st20", dir)
-    val a0 = DocumentsStream.committedBatches(spark, aBase).size
+    val a0 = WaveLedger.committedBatches(spark, aBase).size
     assert(a0 === 2, s"two committed flag waves expected, saw $a0")
     DocumentsStream.runFlags(spark, dir, aBase, s"$aBase/cp_fresh").stop()
-    assert(DocumentsStream.committedBatches(spark, aBase).size === a0,
+    assert(WaveLedger.committedBatches(spark, aBase).size === a0,
       "fresh-checkpoint re-delivery must commit no new flag wave")
     // retract side: same law on the takedown ledger
     DocumentsStream.st22BinsRetract(spark, dir).collect()
     val rBase = ArtifactRoots.tagged("graft_st22", dir)
-    val r0 = DocumentsStream.committedBatches(spark, rBase).size
+    val r0 = WaveLedger.committedBatches(spark, rBase).size
     assert(r0 === 2, s"two committed id waves expected, saw $r0")
     DocumentsStream.runDocRetract(spark, rBase, s"$rBase/cp_fresh").stop()
-    assert(DocumentsStream.committedBatches(spark, rBase).size === r0,
+    assert(WaveLedger.committedBatches(spark, rBase).size === r0,
       "fresh-checkpoint re-delivery must commit no new id wave")
   }
 

@@ -19,7 +19,7 @@ import graft.ext.{Pipeline, Similarity}
   *     base and appended — lands in exactly one inverted list with a
   *     full set of 8 subspace codes.
   */
-class Round8Spec extends AnyFunSuite {
+class Round8Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,8 +30,7 @@ class Round8Spec extends AnyFunSuite {
 
   val dir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private def codesOf(idxDir: String): Set[(Long, Int, Long, Long)] =
     spark.read.parquet(s"$idxDir/codes")

@@ -116,12 +116,8 @@ object Scratch {
         // bare stream machinery: same file source over the staged wave,
         // no-op foreachBatch, fresh checkpoint
         timed(s"bare stream $i") {
-          val q = graft.streaming.DocumentsStream
-            .readDocumentsStream(spark, sfDir, s"$base/in")
-            .writeStream.option("checkpointLocation", s"$base/cp_bare$i")
-            .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => ())
-            .start()
-          q.processAllAvailable(); q.stop()
+          graft.streaming.WaveLedger.run(spark, Tables.documents(spark, sfDir).schema,
+            s"$base/in", s"$base/cp_bare$i")((_, _) => ()).stop()
         }
         spark.catalog.clearCache()
       }

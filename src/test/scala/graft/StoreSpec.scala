@@ -76,7 +76,8 @@ object CrashFs {
 }
 
 /** The artifact store's crash law ([[graft.store]]) as one property,
-  * plus the guard that keeps swaps and tree copies inside the store. */
+  * plus the guards that keep swaps, tree copies and verb scratch roots
+  * inside the store and ledger reads inside [[graft.streaming.WaveLedger]]. */
 class StoreSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -232,21 +233,63 @@ class StoreSpec extends AnyFunSuite with TempDirs {
     } finally CrashFs.disarm()
   }
 
-  test("only the artifact store renames or copies trees: no `.rename(` in " +
-    "src/main outside graft/store.scala, and no FileUtil.copy outside it and " +
-    "the part-file stager") {
-    val main = Paths.get("src/main/scala")
-    val s = Files.walk(main)
+  test("store.scratch hands each invocation a cleared root with its subdirs " +
+    "and writes no serve heartbeat") {
+    val corpus = tempDir("store_scratch_corpus").toString
+    val root = store.scratch(spark, "graft_storespec_scratch", corpus, "in", "arrive/in")
+    try {
+      val fs = FileSystem.get(URI.create(root), spark.sparkContext.hadoopConfiguration)
+      put(fs, new Path(s"$root/in/leftover"), "previous run")
+      assert(store.scratch(spark, "graft_storespec_scratch", corpus, "in", "arrive/in") === root)
+      val rp = Paths.get(root)
+      val walk = Files.walk(rp)
+      val entries =
+        try walk.iterator().asScala.map(rp.relativize(_).toString).toSet
+        finally walk.close()
+      assert(entries === Set("", "in", "arrive", "arrive/in"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  private val mainRoot = Paths.get("src/main/scala")
+
+  /** Files under src/main/scala (relative paths) whose text, after
+    * `allow` has cut the sanctioned uses, still contains `needle`. */
+  private def offenders(needle: String, under: String = "",
+                        allow: (String, String) => String = (_, src) => src): Seq[String] = {
+    val s = Files.walk(mainRoot.resolve(under))
     val sources =
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
-    def offenders(needle: String, allowed: Set[String]): Seq[String] =
-      sources.filter(p => !allowed.contains(main.relativize(p).toString) &&
-        Files.readString(p).contains(needle)).map(_.toString)
-    assert(offenders(".rename(", Set("graft/store.scala")).isEmpty,
+    sources.map(p => mainRoot.relativize(p).toString)
+      .filter(rel => allow(rel, Files.readString(mainRoot.resolve(rel))).contains(needle))
+  }
+
+  private def allowFiles(files: String*)(rel: String, src: String): String =
+    if (files.contains(rel)) "" else src
+
+  test("only the artifact store renames or copies trees: no `.rename(` in " +
+    "src/main outside graft/store.scala, and no FileUtil.copy outside it and " +
+    "the part-file stager") {
+    assert(offenders(".rename(", allow = allowFiles("graft/store.scala")).isEmpty,
       "hand-rolled rename: route swaps through graft.store")
-    assert(offenders("FileUtil.copy", Set("graft/store.scala",
+    assert(offenders("FileUtil.copy", allow = allowFiles("graft/store.scala",
       "graft/streaming/WaveLedger.scala")).isEmpty,
       "hand-rolled tree copy: route clones through graft.store.cloneTree")
+  }
+
+  test("maintenance verbs share one skeleton: `ArtifactRoots.tagged(` only in " +
+    "graft/store.scala, graft/ArtifactRoots.scala and Pipeline.eArtifactRoot; " +
+    "no hand-built empty frame under streaming/ outside WaveLedger.scala") {
+    val eArtifactRoot =
+      """def eArtifactRoot\([^)]*\)[^=]*=\s*graft\.ArtifactRoots\.tagged\(""".r
+    val roots = offenders("ArtifactRoots.tagged(", allow = (rel, src) =>
+      if (rel == "graft/ext/Pipeline.scala") eArtifactRoot.replaceFirstIn(src, "")
+      else allowFiles("graft/store.scala", "graft/ArtifactRoots.scala")(rel, src))
+    assert(roots.isEmpty, s"hand-rolled artifact root in $roots: a verb's fresh " +
+      "root is graft.store.scratch, a served one graft.store.served/tree")
+    val empties = offenders("createDataFrame(new java.util.ArrayList",
+      under = "graft/streaming", allow = allowFiles("graft/streaming/WaveLedger.scala"))
+    assert(empties.isEmpty, s"hand-built empty ledger frame in $empties: " +
+      "read ledger dirs through WaveLedger.readOrEmpty")
   }
 }
