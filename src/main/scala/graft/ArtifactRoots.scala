@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** One root for every persisted derived artifact — index trees
   * (s13/s18/s21/s22/s23), the e-family stage tables, st11's staging
@@ -150,6 +150,20 @@ object ArtifactRoots {
     } catch { case _: Exception => () }
   }
 
+  /** When the tree `st` was last USED, for the 4×-grace GC bound of
+    * [[tagged]] and [[retireLegacy]]: the root dir's own mtime only
+    * moves when the tree is (re)written, so it measures time-since-
+    * build — but a straddling session that merely READS the tree
+    * advertises liveness via the serve-time heartbeat
+    * ([[touchServed]]); honor it. */
+  private def lastUse(fs: FileSystem, st: FileStatus): Long =
+    try {
+      val hb = new Path(st.getPath, "_graft_heartbeat")
+      if (fs.exists(hb))
+        math.max(st.getModificationTime, fs.getFileStatus(hb).getModificationTime)
+      else st.getModificationTime
+    } catch { case _: Exception => st.getModificationTime }
+
   /** One FIXED location per (prefix, data dir, corpus fingerprint) —
     * repeated invocations over unchanged data overwrite in place, so
     * Verify/Bench loops never accumulate unbounded scratch (the s13
@@ -230,15 +244,7 @@ object ArtifactRoots {
         fs.listStatus(rootPath).foreach { st =>
           val n = st.getPath.getName
           if (n.startsWith(s"${legacy}_") && !n.startsWith(s"${live}_")) {
-            val lastUse =
-              try {
-                val hb = new Path(st.getPath, "_graft_heartbeat")
-                if (fs.exists(hb))
-                  math.max(st.getModificationTime,
-                    fs.getFileStatus(hb).getModificationTime)
-                else st.getModificationTime
-              } catch { case _: Exception => st.getModificationTime }
-            if (grace <= 0L || now - lastUse > 4L * grace) {
+            if (grace <= 0L || now - lastUse(fs, st) > 4L * grace) {
               if (!fs.delete(st.getPath, true)) spared = true
             } else spared = true
           }
@@ -274,21 +280,8 @@ object ArtifactRoots {
               // grace of ITS regeneration; sessions that serve one
               // tree for longer than 4× grace must pin their own
               // SPARK_GRAFT_ARTIFACT_ROOT.
-              // Last-USE bound, not last-build: the root dir's own
-              // mtime only moves when the tree is (re)written, so it
-              // measures time-since-build — but a straddling session
-              // that merely READS the tree advertises liveness via
-              // the serve-time heartbeat ([[touchServed]]); honor it.
-              val lastUse =
-                try {
-                  val hb = new Path(st.getPath, "_graft_heartbeat")
-                  if (fs.exists(hb))
-                    math.max(st.getModificationTime,
-                      fs.getFileStatus(hb).getModificationTime)
-                  else st.getModificationTime
-                } catch { case _: Exception => st.getModificationTime }
               if (n.startsWith(s"${prefix}_${tag}_") && n != name &&
-                  (!regenFresh || now - lastUse > 4L * grace))
+                  (!regenFresh || now - lastUse(fs, st) > 4L * grace))
                 fs.delete(st.getPath, true)
             }
         } catch { case _: Exception => () } // GC is best-effort, never fatal

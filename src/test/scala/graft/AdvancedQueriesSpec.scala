@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,7 @@ import graft.queries.AdvancedQueries
   * per-round via Verify; these tests pin the invariants a hash can't
   * express (sketch error bounds, ANN-vs-exact recall, as-of ordering).
   */
-class AdvancedQueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class AdvancedQueriesSpec extends AnyFunSuite with GraftSuite {
 
   test("q20 rollup: grand total row equals sum of region subtotals") {
     val rows = AdvancedQueries.q20Rollup(spark, dir).collect()
@@ -117,7 +107,16 @@ class AdvancedQueriesSpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
        r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSeq
-    assert(key(Similarity.s4KnnCodegen(spark, dir)) === key(Similarity.s1KnnBrute(spark, dir)))
+    val fused = key(Similarity.s4KnnCodegen(spark, dir))
+    assert(fused === key(Similarity.s1KnnBrute(spark, dir)))
+    // the served s1 table may have been built fused; the un-fused
+    // derived chain is the zip_with reference proper
+    val (hof, optimized) = withoutFusion {
+      val s1 = Similarity.s1KnnBruteDerived(spark, dir)
+      (key(s1), s1.queryExecution.optimizedPlan.toString)
+    }
+    assert(optimized.contains("aggregate(zip_with"), s"the reference was fused:\n$optimized")
+    assert(fused === hof)
   }
 
   test("cosine_sim: zero-norm input yields NULL; SQL-callable after register") {

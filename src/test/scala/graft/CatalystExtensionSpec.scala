@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,7 @@ import graft.plans.FuseDotProduct
   * DotProduct expression without changing a single value, and the
   * fused expression must replicate the HOF form's NULL semantics.
   */
-class CatalystExtensionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class CatalystExtensionSpec extends AnyFunSuite with GraftSuite {
 
   test("rule fuses the zip_with/aggregate pattern in a real query plan") {
     val analyzed = Similarity.s1KnnBruteDerived(spark, dir).queryExecution.analyzed
@@ -35,6 +25,14 @@ class CatalystExtensionSpec extends AnyFunSuite {
     assert(!fused.toString.contains("aggregate(zip_with"), "HOF pattern survived the rewrite")
   }
 
+  test("the suite session runs the production rule: s1's optimized plan " +
+    "holds a DotProduct and no aggregate(zip_with") {
+    val optimized = Similarity.s1KnnBruteDerived(spark, dir).queryExecution.optimizedPlan
+    assert(optimized.exists(_.expressions.exists(_.exists(_.isInstanceOf[DotProduct]))),
+      s"FuseDotProduct did not fire in the suite session:\n$optimized")
+    assert(!optimized.toString.contains("aggregate(zip_with"), optimized.toString)
+  }
+
   test("dot_product matches the HOF fold bit-for-bit on real embeddings") {
     DotProduct.register(spark)
     val hof = aggregate(
@@ -42,9 +40,13 @@ class CatalystExtensionSpec extends AnyFunSuite {
       lit(0.0), (acc, v) => acc + v)
     val pairs = Tables.embeddings(spark, dir).limit(50).select(col("embedding").as("a"))
       .crossJoin(Tables.embeddings(spark, dir).limit(7).select(col("embedding").as("b")))
-    val diff = pairs
-      .select((hof - call_function("dot_product", col("a"), col("b"))).as("d"))
-      .agg(max(abs(col("d"))).as("m")).collect().head.getDouble(0)
+    val (diff, optimized) = withoutFusion {
+      val q = pairs
+        .select((hof - call_function("dot_product", col("a"), col("b"))).as("d"))
+        .agg(max(abs(col("d"))).as("m"))
+      (q.collect().head.getDouble(0), q.queryExecution.optimizedPlan.toString)
+    }
+    assert(optimized.contains("aggregate(zip_with"), s"the reference was fused:\n$optimized")
     assert(diff === 0.0) // identical op order -> bit-identical, not just close
   }
 

@@ -1,36 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventsStream
 
 /** Correctness oracle for the streaming path: the SAME transform over
   * a file-source stream must converge to the batch answer. */
-class EventsStreamSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
-
-  /** No streaming query may outlive this suite (r18): a query leaked
-    * by a failing test keeps its micro-batch thread alive into the
-    * JVM-exit SparkContext stop, where `SparkContext.broadcast` races
-    * `assertNotStopped` — the r17 driver-red `sbt test` signature.
-    * Belt to the library-side `WaveLedger.drain` suspenders. */
-  override def afterAll(): Unit = {
-    spark.streams.active.foreach { q =>
-      try q.stop() catch { case _: Throwable => () }
-    }
-    super.afterAll()
-  }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class EventsStreamSpec extends AnyFunSuite with GraftSuite {
 
   /** File stream sources require a directory — stage the single
     * events.parquet into one. */

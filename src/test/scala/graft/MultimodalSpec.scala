@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Multimodal
 
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class MultimodalSpec extends AnyFunSuite with GraftSuite {
 
   test("media table: binary payload round-trips text bytes, kinds cycle") {
     val media = Multimodal.mediaFromDocs(spark, dir).cache()

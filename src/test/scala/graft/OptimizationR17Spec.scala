@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.RetailStar
@@ -20,19 +19,7 @@ import graft.ext.Similarity
   *     equals the two-action form it replaced, and the row's output
   *     schema/values survive the concurrent-write restructuring.
   */
-class OptimizationR17Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
+class OptimizationR17Spec extends AnyFunSuite with GraftSuite {
 
   test("materializeStar equals buildStar frame-for-frame (fact, product, " +
     "shipping) — the shared cleaning pass changes nothing") {
@@ -68,7 +55,7 @@ class OptimizationR17Spec extends AnyFunSuite {
     "writeFactPartitioned row-for-row, and clone-minus-partition equals the " +
     "filtered write (q56's pre-load state)") {
     import org.apache.spark.sql.functions._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_r17o_starwh_spec"
+    val tmp = s"${tempDir("graft_r17o")}/graft_r17o_starwh_spec"
     val fact = RetailStar.servedStar(spark, dir).fact
     // fresh write — the pre-substrate staging the verbs used to run
     graft.etl.Warehouse.writeFactPartitioned(fact, s"$tmp/direct")
@@ -113,7 +100,7 @@ class OptimizationR17Spec extends AnyFunSuite {
   test("q58's staged stale warehouse (clone + late-window repack) equals the " +
     "full filtered write it replaced") {
     import org.apache.spark.sql.functions._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_r17o_stale_spec"
+    val tmp = s"${tempDir("graft_r17o")}/graft_r17o_stale_spec"
     val fact = RetailStar.stageStaleWarehouse(spark, dir, s"$tmp/staged")
     val lateKeys = RetailStar.arrivingMonthKeys(spark, dir, RetailStar.Q58LateMonths)
     val isLate = col("month_key").isin(lateKeys: _*) &&

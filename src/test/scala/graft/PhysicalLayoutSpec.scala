@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,8 @@ import graft.etl.Warehouse
   * same code viable at 100 TB, and they are checkable at any scale
   * because they are plan shapes, not timings.
   */
-class PhysicalLayoutSpec extends AnyFunSuite with TempDirs {
+class PhysicalLayoutSpec extends AnyFunSuite with GraftSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
   lazy val tmp: String = tempDir("layout").toString
 
   test("month-partitioned fact scan prunes partitions") {

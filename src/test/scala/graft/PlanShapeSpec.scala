@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{CoreQueries, InventoryQueries}
@@ -11,16 +11,7 @@ import graft.queries.{CoreQueries, InventoryQueries}
   * parquet scan, dim joins broadcasting, top-k avoiding a global
   * sort, and shuffle counts staying at their minimum.
   */
-class PlanShapeSpec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class PlanShapeSpec extends AnyFunSuite with GraftSuite {
 
   /** Final (post-AQE) physical plan text only — AdaptiveSparkPlan's
     * toString appends the Initial Plan too, which would double-count
@@ -263,9 +254,9 @@ class PlanShapeSpec extends AnyFunSuite with TempDirs {
     // corpus-sized sides never move for the legs
     assert(countOf(p, "BroadcastExchange") >= 2,
       s"query set and stats row must broadcast:\n$p")
-    // (FuseDotProduct firing on the dense leg is a session-extension
-    // property, asserted in CatalystExtensionSpec — this spec's plain
-    // session exercises the un-extended plan shape)
+    // (this spec runs the production session, so the plan above is
+    // the FuseDotProduct-extended shape; the rule firing itself is
+    // asserted in CatalystExtensionSpec)
   }
 
   test("e2: the artifact serve pushes the clean-set filter into the " +

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalacheck.rng.Seed
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.{RetailClean, Warehouse}
@@ -13,23 +11,7 @@ import graft.etl.{RetailClean, Warehouse}
   * snapshot, each checked over ScalaCheck-generated inputs with a
   * fixed seed (deterministic across rounds).
   */
-class PropertySpec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def check(name: String, prop: Prop, n: Int = 30): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default
-        .withMinSuccessfulTests(n)
-        .withInitialSeed(Seed(42L)),
-      prop)
-    assert(res.passed, s"$name: $res")
-  }
+class PropertySpec extends AnyFunSuite with GraftSuite {
 
   // (transaction_id, customer_id, date) line items; small id domains
   // force multi-line transactions and occasional collisions

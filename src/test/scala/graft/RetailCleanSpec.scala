@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.RetailClean
@@ -12,14 +11,7 @@ import graft.etl.RetailClean
   * Ratings + Zipcode sentinel (1007), midnight keys (1008), year
   * boundary (1009).
   */
-class RetailCleanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetailCleanSpec extends AnyFunSuite with GraftSuite {
 
   lazy val fixturePath: String =
     getClass.getResource("/retail_fixture.csv").getPath

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,22 +23,13 @@ import graft.streaming.EventsStream
   *  4. waterFill's avail=0 row: a declared source with an empty
   *     census allocates 0 with fill_permille 0, never null.
   */
-class Round10Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round10Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. compaction crash recovery ----------
 
   test("s18 compact: a crash stranding a list in codes.del_old is recovered " +
     "— the re-run restores the aside copy and loses no live rows") {
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_r10_crash_idx"
+    val idxDir = s"${tempDir("graft_r10")}/graft_r10_crash_idx"
     val basePred = col("vec_id") % 10 =!= 9
     val delSlice = Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 6)
     val delPath = new Path(s"$idxDir/deletes")
@@ -129,8 +119,6 @@ class Round10Spec extends AnyFunSuite {
     val root = new Path(Pipeline.eArtifactRoot(dir))
     val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
     // gate entries (artifact-served) — triggers the build
     val e1 = Pipeline.e1CorpusFunnel(spark, dir)
     val e3 = Pipeline.e3FinalPacking(spark, dir)
@@ -177,7 +165,7 @@ class Round10Spec extends AnyFunSuite {
 
   test("s21: the update path (tombstone + compact + frozen-model recode) " +
     "equals a rebuild with current values, codes table bit-for-bit") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r10").toString
     val updDir = s"$tmp/graft_r10_upd_idx"
     val rebDir = s"$tmp/graft_r10_reb_idx"
     val basePred = col("vec_id") % 10 =!= 9
@@ -210,7 +198,7 @@ class Round10Spec extends AnyFunSuite {
 
   test("s22: retrain-served equals the all-trained s12 bit-for-bit; pending " +
     "tombstones do not resurrect; both swap-crash windows recover") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r10").toString
     val idxDir = s"$tmp/graft_r10_retrain_idx"
     val basePred = col("vec_id") % 10 =!= 9
     val fs = FileSystem.get(new Path(idxDir).toUri,
@@ -358,7 +346,7 @@ class Round10Spec extends AnyFunSuite {
   test("retrain doubles as CREATE: on a dir with no live index the staging " +
     "tree renames straight into place — no spurious swap failure, answers " +
     "equal a direct all-trained build") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r10").toString
     val freshDir = s"$tmp/graft_r10_retrain_create"
     val refDir = s"$tmp/graft_r10_retrain_ref"
     val fs = FileSystem.get(new Path(freshDir).toUri,
@@ -390,7 +378,7 @@ class Round10Spec extends AnyFunSuite {
     "generation is cleared by the rebuild and never resurrected by a later " +
     "compaction; a stale codes.del_tmp is cleared even when the re-run has " +
     "no compaction work") {
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_r10_gen_idx"
+    val idxDir = s"${tempDir("graft_r10")}/graft_r10_gen_idx"
     val fs = FileSystem.get(new Path(idxDir).toUri,
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(idxDir), true)

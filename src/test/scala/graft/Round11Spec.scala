@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,19 +24,7 @@ import graft.streaming.WaveLedger
   *     paths-but-different-content tag differently; an unchanged dir
   *     tags stably.
   */
-class Round11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+class Round11Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. pairs/signatures artifact ≡ derived ----------
 
@@ -168,7 +155,7 @@ class Round11Spec extends AnyFunSuite {
     "between the fold's append and the ledger delete serves one copy") {
     import graft.ext.Similarity
     import org.apache.hadoop.fs.FileUtil
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r11").toString
     val defDir = s"$tmp/graft_r11_defer_idx"
     val rebDir = s"$tmp/graft_r11_defreb_idx"
     val basePred = col("vec_id") % 10 =!= 9
@@ -275,7 +262,7 @@ class Round11Spec extends AnyFunSuite {
     // a scratch dir standing in for 'the corpus path after regeneration':
     // same path string both times, different content
     val scratch = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_r11_fp_probe")
+      s"${tempDir("graft_r11")}/graft_r11_fp_probe")
     def writeProbe(content: String, mtime: Long): Unit = {
       scratch.mkdirs()
       val f = new java.io.File(scratch, "t.parquet")

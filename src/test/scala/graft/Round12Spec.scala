@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,26 +18,14 @@ import graft.streaming.WaveLedger
   *  2. The st13 ledger key is text-sensitive: a wave whose documents
   *     were edited under unchanged doc_ids commits as a NEW wave.
   */
-class Round12Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+class Round12Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. delete → deferred re-update ----------
 
   test("deferred update after delete: the re-updated id serves its new " +
     "coding; a tombstoned id whose only stale coding sat in the ledger " +
     "stays deleted through the triggered compaction") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r12").toString
     val defDir = s"$tmp/graft_r12_delupd_idx"
     val rebDir = s"$tmp/graft_r12_delreb_idx"
     val basePred = col("vec_id") % 10 =!= 9
@@ -86,7 +73,7 @@ class Round12Spec extends AnyFunSuite {
 
   test("deletes compaction folds the update ledger first: a tombstoned id " +
     "coded only in the ledger does not survive compactIvfPqDeletes") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r12").toString
     val idxDir = s"$tmp/graft_r12_foldfirst_idx"
     val basePred = col("vec_id") % 10 =!= 9
     val emb = Tables.embeddings(spark, dir)
@@ -277,7 +264,7 @@ class Round12Spec extends AnyFunSuite {
   test("st13 ledger key: the same doc_ids with EDITED text commit as a new " +
     "wave instead of aliasing the committed one") {
     import graft.streaming.DocumentsStream
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r12").toString
     val base = s"$tmp/graft_r12_ledgerkey"
     val bp = new Path(base)
     val fs = FileSystem.get(bp.toUri, spark.sparkContext.hadoopConfiguration)
@@ -319,7 +306,7 @@ class Round12Spec extends AnyFunSuite {
     "live generation and a cumulative folded set at every step") {
     import graft.streaming.DocumentsStream
     import spark.implicits._
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r12").toString
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed * 7919)
       val base = s"$tmp/graft_r12_compactprop_$seed"
@@ -524,7 +511,7 @@ class Round12Spec extends AnyFunSuite {
     "superseded generation is GC'd (constructed)") {
     import graft.streaming.DocumentsStream
     import spark.implicits._
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = tempDir("graft_r12").toString
     val base = s"$tmp/graft_r12_compactfold"
     val bp = new Path(base)
     val fs = FileSystem.get(bp.toUri, spark.sparkContext.hadoopConfiguration)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,19 +16,7 @@ import graft.ext.{Dedup, Pipeline, Similarity}
   *     (kmeansCentroids / pqCodebooksOn no longer drive |C|×dims
   *     state through the driver).
   */
-class Round13Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+class Round13Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. heartbeat-aware artifact GC ----------
 

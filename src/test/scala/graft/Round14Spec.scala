@@ -14,19 +14,7 @@ import graft.streaming.WaveLedger
   *     trains bit-identical centroids — the 100 TB knob is safe to
   *     flip.
   */
-class Round14Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+class Round14Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. shuffle-join assignment escape ----------
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,19 +19,7 @@ import graft.streaming.WaveLedger
   *  3. A clone is a sealed generation: no tombstone table, no update
   *     ledger, no substrate/verb markers travel with the copy.
   */
-class Round15Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+class Round15Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. the shared IVF substrate ----------
 

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,22 +25,7 @@ import graft.streaming.{DocumentsStream, EmbeddingsStream, WaveLedger}
   *  3. kNN-graph update-arrive tier (st23): compaction folds
   *     {assign, pairs, emb}; serve and replay laws as above.
   */
-class Round16Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
-
-  private def fs(p: String): FileSystem =
-    FileSystem.get(new Path(p).toUri, spark.sparkContext.hadoopConfiguration)
+class Round16Spec extends AnyFunSuite with GraftSuite {
 
   // ---------- 1. st15 tier: kNN-graph arrive ledger ----------
 

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,22 +24,7 @@ import graft.ext.{Pipeline, Similarity, TextAnalysis}
   *     retrained world, s29's rebuilt generation, e20's current
   *     tokenizer fertility).
   */
-class Round17Spec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
-
-  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
-
-  private def fs(p: String): FileSystem =
-    FileSystem.get(new Path(p).toUri, spark.sparkContext.hadoopConfiguration)
+class Round17Spec extends AnyFunSuite with GraftSuite {
 
   private def dropRoot(prefix: String): Unit = {
     val root = ArtifactRoots.tagged(prefix, dir)

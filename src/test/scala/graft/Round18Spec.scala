@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,16 +8,7 @@ import graft.ext.Multimodal
 
 /** Round-18 optimization pins: behavior that must not drift while the
   * operators get faster. */
-class Round18Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round18Spec extends AnyFunSuite with GraftSuite {
 
   /** A synthetic media frame: `n` rows of one identical payload (one
     * LSH bucket per band), ids dealt so `nArr` of them land on the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,16 +14,7 @@ import graft.queries.AdvancedQueries
   * value never un-fills). The DuckDB hash-match runs per-round via
   * Verify; these pin what a hash can't express.
   */
-class Round4Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round4Spec extends AnyFunSuite with GraftSuite {
 
   test("triangle census: K4 has 4 triangles, a path has 0, K3 has 1") {
     import spark.implicits._

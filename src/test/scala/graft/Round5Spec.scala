@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,16 +16,7 @@ import graft.queries.AdvancedQueries
   * removes/downgrades pairs, never invents or raises one). The DuckDB
   * hash-match runs per-round via Verify; these pin what a hash can't.
   */
-class Round5Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round5Spec extends AnyFunSuite with GraftSuite {
 
   test("s10 packed scan ≡ s8 unpacked scan: identical top-k ids, distances, ranks") {
     val packed = Similarity.s10Candidates(spark, dir, Similarity.TopK)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,7 @@ import graft.ext.{Multimodal, Pipeline, Similarity, TextAnalysis}
   * measured-margin clear of their round(·,6) boundary (the rule every
   * rounded threshold in this repo follows).
   */
-class Round7Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round7Spec extends AnyFunSuite with GraftSuite {
 
   test("e2: stages monotone; clean ≡ e1; target kept whole; pool selection ⊆ t21's") {
     val e1 = Pipeline.e1CorpusFunnel(spark, dir).collect()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,16 +18,7 @@ import graft.ext.{Pipeline, Similarity}
   *     base and appended — lands in exactly one inverted list with a
   *     full set of 8 subspace codes.
   */
-class Round8Spec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round8Spec extends AnyFunSuite with GraftSuite {
 
   private def tmp(prefix: String): String = tempDir(prefix).toString
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,16 +21,7 @@ import graft.ext.Pipeline
   *     source has base mass), so the new column changes nothing for
   *     the existing gate entry.
   */
-class Round9Spec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val dir = "/root/testdata/sf0.001"
+class Round9Spec extends AnyFunSuite with GraftSuite {
 
   test("e5: a delta-only source is quarantined, not silently dropped") {
     val rows = Pipeline.e5NewSourceIngest(spark, dir).collect()

@@ -7,18 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("GRAFT_FOC_V", "1"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PF", "true"))
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Tables.all.foreach { t =>
       try {
         if (t == "events") Tables.events(spark, sfDir).count()

@@ -11,9 +11,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.SparkSession
-import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalacheck.rng.Seed
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A local filesystem under the private `crashfs` scheme that injects
@@ -78,23 +76,7 @@ object CrashFs {
 /** The artifact store's crash law ([[graft.store]]) as one property,
   * plus the guards that keep swaps, tree copies and verb scratch roots
   * inside the store and ledger reads inside [[graft.streaming.WaveLedger]]. */
-class StoreSpec extends AnyFunSuite with TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def check(name: String, prop: Prop, n: Int = 30): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default
-        .withMinSuccessfulTests(n)
-        .withInitialSeed(Seed(42L)),
-      prop)
-    assert(res.passed, s"$name: $res")
-  }
+class StoreSpec extends AnyFunSuite with GraftSuite {
 
   /** Every file (with its content) and every empty directory under
     * `dir`, keyed by relative path. */
@@ -250,18 +232,17 @@ class StoreSpec extends AnyFunSuite with TempDirs {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
-  private val mainRoot = Paths.get("src/main/scala")
-
-  /** Files under src/main/scala (relative paths) whose text, after
-    * `allow` has cut the sanctioned uses, still contains `needle`. */
+  /** Files under `root` (relative paths) whose text, after `allow`
+    * has cut the sanctioned uses, still contains `needle`. */
   private def offenders(needle: String, under: String = "",
-                        allow: (String, String) => String = (_, src) => src): Seq[String] = {
-    val s = Files.walk(mainRoot.resolve(under))
+                        allow: (String, String) => String = (_, src) => src,
+                        root: JPath = Paths.get("src/main/scala")): Seq[String] = {
+    val s = Files.walk(root.resolve(under))
     val sources =
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
-    sources.map(p => mainRoot.relativize(p).toString)
-      .filter(rel => allow(rel, Files.readString(mainRoot.resolve(rel))).contains(needle))
+    sources.map(p => root.relativize(p).toString)
+      .filter(rel => allow(rel, Files.readString(root.resolve(rel))).contains(needle))
   }
 
   private def allowFiles(files: String*)(rel: String, src: String): String =
@@ -291,5 +272,12 @@ class StoreSpec extends AnyFunSuite with TempDirs {
       under = "graft/streaming", allow = allowFiles("graft/streaming/WaveLedger.scala"))
     assert(empties.isEmpty, s"hand-built empty ledger frame in $empties: " +
       "read ledger dirs through WaveLedger.readOrEmpty")
+  }
+
+  test("every suite runs on the production session: no hand-rolled session " +
+    "builder in src/test/scala outside graft/GraftSuite.scala") {
+    val builders = offenders("SparkSession" + ".builder", root = Paths.get("src/test/scala"),
+      allow = allowFiles("graft/GraftSuite.scala"))
+    assert(builders.isEmpty, s"hand-rolled session in $builders: mix in GraftSuite")
   }
 }
