@@ -164,41 +164,6 @@ object ArtifactRoots {
       else st.getModificationTime
     } catch { case _: Exception => st.getModificationTime }
 
-  /** One FIXED location per (prefix, data dir, corpus fingerprint) —
-    * repeated invocations over unchanged data overwrite in place, so
-    * Verify/Bench loops never accumulate unbounded scratch (the s13
-    * no-tmp-accumulation discipline), while a regenerated corpus gets
-    * a fresh tree instead of being served stale artifacts. The
-    * no-accumulation half survives the fingerprint axis because stale
-    * SIBLING tags (same prefix+path hash, different fingerprint) are
-    * garbage-collected on the way in — a regenerate-then-run loop
-    * keeps exactly one live tree per (prefix, dir), never a graveyard
-    * of superseded ones. The GC is SKIPPED when the fingerprint is
-    * the missing-dir "0": a data dir transiently absent (mid-swap of
-    * a regeneration, an eventually-consistent store) must never cost
-    * the intact tree of the real corpus.
-    *
-    * CONCURRENCY caveat: tags are memoized per JVM, so a session that
-    * tagged BEFORE a corpus regeneration keeps serving its (now
-    * stale-fingerprinted) tree for its lifetime — and a fresh session
-    * starting after the regeneration would GC that tree out from
-    * under it. Concurrent sessions therefore must not straddle a
-    * corpus regeneration; where that cannot be ruled out, set
-    * SPARK_GRAFT_ARTIFACT_GC_GRACE_MS — while the REGENERATION itself
-    * is younger than the grace window, stale siblings are spared
-    * (deferred to a later session's GC), giving sessions that
-    * straddled it time to drain. Staleness age is measured from when
-    * the data last CHANGED (the same 2-level walk the fingerprint
-    * hashes — the regeneration is what orphaned the tree), never from
-    * the tree's own mtime — that records when the tree was BUILT, so
-    * a long-lived session's 3-hour-old tree would be deleted out from
-    * under it seconds after a regeneration, the exact straddle the
-    * knob exists to survive. Bounded: trees untouched for 4× the
-    * grace are collected even mid-straddle, so continuous
-    * regeneration (a CI loop) cannot accumulate trees forever —
-    * sessions serving one tree longer than that must pin their own
-    * artifact root. Default 0 keeps the eager single-session
-    * behavior. */
   /** Per-JVM completion guard for [[retireLegacy]]: a key lands here
     * only after a FULLY-CLEAN sweep (nothing spared, every delete
     * confirmed) — until then the sweep stays eligible to retry, but
@@ -254,6 +219,41 @@ object ArtifactRoots {
     ()
   }
 
+  /** One FIXED location per (prefix, data dir, corpus fingerprint) —
+    * repeated invocations over unchanged data overwrite in place, so
+    * Verify/Bench loops never accumulate unbounded scratch (the s13
+    * no-tmp-accumulation discipline), while a regenerated corpus gets
+    * a fresh tree instead of being served stale artifacts. The
+    * no-accumulation half survives the fingerprint axis because stale
+    * SIBLING tags (same prefix+path hash, different fingerprint) are
+    * garbage-collected on the way in — a regenerate-then-run loop
+    * keeps exactly one live tree per (prefix, dir), never a graveyard
+    * of superseded ones. The GC is SKIPPED when the fingerprint is
+    * the missing-dir "0": a data dir transiently absent (mid-swap of
+    * a regeneration, an eventually-consistent store) must never cost
+    * the intact tree of the real corpus.
+    *
+    * CONCURRENCY caveat: tags are memoized per JVM, so a session that
+    * tagged BEFORE a corpus regeneration keeps serving its (now
+    * stale-fingerprinted) tree for its lifetime — and a fresh session
+    * starting after the regeneration would GC that tree out from
+    * under it. Concurrent sessions therefore must not straddle a
+    * corpus regeneration; where that cannot be ruled out, set
+    * SPARK_GRAFT_ARTIFACT_GC_GRACE_MS — while the REGENERATION itself
+    * is younger than the grace window, stale siblings are spared
+    * (deferred to a later session's GC), giving sessions that
+    * straddled it time to drain. Staleness age is measured from when
+    * the data last CHANGED (the same 2-level walk the fingerprint
+    * hashes — the regeneration is what orphaned the tree), never from
+    * the tree's own mtime — that records when the tree was BUILT, so
+    * a long-lived session's 3-hour-old tree would be deleted out from
+    * under it seconds after a regeneration, the exact straddle the
+    * knob exists to survive. Bounded: trees untouched for 4× the
+    * grace are collected even mid-straddle, so continuous
+    * regeneration (a CI loop) cannot accumulate trees forever —
+    * sessions serving one tree longer than that must pin their own
+    * artifact root. Default 0 keeps the eager single-session
+    * behavior. */
   def tagged(prefix: String, dir: String): String =
     tagCache.computeIfAbsent((prefix, dir), { _ =>
       val tag = java.lang.Long.toHexString(

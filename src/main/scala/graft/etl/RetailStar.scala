@@ -434,10 +434,8 @@ object RetailStar {
     cloneWarehouse(spark, dir, target)
     lateKeys.foreach(k => graft.store.clear(spark, s"$target/month_key=$k"))
     Warehouse.withDynamicOverwrite(spark) {
-      fact.filter(col("month_key").isin(lateKeys: _*) &&
-          pmod(col("transaction_id"), lit(Q58LateMod)) =!= Q58LateDigit)
-        .repartition(col("month_key"))
-        .write.mode("overwrite").partitionBy("month_key").parquet(target)
+      Warehouse.writeFactPartitioned(fact.filter(col("month_key").isin(lateKeys: _*) &&
+        pmod(col("transaction_id"), lit(Q58LateMod)) =!= Q58LateDigit), target)
     }
     fact
   }

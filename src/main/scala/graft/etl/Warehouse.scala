@@ -317,16 +317,27 @@ object Warehouse {
     * verified in WarehouseSpec). At 100 TB this is the difference
     * between scanning one month and scanning three years.
     *
-    * The write repartitions BY the partition column first: without
-    * it, every upstream task writes a sliver into every month — up to
-    * tasks×months small files (measured 2,560 at sf0.1, and the r17
-    * maintenance verbs paid 6-8s per invocation just opening them).
-    * One shuffle buys one writer per month; at 100 TB widen to
-    * repartition(n, col) so a hot month gets n files rather than one
-    * task. */
-  def writeFactPartitioned(fact: DataFrame, path: String): Unit =
-    fact.repartition(col("month_key"))
+    * The write hash-repartitions BY the partition column first:
+    * without it, every upstream task writes a sliver into every month
+    * — up to tasks×months small files (measured 2,560 at sf0.1, and
+    * the r17 maintenance verbs paid 6-8s per invocation just opening
+    * them). Each month lands in exactly one task, so every month dir
+    * holds one part file. The partition count is EXPLICIT (the
+    * session's shuffle partitions): AQE never coalesces an explicit-
+    * count shuffle, whereas the count-less form let it merge a sub-MB
+    * shuffle into ONE task that wrote all 80 months one after another.
+    * The months spread over min(#months, shuffle partitions) writer
+    * tasks. At 100 TB a hot month still gets one task; salt the key
+    * (month_key, pmod(hash, k)) so it gets k files.
+    *
+    * Every month-partitioned fact write goes through here; under
+    * [[withDynamicOverwrite]] it replaces only the months `fact`
+    * carries. */
+  def writeFactPartitioned(fact: DataFrame, path: String): Unit = {
+    val writers = fact.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    fact.repartition(writers, col("month_key"))
       .write.partitionBy("month_key").mode("overwrite").parquet(path)
+  }
 
   /** The per-month fact census — ONE definition of the (month_key,
     * n_rows, total_amount) rollup the star maintenance verbs serve
@@ -339,9 +350,9 @@ object Warehouse {
       .orderBy(col("month_key"))
 
   /** Run `body` with dynamic partition overwrite enabled, restoring
-    * the session's previous setting after — the save/set/restore
-    * discipline st11's merge established, factored for the star
-    * verbs. */
+    * the session's previous setting after — the one save/set/restore
+    * behind every partition-scoped overwrite (the star verbs and
+    * st11's merge). */
   def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
@@ -432,9 +443,8 @@ object Warehouse {
     val fired = decision.filter(col("fired") === 1L)
       .select(col("month_key")).collect().map(_.getString(0))
     if (fired.nonEmpty) withDynamicOverwrite(spark) {
-      source.filter(col("month_key").isin(fired.toIndexedSeq: _*))
-        .repartition(col("month_key"))
-        .write.mode("overwrite").partitionBy("month_key").parquet(target)
+      writeFactPartitioned(
+        source.filter(col("month_key").isin(fired.toIndexedSeq: _*)), target)
     }
     decision
   }

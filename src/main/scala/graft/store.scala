@@ -2,8 +2,9 @@ package graft
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -40,11 +41,14 @@ import org.apache.spark.sql.types.StructType
   * assume operator exclusivity: readers must not race the verb.
   *
   * Clones ([[cloneTree]]) copy bytes through the driver — the trees
-  * are MB-sized parquet at gate scale. At 100 TB the clone is a
-  * distcp-style parallel copy, or the verb runs directly on the
-  * serving root under operator exclusivity; either keeps this
-  * contract (a cleared destination holding exactly the listed
-  * children). */
+  * are MB-sized parquet at gate scale. The driver walks the source,
+  * creates every directory, then copies the files on at most
+  * `defaultParallelism` threads, and returns or fails only once every
+  * copy has finished, so no copy outlives the clone into the caller's
+  * recover or re-run. At 100 TB the clone is a distcp-style copy on
+  * the executors, or the verb runs directly on the serving root under
+  * operator exclusivity; either keeps this contract (a cleared
+  * destination holding exactly the listed children). */
 object store {
 
   private val TreeMarker = "_GRAFT_SUBSTRATE_OK"
@@ -173,19 +177,50 @@ object store {
 
   /** Copy `src` into `dst`, clearing any previous occupant: the listed
     * `children` (relative paths, nested ones included) when given, the
-    * whole tree otherwise. Fails if any copy fails. */
+    * whole tree otherwise. Every directory, empty ones included, is
+    * created first; the files are then copied concurrently. Fails,
+    * after every copy has finished, if any copy failed. */
   def cloneTree(spark: SparkSession, src: String, dst: String,
                 children: Seq[String] = Nil): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dst)
     val fs = fsOf(spark, d)
+    val srcFs = new Path(src).getFileSystem(conf)
     clear(fs, d)
-    val copies =
+    val tops =
       if (children.isEmpty) Seq(new Path(src) -> d)
       else children.map(c => new Path(s"$src/$c") -> new Path(d, c))
-    copies.foreach { case (s, t) =>
-      if (!FileUtil.copy(s.getFileSystem(conf), s, fs, t, false, conf))
-        fail(s"clone failed: $s -> $t")
+    val dirs = Seq.newBuilder[Path]
+    val files = Seq.newBuilder[(Path, Path)]
+    def walk(s: FileStatus, t: Path): Unit =
+      if (s.isDirectory) {
+        dirs += t
+        srcFs.listStatus(s.getPath).foreach(c => walk(c, new Path(t, c.getPath.getName)))
+      } else files += s.getPath -> t
+    tops.foreach { case (s, t) => walk(srcFs.getFileStatus(s), t) }
+    val copies = files.result()
+    (dirs.result() ++ copies.map(_._2.getParent)).distinct.foreach(mkdirs(fs, _))
+    if (copies.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(
+        math.min(copies.size, spark.sparkContext.defaultParallelism))
+      try {
+        val running = copies.map { case (s, t) =>
+          pool.submit(new Callable[Unit] {
+            def call(): Unit =
+              if (!FileUtil.copy(srcFs, s, fs, t, false, conf)) fail(s"clone failed: $s -> $t")
+          })
+        }
+        // wait for EVERY copy before raising: a copy still running
+        // after the throw would race the caller's recover or re-run
+        val failures = running.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally pool.shutdown()
     }
   }
 

@@ -451,11 +451,9 @@ object EventsStream {
           .select(cols: _*)
           .union(withDay.select(cols: _*))
       }
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("day").parquet(target)
-    finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    graft.etl.Warehouse.withDynamicOverwrite(spark) {
+      merged.write.mode("overwrite").partitionBy("day").parquet(target)
+    }
   }
 
   /** Stateful-stream state partitioning: a streaming aggregation keys

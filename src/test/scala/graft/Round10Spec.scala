@@ -632,10 +632,17 @@ class Round10Spec extends AnyFunSuite with GraftSuite {
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_r10_empty_events"
     val fs = FileSystem.get(new Path(tmp).toUri,
       spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(tmp), true)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").limit(0)
-      .write.parquet(s"$tmp/events.parquet")
+    val empty = spark.read.parquet(s"$dir/events.parquet").limit(0)
+    // rewrite the fixture only when it is missing, partial or stale: a
+    // rewrite changes the corpus fingerprint, and st11 would build a
+    // fresh tree
+    val events = new Path(s"$tmp/events.parquet")
+    if (!fs.exists(new Path(events, "_SUCCESS")) ||
+        spark.read.parquet(events.toString).schema != empty.schema) {
+      fs.delete(new Path(tmp), true)
+      empty.write.parquet(events.toString)
+    }
     val out = EventsStream.st11SnapshotMerge(spark, tmp).collect()
     assert(out.isEmpty, "empty input converges to an empty snapshot census")
   }

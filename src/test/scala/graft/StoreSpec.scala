@@ -135,15 +135,21 @@ class StoreSpec extends AnyFunSuite with GraftSuite {
     },
     between = Set(Map("live/a" -> "old"), Map("live/a" -> "new", "live/b" -> "new")))
 
-  private val srcFiles = Map("src/x/1" -> "1", "src/x/2" -> "2", "src/y" -> "3", "src/z" -> "4")
+  // more files than the suite's 4 cores, nested, plus an empty dir: the
+  // clone's copies really run concurrently when a fault lands
+  private val srcFiles = Map("src/y" -> "y", "src/z" -> "z") ++
+    (1 to 6).flatMap(i => Seq(s"src/x/$i" -> s"$i", s"src/x/deep/$i" -> s"d$i"))
 
   private val cloneVerb = Verb(
     setup = { (fs, r) =>
       srcFiles.foreach { case (f, c) => put(fs, new Path(s"$r/$f"), c) }
+      fs.mkdirs(new Path(s"$r/src/x/empty"))
       put(fs, new Path(s"$r/dst/stale"), "stale")
     },
     run = (_, r) => store.cloneTree(spark, s"$r/src", s"$r/dst", Seq("x", "y")),
-    done = srcFiles ++ Map("dst/x/1" -> "1", "dst/x/2" -> "2", "dst/y" -> "3"))
+    done = srcFiles ++ Map("src/x/empty/" -> "", "dst/x/empty/" -> "") ++
+      srcFiles.collect { case (f, c) if f.startsWith("src/x/") || f == "src/y" =>
+        "dst" + f.stripPrefix("src") -> c })
 
   private val Layers = Seq("l1", "l2")
 
@@ -256,6 +262,19 @@ class StoreSpec extends AnyFunSuite with GraftSuite {
     assert(offenders("FileUtil.copy", allow = allowFiles("graft/store.scala",
       "graft/streaming/WaveLedger.scala")).isEmpty,
       "hand-rolled tree copy: route clones through graft.store.cloneTree")
+  }
+
+  test("one month writer: no month_key repartition in src/main outside " +
+    "Warehouse.writeFactPartitioned") {
+    val needle = "repartition(col(\"month_key\"))"
+    val writer = """(?s)def writeFactPartitioned\(.*?\n  }""".r
+    val monthShuffle = """repartition\(\s*(\w+\s*,\s*)?col\("month_key"\)\s*\)""".r
+    val hand = offenders(needle, allow = { (rel, src) =>
+      val rest = if (rel == "graft/etl/Warehouse.scala") writer.replaceFirstIn(src, "") else src
+      monthShuffle.replaceAllIn(rest, java.util.regex.Matcher.quoteReplacement(needle))
+    })
+    assert(hand.isEmpty, s"hand-written month shuffle in $hand: write " +
+      "month-partitioned facts through Warehouse.writeFactPartitioned")
   }
 
   test("maintenance verbs share one skeleton: `ArtifactRoots.tagged(` only in " +

@@ -1,7 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.etl.{RetailClean, Warehouse}
 
@@ -177,6 +181,46 @@ class WarehouseSpec extends AnyFunSuite with GraftSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(keptIds === cleanIds)
     q.unpersist()
+  }
+
+  test("writeFactPartitioned: one part file per month, written by " +
+    "min(#months, shuffle partitions) tasks") {
+    val fact = graft.etl.RetailStar.servedStar(spark, dir).fact
+    val months = fact.select("month_key").distinct().count().toInt
+    val out = tempDir("wh_month_writer").resolve("fact").toString
+    // (job group, task count of the job's result stage = its last-created stage)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull ->
+          js.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    def inGroup[T](group: String)(body: => T): T = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      inGroup("wh_month_writer")(Warehouse.writeFactPartitioned(fact, out))
+      // events reach a listener in order: once the fence job is seen,
+      // every job of the write has been seen
+      inGroup("wh_month_writer_fence")(spark.sparkContext.parallelize(Seq(1), 1).count())
+      eventually(timeout(Span(30, Seconds))) {
+        assert(jobs.asScala.exists(_._1 == "wh_month_writer_fence"))
+      }
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      // the write job is the group's last: AQE materializes the shuffle first
+      val write = jobs.asScala.filter(_._1 == "wh_month_writer").toSeq
+      assert(write.nonEmpty && write.last._2 === math.min(months, partitions))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val monthDirs = fs(out).listStatus(new org.apache.hadoop.fs.Path(out))
+      .filter(_.getPath.getName.startsWith("month_key="))
+    assert(monthDirs.length === months)
+    monthDirs.foreach { m =>
+      val parts = fs(out).listStatus(m.getPath).map(_.getPath.getName)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length === 1, s"${m.getPath.getName}: ${parts.mkString(", ")}")
+    }
   }
 
   test("SCD2: change closes old version and opens a new one") {
