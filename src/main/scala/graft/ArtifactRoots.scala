@@ -15,9 +15,19 @@ object ArtifactRoots {
   def root: String = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ROOT",
     System.getProperty("java.io.tmpdir"))
 
-  private def hadoopConf: Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+  /** The session's configuration: the thread's active session, else the
+    * JVM's default one. Only a caller with no session at all gets the
+    * bare `Configuration`, and a `file:` FileSystem it builds first
+    * would keep Hadoop's stock forking class for the JVM (Hadoop's
+    * cache ignores configuration; see [[GraftSession]]). That cannot
+    * happen from `src/main`: every caller here is a verb handed a
+    * session, and the mains (`Verify`, `Bench`, `EtlDemo`) and
+    * perfbench build theirs through `GraftSession` before any verb. */
+  private def hadoopConf: Configuration = {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
+  }
 
   /** Cheap corpus-identity fingerprint of a data dir: a 64-bit hash
     * (two independently-seeded 32-bit Murmur3 folds concatenated —

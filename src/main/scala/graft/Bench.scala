@@ -190,12 +190,14 @@ object Bench {
     val sfNum = "^sf([0-9]+(\\.[0-9]+)?)$".r.findFirstMatchIn(dirName)
       .map(_.group(1))
       .getOrElse("\"" + dirName.replaceAll("[^A-Za-z0-9._-]", "") + "\"")
-    // Floors are only meaningful within one scale factor: the canonical
-    // file tracks the driver's sf0.1; any other sf dir gets its own
-    // suffixed file so dev runs at sf0.01 never pollute the record.
+    // Floors are only meaningful within one (scale factor, core count):
+    // the canonical file is the sf0.1 record at 32 cores; any other pair
+    // gets its own BENCH_FLOOR_sf<sf>_c<cpus>.json, so a dev run at
+    // sf0.01 or a 4-core pass never compares, retries or min-merges
+    // against another pair's floors. The file records its cpus too.
     val floorFile = new java.io.File(
-      if (sfNum == "0.1") "BENCH_FLOOR.json"
-      else "BENCH_FLOOR_sf" + sfNum.replaceAll("[^0-9.]", "") + ".json")
+      if (sfNum == "0.1" && cpus == 32) "BENCH_FLOOR.json"
+      else s"BENCH_FLOOR_sf${sfNum.replaceAll("[^0-9.]", "")}_c$cpus.json")
     val priorFloor: Map[String, Double] =
       if (!floorFile.exists) Map.empty
       else try {
@@ -282,7 +284,7 @@ object Bench {
     try {
       val thisRun = results.map { case (k, v, _) => (k, v) }
       java.nio.file.Files.writeString(floorFile.toPath,
-        s"""{"sf":$sfNum,"runs":$runs,"retries":$retriesUsed,"failures":$failures,
+        s"""{"sf":$sfNum,"cpus":$cpus,"runs":$runs,"retries":$retriesUsed,"failures":$failures,
            |"floor_total":${f(2, floorTotal)},"run_total":${f(2, total)},
            |"floor":${jmap(floor)},
            |"this_run":${jmap(thisRun)},

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.etl.{RetailClean, Warehouse}
 object EtlDemo {
@@ -21,10 +20,7 @@ object EtlDemo {
       case other =>
         sys.error(s"usage: EtlDemo [<staging-csv> <out-dir>], got ${other.length} args")
     }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftSession.create(4)
     spark.sparkContext.setLogLevel("ERROR")
     val raw = RetailClean.readStaging(spark, in)
     val cleaned = RetailClean.clean(raw)

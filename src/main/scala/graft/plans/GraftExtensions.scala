@@ -60,8 +60,8 @@ object FuseDotProduct extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions installer: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` — wires the optimizer rule
+/** Session extensions installer, which [[graft.GraftSession.builder]]
+  * passes to `withExtensions` — wires the optimizer rule
   * into every plan the session compiles (SURVEY.md §4 "potential
   * custom pieces"). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

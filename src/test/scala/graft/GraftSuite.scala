@@ -59,12 +59,18 @@ trait GraftSuite extends BeforeAndAfterAll { this: Suite =>
     d
   }
 
+  /** The session starts before any test, so no `file:` FileSystem a
+    * session-less caller builds from a bare Configuration is cached
+    * ahead of the session's fork-free one (see [[GraftSession]]). */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark
+  }
+
   /** A streaming query leaked by a failing test keeps its micro-batch
     * thread alive into the JVM-exit SparkContext stop, where
     * `SparkContext.broadcast` races `assertNotStopped`; stop them all
-    * before their checkpoint and source dirs go. The default session
-    * is read rather than `spark`, so a suite that never used Spark
-    * does not start it here. */
+    * before their checkpoint and source dirs go. */
   override def afterAll(): Unit =
     try {
       SparkSession.getDefaultSession.foreach(_.streams.active.foreach { q =>

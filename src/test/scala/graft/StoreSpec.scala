@@ -293,10 +293,18 @@ class StoreSpec extends AnyFunSuite with GraftSuite {
       "read ledger dirs through WaveLedger.readOrEmpty")
   }
 
+  private val builder = "SparkSession" + ".builder"
+
   test("every suite runs on the production session: no hand-rolled session " +
     "builder in src/test/scala outside graft/GraftSuite.scala") {
-    val builders = offenders("SparkSession" + ".builder", root = Paths.get("src/test/scala"),
+    val builders = offenders(builder, root = Paths.get("src/test/scala"),
       allow = allowFiles("graft/GraftSuite.scala"))
     assert(builders.isEmpty, s"hand-rolled session in $builders: mix in GraftSuite")
+  }
+
+  test("every main runs on the production session: no hand-rolled session " +
+    "builder in src/main/scala outside graft/GraftSession.scala") {
+    val mains = offenders(builder, allow = allowFiles("graft/GraftSession.scala"))
+    assert(mains.isEmpty, s"hand-rolled session in $mains: call GraftSession.create")
   }
 }
