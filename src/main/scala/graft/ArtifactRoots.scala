@@ -101,8 +101,6 @@ object ArtifactRoots {
   private[graft] def resetTagCacheForTest(): Unit = {
     tagCache.clear()
     hbThrottle.clear()
-    legacySwept.clear()
-    legacyRetryAt.clear()
   }
 
   /** Per-JVM throttle for [[touchServed]] — serve hot paths resolve
@@ -161,7 +159,7 @@ object ArtifactRoots {
   }
 
   /** When the tree `st` was last USED, for the 4×-grace GC bound of
-    * [[tagged]] and [[retireLegacy]]: the root dir's own mtime only
+    * [[tagged]]: the root dir's own mtime only
     * moves when the tree is (re)written, so it measures time-since-
     * build — but a straddling session that merely READS the tree
     * advertises liveness via the serve-time heartbeat
@@ -173,61 +171,6 @@ object ArtifactRoots {
         math.max(st.getModificationTime, fs.getFileStatus(hb).getModificationTime)
       else st.getModificationTime
     } catch { case _: Exception => st.getModificationTime }
-
-  /** Per-JVM completion guard for [[retireLegacy]]: a key lands here
-    * only after a FULLY-CLEAN sweep (nothing spared, every delete
-    * confirmed) — until then the sweep stays eligible to retry, but
-    * throttled by [[legacyRetryAt]] so a grace-spared straddle tree
-    * doesn't cost a root listing on every substrate resolution. */
-  private val legacySwept =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val legacyRetryAt =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Delete the trees a RETIRED prefix left behind. A re-keyed root
-    * (e.g. graft_st21ret → graft_st21ret_v1) orphans every old-prefix
-    * tree: [[tagged]]'s sibling GC matches only the live prefix, so
-    * without this sweep the old generation's disk leaks forever —
-    * once per future re-key (r16 review). `live` guards the prefix
-    * overlap (every `legacy_...` name also starts the live names'
-    * spelling, never the reverse). Honors the same last-use bound as
-    * the sibling GC: with a grace configured, a tree an old-binary
-    * straddling session still heartbeats is spared until 4× grace;
-    * the default grace 0 sweeps eagerly. Best-effort, never fatal;
-    * call it from the re-keyed resolver so one serve of the new root
-    * retires the old generation. */
-  def retireLegacy(legacy: String, live: String): Unit = {
-    val key = s"$legacy=>$live"
-    if (legacySwept.contains(key)) return
-    // mark done only AFTER a fully-clean sweep: a tree spared by the
-    // grace bound, a delete that returns false (fullyDelete reports
-    // failure instead of throwing), or a transient fs failure must
-    // stay eligible for a later call in this JVM — or "spared until
-    // 4x grace" silently becomes "never swept this session" (r16
-    // review). Retries are throttled (heartbeat's discipline) so an
-    // unswept key doesn't cost a root listing per serve.
-    val now = System.currentTimeMillis()
-    val at = legacyRetryAt.get(key)
-    if (at != null && now - at < HeartbeatThrottleMs) return
-    legacyRetryAt.put(key, now)
-    try {
-      val grace = gcGraceMs
-      val rootPath = new Path(root)
-      val fs = FileSystem.get(rootPath.toUri, hadoopConf)
-      var spared = false
-      if (fs.exists(rootPath))
-        fs.listStatus(rootPath).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith(s"${legacy}_") && !n.startsWith(s"${live}_")) {
-            if (grace <= 0L || now - lastUse(fs, st) > 4L * grace) {
-              if (!fs.delete(st.getPath, true)) spared = true
-            } else spared = true
-          }
-        }
-      if (!spared) legacySwept.add(key)
-    } catch { case _: Exception => () }
-    ()
-  }
 
   /** One FIXED location per (prefix, data dir, corpus fingerprint) —
     * repeated invocations over unchanged data overwrite in place, so

@@ -115,7 +115,7 @@ object RetailStar {
   }
 
   /** ONE dedup pass over the checkpointed cleaned frame feeding BOTH
-    * dims (r18, guide §1.2): dimProduct and dimShipping each ran their
+    * dims (guide §1.2): dimProduct and dimShipping each ran their
     * own corpus-wide distinct over the checkpoint — two full scans +
     * two exchanges for attribute sets that co-reside on every row. The
     * fused pass dedups the five attribute columns once (cardinality ≤
@@ -124,14 +124,14 @@ object RetailStar {
     * dim's own distinct then runs over that small frame. Dim content
     * is unchanged: distinct∘project∘distinct ≡ distinct∘project, and
     * the surrogate hashes see identical column values
-    * (OptimizationR17Spec pins materializeStar ≡ buildStar). */
+    * (WarehouseSpec pins materializeStar ≡ buildStar). */
   private def dimAttrs(cleaned: DataFrame): DataFrame =
     cleaned.select(col("product_name"), col("Product_Category"),
         col("Product_Brand"), col("Product_Type"), col("Shipping_Method"))
       .distinct().localCheckpoint()
 
-  /** The star schema PERSISTED as a corpus-fingerprint artifact
-    * (r16 verdict item 1): the defining property of a warehouse is
+  /** The star schema PERSISTED as a corpus-fingerprint artifact:
+    * the defining property of a warehouse is
     * that the ETL is paid ONCE and queries read persisted tables
     * (reference README.md:171-178) — the pairs/ivfq artifact
     * discipline applied to the star tier. Fact + both re-joined dims
@@ -155,7 +155,7 @@ object RetailStar {
     val root = graft.store.served("graft_star_v1", dir)
     // lazily shared single cleaning pass: evaluated only if some
     // table is missing, materialized once across the three builders
-    // (and ONE shared dim-attribute dedup feeding both dims — r18,
+    // (and ONE shared dim-attribute dedup feeding both dims —
     // materializeStar's rationale)
     lazy val cleaned =
       RetailClean.clean(stagingFromTpch(spark, dir)).localCheckpoint()
@@ -252,11 +252,11 @@ object RetailStar {
     // re-running the staging joins per consumer (bench: 9.8s → 7.3s);
     // the checkpoint block is freed by the ContextCleaner once the
     // frame is unreferenced (same lifecycle as the CC label loops).
-    // r17: checkpoint only the 8 columns the four consumers read
+    // checkpoint only the 8 columns the four consumers read
     // (guide §2.3 "project before the exchange" applied at the
     // materialization boundary — the full 31-column frame checkpointed
     // ~4× the bytes this query ever touches; measured 4.8s → 3.3s).
-    // r18 NOTE (examined, reverted): pre-partitioning this checkpoint
+    // NOTE (examined, reverted): pre-partitioning this checkpoint
     // on xxhash64(Customer_ID) to share the consumers' exchanges does
     // NOT work on Spark 4.1 — the LogicalRDD's outputPartitioning is
     // UnknownPartitioning under AQE, and with AQE suspended it only
@@ -384,7 +384,7 @@ object RetailStar {
     *
     * Scale: erasure cost ∝ the months the subject actually touched,
     * never history depth; a re-issued erasure request is idempotent
-    * (repack of already-clean partitions — Round17Spec pins untouched
+    * (repack of already-clean partitions — WarehouseSpec pins untouched
     * months byte-identical across the re-run). */
   def q57FactRetention(spark: SparkSession, dir: String): DataFrame = {
     val target = s"${graft.store.scratch(spark, "graft_starret_v1", dir)}/fact_by_month"
@@ -401,7 +401,7 @@ object RetailStar {
     // partition-scoped repack + the emptied-month cleanup live in
     // [[Warehouse.eraseFromPartitionedFact]] (the dynamic-overwrite
     // deletion gap is handled there, and pinned on a synthetic
-    // all-victim month in Round17Spec — this corpus never empties one)
+    // all-victim month in WarehouseSpec — this corpus never empties one)
     Warehouse.eraseFromPartitionedFact(spark, target, fact.schema, victims)
     Warehouse.monthCensus(spark.read.schema(fact.schema).parquet(target))
   }

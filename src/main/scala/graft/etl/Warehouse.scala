@@ -320,7 +320,7 @@ object Warehouse {
     * The write hash-repartitions BY the partition column first:
     * without it, every upstream task writes a sliver into every month
     * — up to tasks×months small files (measured 2,560 at sf0.1, and
-    * the r17 maintenance verbs paid 6-8s per invocation just opening
+    * the star maintenance verbs paid 6-8s per invocation just opening
     * them). Each month lands in exactly one task, so every month dir
     * holds one part file. The partition count is EXPLICIT (the
     * session's shuffle partitions): AQE never coalesces an explicit-
@@ -370,7 +370,7 @@ object Warehouse {
     * plan BEFORE the write — dynamic overwrite never touches a
     * partition the repack wrote no rows for, so a post-write read
     * would see the ghost's old rows and report the month as still
-    * populated, making the cleanup unreachable (r17 review). Victims
+    * populated, making the cleanup unreachable. Victims
     * join on `customer_key`. Returns the touched month keys. */
   def eraseFromPartitionedFact(spark: SparkSession, target: String,
                                schema: org.apache.spark.sql.types.StructType,
@@ -499,7 +499,6 @@ object Warehouse {
                 trackedAttrs: Seq[String], asOf: String): DataFrame = {
     val upd = updates.select((naturalKey +: trackedAttrs).map(col): _*)
     val cur = current.filter(col("is_current"))
-    val curKeyed = cur.select((naturalKey +: trackedAttrs).map(col): _*)
 
     // changed = open rows whose attrs differ from the incoming version
     val changeCond = trackedAttrs

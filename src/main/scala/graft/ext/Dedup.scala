@@ -120,7 +120,7 @@ object Dedup {
                            maxShingleDocFreq: Option[Long]): DataFrame =
     d3JaccardOf(Tables.documents(spark, dir), maxShingleDocFreq)
 
-  /** d3 over an arbitrary (doc_id, text) frame — the seam Round5Spec
+  /** d3 over an arbitrary (doc_id, text) frame — the seam DedupSpec
     * uses to plant a boilerplate shingle past the cap and pin the
     * knob's measured semantics (capped pairs ⊆ exact pairs, per-pair
     * jaccard never raised). */
@@ -255,7 +255,7 @@ object Dedup {
   /** The d4 GATE entry: serves the persisted pairs artifact
     * (re-ordered — a parquet roundtrip does not preserve row order),
     * which pins the artifact's CONTENT against the DuckDB oracle
-    * every round on top of Round11Spec's served ≡ derived pin. */
+    * every round on top of DedupSpec's served ≡ derived pin. */
   def d4MinhashLshServed(spark: SparkSession, dir: String): DataFrame =
     Pipeline.pairsArtifact(spark, dir).orderBy(col("a_id"), col("b_id"))
 
@@ -281,7 +281,7 @@ object Dedup {
     * new = the whole delta) and the streaming maintenance path
     * (st13, where each micro-batch is its own slice).
     *
-    * `broadcastNew` (r18, guide §3.1 — broadcast the side that fits):
+    * `broadcastNew` (guide §3.1 — broadcast the side that fits):
     * the streaming callers' `new` side is ONE MICRO-BATCH, bounded by
     * the trigger (maxFilesPerTrigger), so its band rows (wave ×
     * [[Bands]]) broadcast safely at any corpus size and the
@@ -324,7 +324,7 @@ object Dedup {
   }
 
   /** From-scratch d4 pairs over an arbitrary document frame — the
-    * d22 spec twin's rebuild-with-current-text path (Round15Spec
+    * d22 spec twin's rebuild-with-current-text path (DedupSpec
     * pins the incremental verb against CC over exactly this). */
   private[graft] def d4PairsOf(docs: DataFrame): DataFrame = {
     val sh = shingleRows(docs).cache()
@@ -441,7 +441,7 @@ object Dedup {
     * (the canonical keep-one-per-cluster decision every dedup
     * pipeline ends with). Oracle: recursive-CTE transitive closure
     * over the same pairs. Served from the persisted labels artifact —
-    * the labeling IS that table; Round11Spec pins served ≡ the
+    * the labeling IS that table; DedupSpec pins served ≡ the
     * from-scratch labeling. */
   def d7DedupComponents(spark: SparkSession, dir: String): DataFrame =
     Pipeline.labelsArtifact(spark, dir)
@@ -464,7 +464,7 @@ object Dedup {
     * rebuild law the incremental snapshot already obeys — so d11
     * shares d7's oracle verbatim. */
   def d11IncrementalCc(spark: SparkSession, dir: String): DataFrame = {
-    // the persisted pairs artifact feeds both halves (pre-r11 this
+    // the persisted pairs artifact feeds both halves (previously this
     // localCheckpointed a fresh LSH build; a parquet table needs no
     // checkpoint to be read twice)
     val pairs = Pipeline.pairsArtifact(spark, dir).select(col("a_id"), col("b_id"))
@@ -494,7 +494,7 @@ object Dedup {
     * to be kept, only the labeling"): label edges include the
     * representatives' (x, x) self-edges, which is what keeps nodes
     * whose component gains no new pair present in the merged graph.
-    * Since r15 the e13/st13/st14 serves pass the PERSISTED base
+    * The e13/st13/st14 serves pass the PERSISTED base
     * labeling (Pipeline.baseLabelsArtifact) here instead of
     * re-converging the base pair graph per invocation;
     * [[incrementalFold]] remains the derive-from-pairs form (d11's
@@ -510,7 +510,7 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------
-  // D22 — document UPDATE at the pair/dedup tier (r15): the verb the
+  // D22 — document UPDATE at the pair/dedup tier: the verb the
   // two vector tiers already had (s21/s23 upsert, s28 graph update)
   // and the pair graph did not. A re-edited document (same doc_id,
   // new text) must LEAVE its old shingle buckets and pairs and
@@ -588,7 +588,7 @@ object Dedup {
     * view), then fold the new pairs into the retracted labeling
     * (d11's star-edge fold). Oracle = d7's closure chain over the d4
     * pair table derived from the post-edit corpus view — update ≡
-    * rebuild-with-current-text, hash-checked every round; Round15Spec
+    * rebuild-with-current-text, hash-checked every round; DedupSpec
     * additionally pins the Spark-side equivalence and the
     * changed-doc-moves / untouched-clusters-verbatim laws. */
   def d22DocUpdate(spark: SparkSession, dir: String): DataFrame = {
@@ -596,7 +596,7 @@ object Dedup {
       .select(col("doc_id"))
     // RETRACT (pre-converge): the edited docs leave their pairs —
     // untouched labels pass through as star edges, affected clusters'
-    // survivors enter the ONE fold below as raw pairs (r15: the
+    // survivors enter the ONE fold below as raw pairs (the
     // intermediate survivor-only CC was a second labeling pass whose
     // fixpoint the combined CC reaches anyway)
     val (untouched, survivors) = Pipeline.retractParts(
@@ -612,7 +612,7 @@ object Dedup {
       .cache() // consumed 3×: endpoint ids ×2, verify join
     val candIds = cand.select(col("a_id").as("doc_id"))
       .union(cand.select(col("b_id").as("doc_id"))).distinct()
-    // candidate-doc filter BEFORE the shingle explode (r17, §2.3 —
+    // candidate-doc filter BEFORE the shingle explode (guide §2.3 —
     // the optimizer cannot push a join below the generator), and the
     // endpoint-bounded shingle view cached: verifyCandidates reads it
     // three times (sizes, both sides of the intersection join)
@@ -647,7 +647,7 @@ object Dedup {
     * component min over the d4 pair graph), same oracle; pinned
     * label-for-label against d7 on the real pair graph, against
     * brute-force union-find on a randomized graph, and on the
-    * 300-node chain d7's loop cannot label (Round9Spec).
+    * 300-node chain d7's loop cannot label (DedupSpec).
     *
     * Scale shape per round: a groupBy-min and an edge-sized join per
     * star phase, both at edge-sized width; the convergence check is
@@ -853,7 +853,7 @@ object Dedup {
       .orderBy(col("source"))
   }
 
-  /** D23 — QUALITY-RANKED keeper selection (r16): d15 materializes
+  /** D23 — QUALITY-RANKED keeper selection: d15 materializes
     * the deduplicated corpus under d7's min-id keep rule; production
     * pipelines keep the BEST member of each duplicate cluster instead
     * — a near-dup cluster often mixes a clean original with truncated
@@ -968,7 +968,7 @@ object Dedup {
     * identical sketch), the estimate is emitted as integer PERMILLE
     * via integer division — no float ratio near a rounding boundary
     * (n_union_k can be a power of two, where round-half behavior
-    * diverges across engines). Round6Spec measures the estimate
+    * diverges across engines). DedupSpec measures the estimate
     * against d16's exact matrix. */
   def d18SketchOverlap(spark: SparkSession, dir: String): DataFrame = {
     val fn = graft.functions.BottomK.registerWidth(spark, SketchK)
@@ -1150,7 +1150,7 @@ object Dedup {
     * bounded by the family count at any corpus size. */
   /** Every graded family's predicted pair set in ONE frame
     * (family, a_id, b_id), distinct — the d20 matrix's grading INPUT,
-    * persisted since r15 as the `family_pairs` artifact (s11's
+    * persisted as the `family_pairs` artifact (s11's
     * lsh_q precedent in the dedup domain): the six cheap-family
     * derivations run once per corpus version as the artifact's
     * builder, while each family's own gate row keeps benchmarking its
@@ -1177,7 +1177,7 @@ object Dedup {
       .join(fpd.as("b"), col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .select(lit("fingerprint").as("family"),
         col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-    // the two remaining near-dup families, graded since r11: d13's
+    // the two remaining near-dup families: d13's
     // semantic (embedding) pairs — vec_id IS doc_id, so the SEMANTIC
     // evidence grades directly against the TEXT truth, measuring how
     // much of the 3-gram duplication embedding-space dedup would see
@@ -1197,7 +1197,7 @@ object Dedup {
   def d20DedupQuality(spark: SparkSession, dir: String): DataFrame = {
     val truth = Pipeline.truthPairsArtifact(spark, dir)
       .select(col("a_id"), col("b_id"))
-    // served from the persisted family_pairs artifact (r15): the
+    // served from the persisted family_pairs artifact: the
     // grade is a pure parquet membership join
     val pred = Pipeline.familyPairsArtifact(spark, dir)
     val graded = pred
@@ -1248,7 +1248,7 @@ object Dedup {
     * same 16 columns, never a new corpus pass. */
   def d21LshTuning(spark: SparkSession, dir: String): DataFrame =
     // the signature table serves from the persisted artifact — three
-    // bandings are three cheap parquet scans of it, so the pre-r11
+    // bandings are three cheap parquet scans of it, so the earlier
     // cache/collect/unpersist hygiene (which existed to share ONE
     // in-memory signature build across the bandings without pinning
     // it past the call) has nothing left to manage

@@ -265,7 +265,7 @@ object Multimodal {
     // chunk id = boundaries strictly BEFORE this position (a boundary
     // byte ends its chunk); cumulative sum per media.
     // The per-position rows are projected down to (media_id, p, b)
-    // BEFORE the window's exchange (r17, guide §2.3/§8): the earlier
+    // BEFORE the window's exchange (guide §2.3/§8): the earlier
     // form carried the FULL text string on every position row through
     // the window shuffle and the chunk groupBy — an O(|text|²)-bytes
     // blowup per document; the text re-attaches per CHUNK via one
@@ -312,9 +312,9 @@ object Multimodal {
     * top-k: query side is |Q| 64-dim vectors broadcast to the
     * embedding scan — the corpus never moves, at any scale. Rounding
     * and tie-break follow the s-family discipline (round 6, then
-    * vec_id), with the rounding margin measured in Round7Spec. */
+    * vec_id), with the rounding margin measured in MultimodalSpec. */
   /** m6's full scored cross product with the UNROUNDED cosine —
-    * factored so Round7Spec can measure every pair's distance from
+    * factored so MultimodalSpec can measure every pair's distance from
     * the round(·,6) boundary (the repo's measured-margin rule). */
   private[graft] def m6Scored(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
@@ -377,7 +377,7 @@ object Multimodal {
     * any planted pair inside it on BOTH the Spark and oracle sides
     * (the gate would still hash-match), so planted-twin recall = 1 is
     * asserted at every SF the driver runs — sf0.001/0.01/0.1
-    * (Round8Spec + Round9Spec), not just the smallest. */
+    * (MultimodalSpec), not just the smallest. */
   val M7BucketCap = 64L
 
   /** Per-media positional permille signature: 16 segment byte-means
@@ -499,7 +499,7 @@ object Multimodal {
     m7PairsOf(mediaWithTwins(spark, dir))
 
   /** The m7 gate row SERVED from the persisted `media_pairs` artifact
-    * (r16 verdict item 4 — [[Pipeline.mediaPairsArtifact]] holds the
+    * ([[Pipeline.mediaPairsArtifact]] holds the
     * posture note): derivation runs once per corpus version, serves
     * are a parquet scan. The total order is re-applied after the
     * round-trip (parquet readers return rows in file order). m4's
@@ -579,11 +579,11 @@ object Multimodal {
       Pipeline.mediaPairsArtifact(spark, dir))
 
   /** m10's append over a caller-supplied media frame + standing pair
-    * artifact — the seam Round18Spec uses to CONSTRUCT a cap-crossing
+    * artifact — the seam MultimodalSpec uses to CONSTRUCT a cap-crossing
     * corpus and pin the guard's fallback (the live entry can't reach
     * that branch — no bucket approaches the cap on this corpus).
     *
-    * r17 optimization (guide §1.2, the substrate rule the other tiers
+    * The substrate rule (guide §1.2, which the other tiers
     * already follow): the standing base's pairs ARE the persisted
     * media_pairs artifact minus pairs touching an arrival endpoint —
     * banding is per-document, so a base-base pair shares its bucket
@@ -591,7 +591,7 @@ object Multimodal {
     * hot-bucket-cap crossing: a bucket with n_base ≤ cap < n_full is
     * dropped by the artifact build (cap on the full population) but
     * KEPT by a base-only derivation — its base-base pairs exist in
-    * derived-base and not in filtered-artifact. r18 makes that caveat
+    * derived-base and not in filtered-artifact. The guard makes that caveat
     * STRUCTURAL instead of corpus-contingent: the bucket counts the
     * cap filter needs anyway are materialized once, a crossing probe
     * checks `n_base ≥ 2 && n_base ≤ cap < n_full` (2 base members are
@@ -601,7 +601,7 @@ object Multimodal {
     * residual append-vs-rebuild nuance under a crossing — the FULL
     * rebuild drops the whole bucket while the append's base view keeps
     * it — is the verb's pre-existing documented semantics, unchanged;
-    * this corpus never constructs either case, Round18Spec does.) */
+    * this corpus never constructs either case, MultimodalSpec does.) */
   private[graft] def m10AppendOf(media: DataFrame,
                                  artifactPairs: DataFrame,
                                  forceDerivedBase: Boolean = false): DataFrame = {
@@ -610,7 +610,7 @@ object Multimodal {
     val bands = m7BandRows(sig)
     // ONE bucket-count aggregate, materialized (it is the cap filter
     // the candidate self-join reads twice AND the crossing probe's
-    // input — the pre-r18 form recomputed the count aggregate per
+    // input — an earlier form recomputed the count aggregate per
     // self-join side); bucket count is banded-corpus-bounded, tiny
     // next to the band rows themselves
     val counts = bands.groupBy(col("kind"), col("band"), col("bsig"))
@@ -793,7 +793,7 @@ object Multimodal {
   def m8SceneSegmentation(spark: SparkSession, dir: String): DataFrame =
     m8ScenesOf(mediaFromDocs(spark, dir))
 
-  /** Form over an arbitrary media frame — the seam Round9Spec uses to
+  /** Form over an arbitrary media frame — the seam MultimodalSpec uses to
     * plant a step-function payload and pin the boundary rule. */
   private[graft] def m8ScenesOf(media: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

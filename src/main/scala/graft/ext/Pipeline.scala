@@ -28,7 +28,7 @@ object Pipeline {
 
   // ---------------------------------------------------------------
   // PERSISTED PIPELINE ARTIFACTS — the s13 persist-once pattern
-  // applied to the e-family AND (since r11) the whole pair-derived
+  // applied to the e-family AND the whole pair-derived
   // d/p families. A real training-data pipeline's stages are
   // materialized, checkpointed TABLES (every production stack writes
   // its candidate-pair graph, dedup labels, per-doc decisions, and
@@ -84,7 +84,7 @@ object Pipeline {
   // is part of the root path — bump it whenever any table's semantics
   // change so a stale tree from an older build can never serve (data
   // changes are covered separately: ArtifactRoots folds a corpus
-  // fingerprint into the tag). Round10/11Spec pin artifact-served ≡
+  // fingerprint into the tag). PipelineArtifactsSpec and DedupSpec pin artifact-served ≡
   // freshly-derived for every consumer plus the crashed-write rebuild.
   //
   // 100 TB posture: the artifacts live where the corpus lives (here
@@ -129,14 +129,13 @@ object Pipeline {
     ensureArtifact(spark, dir, "truth_pairs")(Dedup.d3JaccardPairs(spark, dir))
 
   /** d20's grading input — every cheap family's predicted pair set in
-    * one table (r15; the family gate rows keep benchmarking their own
+    * one table (the family gate rows keep benchmarking their own
     * derivations, this is the once-per-corpus-version grading copy). */
   private[graft] def familyPairsArtifact(spark: SparkSession, dir: String): DataFrame =
     ensureArtifact(spark, dir, "family_pairs")(
       Dedup.d20FamilyPairsDerived(spark, dir))
 
-  /** m7's verified perceptual near-dup pairs PERSISTED (r16 verdict
-    * item 4) — the media tier joins the pair-artifact discipline it
+  /** m7's verified perceptual near-dup pairs PERSISTED — the media tier joins the pair-artifact discipline it
     * was the last family outside of: built once per corpus version by
     * the m7 chain (planted twins included — the artifact IS the gate
     * row's world), served by the m7 gate entry and available to any
@@ -182,9 +181,9 @@ object Pipeline {
 
   /** t27's BPE merge table PERSISTED — the tokenizer is a MODEL: it
     * trains once per corpus version (8.6s/round of gate time went to
-    * re-learning it in t27/t28/t29/e8 before r14) and every consumer
+    * re-learning it in t27/t28/t29/e8 before it persisted) and every consumer
     * serves the 8-row parquet table. The t21 DSIR precedent at the
-    * tokenizer layer; Round14Spec pins serve ≡ learn. */
+    * tokenizer layer; TextSpec pins serve ≡ learn. */
   private[graft] def bpeMergesArtifact(spark: SparkSession, dir: String): DataFrame =
     ensureArtifact(spark, dir, "bpe_merges")(TextAnalysis.bpeMergesDerived(spark, dir))
 
@@ -228,7 +227,7 @@ object Pipeline {
     }
 
   /** d7's global CC labeling FROM SCRATCH (no artifact tree touched) —
-    * the spec-side twin Round10/11Spec compare the served tables
+    * the spec-side twin PipelineArtifactsSpec and DedupSpec compare the served tables
     * against; the artifact build itself goes through [[pairsArtifact]]
     * so each DAG stage reads its parent table, never re-derives it. */
   private[graft] def labelsDerived(spark: SparkSession, dir: String): DataFrame =
@@ -239,7 +238,7 @@ object Pipeline {
       Dedup.connectedComponents(pairsArtifact(spark, dir), "a_id", "b_id"))
 
   /** YESTERDAY'S labeling — CC over the BASE-only pair graph (both
-    * endpoints outside the e4 delta), persisted (r15): the fold
+    * endpoints outside the e4 delta), persisted: the fold
     * starting state every arrival serve (e13 batch, st13/st14
     * streaming) previously re-converged per invocation. NOT the full
     * labels artifact filtered to base nodes — a delta doc bridging
@@ -264,7 +263,7 @@ object Pipeline {
     ensureArtifact(spark, dir, "docflags")(
       docFlagsDerived(spark, dir, labelsArtifact(spark, dir)))
 
-  /** Spec seam: the served docflags artifact (Round17Spec's e24
+  /** Spec seam: the served docflags artifact (PipelineSpec's e24
     * split-consistency grade recomputes the release split from it). */
   private[graft] def docFlagsForSpec(spark: SparkSession, dir: String): DataFrame =
     docFlagsArtifact(spark, dir)
@@ -356,8 +355,8 @@ object Pipeline {
       .join(perDoc, Seq("doc_id"), "left")
       .crossJoin(broadcast(cut))
       // target-domain docs are in-domain by definition; pool docs
-      // survive iff their importance weight clears t21's cut (margin
-      // measured in Round5Spec for the standalone op; same compare)
+      // survive iff their importance weight clears t21's cut (the
+      // standalone op's compare)
       .withColumn("s4", col("s3") &&
         (col("source") === TextAnalysis.DsirTarget || col("logw") > col("cut")))
       .join(broadcast(rates), Seq("source"), "left")
@@ -376,7 +375,7 @@ object Pipeline {
     * over waves equals the batch delta slice VERBATIM — the
     * stream-fold ≡ batch-refresh law st20's gate pins (expressions
     * copied stage-for-stage from docFlagsDerived/funnelFrame;
-    * Round15Spec pins frame equality so they cannot drift).
+    * StreamsSpec pins frame equality so they cannot drift).
     *
     * Scale: the wave side is micro-batch-sized; drops/perDoc joins
     * broadcast the wave against the persisted tables; the eval-gram
@@ -483,7 +482,7 @@ object Pipeline {
   private[graft] def e4DeltaPred: Column = e4DeltaPredOn("doc_id")
 
   /** Per-delta-doc stage flags under FROZEN base-trained models —
-    * factored so Round8Spec can pin (a) e4(all, all) ≡ e1⋈e2 and
+    * factored so PipelineSpec can pin (a) e4(all, all) ≡ e1⋈e2 and
     * (b) report-slice independence (scoring a delta doc gives the
     * same answer whether or not the rest of the corpus is scored
     * alongside it). */
@@ -499,7 +498,7 @@ object Pipeline {
     * `model` optionally REPLACES the inline stage-4/5 derivation with
     * explicit (per-doc scores, cut) frames — the seam that lets a
     * delta pass consume the PROMOTED post-e19 frozen tables, and
-    * Round14Spec pin the composition law e19 ∘ e4: a delta ingest
+    * PipelineArtifactsSpec pin the composition law e19 ∘ e4: a delta ingest
     * served from the promoted model ≡ e4 computed on a from-scratch
     * retrained base. */
   private def e4FlagsScored(spark: SparkSession, dir: String,
@@ -553,7 +552,7 @@ object Pipeline {
       // from the final mix (s5), and the documented admit path is
       // include-on-retrain — the next model retrain's base covers the
       // new feed, it gets a rate row, and the same docs flow the
-      // batch path (Round8/9Spec pin e4(base=all) ≡ e1⋈e2 and
+      // batch path (PipelineSpec pins e4(base=all) ≡ e1⋈e2 and
       // quarantine emptying under a full-base rerun).
       .withColumn("quar", col("s4") && col("rate_ppm").isNull)
       .withColumn("s5", col("s4") &&
@@ -577,7 +576,7 @@ object Pipeline {
     * the only corpus-sized work is the delta scan itself — daily
     * ingest cost is proportional to the delta, not the corpus. */
   /** Distance from every scored doc (base AND delta) to the frozen
-    * base-trained cut — Round8Spec asserts it ≫ cross-engine ln/sum
+    * base-trained cut — PipelineSpec asserts it ≫ cross-engine ln/sum
     * drift, the t12/t21 threshold discipline applied to e4's one
     * float compare. Measured: 1.1e-1 at sf0.001, 7.4e-3 at sf0.01,
     * 1.4e-3 at sf0.1 — all ≫ the ~1e-12 drift scale. */
@@ -631,7 +630,7 @@ object Pipeline {
   def e4DeltaIngest(spark: SparkSession, dir: String): DataFrame =
     ingestReport(spark, dir, !e4DeltaPred, e4DeltaPred)
 
-  /** Round14Spec seam — the e19 ∘ e4 composition: a delta pass whose
+  /** PipelineArtifactsSpec seam — the e19 ∘ e4 composition: a delta pass whose
     * stage-4/5 model inputs are explicit frames (the PROMOTED
     * model_frozen tables of a cut-over clone) under a full-pool base
     * (what the promoted model was trained on). Returns (flags, scored)
@@ -655,7 +654,7 @@ object Pipeline {
     * so every selected doc lands in quarantine (n_quarantined =
     * n_selected, n_final = 0) instead of being silently dropped —
     * the bootstrap posture a daily-ingest user sees the first time a
-    * feed onboards. Admit path: include-on-retrain (Round9Spec pins
+    * feed onboards. Admit path: include-on-retrain (PipelineSpec pins
     * quarantine emptying once the base covers the new source). The
     * new source's eval-rule docs are in NEITHER base nor delta: an
     * eval set frozen before the feed existed cannot contain them, and
@@ -677,7 +676,7 @@ object Pipeline {
     * d7 near-dup labeling and is keyed by its CLUSTER representative
     * (its own id when unclustered), so the hash lottery places whole
     * near-dup clusters — never individual members — into a split.
-    * Factored out so Round9Spec can pin the cluster-atomicity and
+    * Factored out so PipelineSpec can pin the cluster-atomicity and
     * exhaustiveness laws at the doc grain. */
   private[graft] def e6DocSplits(spark: SparkSession, dir: String): DataFrame =
     e6DocSplitsFrom(spark, dir, labelsArtifact(spark, dir))
@@ -750,7 +749,7 @@ object Pipeline {
     * The gate row is the order census: per (epoch, hash-range
     * quartile) window/doc/token mass — uniform hashing means each
     * quartile of the training order carries ~¼ of every source's
-    * mass, which is exactly the interleaving claim. Round9Spec pins
+    * mass, which is exactly the interleaving claim. PipelineSpec pins
     * the real thing: the hash order is a true permutation of e3's
     * bins, the two epochs order differently, and the
     * range-partition + local-sort materialization equals the logical
@@ -787,7 +786,7 @@ object Pipeline {
     * it is reading EXACTLY the data, in EXACTLY the order, of the
     * original run. A count/sum census cannot see two bins trading
     * content while totals balance; the position-weighted content hash
-    * can (Round9Spec pins exactly that corruption, plus drop
+    * can (PipelineSpec pins exactly that corruption, plus drop
     * detection and recompute-determinism).
     *
     * Scale: one row per (shard) — the windows are shard-partitioned
@@ -807,7 +806,7 @@ object Pipeline {
     * names: the position-weighted fold reduces per partial modulo
     * 2^61−1 instead of relying on the 2^60 int64 headroom — equal to
     * the exact checksum verbatim while that headroom holds (pinned in
-    * Round13Spec with the property tests). Gate default stays exact
+    * PipelineArtifactsSpec with the property tests). Gate default stays exact
     * (the oracle computes the plain sum). */
   private[graft] def manifestOf(bins: DataFrame,
                                 mersenne: Boolean = false): DataFrame = {
@@ -874,7 +873,7 @@ object Pipeline {
     * prev (a shard with no earlier bins starts at 0), local packing
     * offset above it. The refresh operator is N-FOLD composable —
     * epoch k's ids depend only on epochs < k, so daily deltas chain
-    * indefinitely (Round10Spec pins the 3-epoch composition against
+    * indefinitely (PipelineArtifactsSpec pins the 3-epoch composition against
     * the independent derivation). */
   private[graft] def appendEpochBins(flags: DataFrame, prev: DataFrame): DataFrame = {
     val offsets = prev
@@ -1116,7 +1115,7 @@ object Pipeline {
     * docs, and because ranges are doc_id-disjoint with intra-range
     * order matching the per-source global order, the two-level
     * cumulative equals the single-window one EXACTLY for any cut set
-    * (Round11Spec pins row-for-row equality; the decision stays the
+    * (PipelineArtifactsSpec pins row-for-row equality; the decision stays the
     * same integer compare). */
   def e12BudgetEnforce(spark: SparkSession, dir: String): DataFrame =
     e12Enforced(spark, dir, twoLevel = false)
@@ -1323,7 +1322,7 @@ object Pipeline {
     val newPairs = Dedup.verifyCandidates(sh, cand)
       .select(col("a_id"), col("b_id"))
     // yesterday's labeling served from the PERSISTED base labeling
-    // (r15 — see baseLabelsArtifact's doc for why it is NOT the full
+    // (see baseLabelsArtifact's doc for why it is NOT the full
     // labels artifact filtered). The fold is d11's, by construction:
     // one shared definition (Dedup.incrementalFoldFrom).
     val out = Dedup.incrementalFoldFrom(baseLabelsArtifact(spark, dir), newPairs)
@@ -1357,7 +1356,7 @@ object Pipeline {
     val candIds = cand.select(col("a_id").as("doc_id"))
       .union(cand.select(col("b_id").as("doc_id"))).distinct()
     // semi-join at the DOCUMENT level, before the shingle explode
-    // (r17, guide §2.3): a join cannot be pushed below a generator by
+    // (guide §2.3): a join cannot be pushed below a generator by
     // the optimizer, so the post-explode form shingled the whole
     // corpus and then dropped non-candidate rows — this shingles only
     // candidate docs. Same rows out (the filter key exists per doc).
@@ -1384,7 +1383,7 @@ object Pipeline {
   /** The retraction core, pure over its three inputs so the one
     * branch the corpus can't witness at spec SFs — a retired BRIDGE
     * doc splitting its cluster in two — is pinned on a constructed
-    * graph (Round11Spec). Law: pairs never cross clusters, so
+    * graph (PipelineArtifactsSpec). Law: pairs never cross clusters, so
     * deleting retired-endpoint pairs can only change clusters that
     * CONTAIN a retired doc; every other label is served as-is and
     * only the affected subgraph re-converges.
@@ -1414,7 +1413,7 @@ object Pipeline {
   /** The retraction's PRE-CONVERGE decomposition — (untouched labels
     * to pass through, affected clusters' surviving pairs) — shared by
     * [[retractFromGraph]] (which re-converges the survivors alone)
-    * and the update verbs' single-CC fold (d22/st21, r15: survivors
+    * and the update verbs' single-CC fold (d22/st21: survivors
     * converge TOGETHER with the arrival pairs in ONE labeling pass —
     * collapsing the survivor subgraph to component stars first and
     * re-converging was a second CC whose fixpoint the combined CC
@@ -1457,12 +1456,12 @@ object Pipeline {
     * rebuild-without-retired every round. At sf0.01 the affected
     * cluster dissolves entirely (its one pair had a retired
     * endpoint); at sf0.001 it shrinks and survives; the SPLIT branch
-    * is Round11Spec's constructed pin. */
+    * is PipelineArtifactsSpec's constructed pin. */
   def e14GraphRetract(spark: SparkSession, dir: String): DataFrame =
     // served from the PERSISTED retraction (the offboarded generation's
-    // labels table) since r12 — the retraction is an artifact, not a
+    // labels table) — the retraction is an artifact, not a
     // per-query recompute; [[e14Derived]] keeps the from-scratch
-    // incremental path as the spec twin (Round12Spec pins served ≡
+    // incremental path as the spec twin (PipelineArtifactsSpec pins served ≡
     // derived), and the oracle still hash-checks the content against
     // rebuild-without-retired every round.
     offboardLabels(spark, dir).orderBy(col("doc_id"))
@@ -1479,7 +1478,7 @@ object Pipeline {
   // e11 removes a retired feed's rows from the packed bins under
   // FROZEN flags (the serve-side fast path: "their rows leave the
   // shipped artifact NOW"), and e14 computes the retracted labeling —
-  // but r11 left retirement split across layers: the pairs/labels
+  // but that left retirement split across layers: the pairs/labels
   // artifacts still carried the retired rows on disk, every later
   // arrival banded against the FULL signatures table (so a near-dup
   // of a retired doc could re-enter the graph and resurrect the
@@ -1593,7 +1592,7 @@ object Pipeline {
     * past that (the e8-wide precedent): the fold reduces per partial
     * modulo 2^61−1, overflow-free at any layer size, and equals the
     * exact fold verbatim while the exact fold is in-range (both
-    * pinned in Round13Spec). The gate keeps exact — the oracle
+    * pinned in PipelineArtifactsSpec). The gate keeps exact — the oracle
     * hash-checks the plain sum. */
   private def layerCensus(layer: String, df: DataFrame, canonical: Column): DataFrame =
     layerCensusOn(layer, df, canonical, mersenne = false)
@@ -1653,7 +1652,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       .orderBy(col("split"), col("source"))
 
-  /** E17 — RETRACT THEN ARRIVE: the composition that closes the r11
+  /** E17 — RETRACT THEN ARRIVE: the composition that closes the
     * resurrection hole. The e13/st13 arrival law banded new docs
     * against the FULL signatures artifact, so a doc arriving after a
     * retirement could band into a retired doc's bucket, verify, and
@@ -1723,7 +1722,7 @@ object Pipeline {
     * and the entry serves the cutover root's LIVE labels table —
     * oracle = e14's rebuild-without-retired verbatim, so the gate
     * hash-checks "after the swap, the live path IS the retracted
-    * state" every round. Round12Spec pins the crash windows (resume
+    * state" every round. PipelineArtifactsSpec pins the crash windows (resume
     * mid-swap, already-promoted skip) and the bins/manifest layer
     * content. */
   def e18OffboardCutover(spark: SparkSession, dir: String): DataFrame = {
@@ -1832,7 +1831,7 @@ object Pipeline {
     * retrain" (and on quiet corpora, "no swap, the frozen path is
     * untouched") every round. Oracle composes the drift chain, both
     * DSIR generations, and the fired CASE in one statement.
-    * Round13Spec pins the crash windows (e18's pattern) and
+    * PipelineArtifactsSpec pins the crash windows (e18's pattern) and
     * frozen-after-cutover ≡ fresh full retrain. */
   def e19ModelCutover(spark: SparkSession, dir: String): DataFrame = {
     val scratch = stageModelClone(spark, dir)
@@ -1897,7 +1896,7 @@ object Pipeline {
     * — quiet at every spec SF, the measured frontier is 12 tpk), the
     * generalized [[modelCutover]] promotes the current generation
     * over the frozen root ([[BpeModelLayers]] — same aside-first
-    * crash-resumable per-layer promotion, Round13Spec's pinned
+    * crash-resumable per-layer promotion, PipelineArtifactsSpec's pinned
     * windows); the entry then serves the per-source delta fertility
     * FROM THE POST-VERB FROZEN encoded table next to the decision, so
     * the gate hash-checks "after the swap, the frozen tokenizer IS
@@ -1915,7 +1914,7 @@ object Pipeline {
     // state; e19's discipline): re-embedding the lazy plan would run
     // the two corpus censuses twice per invocation. The decision rows
     // carry n_delta_chars and BOTH generations' fertility, so the
-    // QUIET branch serves straight from them (r15 ADVICE): the verb
+    // QUIET branch serves straight from them: the verb
     // touched nothing, hence the frozen fertility t31 just measured
     // IS the served fertility — no second delta census, no clone.
     val decPlan = TextAnalysis.t31TokenizerHealth(spark, dir)
@@ -1964,13 +1963,13 @@ object Pipeline {
          FROM fert t CROSS JOIN fired fi
          ORDER BY source"""
 
-  /** E21 — the UNIFIED MAINTENANCE CENSUS (r15 verdict item 3): four
+  /** E21 — the UNIFIED MAINTENANCE CENSUS: four
     * drift gates now guard the persisted-artifact DAG — s14/s30 (IVF
     * index), s27/s29 (kNN graph), t26/t30+e19 (DSIR model), t31+e20
     * (BPE tokenizer) — and an operator had to read four rows to know
     * the DAG's health. This entry evaluates all five persisted-
-    * artifact decisions in one pass (the warehouse tier joined in
-    * r17: q58's freshness rule as a census row — drifted-month count
+    * artifact decisions in one pass (the warehouse tier joined as
+    * q58's freshness rule as a census row — drifted-month count
     * vs 0 against the source manifest census) and emits the per-tier
     * (measure, threshold, fired) census — the ops dashboard of the
     * whole DAG. Every measure is the tier's OWN exact integer (s29's
@@ -1978,7 +1977,7 @@ object Pipeline {
     * ×10000 vs trigger·|Q|·k, the DSIR tier's count of sources above
     * [[TextAnalysis.DriftRetrainKl]] vs 0 (e19's any-source rule as
     * a count), the tokenizer tier's max per-source generation gap vs
-    * [[TextAnalysis.T31RetrainTpk]]. Round16Spec pins each tier's
+    * [[TextAnalysis.T31RetrainTpk]]. PipelineArtifactsSpec pins each tier's
     * fired bit equal to the standalone verb's decision.
     *
     * Scale: no new corpus work — the vector grades are |Q|·k joins
@@ -2094,7 +2093,7 @@ object Pipeline {
                   AS fired
          FROM allr ORDER BY tier"""
 
-  /** E22 — MAINTENANCE APPLY (r16 verdict item 2): e21 reads the four
+  /** E22 — MAINTENANCE APPLY: e21 reads the four
     * drift decisions but executes nothing; the four cutover verbs
     * exist separately (s30 IVF, s29 graph, e19 DSIR, e20 tokenizer).
     * This verb closes the census→action gap: evaluate all five
@@ -2108,9 +2107,9 @@ object Pipeline {
     * branches re-grade the tree the swap actually produced (e20's
     * witness discipline), the quiet branches report the serving
     * generation's already-persisted grade without cloning anything
-    * (the r15-ADVICE quiet rule). On this corpus the DSIR tier fires
+    * (the quiet rule). On this corpus the DSIR tier fires
     * at the spec SFs and the other three stay quiet, so both branches
-    * are live under the gate; Round17Spec force-fires the quiet tiers
+    * are live under the gate; PipelineArtifactsSpec force-fires the quiet tiers
     * and pins each post-apply state equal to the standalone
     * cutover's. This is the scheduled "maintenance run" a production
     * 100 TB pipeline owns: one verb after each ingest window, every
@@ -2188,7 +2187,7 @@ object Pipeline {
   }
 
   /** e22's warehouse tier, FIRED branch (never live on a fingerprint-
-    * fresh artifact — Round17Spec force-fires it): stage a STALE
+    * fresh artifact — PipelineArtifactsSpec force-fires it): stage a STALE
     * partitioned clone of the served fact under the e22 root (q58's
     * late slice withheld), run [[graft.etl.Warehouse
     * .refreshDriftedMonths]] against the served fact as source, and

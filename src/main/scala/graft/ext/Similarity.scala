@@ -47,7 +47,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
 
   /** S1 — exact top-10 cosine neighbors for each query vector,
-    * SERVED from the persisted grading-truth tier (r14 — content
+    * SERVED from the persisted grading-truth tier (content
     * identical to the from-scratch chain below, so the gate hash is
     * unchanged from the pre-artifact rounds). */
   def s1KnnBrute(spark: SparkSession, dir: String): DataFrame =
@@ -72,7 +72,7 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------
-  // The GRADING-TRUTH tier of the vector family, PERSISTED (r14):
+  // The GRADING-TRUTH tier of the vector family, PERSISTED:
   // the |Q|·k answer tables every recall grade joins against are
   // corpus-version-keyed and were recomputed per gate invocation —
   // s1's brute force by four consumers (s7/s11/s14/s30), s12's full
@@ -102,7 +102,7 @@ object Similarity {
     * answers PERSISTED (`appended_q`) — the appended side of the
     * s14/s30 grades; builder = the standard query set over the
     * shared drifted substrate (content-identical to s13's lifecycle
-    * chain — clone ≡ build, Round15Spec — without re-paying s13's
+    * chain — clone ≡ build, IvfIndexSpec — without re-paying s13's
     * per-invocation tree). */
   private[graft] def appendedAnswers(spark: SparkSession, dir: String): DataFrame =
     ensureIvfq(spark, dir, "appended_q")(
@@ -238,7 +238,7 @@ object Similarity {
     * corpus outgrows brute force, under the same hash gate. */
   def s17HybridIndexed(spark: SparkSession, dir: String): DataFrame = {
     // read-only consumer: serve straight from the shared substrate
-    // (r15 — no per-invocation rebuild; clone not even needed)
+    // (no per-invocation rebuild; clone not even needed)
     val idxDir = driftedSubstrate(spark, dir)
     val dense = queryIvfPqIndex(spark, dir, idxDir, HybridDepth)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
@@ -301,11 +301,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** λ = 0.5: relevance and redundancy weighted equally, so the MMR
-    * argmax reduces to argmax(rel − maxsim) — the form both engines
-    * compare exactly (two 6-rounded cosines subtracted; no λ float
-    * ever enters the ordering). */
-  val MmrLambda = 0.5
   val MmrDepth = 50
   val MmrTopK = 10
 
@@ -317,6 +312,11 @@ object Similarity {
     * same thing k times (near-dup hits collapse to one
     * representative; d6 removes cross-corpus duplicates at build
     * time, MMR removes residual redundancy at query time).
+    *
+    * λ = 0.5: relevance and redundancy weighted equally, so the MMR
+    * argmax reduces to argmax(rel − maxsim) — the form both engines
+    * compare exactly (two 6-rounded cosines subtracted; no λ float
+    * ever enters the ordering).
     *
     * Greedy selection is inherently sequential in k, so the loop is
     * k−1 UNROLLED DataFrame rounds, each a join + argmax over the
@@ -503,7 +503,7 @@ object Similarity {
     * cost of shuffling v, which is why broadcast stays the default
     * while |C|×dims fits an executor. Content is identical either way
     * (the join is the same all-pairs set; int64 sums don't care about
-    * row order) — Round14Spec pins trained-centroid bit-equality
+    * row order) — SimilaritySpec pins trained-centroid bit-equality
     * across the flag. */
   private def rankCentroids(v: DataFrame, cen: DataFrame,
                             broadcastCen: Boolean = true): DataFrame = {
@@ -543,9 +543,9 @@ object Similarity {
     * leave the cluster) and skips the small-count coalesce so the
     * centroid frame keeps its natural shuffle partitioning (|C| rows
     * spread over the agg's partitions — no single-task funnel as |C|
-    * grows). Round14Spec pins trained-centroid bit-equality across the
+    * grows). SimilaritySpec pins trained-centroid bit-equality across the
     * flag. Bit-equality with the collected form is pinned in
-    * Round13Spec (integer sums are associative, so partial-aggregation
+    * SimilaritySpec (integer sums are associative, so partial-aggregation
     * re-grouping cannot move a low bit). The broadcast form coalesces
     * to a SMALL MULTI-partition count, not 1 — a single-partition
     * re-sum is a single reduce task, the same growth-bound funnel the
@@ -555,7 +555,7 @@ object Similarity {
     import org.apache.spark.sql.graftshim.CheckpointShim
     var cen = v.filter(col("vec_id") % IvfCentroidStride === 0)
       .select(col("vec_id").as("cid"), col("qv").as("sarr"), col("nv").as("nc"))
-    // SIZE-GATED form selection (r15): production flips to the
+    // SIZE-GATED form selection: production flips to the
     // shuffle-assignment form automatically once the centroid frame
     // outgrows the session's broadcast threshold — the manual flag
     // remains the spec seam (bit-equality across forms is pinned, so
@@ -571,7 +571,7 @@ object Similarity {
         .select(col("cid"), col("sv.v").as("sarr"))
         .withColumn("nc", aggregate(col("sarr"), lit(0L), (a, s) => a + s * s))
       // EAGER checkpoint so the PREDECESSOR round's blocks release
-      // immediately (r14: the lazy form left rounds-many pinned frames
+      // immediately (the lazy form left rounds-many pinned frames
       // floating until the ContextCleaner got to them, and the
       // asynchronous cleanup made the suite's cache-hygiene deltas
       // non-monotone); the frame is |C| rows, the extra per-round job
@@ -593,14 +593,14 @@ object Similarity {
   private[graft] def assignBytesOf(nCentroids: Long): Long =
     nCentroids * (Dims.toLong * 8 + 64)
 
-  /** Dedicated knob for the k-means assignment form (r15 ADVICE): the
+  /** Dedicated knob for the k-means assignment form: the
     * gate reads THIS key first and falls back to the session's
     * `spark.sql.autoBroadcastJoinThreshold` only when it is unset —
     * so a session that sets the SQL threshold to -1 to suppress
     * broadcast JOINS elsewhere no longer silently flips every
     * centroid build (all index builders, s5, d13, s20) onto the
     * shuffle-assignment form. Forms are pinned bit-equal
-    * (Round14Spec), so either setting is a plan choice, never an
+    * (SimilaritySpec), so either setting is a plan choice, never an
     * answer change. */
   private[graft] val KmeansBroadcastThresholdKey =
     "spark.graft.kmeans.broadcastThreshold"
@@ -616,8 +616,8 @@ object Similarity {
     * merge stays parallel as |C| grows with the corpus. */
   private val CentroidCoalesce = 8
 
-  /** The pre-r13 COLLECTED form of [[kmeansCentroids]] — kept solely
-    * as Round13Spec's bit-equality reference for the distributed
+  /** The former COLLECTED form of [[kmeansCentroids]] — kept solely
+    * as SimilaritySpec's bit-equality reference for the distributed
     * rewrite (never called from any query path). */
   private[graft] def kmeansCentroidsCollectedForSpec(
       spark: SparkSession, v: DataFrame): DataFrame = {
@@ -787,7 +787,7 @@ object Similarity {
     * broadcast-assignment caveat in [[kmeansCentroids]]'s doc applies
     * here too). The per-dim mean is floor(sum/count) on doubles — the
     * identical IEEE division + floor the collected form ran on the
-    * driver, so the codebooks are bit-equal (pinned in Round13Spec;
+    * driver, so the codebooks are bit-equal (pinned in SimilaritySpec;
     * the oracle's unrolled SQL is untouched). Per-round frame coalesces
     * to [[CentroidCoalesce]], not 1 — same funnel argument as
     * [[kmeansCentroids]] (|sub|×K rows grow with the corpus under
@@ -814,7 +814,7 @@ object Similarity {
     cen
   }
 
-  /** The pre-r13 COLLECTED form of [[pqCodebooksOn]] — Round13Spec's
+  /** The former COLLECTED form of [[pqCodebooksOn]] — SimilaritySpec's
     * bit-equality reference only. */
   private[graft] def pqCodebooksCollectedForSpec(
       spark: SparkSession, v: DataFrame, strideDf: DataFrame): DataFrame = {
@@ -839,8 +839,8 @@ object Similarity {
     cen
   }
 
-  /** Round13Spec seam: both Lloyd implementations (distributed and
-    * the pre-r13 collected reference) over the corpus at `dir`, for
+  /** SimilaritySpec seam: both Lloyd implementations (distributed and
+    * the former collected reference) over the corpus at `dir`, for
     * the bit-equality pin — (kmeans distributed, kmeans collected,
     * pq distributed, pq collected). */
   private[graft] def lloydFormsForSpec(spark: SparkSession, dir: String)
@@ -852,7 +852,7 @@ object Similarity {
       pqCodebooksOn(spark, v, stride), pqCodebooksCollectedForSpec(spark, v, stride))
   }
 
-  /** Round14Spec seam: the trained centroids under BOTH assignment
+  /** SimilaritySpec seam: the trained centroids under BOTH assignment
     * routes — broadcast (default) and the SHUFFLE_REPLICATE_NL escape
     * — for the bit-equality pin that makes the 100 TB knob safe to
     * flip (same all-pairs join, associative integer sums ⇒ identical
@@ -954,7 +954,7 @@ object Similarity {
   // machinery, so the persisted round-trip changes no bits — the
   // append path codes vectors against centroids they never trained
   // (the production semantics), and coding is deterministic given
-  // the model, so append ≡ rebuild on the coded set (Round8Spec).
+  // the model, so append ≡ rebuild on the coded set (IvfIndexSpec).
   //
   // Scale: build pays s12's training once; append is one narrow scan
   // of the NEW vectors (assignment + coding against broadcast model
@@ -982,7 +982,7 @@ object Similarity {
 
   /** The build over an arbitrary (vec_id, embedding) frame — the seam
     * that lets the retrain express its live set as an ANTI-JOIN
-    * against the tombstone table (r15; the predicate form cannot,
+    * against the tombstone table (the predicate form cannot,
     * and a collected `isin` list grows with the delete cadence). */
   private[graft] def buildIvfPqIndexOn(spark: SparkSession, emb: DataFrame,
                                        idxDir: String, trainPred: Column,
@@ -1004,7 +1004,7 @@ object Similarity {
     val v = pqSubVecsOf(emb).cache()
     // the two model trainings are INDEPENDENT (coarse centroids over
     // qv, PQ codebooks over v — disjoint caches, disjoint outputs), so
-    // they train-and-write from two driver threads (r18, guide §2.6:
+    // they train-and-write from two driver threads (guide §2.6:
     // each training is a chain of small Lloyd-round jobs that leaves
     // most of the scheduler idle; overlapping the chains halves the
     // sequential job-latency tail). writeCodes then consumes both.
@@ -1033,7 +1033,7 @@ object Similarity {
     // land; release them here so the build is self-contained. The
     // final training checkpoints release too: everything the index
     // serves is on disk (coarse_centroids/pq_codebooks/codes), so the
-    // build leaves ZERO pinned state (the r9 hygiene discipline).
+    // build leaves ZERO pinned state (the cache-hygiene discipline).
     qv.unpersist()
     v.unpersist()
     import org.apache.spark.sql.graftshim.CheckpointShim
@@ -1054,7 +1054,7 @@ object Similarity {
     * index — the entry point a STREAMING ingest uses from
     * foreachBatch: each micro-batch codes against the frozen model
     * and lands in the inverted lists, identically to the batch
-    * append (Round8Spec pins stream ≡ batch on the codes table). */
+    * append (IvfIndexSpec pins stream ≡ batch on the codes table). */
   def appendIvfPqIndexFrom(spark: SparkSession, emb: DataFrame,
                            idxDir: String): Unit = {
     val cen = spark.read.parquet(s"$idxDir/coarse_centroids")
@@ -1182,7 +1182,7 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------
-  // The SHARED IVF SUBSTRATE (r15): every lifecycle gate entry used
+  // The SHARED IVF SUBSTRATE: every lifecycle gate entry used
   // to rebuild the same drifted index (base-trained model + frozen-
   // coded append) inside its own scratch root per invocation —
   // ~52s/round of repeated derivation of a pure function of the
@@ -1213,10 +1213,8 @@ object Similarity {
   /** The BASE substrate: model trained on the ~90% base slice, base
     * slice coded — the state a streaming ingest starts from. The
     * _v1 suffix is the root's builder-semantics re-key trigger (the
-    * graft_ivfq_v1/graft_knng_v3 convention); the sweep retires the
-    * pre-suffix generation's disk. */
+    * graft_ivfq_v1/graft_knng_v3 convention). */
   private[graft] def baseSubstrate(spark: SparkSession, dir: String): String = {
-    graft.ArtifactRoots.retireLegacy("graft_ivfsub_base", "graft_ivfsub_base_v1")
     graft.store.tree(spark, "graft_ivfsub_base_v1", dir) { root =>
       buildIvfPqIndex(spark, dir, root, s13BasePred, s13BasePred)
     }
@@ -1228,7 +1226,6 @@ object Similarity {
     * and of the s14/s30 drift measurements. Built by cloning base
     * (training paid once across both tiers) and appending. */
   private[graft] def driftedSubstrate(spark: SparkSession, dir: String): String = {
-    graft.ArtifactRoots.retireLegacy("graft_ivfsub_full", "graft_ivfsub_full_v1")
     graft.store.tree(spark, "graft_ivfsub_full_v1", dir) { root =>
       graft.store.cloneTree(spark, baseSubstrate(spark, dir), root, IndexTables)
       appendIvfPqIndex(spark, dir, root, !s13BasePred)
@@ -1250,16 +1247,16 @@ object Similarity {
     * fixed stride. Distances are exact int64 squared-L2 on the
     * quantized grid (na + nb − 2·dot via the codegen'd
     * LongDotProduct), so the oracle agrees bit-for-bit with no margin
-    * analysis; Round9Spec measures recall vs the brute-force graph on
+    * analysis; KnnGraphSpec measures recall vs the brute-force graph on
     * the same metric. */
   /** s20's own probe width: the recall/cost knob of graph
     * construction. Wider than the query-path [[IvfProbes]] because
-    * construction is offline and pays once — and since r13, persisted
-    * once per corpus version. r13 measured the FULL frontier at
+    * construction is offline and pays once — and is persisted
+    * once per corpus version. The FULL frontier measured at
     * sf0.001 (rounds=2 unless noted): probes=3 → 0.9118, probes=4 →
     * 0.9492, probes=5 → 0.9754, while a THIRD descent round at
     * probes=3 bought only 0.9144 — recall is probe-bound past the
-    * round-2 knee, exactly as the r12 curve predicted, so the knob
+    * round-2 knee, exactly as the rounds curve predicted, so the knob
     * widened 3→4 (floor re-keyed @v4). probes=5 measures higher
     * still but is 5 of 6 lists at spec SFs — blocking would be
     * near-degenerate in the gate corpus (at 100 TB, |C| grows with
@@ -1271,7 +1268,7 @@ object Similarity {
     * refinement: codegen'd integer distances (na + nb − 2·dot), rank
     * window partitioned per vector, ties on nb_id.
     *
-    * r18 NOTE (examined, reverted): an endpoint-semi-join "bounded"
+    * NOTE (examined, reverted): an endpoint-semi-join "bounded"
     * variant for the incremental callers (materialize the candidate
     * frame, semi-join qv to its endpoint ids before the attach —
     * guide §3.2/§8.4) measured st15 5.1→7.7s and st23 7.0→9.7s: the
@@ -1296,7 +1293,7 @@ object Similarity {
   /** Round 1 of the graph build: IVF-blocked candidates (vectors are
     * candidates for each other only when one's [[S20Probes]] nearest
     * coarse centroids include the other's primary list) ranked to
-    * top-k. Factored so Round10Spec can measure the descent round's
+    * top-k. Factored so KnnGraphSpec can measure the descent round's
     * recall lift against this baseline. */
   private[graft] def s20Round1Graph(spark: SparkSession, dir: String): DataFrame =
     s20Round1Graph(spark, dir, quantVecs(spark, dir))
@@ -1308,7 +1305,7 @@ object Similarity {
   /** Round 1 against an EXPLICIT centroid frame — the graph-append
     * lifecycle builds its base graph against the PERSISTED frozen
     * centroids rather than retraining; `probes` defaults to the gate
-    * knob (Round13Spec sweeps it for the recall/cost frontier). */
+    * knob (KnnGraphSpec sweeps it for the recall/cost frontier). */
   private def s20Round1GraphFrom(cen: DataFrame, qv: DataFrame,
                                  probes: Int = S20Probes): DataFrame = {
     val rc = rankCentroids(qv, cen).filter(col("r") <= probes)
@@ -1325,7 +1322,7 @@ object Similarity {
   /** NN-Descent round count for the s20 gate. The convergence curve
     * measured at sf0.001, recall@10 vs the brute-force graph at
     * unchanged probe count: blocked round-1 0.721 → one round 0.886 →
-    * two rounds 0.912 (Round12Spec pins the curve; it flattens fast,
+    * two rounds 0.912 (KnnGraphSpec pins the curve; it flattens fast,
     * as Dong et al.'s empirical curves do — most of the lift is in
     * iteration 1, and round 2's +2.6 points is the knee). Each round
     * costs one O(n·(2k)²) candidate join + exact re-rank; floors
@@ -1354,7 +1351,7 @@ object Similarity {
     knnRankTopK(cand, qv)
   }
 
-  /** The graph at an arbitrary descent depth — Round12Spec sweeps the
+  /** The graph at an arbitrary descent depth — KnnGraphSpec sweeps the
     * rounds axis for the recall curve; the gate serves
     * [[S20DescentRounds]]. */
   /** The shared descent loop: `rounds` NN-Descent refinements over an
@@ -1421,7 +1418,7 @@ object Similarity {
   // serve a compacted table built by the hop-less kernel)
   private def knngRoot(dir: String): String = graft.store.served("graft_knng_v3", dir)
 
-  /** Round14Spec seam: the resolved knng artifact root (the delete
+  /** KnnGraphSpec seam: the resolved knng artifact root (the delete
     * verbs are root-addressed). */
   private[graft] def knngRootForSpec(dir: String): String = knngRoot(dir)
 
@@ -1479,7 +1476,7 @@ object Similarity {
     *     append's cost is arrival-sized, not corpus-sized.
     *
     * Distances are the same exact int64 metric as the build, so the
-    * oracle replays the identical steps bit-for-bit. Round13Spec pins
+    * oracle replays the identical steps bit-for-bit. KnnGraphSpec pins
     * the appended graph's recall envelope against the full rebuild. */
   private[graft] def knngAppendedGraph(spark: SparkSession, dir: String): DataFrame =
     ensureKnng(spark, dir, "graph_appended") {
@@ -1527,7 +1524,7 @@ object Similarity {
       .distinct().cache()
     val symB = gB.select(col("vec_id"), col("nb_id"))
       .union(gB.select(col("nb_id").as("vec_id"), col("vec_id").as("nb_id")))
-    // r18 NOTE (examined, reverted): broadcasting the arrival-side
+    // NOTE (examined, reverted): broadcasting the arrival-side
     // frames of the descent-hop/split joins + endpoint-bounding the
     // two rank calls measured st15 5.1→7.7s, st23 7.0→9.7s — the
     // arrival side is ~10% of the corpus and its 2-hop candidate set
@@ -1601,7 +1598,7 @@ object Similarity {
     def probes(a: DataFrame) = a.select(col("vec_id"), col("cid"))
     def prims(a: DataFrame) = a.filter(col("r") === 1)
       .select(col("vec_id").as("nb_id"), col("cid"))
-    // the wave side of each cid join is BROADCAST (r18, guide §3.1):
+    // the wave side of each cid join is BROADCAST (guide §3.1):
     // a wave is trigger-bounded (wave × S20Probes tiny int rows), so
     // the corpus-sized assignment state is probed in place instead of
     // being shuffled on cid twice per micro-batch (the unhinted join
@@ -1615,7 +1612,7 @@ object Similarity {
   }
 
   /** Spec-only: the graph at an arbitrary (probes, rounds) operating
-    * point — Round13Spec's recall/cost frontier sweep (the SURVEY
+    * point — KnnGraphSpec's recall/cost frontier sweep (the SURVEY
     * note "past the knee, widen probes before round 3" measured). */
   private[graft] def s20GraphAtForSpec(spark: SparkSession, dir: String,
                                        probes: Int, rounds: Int): DataFrame = {
@@ -1626,7 +1623,7 @@ object Similarity {
 
   /** Spec-only: the EXACT brute-force kNN graph on the same integer
     * metric (all-pairs — fine at spec SF, never a gate/production
-    * path) — the truth table Round13Spec grades rebuild vs append
+    * path) — the truth table KnnGraphSpec grades rebuild vs append
     * against. */
   private[graft] def exactKnnGraphForSpec(spark: SparkSession, dir: String,
                                           keep: Column = lit(true),
@@ -1713,7 +1710,7 @@ object Similarity {
   // bit-for-bit at the graph tier — NN-Descent is corpus-global, so a
   // survivor rebuild may discover candidates outside the compaction's
   // localized set — the same reason s25's append pins a recall
-  // ENVELOPE vs the rebuild rather than equality; Round14Spec pins
+  // ENVELOPE vs the rebuild rather than equality; KnnGraphSpec pins
   // that envelope for the compacted graph, plus the exact operational
   // laws (no deleted endpoint; untouched lists verbatim; the
   // tombstone-served list is a rank-order PREFIX restriction of the
@@ -1745,7 +1742,7 @@ object Similarity {
     * s25's arrival machinery run in reverse; without the hop the
     * compacted recall measured 0.887 vs the survivor rebuild's 0.949
     * at sf0.001 — outside the retrain trigger — and with it the
-    * envelope closes, Round14Spec pins it); untouched lists pass
+    * envelope closes, KnnGraphSpec pins it); untouched lists pass
     * through verbatim; deleted nodes' own lists drop. Cost is
     * touched-list-sized — O(|D|·k) lists re-ranked over O(k²)
     * candidates each — never a rebuild. */
@@ -1938,7 +1935,7 @@ object Similarity {
         when(s28UpdPred, reverse(col("embedding")))
           .otherwise(col("embedding")).as("embedding")))
 
-  /** The s28-FROZEN model PERSISTED (r15): centroids trained on the
+  /** The s28-FROZEN model PERSISTED: centroids trained on the
     * non-updated slice of the current view, and the non-updated
     * vectors' assignments against them — the stationary blocking
     * state the streaming update's waves join (base_assign's posture
@@ -1984,8 +1981,8 @@ object Similarity {
       //    current view feeds the kernel directly
       val g1 = knngCompactKernel(knngGraphFrame(spark, dir), updIds, qvCur)
         .cache() // three consumers inside the integration (symB, semi, anti)
-      // 2. insert: the frozen model read from its artifacts (r15 —
-      //    shared with st23's stream path), arrivals blocked and
+      // 2. insert: the frozen model read from its artifacts
+      //    (shared with st23's stream path), arrivals blocked and
       //    integrated by the append kernel into the compacted state
       val cen = knngUpdCentroids(spark, dir)
       val rc = rankCentroids(qvCur, cen)
@@ -2032,7 +2029,7 @@ object Similarity {
     * pattern at the graph tier: when the appended graph's recall@k
     * falls more than this below the full rebuild's, rebuild the graph
     * artifact. 0.05 = half a neighbor at k=10, the same
-    * half-a-neighbor bar as [[S14RetrainDrift]]; Round14Spec measures
+    * half-a-neighbor bar as [[S14RetrainDrift]]; KnnGraphSpec measures
     * the live drift on this corpus (appended ABOVE rebuilt at spec
     * SFs — localized descent around arrivals refines touched lists)
     * and pins it under the trigger. */
@@ -2094,7 +2091,7 @@ object Similarity {
   /** [[S27GraphRetrainDrift]] in exact basis points — the integer
     * trigger form both engines compare: fired iff
     * (hits_rebuilt − hits_appended) · 10000 > S29DriftBp · |Q| · k.
-    * Round14Spec pins the two forms equal. */
+    * KnnGraphSpec pins the two forms equal. */
   val S29DriftBp: Long = math.round(S27GraphRetrainDrift * 10000)
 
   /** Clone BOTH graph generations into the s29 scratch root (rebuilt
@@ -2172,7 +2169,7 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------
-  // S31 — the PROBE KNOB made self-tuning (r15 verdict item 2): the
+  // S31 — the PROBE KNOB made self-tuning: the
   // s20 row's measured posture is "recall is ~linear in probes on
   // this corpus — probe to a measured recall target on the sampled
   // truth audit", and this verb EXECUTES it. The query-time blocked
@@ -2249,7 +2246,7 @@ object Similarity {
 
   /** The graded sweep over a scored-candidate frame: one row per
     * width — (probes, n_hit) with n_hit the total truth-hits of the
-    * width's top-k over the query slice. Exposed for Round16Spec's
+    * width's top-k over the query slice. Exposed for SimilaritySpec's
     * monotone-capture pin. */
   private[graft] def s31SweepOver(spark: SparkSession, dir: String,
                                   scored: DataFrame): DataFrame = {
@@ -2302,7 +2299,7 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------
-  // S32 — FILTERED vector search FROM THE PERSISTED INDEX (r16):
+  // S32 — FILTERED vector search FROM THE PERSISTED INDEX:
   // top-k restricted to neighbors satisfying a metadata predicate —
   // the FAISS IDSelector / Milvus expression-filter / Qdrant
   // payload-filter query type, the one every production vector store
@@ -2401,7 +2398,7 @@ object Similarity {
     * live at every scale factor. */
   val S33RerankDepth = 30
 
-  /** S33 — TWO-STAGE serve from the persisted index (r16): the
+  /** S33 — TWO-STAGE serve from the persisted index: the
     * standard production ANN serving stack (FAISS
     * IndexRefine/RefineFlat, Milvus/ScaNN reorder): stage 1 takes the
     * top-[[S33RerankDepth]] shortlist per query by cheap ADC distance
@@ -2458,7 +2455,7 @@ object Similarity {
     * it. */
   def s19RadiusSearch(spark: SparkSession, dir: String): DataFrame = {
     // read-only consumer: serve straight from the shared substrate
-    // (r15 — no per-invocation rebuild; clone not even needed)
+    // (no per-invocation rebuild; clone not even needed)
     val idxDir = driftedSubstrate(spark, dir)
     val cand = ivfPqCandidateDistances(spark, dir, idxDir).cache()
     val w = Window.partitionBy(col("query_id")).orderBy(col("d2_fp"), col("vec_id"))
@@ -2486,7 +2483,7 @@ object Similarity {
     * index's mean recall@k falls more than this below a full
     * retrain's, rebuild. 0.05 = half a neighbor at k=10 — below
     * that, an append-only index answers as well as a fresh one and a
-    * retrain buys nothing. Round9Spec measures the drift on this
+    * retrain buys nothing. IvfIndexSpec measures the drift on this
     * corpus and pins it under the trigger. */
   val S14RetrainDrift = 0.05
 
@@ -2501,7 +2498,7 @@ object Similarity {
     * and crossing [[S14RetrainDrift]] is the named retrain trigger
     * (SURVEY §2.10 s13 row). Scale shape: both answer sets are
     * |Q|·k rows — the grading join is broadcast-sized regardless of
-    * corpus size; since r14 all three sides are PERSISTED
+    * corpus size; all three sides are PERSISTED
     * grading-truth artifacts (s27's three-artifact-reads shape — the
     * two index pipelines are the artifacts' builders, paid once per
     * corpus version; s13/s12/s22 still run them per invocation as
@@ -2664,12 +2661,12 @@ object Similarity {
     * set is answered from the shrunken index. The oracle replays the
     * same chain with the candidate set restricted to survivors —
     * delete ≡ rebuild-without-deleted under frozen models.
-    * Round9Spec pins the stronger operational laws: tombstone-serve ≡
+    * IvfIndexSpec pins the stronger operational laws: tombstone-serve ≡
     * compacted-serve, untouched lists keep their very part files, and
     * the tombstone table is empty after compaction. */
   def s18IndexDelete(spark: SparkSession, dir: String): DataFrame = {
     val idxDir = s18IdxDir(dir)
-    // clone the shared drifted substrate (r15) — the clone clears the
+    // clone the shared drifted substrate — the clone clears the
     // previous occupant wholesale, so stale tombstones and compaction
     // scratch from a crashed prior run are gone with it
     graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
@@ -2700,7 +2697,7 @@ object Similarity {
   /** Upsert a re-embedded batch into the existing index: tombstone
     * the ids, apply, re-code the new values against the frozen model.
     * Works for ANY id set (training-slice rows included — the model
-    * is persisted, not re-derived); Round10Spec pins the operational
+    * is persisted, not re-derived); IvfIndexSpec pins the operational
     * equivalence update ≡ rebuild-with-current-values. */
   def updateIvfPqIndex(spark: SparkSession, newEmb: DataFrame, idxDir: String): Unit = {
     deleteFromIvfPqIndex(spark, newEmb.select(col("vec_id")), idxDir)
@@ -2716,7 +2713,7 @@ object Similarity {
     * like any append) and serving max-generation per id until the
     * next s18-cadence compaction folds the ledger in. Cost per batch:
     * one narrow coded write, O(updates) — no list rewrites, no
-    * tombstone round-trip. Round11Spec pins generation-served ≡
+    * tombstone round-trip. IvfIndexSpec pins generation-served ≡
     * compacted-served ≡ rebuild-with-current-values, including a
     * two-batch case where only max-generation may win. */
   def deferUpdateIvfPqIndex(spark: SparkSession, newEmb: DataFrame,
@@ -2830,7 +2827,7 @@ object Similarity {
     * call — and the serve overlay keys base-exclusion on ledger
     * membership, so the crash window between the append and the
     * ledger delete (both copies on disk) still serves exactly one
-    * copy (Round11Spec). */
+    * copy (IvfIndexSpec). */
   def compactIvfPqUpdates(spark: SparkSession, idxDir: String): Unit = {
     val genPath = new Path(s"$idxDir/codes_gen")
     val fs = FileSystem.get(genPath.toUri, spark.sparkContext.hadoopConfiguration)
@@ -2872,7 +2869,7 @@ object Similarity {
     * models. */
   def s21IndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     val idxDir = s21IdxDir(dir)
-    // clone the shared drifted substrate (r15); the clone is a clean
+    // clone the shared drifted substrate; the clone is a clean
     // sealed generation, so no stale-tombstone hazard
     graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     updateIvfPqIndex(spark, s21NewEmbeddings(spark, dir), idxDir)
@@ -2928,7 +2925,7 @@ object Similarity {
     }
     graft.store.recover(fs, idxPath, staging, oldRoot)
     // the live set as a broadcast ANTI-JOIN against the tombstone
-    // table (r15) — the delete set is compaction-cadence-bounded
+    // table — the delete set is compaction-cadence-bounded
     // (s18's argument) but never round-trips the driver as a literal
     // list the way the earlier `isin` form did
     val delPath = new Path(s"$idxDir/deletes")
@@ -2952,12 +2949,12 @@ object Similarity {
     * rebuilt with a model trained on EVERYTHING, swapped in, and the
     * standard query set is answered from the retrained index. By
     * construction the answers equal s12's all-trained IVF-PQ — the
-    * oracle IS s12's chain, and Round10Spec additionally pins the
+    * oracle IS s12's chain, and IvfIndexSpec additionally pins the
     * Spark-side equivalence bit-for-bit plus the no-resurrection and
     * crash-recovery laws. */
   def s22IndexRetrain(spark: SparkSession, dir: String): DataFrame = {
     val idxDir = s22IdxDir(dir)
-    // r17 optimization (guide §1.2: don't re-derive what you throw
+    // (guide §1.2: don't re-derive what you throw
     // away): the drifted starting state (base-trained model +
     // frozen-coded append) is a pure function of the corpus, so clone
     // it from the shared substrate — s21/s30's pattern — instead of
@@ -2973,14 +2970,14 @@ object Similarity {
 
   /** [[S14RetrainDrift]] in exact basis points — s29's integer-trigger
     * discipline at the IVF tier: fired iff (hits_retrained −
-    * hits_appended) · 10000 > S30DriftBp · |Q| · k. Round14Spec pins
+    * hits_appended) · 10000 > S30DriftBp · |Q| · k. IvfIndexSpec pins
     * the two forms pick the same side at every reachable gap. */
   val S30DriftBp: Long = math.round(S14RetrainDrift * 10000)
 
   private def s30IdxDir(dir: String): String =
     graft.store.served("graft_s30_idx", dir)
 
-  /** Round14Spec seam: the s30 serving root (the forced-fire pin runs
+  /** IvfIndexSpec seam: the s30 serving root (the forced-fire pin runs
     * the verb on it directly; the gate's build overwrites, so the
     * mutation cannot leak into the next invocation). */
   private[graft] def s30IdxDirForSpec(dir: String): String = s30IdxDir(dir)
@@ -3040,7 +3037,7 @@ object Similarity {
     val fs = FileSystem.get(donep.toUri, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(donep)) {
       // the drifted starting state comes from the shared substrate
-      // (r15): clone, don't rebuild — the clone also clears any
+      // clone, don't rebuild — the clone also clears any
       // crashed prior occupant of this root wholesale
       graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
       if (fired) retrainIvfPqIndex(spark, dir, idxDir)
@@ -3068,7 +3065,7 @@ object Similarity {
     * grade the POST-VERB tree against the persisted exact truth — the
     * served hit count the unified apply census reports is read from
     * the tree the swap actually produced, never inferred from the
-    * decision (e20's witness discipline). Round17Spec pins it equal
+    * decision (e20's witness discipline). PipelineArtifactsSpec pins it equal
     * to the standalone retrained world's hits. */
   private[graft] def e22IvfFiredApply(spark: SparkSession, dir: String): Long = {
     val root = graft.store.served("graft_e22_idx", dir)
@@ -3119,14 +3116,14 @@ object Similarity {
     * is answered straight off the ledger overlay — NO compaction runs,
     * so what the driver's hash gate pins is the max-generation serve
     * itself (s21's gate covers the eager tombstone+compact path;
-    * Round11Spec separately pins generation-served ≡ compacted-served
+    * IvfIndexSpec separately pins generation-served ≡ compacted-served
     * ≡ rebuild plus the crash windows). Oracle = the s13 chain over
     * the post-update CURRENT view: batch-2 ids at original vectors,
     * the rest of the slice reversed — rebuild-with-current-values
     * under frozen models, s21's law read at ledger-serve time. */
   def s23DeferredUpdate(spark: SparkSession, dir: String): DataFrame = {
     val idxDir = s23IdxDir(dir)
-    // clone the shared drifted substrate (r15); the clone is a clean
+    // clone the shared drifted substrate; the clone is a clean
     // sealed generation, so no stale-ledger hazard
     graft.store.cloneTree(spark, driftedSubstrate(spark, dir), idxDir, IndexTables)
     deferUpdateIvfPqIndex(spark, s21NewEmbeddings(spark, dir), idxDir)
@@ -3187,12 +3184,12 @@ object Similarity {
   }
 
   /** The five ANN families' standard answers PERSISTED in the
-    * grading-truth tier (r15 — the s14/s30 precedent extended to the
+    * grading-truth tier (the s14/s30 precedent extended to the
     * whole matrix): each family's gate row still RUNS its pipeline
     * per invocation as that family's benchmark, but the s7/s11 GRADES
     * are |Q|·k membership joins over parquet answer tables built once
     * per corpus version. `ivfpq` IS the retrained_q artifact (same
-    * builder, s12's chain). Round15Spec pins each table ≡ a fresh
+    * builder, s12's chain). SimilaritySpec pins each table ≡ a fresh
     * derivation. */
   private def annFamilyAnswers(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
     Seq("lsh"   -> ensureIvfq(spark, dir, "lsh_q")(s2AnnLsh(spark, dir)),
@@ -3374,7 +3371,7 @@ object Similarity {
     * Output carries BOTH distances (code-space d2, rescored cosine);
     * final rank is by cosine — the packed scan prunes, the floats
     * decide. Spec pins stage-1 top-k ≡ s8's answer exactly. Float
-    * edge: rank orders by round(cosine, 6), and Round6Spec MEASURES
+    * edge: rank orders by round(cosine, 6), and SimilaritySpec MEASURES
     * every rescored candidate's distance from the nearest rounding
     * boundary (min ≥ 1e-12 in cosine space at both spec and gate SFs,
     * ~1000× above cross-engine 1-ulp dot-order noise) — the repo's
@@ -4667,7 +4664,7 @@ object Similarity {
   /** s14's mirror: the two index states as nested-WITH derived
     * tables — 'appended' replays s13's pipeline (train on base, code
     * everything: valid because append ≡ rebuild under a frozen
-    * model, Round8Spec), 'retrained' replays s12's (train on all) —
+    * model, IvfIndexSpec), 'retrained' replays s12's (train on all) —
     * graded against the exact answer like the s11 oracle. */
   private lazy val s14OracleSql: String =
     s"""WITH ex AS (SELECT query_id, neighbor_id FROM ($s1OracleSql) tex),
@@ -4709,7 +4706,7 @@ object Similarity {
     "s33_adc_rerank" -> s33OracleSql,
     // s22's mirror IS s12's chain: a retrain on an undeleted corpus
     // trains on everything and codes everything — the equivalence the
-    // gate states (the swap machinery itself is pinned in Round10Spec)
+    // gate states (the swap machinery itself is pinned in IvfIndexSpec)
     "s22_index_retrain" -> s12OracleSql,
     "s18_index_delete" -> s18OracleSql,
     "s14_index_health" -> s14OracleSql,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * broadcast joins globally doesn't silently flip a graft gate, and a
   * graft knob doesn't leak into SQL planning. Two copies of the
   * threshold parsing drifting independently is the same failure the
-  * WaveLedger consolidation exists to prevent (r16 review), so the
+  * WaveLedger consolidation exists to prevent, so the
   * parse lives here and the gates call it. Accepts a plain long or a
   * Spark byte string ("10m"); an unparseable value falls back to the
   * 10 MiB default rather than failing a build over a conf typo; a

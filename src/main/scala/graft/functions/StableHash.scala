@@ -23,7 +23,7 @@ object StableHash {
   /** Non-negative 60-bit hash of a string column; portable to DuckDB.
     * Computed by the fused StableHash64 expression (one codegen'd
     * node); `legacyHash64` keeps the built-in chain it replaces —
-    * StableHashSpec asserts they agree bit-for-bit, which is what
+    * CatalystExtensionSpec asserts they agree bit-for-bit, which is what
     * ties the Scala fast path to the DuckDB SQL fragment below. */
   def hash64(c: Column): Column =
     org.apache.spark.sql.graftshim.ColumnShim.column(

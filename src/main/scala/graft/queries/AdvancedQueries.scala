@@ -440,7 +440,6 @@ object AdvancedQueries {
       .orderBy(col("nation"), col("suppkey"))
   }
 
-  val ErrorWindow = "1 hour"
   val ErrorWindowMicros: Long = 3600000000L
 
   /** q39 — the bucketed range join as an end-to-end query (the
@@ -619,7 +618,7 @@ object AdvancedQueries {
     * (columnar store: 11 one-column scans = one 11-column scan). The
     * production swap for NDV is approx_count_distinct (HLL, one
     * pass, no per-value shuffle) — IMPLEMENTED behind `approxNdv`
-    * (e8's wide-flag precedent; Round13Spec measures the relative
+    * (e8's wide-flag precedent; AdvancedQueriesSpec measures the relative
     * error vs exact at both spec SFs); exact counts stay the gate
     * default because the oracle hash-checks them. */
   def q44Profile(spark: SparkSession, dir: String): DataFrame =
@@ -934,7 +933,7 @@ object AdvancedQueries {
     * deterministic salt in [0, 8), the dim side is replicated 8×, and
     * the join key becomes (key, salt) — each hot key spreads over 8
     * partitions. Salting never changes multiplicity, so the rollup
-    * hash-matches a plain-join oracle exactly (and Round5Spec pins
+    * hash-matches a plain-join oracle exactly (and AdvancedQueriesSpec pins
     * salted ≡ unsalted row-for-row plus the salt expansion in the
     * plan). Money in integer cents, divided once at the edge. */
   def q52SkewJoin(spark: SparkSession, dir: String): DataFrame = {
@@ -975,7 +974,7 @@ object AdvancedQueries {
     * bounded profile aggregates, not corpus data. */
   def q53ZorderProfile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // ONE parquet scan feeds both layout rewrites (r18, guide §6/§1.2):
+    // ONE parquet scan feeds both layout rewrites (guide §6/§1.2):
     // each repartitionByRange pays a RangePartitioner sampling pass and
     // the z-order side adds its quantile-bounds aggregate, so the lazy
     // form re-scanned lineitem ~5× (2 sampling + bounds + 2 write

@@ -36,9 +36,6 @@ object CoreQueries {
   def revenueSumExact: Column =
     (sum(round(revenue * 10000).cast("long")) / 10000.0)
 
-  val revenueSumExactSql: String =
-    "sum(CAST(round(l_extendedprice*(1-l_discount)*10000) AS BIGINT)) / 10000.0"
-
   /** Q5.1-analog / TPC-H Q1 shape — pricing summary by flag+status.
     * Ref: README.md:209-214 (grouped SUM over fact). Single shuffle
     * (partial+final hash agg); no join. Scales linearly: map-side

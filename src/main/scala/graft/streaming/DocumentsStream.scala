@@ -27,7 +27,7 @@ import graft.ext.{Dedup, Pipeline}
   * a new query resumes from the same checkpoint — so what the
   * driver's hash gate pins every round (against d7's full-rebuild
   * oracle verbatim, e13's law) is maintenance ACROSS a restart, not a
-  * single lucky run. Round11Spec separately pins the cross-wave
+  * single lucky run. StreamsSpec separately pins the cross-wave
   * branch on constructed shingles and the fresh-checkpoint replay
   * (both waves re-delivered, zero pairs re-derived).
   *
@@ -103,7 +103,7 @@ object DocumentsStream {
     * reintroduce exactly the edited-wave aliasing the sum term fixed. */
   private[graft] def maintainBatch(spark: SparkSession, dir: String, base: String)
                                   (batch: DataFrame, batchId: Long): Unit = {
-    // ONE ledger-state read per micro-batch (r15 ADVICE): the folded
+    // ONE ledger-state read per micro-batch: the folded
     // set and the prior-wave dirs come from the same listing —
     // foreachBatch is sequential and compaction never runs inside a
     // batch, so the state cannot move between the vouch and the work
@@ -133,7 +133,7 @@ object DocumentsStream {
         val arrived = prior.unionByName(sigsB)
         // broadcastNew: the wave is trigger-bounded, so its band rows
         // broadcast and the corpus-sized arrived bands are never
-        // shuffled (r18, guide §3.1)
+        // shuffled (guide §3.1)
         cand = Dedup.arrivalCandidates(sigsB, arrived, broadcastNew = true)
           .cache() // endpoint ids ×2 + verify joins ×2 (e13's policy)
         sh = Pipeline.e13VerifyShingles(spark, dir, cand).cache()
@@ -215,7 +215,7 @@ object DocumentsStream {
     * folds it into the cumulative generation 1; the serve reads ONE
     * compacted generation and zero ledger dirs. Oracle = d7's
     * full-rebuild SQL verbatim, so the driver hash-checks
-    * fold∘maintain ≡ rebuild every round. Round12Spec separately pins
+    * fold∘maintain ≡ rebuild every round. StreamsSpec separately pins
     * the crash window (marker present, waves not yet deleted — no
     * double-serve) and the post-compaction replay skip. */
   def st14LedgerCompact(spark: SparkSession, dir: String): DataFrame = {
@@ -250,14 +250,14 @@ object DocumentsStream {
     WaveLedger.waveCommit(spark, base, ids,
       xxhash64(col("doc_id")), xxhash64(col("doc_id"), lit(19L)),
       // a compacted id wave's re-delivery is vouched by the folded set
-      // (r16 — the id tiers run the same compaction verb)
+      // (the id tiers run the same compaction verb)
       alsoCommitted = WaveLedger.ledgerState(spark, base).folded) { bdir =>
       ids.distinct().write.mode("overwrite")
         .parquet(new Path(bdir, "ids").toString)
     }
   }
 
-  /** The id-ledger compaction verb (r16): fold committed takedown
+  /** The id-ledger compaction verb: fold committed takedown
     * waves into one cumulative generation — same WaveLedger protocol,
     * one {ids} table. */
   private[graft] def compactRetractLedger(spark: SparkSession,
@@ -342,7 +342,7 @@ object DocumentsStream {
         .write.mode("overwrite").parquet(new Path(bdir, "flags").toString)
     }
 
-  /** The flags-ledger compaction verb (r16): one {flags} table. */
+  /** The flags-ledger compaction verb: one {flags} table. */
   private[graft] def compactFlagsLedger(spark: SparkSession,
                                         base: String): Unit =
     WaveLedger.compactLedger(spark, base, Seq("flags" -> Some(flagsSchema)))
@@ -373,7 +373,7 @@ object DocumentsStream {
     * append-only packing law — [[Pipeline.appendEpochBins]], ONE
     * definition) and emits e10's refresh census. Oracle = e10's chain
     * VERBATIM — stream-fold ≡ batch-refresh, hash-checked every
-    * round; Round15Spec pins the flags union ≡ the batch delta slice
+    * round; StreamsSpec pins the flags union ≡ the batch delta slice
     * frame-for-frame. Scratch lives at one fixed location per corpus,
     * rebuilt per invocation (st11's no-accumulation discipline). */
   def st20BinsArrive(spark: SparkSession, dir: String): DataFrame = {
@@ -424,7 +424,7 @@ object DocumentsStream {
                                        retired0: () => DataFrame = null)
                                       (batch: DataFrame, batchId: Long): Unit = {
     // ledger state read ONCE per micro-batch: prior sig/doc dirs are
-    // the latest compacted generation + live tail (r16 — before this
+    // the latest compacted generation + live tail (before this
     // the kernel re-unioned every prior wave's dirs per wave, an
     // unbounded list between full rebuilds), and the folded set
     // vouches for compacted re-deliveries
@@ -433,7 +433,7 @@ object DocumentsStream {
       xxhash64(col("doc_id"), col("text")),
       xxhash64(col("text"), col("doc_id")),
       alsoCommitted = st.folded) { bdir =>
-      // r17: callers that run a whole content query pass the retract
+      // callers that run a whole content query pass the retract
       // ledger read in as a once-per-query thunk (the tombstone
       // manifest commits BEFORE the content phase by the verb's own
       // protocol, so it is immutable across this query's batches);
@@ -451,7 +451,7 @@ object DocumentsStream {
           else survivorSigs.unionByName(spark.read.parquet(priorSigDirs: _*)))
           .unionByName(sigsB)
         // broadcastNew: trigger-bounded wave bands vs the corpus-sized
-        // survivor state — probe in place, never shuffle it (r18 §3.1)
+        // survivor state — probe in place, never shuffle it (guide §3.1)
         cand = Dedup.arrivalCandidates(sigsB, arrived, broadcastNew = true)
           .cache() // endpoint ids ×2 + verify joins ×2
         val candIds = cand.select(col("a_id").as("doc_id"))
@@ -469,7 +469,7 @@ object DocumentsStream {
           .select(col("doc_id"), col("text"))
           .join(retired, Seq("doc_id"), "left_anti")
           .unionByName(arrivedDocs)
-        // candidate-doc filter BEFORE the shingle explode (r17, §2.3);
+        // candidate-doc filter BEFORE the shingle explode (guide §2.3);
         // cached — verifyCandidates reads it three times
         val sh = Dedup.shingleRows(
           curDocs.join(candIds, Seq("doc_id"), "left_semi")).cache()
@@ -502,7 +502,7 @@ object DocumentsStream {
 
   /** st21's compaction verb: fold {docs, sigs, pairs} waves — docs
     * ride the gen so later waves' verify views and the serve keep the
-    * post-edit text after the wave dirs are cleared (r16 — st14's
+    * post-edit text after the wave dirs are cleared (st14's
     * verb at the update-arrive ledger). */
   private[graft] def compactUpdateArriveLedger(spark: SparkSession,
                                                base: String): Unit =
@@ -539,7 +539,6 @@ object DocumentsStream {
     * consumers reference the root directly — no clone. */
   private[graft] def st21RetractSubstrate(spark: SparkSession,
                                           dir: String): String = {
-    graft.ArtifactRoots.retireLegacy("graft_st21ret", "graft_st21ret_v1")
     graft.store.tree(spark, "graft_st21ret_v1", dir) { root =>
       val editedIds = Tables.documents(spark, dir).select(col("doc_id"))
         .filter(col("doc_id") % 10 === Dedup.D22EditDigit)
@@ -560,7 +559,7 @@ object DocumentsStream {
     * serve runs d22's fold — e14's retraction over the persisted
     * pairs/labels artifacts, the committed pair union folded in as
     * star edges. Oracle = d22's rebuild-with-current-text chain
-    * VERBATIM; Round15Spec pins stream-fold ≡ the batch d22 verb
+    * VERBATIM; StreamsSpec pins stream-fold ≡ the batch d22 verb
     * engine-side. */
   def st21PairUpdate(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.store.scratch(spark, "graft_st21", dir, "arrive/in")
@@ -577,7 +576,7 @@ object DocumentsStream {
     st21Serve(spark, dir, base, rBase)
   }
 
-  /** st21's serve, callable on an existing ledger base (Round16Spec
+  /** st21's serve, callable on an existing ledger base (StreamsSpec
     * re-serves across compactions) — d22's single-CC fold over the
     * committed ledgers: untouched labels as star edges, affected
     * survivors and the committed arrival pairs converge in ONE

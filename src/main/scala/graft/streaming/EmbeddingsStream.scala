@@ -62,7 +62,7 @@ object EmbeddingsStream {
     * rank against the frozen centroids, block against base_assign ∪
     * committed arrivals ∪ itself, commit (assign, pairs). Prior
     * arrivals are the LEDGER STATE (latest compacted generation +
-    * live tail — r16: st14's compaction verb generalized to this
+    * live tail — st14's compaction verb generalized to this
     * tier), read once per micro-batch; the folded-tag set vouches for
     * waves whose dirs a compaction cleared. */
   private[graft] def arriveBatch(spark: SparkSession, dir: String, base: String)
@@ -90,7 +90,7 @@ object EmbeddingsStream {
   }
 
   /** Fold the committed arrival waves into the next cumulative
-    * compacted generation (the st14 verb at the kNN-graph tier, r16
+    * compacted generation (the st14 verb at the kNN-graph tier
     * — before this the ledger only cleared on the next full graph
     * rebuild, an unbounded dir list at append cadence). Serves then
     * read ONE generation + the live tail. */
@@ -127,7 +127,7 @@ object EmbeddingsStream {
     WaveLedger.stageFrameWave(spark, part, base, s"$base/in", wave)
   }
 
-  /** st15's serve, callable on an existing ledger base (Round16Spec
+  /** st15's serve, callable on an existing ledger base (StreamsSpec
     * re-serves across compactions). */
   private[graft] def st15Serve(spark: SparkSession, dir: String,
                                base: String): DataFrame =
@@ -171,7 +171,7 @@ object EmbeddingsStream {
         .write.mode("overwrite").parquet(new Path(bdir, "ids").toString)
     }
 
-  /** The id-ledger compaction verb at the vector tiers (r16): one
+  /** The id-ledger compaction verb at the vector tiers: one
     * {ids} table, same WaveLedger protocol. */
   private[graft] def compactRetractLedger(spark: SparkSession,
                                           base: String): Unit =
@@ -280,7 +280,7 @@ object EmbeddingsStream {
     val base = graft.store.scratch(spark, "graft_st17", dir, "in")
     val idxDir = s"$base/idx"
     // the base-only starting state comes from the shared substrate
-    // (r15): clone, don't rebuild per invocation
+    // clone, don't rebuild per invocation
     graft.store.cloneTree(spark, Similarity.baseSubstrate(spark, dir), idxDir,
       Similarity.IndexTables)
     stageWave(spark, dir, base, 0)
@@ -304,7 +304,7 @@ object EmbeddingsStream {
     val base = graft.store.scratch(spark, "graft_st18", dir, "in")
     val idxDir = s"$base/idx"
     // the drifted (base build + frozen append) starting state comes
-    // from the shared substrate (r15): clone, don't rebuild
+    // from the shared substrate: clone, don't rebuild
     graft.store.cloneTree(spark, Similarity.driftedSubstrate(spark, dir), idxDir,
       Similarity.IndexTables)
     stageRetractWave(spark, dir, base, 0)
@@ -334,7 +334,7 @@ object EmbeddingsStream {
     * folded into the key — a re-re-embedded wave under unchanged ids
     * keys differently), then the wave's assignments + blocked pairs
     * against the s28-frozen model commit to the ledger. Prior
-    * arrivals come from the ledger STATE (gen + tail, r16) and the
+    * arrivals come from the ledger STATE (gen + tail) and the
     * folded set vouches for compacted re-deliveries. */
   private[graft] def updArriveBatch(spark: SparkSession, dir: String,
                                     base: String)
@@ -390,7 +390,6 @@ object EmbeddingsStream {
     * coverage remains st16/st19's pinned law of the same protocol. */
   private[graft] def st23RetractSubstrate(spark: SparkSession,
                                           dir: String): String = {
-    graft.ArtifactRoots.retireLegacy("graft_st23ret", "graft_st23ret_v1")
     graft.store.tree(spark, "graft_st23ret_v1", dir) { root =>
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
         .filter(col("vec_id") % 10 === Similarity.S28UpdateDigit)
@@ -412,7 +411,7 @@ object EmbeddingsStream {
     * through s28's own kernels — compact without the manifest ids,
     * integrate the committed pair union under the current view.
     * Oracle = s28's update ≡ rebuild-with-current-values chain
-    * VERBATIM; Round15Spec pins stream-fold ≡ the batch verb
+    * VERBATIM; StreamsSpec pins stream-fold ≡ the batch verb
     * engine-side. Scale: per-wave work is wave-sized ranking +
     * blocking against broadcast/persisted model tables; the serve's
     * compact+integrate is |U|-bounded (s28's bound), paid at update
@@ -434,9 +433,9 @@ object EmbeddingsStream {
     st23Serve(spark, dir, base, rBase)
   }
 
-  /** st23's serve, callable on an existing ledger base (Round16Spec
+  /** st23's serve, callable on an existing ledger base (StreamsSpec
     * re-serves across compactions): s28's fold over the committed
-    * ledger state (latest compacted generation + live tail, r16).
+    * ledger state (latest compacted generation + live tail).
     * `rBase` is the retract-ledger root (empty = the in-base
     * `retract` subtree, the manual-flow convention). */
   private[graft] def st23Serve(spark: SparkSession, dir: String,

@@ -400,7 +400,7 @@ object EventsStream {
     // pay. On a FRESH target it still writes: unlike the partitioned
     // form, an empty non-partitioned write emits a schema-carrying
     // part file, and an empty events table must converge to a
-    // READABLE empty snapshot (Round10Spec's law).
+    // READABLE empty snapshot (EventsStreamSpec's law).
     if (batch.isEmpty && fs.exists(dir)) return
     val cols = batch.columns.map(col).toSeq
     val merged =
@@ -414,7 +414,7 @@ object EventsStream {
   }
 
   /** The PARTITION-SCOPED merge — st11's documented 100 TB swap made
-    * code behind a flag (r15 verdict item 5): the snapshot is stored
+    * code behind a flag: the snapshot is stored
     * DAY-PARTITIONED (day = the window's date) and each micro-batch
     * rewrites ONLY the partitions it touches, via Spark's dynamic
     * partition overwrite — the real mechanism the full-rewrite path's
@@ -434,7 +434,7 @@ object EventsStream {
     // it would POISON a fresh target: a partitionBy write of a
     // zero-row frame creates the dir with only _SUCCESS (no
     // schema-bearing part file), so every later merge would fail at
-    // spark.read.parquet with "Unable to infer schema" (review r16; a
+    // spark.read.parquet with "Unable to infer schema" (a
     // watermark-advance batch on a restarted stream is exactly this)
     if (batch.isEmpty) return
     val dir = new Path(target)
@@ -529,9 +529,9 @@ object EventsStream {
   /** `partitioned` selects the merge form: false = the gate's
     * whole-snapshot swap (hash-stable since the entry landed); true =
     * the day-partitioned dynamic-overwrite path (the 100 TB form —
-    * Round16Spec pins census equality across the flag, and
-    * PhysicalLayoutSpec pins that untouched day partitions' files
-    * are byte-identical across a merge). */
+    * PhysicalLayoutSpec pins census equality across the flag, and
+    * that untouched day partitions' files are byte-identical across
+    * a merge). */
   private[graft] def st11SnapshotMergeVia(spark: SparkSession, dir: String,
                                           partitioned: Boolean): DataFrame = {
     val base = new Path(graft.store.scratch(spark,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.etl.RetailStar
 
-/** The STAR tier joins the streaming verb matrix (r17): the persisted
+/** The STAR tier joins the streaming verb matrix: the persisted
   * warehouse fact's load path driven by a real Structured Streaming
   * file source instead of a batch job. Month loads arrive as files;
   * each micro-batch lands its touched months via Spark's dynamic
@@ -59,7 +59,7 @@ object StarStream {
     * — the census the gate hashes proves the absorption every round
     * (an append path would double the arriving month). Serve = the
     * per-month census of the converged fact ≡ the full-rebuild census
-    * (stream ≡ refresh ≡ rebuild; Round17Spec pins the q56 equality).
+    * (stream ≡ refresh ≡ rebuild; WarehouseSpec pins the q56 equality).
     *
     * Scale: each micro-batch rewrites only its touched partitions —
     * a daily/monthly load stream rewrites one partition per window

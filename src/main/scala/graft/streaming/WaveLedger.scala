@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * (the pair graph's st13/st19, the kNN graph's st15/st16, the IVF
   * index's st17/st18, the bins tier's st20). Two copies of the
   * tag/commit discipline drifting independently would silently break
-  * replay dedup for one family (r14 ADVICE), so the protocol lives
+  * replay dedup for one family, so the protocol lives
   * here and the stream objects call it — together with the file-source
   * stream every wave verb starts ([[run]]) and the ledger reads
   * ([[ledgerState]], [[readOrEmpty]]).
@@ -159,7 +159,7 @@ private[graft] object WaveLedger {
 
   // ---------------------------------------------------------------
   // Ledger COMPACTION — the fold verb, ONE definition for every
-  // wave-ledger tier (r15 verdict: st13/st14 had it, the st15/st21
+  // wave-ledger tier (st13/st14 had it first; the st15/st21
   // arrive ledgers re-unioned every prior wave's dirs per wave —
   // an unbounded dir list between full rebuilds). compactLedger
   // merges the committed waves into a cumulative, marker-gated
