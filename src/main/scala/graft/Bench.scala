@@ -132,11 +132,11 @@ object Bench {
     //   version artifact — these rows now pay clone+verb+serve (or
     //   serve alone for the read-only s17/s19), not a full rebuild;
     //   their pre-substrate floors measured the old contract. The
-    //   answers are pinned unchanged (clone ≡ build, IvfIndexSpec).
-    //   s7/s11 @v2: the recall grades serve every ANN family's
+    //   answers are pinned unchanged (clone ≡ build, Round15Spec).
+    //   s7/s11 @v2 (r15): the recall grades serve every ANN family's
     //   answers from the persisted grading tier (lsh_q/ivf_q/pq_q/
     //   sq8_q + retrained_q) instead of re-running all five pipelines
-    //   per invocation; serve ≡ derive pinned in SimilaritySpec.
+    //   per invocation; serve ≡ derive pinned in Round15Spec.
     val workVersion: Map[String, Int] = Map(
       "s20_knn_graph" -> 4,
       "s7_recall_eval" -> 2,

@@ -124,7 +124,7 @@ object RetailStar {
     * dim's own distinct then runs over that small frame. Dim content
     * is unchanged: distinct∘project∘distinct ≡ distinct∘project, and
     * the surrogate hashes see identical column values
-    * (WarehouseSpec pins materializeStar ≡ buildStar). */
+    * (OptimizationR17Spec pins materializeStar ≡ buildStar). */
   private def dimAttrs(cleaned: DataFrame): DataFrame =
     cleaned.select(col("product_name"), col("Product_Category"),
         col("Product_Brand"), col("Product_Type"), col("Shipping_Method"))
@@ -384,7 +384,7 @@ object RetailStar {
     *
     * Scale: erasure cost ∝ the months the subject actually touched,
     * never history depth; a re-issued erasure request is idempotent
-    * (repack of already-clean partitions — WarehouseSpec pins untouched
+    * (repack of already-clean partitions — Round17Spec pins untouched
     * months byte-identical across the re-run). */
   def q57FactRetention(spark: SparkSession, dir: String): DataFrame = {
     val target = s"${graft.store.scratch(spark, "graft_starret_v1", dir)}/fact_by_month"
@@ -401,7 +401,7 @@ object RetailStar {
     // partition-scoped repack + the emptied-month cleanup live in
     // [[Warehouse.eraseFromPartitionedFact]] (the dynamic-overwrite
     // deletion gap is handled there, and pinned on a synthetic
-    // all-victim month in WarehouseSpec — this corpus never empties one)
+    // all-victim month in Round17Spec — this corpus never empties one)
     Warehouse.eraseFromPartitionedFact(spark, target, fact.schema, victims)
     Warehouse.monthCensus(spark.read.schema(fact.schema).parquet(target))
   }

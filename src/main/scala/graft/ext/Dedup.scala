@@ -120,7 +120,7 @@ object Dedup {
                            maxShingleDocFreq: Option[Long]): DataFrame =
     d3JaccardOf(Tables.documents(spark, dir), maxShingleDocFreq)
 
-  /** d3 over an arbitrary (doc_id, text) frame — the seam DedupSpec
+  /** d3 over an arbitrary (doc_id, text) frame — the seam Round5Spec
     * uses to plant a boilerplate shingle past the cap and pin the
     * knob's measured semantics (capped pairs ⊆ exact pairs, per-pair
     * jaccard never raised). */
@@ -255,7 +255,7 @@ object Dedup {
   /** The d4 GATE entry: serves the persisted pairs artifact
     * (re-ordered — a parquet roundtrip does not preserve row order),
     * which pins the artifact's CONTENT against the DuckDB oracle
-    * every round on top of DedupSpec's served ≡ derived pin. */
+    * every round on top of Round11Spec's served ≡ derived pin. */
   def d4MinhashLshServed(spark: SparkSession, dir: String): DataFrame =
     Pipeline.pairsArtifact(spark, dir).orderBy(col("a_id"), col("b_id"))
 
@@ -324,7 +324,7 @@ object Dedup {
   }
 
   /** From-scratch d4 pairs over an arbitrary document frame — the
-    * d22 spec twin's rebuild-with-current-text path (DedupSpec
+    * d22 spec twin's rebuild-with-current-text path (Round15Spec
     * pins the incremental verb against CC over exactly this). */
   private[graft] def d4PairsOf(docs: DataFrame): DataFrame = {
     val sh = shingleRows(docs).cache()
@@ -441,7 +441,7 @@ object Dedup {
     * (the canonical keep-one-per-cluster decision every dedup
     * pipeline ends with). Oracle: recursive-CTE transitive closure
     * over the same pairs. Served from the persisted labels artifact —
-    * the labeling IS that table; DedupSpec pins served ≡ the
+    * the labeling IS that table; Round11Spec pins served ≡ the
     * from-scratch labeling. */
   def d7DedupComponents(spark: SparkSession, dir: String): DataFrame =
     Pipeline.labelsArtifact(spark, dir)
@@ -588,7 +588,7 @@ object Dedup {
     * view), then fold the new pairs into the retracted labeling
     * (d11's star-edge fold). Oracle = d7's closure chain over the d4
     * pair table derived from the post-edit corpus view — update ≡
-    * rebuild-with-current-text, hash-checked every round; DedupSpec
+    * rebuild-with-current-text, hash-checked every round; Round15Spec
     * additionally pins the Spark-side equivalence and the
     * changed-doc-moves / untouched-clusters-verbatim laws. */
   def d22DocUpdate(spark: SparkSession, dir: String): DataFrame = {
@@ -647,7 +647,7 @@ object Dedup {
     * component min over the d4 pair graph), same oracle; pinned
     * label-for-label against d7 on the real pair graph, against
     * brute-force union-find on a randomized graph, and on the
-    * 300-node chain d7's loop cannot label (DedupSpec).
+    * 300-node chain d7's loop cannot label (Round9Spec).
     *
     * Scale shape per round: a groupBy-min and an edge-sized join per
     * star phase, both at edge-sized width; the convergence check is
@@ -968,7 +968,7 @@ object Dedup {
     * identical sketch), the estimate is emitted as integer PERMILLE
     * via integer division — no float ratio near a rounding boundary
     * (n_union_k can be a power of two, where round-half behavior
-    * diverges across engines). DedupSpec measures the estimate
+    * diverges across engines). Round6Spec measures the estimate
     * against d16's exact matrix. */
   def d18SketchOverlap(spark: SparkSession, dir: String): DataFrame = {
     val fn = graft.functions.BottomK.registerWidth(spark, SketchK)

@@ -145,7 +145,7 @@ object Graph {
     * small vetted feed exists and quality must flow outward along
     * near-dup edges (a near-dup of a trusted doc inherits trust; a
     * component containing NO seed gets EXACTLY zero — mass cannot
-    * teleport into it, an integer-exact property GraphSpec pins).
+    * teleport into it, an integer-exact property Round9Spec pins).
     *
     * Same harness, fixed-point discipline and per-round shape as
     * [[pagerank]]: r_{k+1}(v) = 0.15·s(v) + 0.85·Σ_{u→v} r_k(u)/deg(u)
@@ -220,7 +220,7 @@ object Graph {
     * per node, instead of a hub's full degree under plain id order
     * (one celebrity node with d neighbors would otherwise fan out
     * d²/2 two-hop rows). The census count is orientation-invariant —
-    * GraphSpec pins oriented ≡ plain on constructed graphs AND on
+    * Round5Spec pins oriented ≡ plain on constructed graphs AND on
     * this exact LSH graph — so the DuckDB oracle keeps the simple
     * id-oriented form. */
   def p2Triangles(spark: SparkSession, dir: String): DataFrame =
@@ -382,7 +382,7 @@ object Graph {
     * below k; survivors after the last round form the k-core, each
     * reported with its within-core degree. Fixed unrolled rounds (the
     * repo's oracle-checkable iteration discipline — PageRank/LPA/BFS
-    * all do this); GraphSpec asserts a further round is a no-op at
+    * all do this); Round7Spec asserts a further round is a no-op at
     * test scale, and at 100 TB the round count is the knob (peeling
     * converges in O(peel depth) rounds — typically ≤ tens — each
     * round one degree aggregate + two node-sized semi-joins at edge
@@ -431,7 +431,7 @@ object Graph {
     * Q_c = q_num / 4m² and ΣQ·4m² = Σq_num) — no division, no float,
     * no negative-integer-division cross-engine hazard. A community
     * with q_num > 0 beats the random-graph expectation; a chain
-    * community LPA failed to split shows q_num ≤ 0. GraphSpec pins
+    * community LPA failed to split shows q_num ≤ 0. Round9Spec pins
     * Σq_num > 0 (the partition is better than random) and the
     * degree/edge conservation laws.
     *

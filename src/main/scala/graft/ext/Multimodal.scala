@@ -312,9 +312,9 @@ object Multimodal {
     * top-k: query side is |Q| 64-dim vectors broadcast to the
     * embedding scan — the corpus never moves, at any scale. Rounding
     * and tie-break follow the s-family discipline (round 6, then
-    * vec_id), with the rounding margin measured in MultimodalSpec. */
+    * vec_id), with the rounding margin measured in Round7Spec. */
   /** m6's full scored cross product with the UNROUNDED cosine —
-    * factored so MultimodalSpec can measure every pair's distance from
+    * factored so Round7Spec can measure every pair's distance from
     * the round(·,6) boundary (the repo's measured-margin rule). */
   private[graft] def m6Scored(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
@@ -377,7 +377,7 @@ object Multimodal {
     * any planted pair inside it on BOTH the Spark and oracle sides
     * (the gate would still hash-match), so planted-twin recall = 1 is
     * asserted at every SF the driver runs — sf0.001/0.01/0.1
-    * (MultimodalSpec), not just the smallest. */
+    * (Round8Spec + Round9Spec), not just the smallest. */
   val M7BucketCap = 64L
 
   /** Per-media positional permille signature: 16 segment byte-means
@@ -579,7 +579,7 @@ object Multimodal {
       Pipeline.mediaPairsArtifact(spark, dir))
 
   /** m10's append over a caller-supplied media frame + standing pair
-    * artifact — the seam MultimodalSpec uses to CONSTRUCT a cap-crossing
+    * artifact — the seam Round18Spec uses to CONSTRUCT a cap-crossing
     * corpus and pin the guard's fallback (the live entry can't reach
     * that branch — no bucket approaches the cap on this corpus).
     *
@@ -601,7 +601,7 @@ object Multimodal {
     * residual append-vs-rebuild nuance under a crossing — the FULL
     * rebuild drops the whole bucket while the append's base view keeps
     * it — is the verb's pre-existing documented semantics, unchanged;
-    * this corpus never constructs either case, MultimodalSpec does.) */
+    * this corpus never constructs either case, Round18Spec does.) */
   private[graft] def m10AppendOf(media: DataFrame,
                                  artifactPairs: DataFrame,
                                  forceDerivedBase: Boolean = false): DataFrame = {
@@ -793,7 +793,7 @@ object Multimodal {
   def m8SceneSegmentation(spark: SparkSession, dir: String): DataFrame =
     m8ScenesOf(mediaFromDocs(spark, dir))
 
-  /** Form over an arbitrary media frame — the seam MultimodalSpec uses to
+  /** Form over an arbitrary media frame — the seam Round9Spec uses to
     * plant a step-function payload and pin the boundary rule. */
   private[graft] def m8ScenesOf(media: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

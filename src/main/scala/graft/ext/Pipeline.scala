@@ -84,7 +84,7 @@ object Pipeline {
   // is part of the root path — bump it whenever any table's semantics
   // change so a stale tree from an older build can never serve (data
   // changes are covered separately: ArtifactRoots folds a corpus
-  // fingerprint into the tag). PipelineArtifactsSpec and DedupSpec pin artifact-served ≡
+  // fingerprint into the tag). Round10/11Spec pin artifact-served ≡
   // freshly-derived for every consumer plus the crashed-write rebuild.
   //
   // 100 TB posture: the artifacts live where the corpus lives (here
@@ -183,7 +183,7 @@ object Pipeline {
     * trains once per corpus version (8.6s/round of gate time went to
     * re-learning it in t27/t28/t29/e8 before it persisted) and every consumer
     * serves the 8-row parquet table. The t21 DSIR precedent at the
-    * tokenizer layer; TextSpec pins serve ≡ learn. */
+    * tokenizer layer; Round14Spec pins serve ≡ learn. */
   private[graft] def bpeMergesArtifact(spark: SparkSession, dir: String): DataFrame =
     ensureArtifact(spark, dir, "bpe_merges")(TextAnalysis.bpeMergesDerived(spark, dir))
 
@@ -227,7 +227,7 @@ object Pipeline {
     }
 
   /** d7's global CC labeling FROM SCRATCH (no artifact tree touched) —
-    * the spec-side twin PipelineArtifactsSpec and DedupSpec compare the served tables
+    * the spec-side twin Round10/11Spec compare the served tables
     * against; the artifact build itself goes through [[pairsArtifact]]
     * so each DAG stage reads its parent table, never re-derives it. */
   private[graft] def labelsDerived(spark: SparkSession, dir: String): DataFrame =
@@ -263,7 +263,7 @@ object Pipeline {
     ensureArtifact(spark, dir, "docflags")(
       docFlagsDerived(spark, dir, labelsArtifact(spark, dir)))
 
-  /** Spec seam: the served docflags artifact (PipelineSpec's e24
+  /** Spec seam: the served docflags artifact (Round17Spec's e24
     * split-consistency grade recomputes the release split from it). */
   private[graft] def docFlagsForSpec(spark: SparkSession, dir: String): DataFrame =
     docFlagsArtifact(spark, dir)
@@ -375,7 +375,7 @@ object Pipeline {
     * over waves equals the batch delta slice VERBATIM — the
     * stream-fold ≡ batch-refresh law st20's gate pins (expressions
     * copied stage-for-stage from docFlagsDerived/funnelFrame;
-    * StreamsSpec pins frame equality so they cannot drift).
+    * Round15Spec pins frame equality so they cannot drift).
     *
     * Scale: the wave side is micro-batch-sized; drops/perDoc joins
     * broadcast the wave against the persisted tables; the eval-gram
@@ -482,7 +482,7 @@ object Pipeline {
   private[graft] def e4DeltaPred: Column = e4DeltaPredOn("doc_id")
 
   /** Per-delta-doc stage flags under FROZEN base-trained models —
-    * factored so PipelineSpec can pin (a) e4(all, all) ≡ e1⋈e2 and
+    * factored so Round8Spec can pin (a) e4(all, all) ≡ e1⋈e2 and
     * (b) report-slice independence (scoring a delta doc gives the
     * same answer whether or not the rest of the corpus is scored
     * alongside it). */
@@ -498,7 +498,7 @@ object Pipeline {
     * `model` optionally REPLACES the inline stage-4/5 derivation with
     * explicit (per-doc scores, cut) frames — the seam that lets a
     * delta pass consume the PROMOTED post-e19 frozen tables, and
-    * PipelineArtifactsSpec pin the composition law e19 ∘ e4: a delta ingest
+    * Round14Spec pin the composition law e19 ∘ e4: a delta ingest
     * served from the promoted model ≡ e4 computed on a from-scratch
     * retrained base. */
   private def e4FlagsScored(spark: SparkSession, dir: String,
@@ -552,7 +552,7 @@ object Pipeline {
       // from the final mix (s5), and the documented admit path is
       // include-on-retrain — the next model retrain's base covers the
       // new feed, it gets a rate row, and the same docs flow the
-      // batch path (PipelineSpec pins e4(base=all) ≡ e1⋈e2 and
+      // batch path (Round8/9Spec pin e4(base=all) ≡ e1⋈e2 and
       // quarantine emptying under a full-base rerun).
       .withColumn("quar", col("s4") && col("rate_ppm").isNull)
       .withColumn("s5", col("s4") &&
@@ -576,7 +576,7 @@ object Pipeline {
     * the only corpus-sized work is the delta scan itself — daily
     * ingest cost is proportional to the delta, not the corpus. */
   /** Distance from every scored doc (base AND delta) to the frozen
-    * base-trained cut — PipelineSpec asserts it ≫ cross-engine ln/sum
+    * base-trained cut — Round8Spec asserts it ≫ cross-engine ln/sum
     * drift, the t12/t21 threshold discipline applied to e4's one
     * float compare. Measured: 1.1e-1 at sf0.001, 7.4e-3 at sf0.01,
     * 1.4e-3 at sf0.1 — all ≫ the ~1e-12 drift scale. */
@@ -630,7 +630,7 @@ object Pipeline {
   def e4DeltaIngest(spark: SparkSession, dir: String): DataFrame =
     ingestReport(spark, dir, !e4DeltaPred, e4DeltaPred)
 
-  /** PipelineArtifactsSpec seam — the e19 ∘ e4 composition: a delta pass whose
+  /** Round14Spec seam — the e19 ∘ e4 composition: a delta pass whose
     * stage-4/5 model inputs are explicit frames (the PROMOTED
     * model_frozen tables of a cut-over clone) under a full-pool base
     * (what the promoted model was trained on). Returns (flags, scored)
@@ -654,7 +654,7 @@ object Pipeline {
     * so every selected doc lands in quarantine (n_quarantined =
     * n_selected, n_final = 0) instead of being silently dropped —
     * the bootstrap posture a daily-ingest user sees the first time a
-    * feed onboards. Admit path: include-on-retrain (PipelineSpec pins
+    * feed onboards. Admit path: include-on-retrain (Round9Spec pins
     * quarantine emptying once the base covers the new source). The
     * new source's eval-rule docs are in NEITHER base nor delta: an
     * eval set frozen before the feed existed cannot contain them, and
@@ -676,7 +676,7 @@ object Pipeline {
     * d7 near-dup labeling and is keyed by its CLUSTER representative
     * (its own id when unclustered), so the hash lottery places whole
     * near-dup clusters — never individual members — into a split.
-    * Factored out so PipelineSpec can pin the cluster-atomicity and
+    * Factored out so Round9Spec can pin the cluster-atomicity and
     * exhaustiveness laws at the doc grain. */
   private[graft] def e6DocSplits(spark: SparkSession, dir: String): DataFrame =
     e6DocSplitsFrom(spark, dir, labelsArtifact(spark, dir))
@@ -749,7 +749,7 @@ object Pipeline {
     * The gate row is the order census: per (epoch, hash-range
     * quartile) window/doc/token mass — uniform hashing means each
     * quartile of the training order carries ~¼ of every source's
-    * mass, which is exactly the interleaving claim. PipelineSpec pins
+    * mass, which is exactly the interleaving claim. Round9Spec pins
     * the real thing: the hash order is a true permutation of e3's
     * bins, the two epochs order differently, and the
     * range-partition + local-sort materialization equals the logical
@@ -786,7 +786,7 @@ object Pipeline {
     * it is reading EXACTLY the data, in EXACTLY the order, of the
     * original run. A count/sum census cannot see two bins trading
     * content while totals balance; the position-weighted content hash
-    * can (PipelineSpec pins exactly that corruption, plus drop
+    * can (Round9Spec pins exactly that corruption, plus drop
     * detection and recompute-determinism).
     *
     * Scale: one row per (shard) — the windows are shard-partitioned
@@ -806,7 +806,7 @@ object Pipeline {
     * names: the position-weighted fold reduces per partial modulo
     * 2^61−1 instead of relying on the 2^60 int64 headroom — equal to
     * the exact checksum verbatim while that headroom holds (pinned in
-    * PipelineArtifactsSpec with the property tests). Gate default stays exact
+    * Round13Spec with the property tests). Gate default stays exact
     * (the oracle computes the plain sum). */
   private[graft] def manifestOf(bins: DataFrame,
                                 mersenne: Boolean = false): DataFrame = {
@@ -873,7 +873,7 @@ object Pipeline {
     * prev (a shard with no earlier bins starts at 0), local packing
     * offset above it. The refresh operator is N-FOLD composable —
     * epoch k's ids depend only on epochs < k, so daily deltas chain
-    * indefinitely (PipelineArtifactsSpec pins the 3-epoch composition against
+    * indefinitely (Round10Spec pins the 3-epoch composition against
     * the independent derivation). */
   private[graft] def appendEpochBins(flags: DataFrame, prev: DataFrame): DataFrame = {
     val offsets = prev
@@ -1115,7 +1115,7 @@ object Pipeline {
     * docs, and because ranges are doc_id-disjoint with intra-range
     * order matching the per-source global order, the two-level
     * cumulative equals the single-window one EXACTLY for any cut set
-    * (PipelineArtifactsSpec pins row-for-row equality; the decision stays the
+    * (Round11Spec pins row-for-row equality; the decision stays the
     * same integer compare). */
   def e12BudgetEnforce(spark: SparkSession, dir: String): DataFrame =
     e12Enforced(spark, dir, twoLevel = false)
@@ -1383,7 +1383,7 @@ object Pipeline {
   /** The retraction core, pure over its three inputs so the one
     * branch the corpus can't witness at spec SFs — a retired BRIDGE
     * doc splitting its cluster in two — is pinned on a constructed
-    * graph (PipelineArtifactsSpec). Law: pairs never cross clusters, so
+    * graph (Round11Spec). Law: pairs never cross clusters, so
     * deleting retired-endpoint pairs can only change clusters that
     * CONTAIN a retired doc; every other label is served as-is and
     * only the affected subgraph re-converges.
@@ -1456,12 +1456,12 @@ object Pipeline {
     * rebuild-without-retired every round. At sf0.01 the affected
     * cluster dissolves entirely (its one pair had a retired
     * endpoint); at sf0.001 it shrinks and survives; the SPLIT branch
-    * is PipelineArtifactsSpec's constructed pin. */
+    * is Round11Spec's constructed pin. */
   def e14GraphRetract(spark: SparkSession, dir: String): DataFrame =
     // served from the PERSISTED retraction (the offboarded generation's
     // labels table) — the retraction is an artifact, not a
     // per-query recompute; [[e14Derived]] keeps the from-scratch
-    // incremental path as the spec twin (PipelineArtifactsSpec pins served ≡
+    // incremental path as the spec twin (Round12Spec pins served ≡
     // derived), and the oracle still hash-checks the content against
     // rebuild-without-retired every round.
     offboardLabels(spark, dir).orderBy(col("doc_id"))
@@ -1592,7 +1592,7 @@ object Pipeline {
     * past that (the e8-wide precedent): the fold reduces per partial
     * modulo 2^61−1, overflow-free at any layer size, and equals the
     * exact fold verbatim while the exact fold is in-range (both
-    * pinned in PipelineArtifactsSpec). The gate keeps exact — the oracle
+    * pinned in Round13Spec). The gate keeps exact — the oracle
     * hash-checks the plain sum. */
   private def layerCensus(layer: String, df: DataFrame, canonical: Column): DataFrame =
     layerCensusOn(layer, df, canonical, mersenne = false)
@@ -1722,7 +1722,7 @@ object Pipeline {
     * and the entry serves the cutover root's LIVE labels table —
     * oracle = e14's rebuild-without-retired verbatim, so the gate
     * hash-checks "after the swap, the live path IS the retracted
-    * state" every round. PipelineArtifactsSpec pins the crash windows (resume
+    * state" every round. Round12Spec pins the crash windows (resume
     * mid-swap, already-promoted skip) and the bins/manifest layer
     * content. */
   def e18OffboardCutover(spark: SparkSession, dir: String): DataFrame = {
@@ -1831,7 +1831,7 @@ object Pipeline {
     * retrain" (and on quiet corpora, "no swap, the frozen path is
     * untouched") every round. Oracle composes the drift chain, both
     * DSIR generations, and the fired CASE in one statement.
-    * PipelineArtifactsSpec pins the crash windows (e18's pattern) and
+    * Round13Spec pins the crash windows (e18's pattern) and
     * frozen-after-cutover ≡ fresh full retrain. */
   def e19ModelCutover(spark: SparkSession, dir: String): DataFrame = {
     val scratch = stageModelClone(spark, dir)
@@ -1896,7 +1896,7 @@ object Pipeline {
     * — quiet at every spec SF, the measured frontier is 12 tpk), the
     * generalized [[modelCutover]] promotes the current generation
     * over the frozen root ([[BpeModelLayers]] — same aside-first
-    * crash-resumable per-layer promotion, PipelineArtifactsSpec's pinned
+    * crash-resumable per-layer promotion, Round13Spec's pinned
     * windows); the entry then serves the per-source delta fertility
     * FROM THE POST-VERB FROZEN encoded table next to the decision, so
     * the gate hash-checks "after the swap, the frozen tokenizer IS
@@ -1977,7 +1977,7 @@ object Pipeline {
     * ×10000 vs trigger·|Q|·k, the DSIR tier's count of sources above
     * [[TextAnalysis.DriftRetrainKl]] vs 0 (e19's any-source rule as
     * a count), the tokenizer tier's max per-source generation gap vs
-    * [[TextAnalysis.T31RetrainTpk]]. PipelineArtifactsSpec pins each tier's
+    * [[TextAnalysis.T31RetrainTpk]]. Round16Spec pins each tier's
     * fired bit equal to the standalone verb's decision.
     *
     * Scale: no new corpus work — the vector grades are |Q|·k joins
@@ -2109,7 +2109,7 @@ object Pipeline {
     * generation's already-persisted grade without cloning anything
     * (the quiet rule). On this corpus the DSIR tier fires
     * at the spec SFs and the other three stay quiet, so both branches
-    * are live under the gate; PipelineArtifactsSpec force-fires the quiet tiers
+    * are live under the gate; Round17Spec force-fires the quiet tiers
     * and pins each post-apply state equal to the standalone
     * cutover's. This is the scheduled "maintenance run" a production
     * 100 TB pipeline owns: one verb after each ingest window, every
@@ -2187,7 +2187,7 @@ object Pipeline {
   }
 
   /** e22's warehouse tier, FIRED branch (never live on a fingerprint-
-    * fresh artifact — PipelineArtifactsSpec force-fires it): stage a STALE
+    * fresh artifact — Round17Spec force-fires it): stage a STALE
     * partitioned clone of the served fact under the e22 root (q58's
     * late slice withheld), run [[graft.etl.Warehouse
     * .refreshDriftedMonths]] against the served fact as source, and

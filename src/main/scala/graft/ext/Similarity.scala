@@ -102,7 +102,7 @@ object Similarity {
     * answers PERSISTED (`appended_q`) — the appended side of the
     * s14/s30 grades; builder = the standard query set over the
     * shared drifted substrate (content-identical to s13's lifecycle
-    * chain — clone ≡ build, IvfIndexSpec — without re-paying s13's
+    * chain — clone ≡ build, Round15Spec — without re-paying s13's
     * per-invocation tree). */
   private[graft] def appendedAnswers(spark: SparkSession, dir: String): DataFrame =
     ensureIvfq(spark, dir, "appended_q")(
@@ -503,7 +503,7 @@ object Similarity {
     * cost of shuffling v, which is why broadcast stays the default
     * while |C|×dims fits an executor. Content is identical either way
     * (the join is the same all-pairs set; int64 sums don't care about
-    * row order) — SimilaritySpec pins trained-centroid bit-equality
+    * row order) — Round14Spec pins trained-centroid bit-equality
     * across the flag. */
   private def rankCentroids(v: DataFrame, cen: DataFrame,
                             broadcastCen: Boolean = true): DataFrame = {
@@ -543,9 +543,9 @@ object Similarity {
     * leave the cluster) and skips the small-count coalesce so the
     * centroid frame keeps its natural shuffle partitioning (|C| rows
     * spread over the agg's partitions — no single-task funnel as |C|
-    * grows). SimilaritySpec pins trained-centroid bit-equality across the
+    * grows). Round14Spec pins trained-centroid bit-equality across the
     * flag. Bit-equality with the collected form is pinned in
-    * SimilaritySpec (integer sums are associative, so partial-aggregation
+    * Round13Spec (integer sums are associative, so partial-aggregation
     * re-grouping cannot move a low bit). The broadcast form coalesces
     * to a SMALL MULTI-partition count, not 1 — a single-partition
     * re-sum is a single reduce task, the same growth-bound funnel the
@@ -600,7 +600,7 @@ object Similarity {
     * broadcast JOINS elsewhere no longer silently flips every
     * centroid build (all index builders, s5, d13, s20) onto the
     * shuffle-assignment form. Forms are pinned bit-equal
-    * (SimilaritySpec), so either setting is a plan choice, never an
+    * (Round14Spec), so either setting is a plan choice, never an
     * answer change. */
   private[graft] val KmeansBroadcastThresholdKey =
     "spark.graft.kmeans.broadcastThreshold"
@@ -616,8 +616,8 @@ object Similarity {
     * merge stays parallel as |C| grows with the corpus. */
   private val CentroidCoalesce = 8
 
-  /** The former COLLECTED form of [[kmeansCentroids]] — kept solely
-    * as SimilaritySpec's bit-equality reference for the distributed
+  /** The pre-r13 COLLECTED form of [[kmeansCentroids]] — kept solely
+    * as Round13Spec's bit-equality reference for the distributed
     * rewrite (never called from any query path). */
   private[graft] def kmeansCentroidsCollectedForSpec(
       spark: SparkSession, v: DataFrame): DataFrame = {
@@ -787,7 +787,7 @@ object Similarity {
     * broadcast-assignment caveat in [[kmeansCentroids]]'s doc applies
     * here too). The per-dim mean is floor(sum/count) on doubles — the
     * identical IEEE division + floor the collected form ran on the
-    * driver, so the codebooks are bit-equal (pinned in SimilaritySpec;
+    * driver, so the codebooks are bit-equal (pinned in Round13Spec;
     * the oracle's unrolled SQL is untouched). Per-round frame coalesces
     * to [[CentroidCoalesce]], not 1 — same funnel argument as
     * [[kmeansCentroids]] (|sub|×K rows grow with the corpus under
@@ -814,7 +814,7 @@ object Similarity {
     cen
   }
 
-  /** The former COLLECTED form of [[pqCodebooksOn]] — SimilaritySpec's
+  /** The pre-r13 COLLECTED form of [[pqCodebooksOn]] — Round13Spec's
     * bit-equality reference only. */
   private[graft] def pqCodebooksCollectedForSpec(
       spark: SparkSession, v: DataFrame, strideDf: DataFrame): DataFrame = {
@@ -839,8 +839,8 @@ object Similarity {
     cen
   }
 
-  /** SimilaritySpec seam: both Lloyd implementations (distributed and
-    * the former collected reference) over the corpus at `dir`, for
+  /** Round13Spec seam: both Lloyd implementations (distributed and
+    * the pre-r13 collected reference) over the corpus at `dir`, for
     * the bit-equality pin — (kmeans distributed, kmeans collected,
     * pq distributed, pq collected). */
   private[graft] def lloydFormsForSpec(spark: SparkSession, dir: String)
@@ -852,7 +852,7 @@ object Similarity {
       pqCodebooksOn(spark, v, stride), pqCodebooksCollectedForSpec(spark, v, stride))
   }
 
-  /** SimilaritySpec seam: the trained centroids under BOTH assignment
+  /** Round14Spec seam: the trained centroids under BOTH assignment
     * routes — broadcast (default) and the SHUFFLE_REPLICATE_NL escape
     * — for the bit-equality pin that makes the 100 TB knob safe to
     * flip (same all-pairs join, associative integer sums ⇒ identical
@@ -954,7 +954,7 @@ object Similarity {
   // machinery, so the persisted round-trip changes no bits — the
   // append path codes vectors against centroids they never trained
   // (the production semantics), and coding is deterministic given
-  // the model, so append ≡ rebuild on the coded set (IvfIndexSpec).
+  // the model, so append ≡ rebuild on the coded set (Round8Spec).
   //
   // Scale: build pays s12's training once; append is one narrow scan
   // of the NEW vectors (assignment + coding against broadcast model
@@ -1054,7 +1054,7 @@ object Similarity {
     * index — the entry point a STREAMING ingest uses from
     * foreachBatch: each micro-batch codes against the frozen model
     * and lands in the inverted lists, identically to the batch
-    * append (IvfIndexSpec pins stream ≡ batch on the codes table). */
+    * append (Round8Spec pins stream ≡ batch on the codes table). */
   def appendIvfPqIndexFrom(spark: SparkSession, emb: DataFrame,
                            idxDir: String): Unit = {
     val cen = spark.read.parquet(s"$idxDir/coarse_centroids")
@@ -1247,7 +1247,7 @@ object Similarity {
     * fixed stride. Distances are exact int64 squared-L2 on the
     * quantized grid (na + nb − 2·dot via the codegen'd
     * LongDotProduct), so the oracle agrees bit-for-bit with no margin
-    * analysis; KnnGraphSpec measures recall vs the brute-force graph on
+    * analysis; Round9Spec measures recall vs the brute-force graph on
     * the same metric. */
   /** s20's own probe width: the recall/cost knob of graph
     * construction. Wider than the query-path [[IvfProbes]] because
@@ -1293,7 +1293,7 @@ object Similarity {
   /** Round 1 of the graph build: IVF-blocked candidates (vectors are
     * candidates for each other only when one's [[S20Probes]] nearest
     * coarse centroids include the other's primary list) ranked to
-    * top-k. Factored so KnnGraphSpec can measure the descent round's
+    * top-k. Factored so Round10Spec can measure the descent round's
     * recall lift against this baseline. */
   private[graft] def s20Round1Graph(spark: SparkSession, dir: String): DataFrame =
     s20Round1Graph(spark, dir, quantVecs(spark, dir))
@@ -1305,7 +1305,7 @@ object Similarity {
   /** Round 1 against an EXPLICIT centroid frame — the graph-append
     * lifecycle builds its base graph against the PERSISTED frozen
     * centroids rather than retraining; `probes` defaults to the gate
-    * knob (KnnGraphSpec sweeps it for the recall/cost frontier). */
+    * knob (Round13Spec sweeps it for the recall/cost frontier). */
   private def s20Round1GraphFrom(cen: DataFrame, qv: DataFrame,
                                  probes: Int = S20Probes): DataFrame = {
     val rc = rankCentroids(qv, cen).filter(col("r") <= probes)
@@ -1322,7 +1322,7 @@ object Similarity {
   /** NN-Descent round count for the s20 gate. The convergence curve
     * measured at sf0.001, recall@10 vs the brute-force graph at
     * unchanged probe count: blocked round-1 0.721 → one round 0.886 →
-    * two rounds 0.912 (KnnGraphSpec pins the curve; it flattens fast,
+    * two rounds 0.912 (Round12Spec pins the curve; it flattens fast,
     * as Dong et al.'s empirical curves do — most of the lift is in
     * iteration 1, and round 2's +2.6 points is the knee). Each round
     * costs one O(n·(2k)²) candidate join + exact re-rank; floors
@@ -1351,7 +1351,7 @@ object Similarity {
     knnRankTopK(cand, qv)
   }
 
-  /** The graph at an arbitrary descent depth — KnnGraphSpec sweeps the
+  /** The graph at an arbitrary descent depth — Round12Spec sweeps the
     * rounds axis for the recall curve; the gate serves
     * [[S20DescentRounds]]. */
   /** The shared descent loop: `rounds` NN-Descent refinements over an
@@ -1418,7 +1418,7 @@ object Similarity {
   // serve a compacted table built by the hop-less kernel)
   private def knngRoot(dir: String): String = graft.store.served("graft_knng_v3", dir)
 
-  /** KnnGraphSpec seam: the resolved knng artifact root (the delete
+  /** Round14Spec seam: the resolved knng artifact root (the delete
     * verbs are root-addressed). */
   private[graft] def knngRootForSpec(dir: String): String = knngRoot(dir)
 
@@ -1476,7 +1476,7 @@ object Similarity {
     *     append's cost is arrival-sized, not corpus-sized.
     *
     * Distances are the same exact int64 metric as the build, so the
-    * oracle replays the identical steps bit-for-bit. KnnGraphSpec pins
+    * oracle replays the identical steps bit-for-bit. Round13Spec pins
     * the appended graph's recall envelope against the full rebuild. */
   private[graft] def knngAppendedGraph(spark: SparkSession, dir: String): DataFrame =
     ensureKnng(spark, dir, "graph_appended") {
@@ -1612,7 +1612,7 @@ object Similarity {
   }
 
   /** Spec-only: the graph at an arbitrary (probes, rounds) operating
-    * point — KnnGraphSpec's recall/cost frontier sweep (the SURVEY
+    * point — Round13Spec's recall/cost frontier sweep (the SURVEY
     * note "past the knee, widen probes before round 3" measured). */
   private[graft] def s20GraphAtForSpec(spark: SparkSession, dir: String,
                                        probes: Int, rounds: Int): DataFrame = {
@@ -1623,7 +1623,7 @@ object Similarity {
 
   /** Spec-only: the EXACT brute-force kNN graph on the same integer
     * metric (all-pairs — fine at spec SF, never a gate/production
-    * path) — the truth table KnnGraphSpec grades rebuild vs append
+    * path) — the truth table Round13Spec grades rebuild vs append
     * against. */
   private[graft] def exactKnnGraphForSpec(spark: SparkSession, dir: String,
                                           keep: Column = lit(true),
@@ -1710,7 +1710,7 @@ object Similarity {
   // bit-for-bit at the graph tier — NN-Descent is corpus-global, so a
   // survivor rebuild may discover candidates outside the compaction's
   // localized set — the same reason s25's append pins a recall
-  // ENVELOPE vs the rebuild rather than equality; KnnGraphSpec pins
+  // ENVELOPE vs the rebuild rather than equality; Round14Spec pins
   // that envelope for the compacted graph, plus the exact operational
   // laws (no deleted endpoint; untouched lists verbatim; the
   // tombstone-served list is a rank-order PREFIX restriction of the
@@ -1742,7 +1742,7 @@ object Similarity {
     * s25's arrival machinery run in reverse; without the hop the
     * compacted recall measured 0.887 vs the survivor rebuild's 0.949
     * at sf0.001 — outside the retrain trigger — and with it the
-    * envelope closes, KnnGraphSpec pins it); untouched lists pass
+    * envelope closes, Round14Spec pins it); untouched lists pass
     * through verbatim; deleted nodes' own lists drop. Cost is
     * touched-list-sized — O(|D|·k) lists re-ranked over O(k²)
     * candidates each — never a rebuild. */
@@ -2029,7 +2029,7 @@ object Similarity {
     * pattern at the graph tier: when the appended graph's recall@k
     * falls more than this below the full rebuild's, rebuild the graph
     * artifact. 0.05 = half a neighbor at k=10, the same
-    * half-a-neighbor bar as [[S14RetrainDrift]]; KnnGraphSpec measures
+    * half-a-neighbor bar as [[S14RetrainDrift]]; Round14Spec measures
     * the live drift on this corpus (appended ABOVE rebuilt at spec
     * SFs — localized descent around arrivals refines touched lists)
     * and pins it under the trigger. */
@@ -2091,7 +2091,7 @@ object Similarity {
   /** [[S27GraphRetrainDrift]] in exact basis points — the integer
     * trigger form both engines compare: fired iff
     * (hits_rebuilt − hits_appended) · 10000 > S29DriftBp · |Q| · k.
-    * KnnGraphSpec pins the two forms equal. */
+    * Round14Spec pins the two forms equal. */
   val S29DriftBp: Long = math.round(S27GraphRetrainDrift * 10000)
 
   /** Clone BOTH graph generations into the s29 scratch root (rebuilt
@@ -2246,7 +2246,7 @@ object Similarity {
 
   /** The graded sweep over a scored-candidate frame: one row per
     * width — (probes, n_hit) with n_hit the total truth-hits of the
-    * width's top-k over the query slice. Exposed for SimilaritySpec's
+    * width's top-k over the query slice. Exposed for Round16Spec's
     * monotone-capture pin. */
   private[graft] def s31SweepOver(spark: SparkSession, dir: String,
                                   scored: DataFrame): DataFrame = {
@@ -2483,7 +2483,7 @@ object Similarity {
     * index's mean recall@k falls more than this below a full
     * retrain's, rebuild. 0.05 = half a neighbor at k=10 — below
     * that, an append-only index answers as well as a fresh one and a
-    * retrain buys nothing. IvfIndexSpec measures the drift on this
+    * retrain buys nothing. Round9Spec measures the drift on this
     * corpus and pins it under the trigger. */
   val S14RetrainDrift = 0.05
 
@@ -2661,7 +2661,7 @@ object Similarity {
     * set is answered from the shrunken index. The oracle replays the
     * same chain with the candidate set restricted to survivors —
     * delete ≡ rebuild-without-deleted under frozen models.
-    * IvfIndexSpec pins the stronger operational laws: tombstone-serve ≡
+    * Round9Spec pins the stronger operational laws: tombstone-serve ≡
     * compacted-serve, untouched lists keep their very part files, and
     * the tombstone table is empty after compaction. */
   def s18IndexDelete(spark: SparkSession, dir: String): DataFrame = {
@@ -2697,7 +2697,7 @@ object Similarity {
   /** Upsert a re-embedded batch into the existing index: tombstone
     * the ids, apply, re-code the new values against the frozen model.
     * Works for ANY id set (training-slice rows included — the model
-    * is persisted, not re-derived); IvfIndexSpec pins the operational
+    * is persisted, not re-derived); Round10Spec pins the operational
     * equivalence update ≡ rebuild-with-current-values. */
   def updateIvfPqIndex(spark: SparkSession, newEmb: DataFrame, idxDir: String): Unit = {
     deleteFromIvfPqIndex(spark, newEmb.select(col("vec_id")), idxDir)
@@ -2713,7 +2713,7 @@ object Similarity {
     * like any append) and serving max-generation per id until the
     * next s18-cadence compaction folds the ledger in. Cost per batch:
     * one narrow coded write, O(updates) — no list rewrites, no
-    * tombstone round-trip. IvfIndexSpec pins generation-served ≡
+    * tombstone round-trip. Round11Spec pins generation-served ≡
     * compacted-served ≡ rebuild-with-current-values, including a
     * two-batch case where only max-generation may win. */
   def deferUpdateIvfPqIndex(spark: SparkSession, newEmb: DataFrame,
@@ -2827,7 +2827,7 @@ object Similarity {
     * call — and the serve overlay keys base-exclusion on ledger
     * membership, so the crash window between the append and the
     * ledger delete (both copies on disk) still serves exactly one
-    * copy (IvfIndexSpec). */
+    * copy (Round11Spec). */
   def compactIvfPqUpdates(spark: SparkSession, idxDir: String): Unit = {
     val genPath = new Path(s"$idxDir/codes_gen")
     val fs = FileSystem.get(genPath.toUri, spark.sparkContext.hadoopConfiguration)
@@ -2949,7 +2949,7 @@ object Similarity {
     * rebuilt with a model trained on EVERYTHING, swapped in, and the
     * standard query set is answered from the retrained index. By
     * construction the answers equal s12's all-trained IVF-PQ — the
-    * oracle IS s12's chain, and IvfIndexSpec additionally pins the
+    * oracle IS s12's chain, and Round10Spec additionally pins the
     * Spark-side equivalence bit-for-bit plus the no-resurrection and
     * crash-recovery laws. */
   def s22IndexRetrain(spark: SparkSession, dir: String): DataFrame = {
@@ -2970,14 +2970,14 @@ object Similarity {
 
   /** [[S14RetrainDrift]] in exact basis points — s29's integer-trigger
     * discipline at the IVF tier: fired iff (hits_retrained −
-    * hits_appended) · 10000 > S30DriftBp · |Q| · k. IvfIndexSpec pins
+    * hits_appended) · 10000 > S30DriftBp · |Q| · k. Round14Spec pins
     * the two forms pick the same side at every reachable gap. */
   val S30DriftBp: Long = math.round(S14RetrainDrift * 10000)
 
   private def s30IdxDir(dir: String): String =
     graft.store.served("graft_s30_idx", dir)
 
-  /** IvfIndexSpec seam: the s30 serving root (the forced-fire pin runs
+  /** Round14Spec seam: the s30 serving root (the forced-fire pin runs
     * the verb on it directly; the gate's build overwrites, so the
     * mutation cannot leak into the next invocation). */
   private[graft] def s30IdxDirForSpec(dir: String): String = s30IdxDir(dir)
@@ -3065,7 +3065,7 @@ object Similarity {
     * grade the POST-VERB tree against the persisted exact truth — the
     * served hit count the unified apply census reports is read from
     * the tree the swap actually produced, never inferred from the
-    * decision (e20's witness discipline). PipelineArtifactsSpec pins it equal
+    * decision (e20's witness discipline). Round17Spec pins it equal
     * to the standalone retrained world's hits. */
   private[graft] def e22IvfFiredApply(spark: SparkSession, dir: String): Long = {
     val root = graft.store.served("graft_e22_idx", dir)
@@ -3116,7 +3116,7 @@ object Similarity {
     * is answered straight off the ledger overlay — NO compaction runs,
     * so what the driver's hash gate pins is the max-generation serve
     * itself (s21's gate covers the eager tombstone+compact path;
-    * IvfIndexSpec separately pins generation-served ≡ compacted-served
+    * Round11Spec separately pins generation-served ≡ compacted-served
     * ≡ rebuild plus the crash windows). Oracle = the s13 chain over
     * the post-update CURRENT view: batch-2 ids at original vectors,
     * the rest of the slice reversed — rebuild-with-current-values
@@ -3189,7 +3189,7 @@ object Similarity {
     * per invocation as that family's benchmark, but the s7/s11 GRADES
     * are |Q|·k membership joins over parquet answer tables built once
     * per corpus version. `ivfpq` IS the retrained_q artifact (same
-    * builder, s12's chain). SimilaritySpec pins each table ≡ a fresh
+    * builder, s12's chain). Round15Spec pins each table ≡ a fresh
     * derivation. */
   private def annFamilyAnswers(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
     Seq("lsh"   -> ensureIvfq(spark, dir, "lsh_q")(s2AnnLsh(spark, dir)),
@@ -3371,7 +3371,7 @@ object Similarity {
     * Output carries BOTH distances (code-space d2, rescored cosine);
     * final rank is by cosine — the packed scan prunes, the floats
     * decide. Spec pins stage-1 top-k ≡ s8's answer exactly. Float
-    * edge: rank orders by round(cosine, 6), and SimilaritySpec MEASURES
+    * edge: rank orders by round(cosine, 6), and Round6Spec MEASURES
     * every rescored candidate's distance from the nearest rounding
     * boundary (min ≥ 1e-12 in cosine space at both spec and gate SFs,
     * ~1000× above cross-engine 1-ulp dot-order noise) — the repo's
@@ -4664,7 +4664,7 @@ object Similarity {
   /** s14's mirror: the two index states as nested-WITH derived
     * tables — 'appended' replays s13's pipeline (train on base, code
     * everything: valid because append ≡ rebuild under a frozen
-    * model, IvfIndexSpec), 'retrained' replays s12's (train on all) —
+    * model, Round8Spec), 'retrained' replays s12's (train on all) —
     * graded against the exact answer like the s11 oracle. */
   private lazy val s14OracleSql: String =
     s"""WITH ex AS (SELECT query_id, neighbor_id FROM ($s1OracleSql) tex),
@@ -4706,7 +4706,7 @@ object Similarity {
     "s33_adc_rerank" -> s33OracleSql,
     // s22's mirror IS s12's chain: a retrain on an undeleted corpus
     // trains on everything and codes everything — the equivalence the
-    // gate states (the swap machinery itself is pinned in IvfIndexSpec)
+    // gate states (the swap machinery itself is pinned in Round10Spec)
     "s22_index_retrain" -> s12OracleSql,
     "s18_index_delete" -> s18OracleSql,
     "s14_index_health" -> s14OracleSql,

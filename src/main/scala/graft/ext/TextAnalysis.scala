@@ -921,7 +921,7 @@ object TextAnalysis {
     * `approxNdv` (IMPLEMENTED, not just named — e8's wide-flag
     * precedent): the exact distinct becomes approx_count_distinct
     * (HLL, rsd 0.02 — one pass, sketch-sized shuffle, no per-gram
-    * dedup shuffle at all); AdvancedQueriesSpec measures the relative-error
+    * dedup shuffle at all); Round13Spec measures the relative-error
     * envelope vs exact at both spec SFs. The GATE keeps the exact
     * default — the oracle hash-checks exact counts. */
   def t20DistinctNgrams(spark: SparkSession, dir: String): DataFrame =
@@ -1030,7 +1030,7 @@ object TextAnalysis {
       Pipeline.dsirCutArtifact(spark, dir))
 
   /** The from-scratch t21 — the model artifact's builder shape and
-    * the spec-side twin (TextSpec pins served ≡ derived). */
+    * the spec-side twin (Round12Spec pins served ≡ derived). */
   private[graft] def t21Derived(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = dsirPerDoc(spark, dir)
     t21RollupFrom(perDoc, dsirCut(perDoc))
@@ -1229,7 +1229,7 @@ object TextAnalysis {
     * rounds × (one vocab-sized pair-count pass + a 1-row argmax
     * round-trip), so a production tokenizer's ~30k merges means ~30k
     * driver round-trips — each cheap (vocab-bounded,
-    * corpus-independent: TextSpec measures the training frame at
+    * corpus-independent: Round10Spec measures the training frame at
     * EXACTLY |vocab| rows at every widened round) but latency-bound
     * in aggregate. The standard mitigations, in preference order:
     * (a) the capped vocab IS bounded driver state (≤[[BpeVocabCap]]
@@ -1238,8 +1238,8 @@ object TextAnalysis {
     * (t28) unchanged; (b) batch B non-overlapping argmax pairs per
     * round (merges whose symbols don't touch commute), cutting
     * round-trips ~B× — LANDED as [[learnBpeMergesBatched]], pinned
-    * ≡ sequential where batches commute. TextSpec pins that and
-    * PREFIX STABILITY — a 2×-rounds run's first half equals
+    * ≡ sequential where batches commute (Round11Spec). Round10Spec
+    * also pins PREFIX STABILITY — a 2×-rounds run's first half equals
     * the shorter run's merge table — which is what makes the
     * batched/driver-local variants drop-in. */
   val BpeRounds = 8
@@ -1258,7 +1258,7 @@ object TextAnalysis {
     * appends. `get()` (0-based, null-on-out-of-range) keeps the
     * empty-accumulator probe ANSI-safe. Greedy semantics under
     * overlap ("aaa" + merge(a,a) → ["aa","a"]) are exactly standard
-    * BPE's non-overlapping left-to-right replace; TextSpec
+    * BPE's non-overlapping left-to-right replace; Round9Spec
     * property-tests this fold against an independent Scala reference
     * on arbitrary symbol runs. */
   private[graft] def bpeApplyMerge(toks: Column, l: String, r: String): Column =
@@ -1330,7 +1330,7 @@ object TextAnalysis {
     learnBpeMergesFrom(bpeVocab(spark, dir), BpeRounds)._1
 
   /** Parameterized over the vocab frame and round count so
-    * TextSpec can widen the rounds axis and pin (a) prefix
+    * Round10Spec can widen the rounds axis and pin (a) prefix
     * stability and (b) the per-round frame staying exactly
     * vocab-sized. Returns (merge table, final training-frame rows). */
   private[graft] def learnBpeMergesFrom(vocab: DataFrame, rounds: Int)
@@ -1346,7 +1346,7 @@ object TextAnalysis {
       merges += ((r, l, rr, cnt))
       // eager localCheckpoint, not cache: cache keeps the full logical
       // lineage, so a widened rounds axis (t29's 32-merge oracle twin,
-      // TextSpec's sweep) accumulates a linearly deeper chained-HOF
+      // Round10Spec's sweep) accumulates a linearly deeper chained-HOF
       // plan whose rendering alone can OOM the driver; the checkpoint
       // pins each vocab-bounded round as an RDD scan (plan depth 1).
       val next = seq0.select(col("word"), col("freq"),
@@ -1369,7 +1369,7 @@ object TextAnalysis {
     * round-trip per batch instead of per merge, so a ~30k-merge
     * production tokenizer runs ~30k/B round-trips (the
     * rounds-to-merges ratio is exactly |merges| / |snapshots|;
-    * TextSpec asserts the widened case uses ≤ ceil(merges/B)+1
+    * Round11Spec asserts the widened case uses ≤ ceil(merges/B)+1
     * snapshots on this corpus).
     *
     * Why disjoint ⇒ safe: a merge (a,b) fuses adjacent sites of its
@@ -1388,7 +1388,7 @@ object TextAnalysis {
     * still tie a later pick's count and win the lexicographic
     * tie-break — batched BPE accepts that divergence as the price of
     * the round-trips, exactly as production batched trainers do.
-    * TextSpec pins equality where it is guaranteed (a constructed
+    * Round11Spec pins equality where it is guaranteed (a constructed
     * commuting vocab; an overlapping vocab where batching must
     * degenerate to sequential) and pins the real-corpus batch-4 run
     * as a DETERMINISTIC regression case for this corpus, not a law.
@@ -1414,7 +1414,7 @@ object TextAnalysis {
         .collect()
       snapshots += 1
       // spec seam: record each snapshot's first merge index, so
-      // TextSpec can pin "every snapshot's first pick IS the
+      // Round13Spec can pin "every snapshot's first pick IS the
       // sequential argmax of that state" (the order law no lawful
       // creation-tie can bend — rank 1 of the shared (cnt desc, l, r)
       // ordering is tie-break-identical in both learners)
@@ -1460,7 +1460,7 @@ object TextAnalysis {
   }
 
   /** The FRESH merge-table derivation — the artifact BUILDER and the
-    * TextSpec serve≡learn twin (the t21 DSIR split: derived = the
+    * Round14Spec serve≡learn twin (the t21 DSIR split: derived = the
     * from-scratch chain, the artifact = that chain persisted once per
     * corpus version). */
   private[graft] def bpeMergesDerived(spark: SparkSession, dir: String): DataFrame =
@@ -1475,7 +1475,7 @@ object TextAnalysis {
     * touch per corpus version and read from parquet ever after.
     * Content is identical to the from-scratch learn (the artifact IS
     * the learner's output), so the gate hash is unchanged;
-    * TextSpec pins serve ≡ learn. */
+    * Round14Spec pins serve ≡ learn. */
   def t27BpeMerges(spark: SparkSession, dir: String): DataFrame =
     Pipeline.bpeMergesArtifact(spark, dir)
       .orderBy(col("merge_rank"))
@@ -1506,7 +1506,7 @@ object TextAnalysis {
     * canonical view is the strongest order both learners share; the
     * gate hash-pins every merge's symbols and exact count against the
     * sequential rebuild each round, and learned-ORDER equality stays
-    * pinned in TextSpec where disjointness guarantees it. Bounded
+    * pinned in Round11Spec where disjointness guarantees it. Bounded
     * driver state: ≤ batch rows per snapshot, |merges| rows total. */
   /** The fresh batched derivation (builder + spec twin): the canonical
     * merge view with the training run's snapshot count carried as a
@@ -1578,7 +1578,7 @@ object TextAnalysis {
     * the artifact BUILDER's kernel: Pipeline.bpeEncodedWordsArtifact
     * feeds it the persisted merge table (the DAG discipline — each
     * artifact builds from its PARENT table, never from scratch), and
-    * the fresh-merges form below is TextSpec's serve≡learn twin. */
+    * the fresh-merges form below is Round14Spec's serve≡learn twin. */
   private[graft] def encodedWordsFrom(spark: SparkSession, dir: String,
                                       merges: Seq[(String, String)]): DataFrame =
     merges.foldLeft(
@@ -1588,7 +1588,7 @@ object TextAnalysis {
         df.select(col("word"), bpeApplyMerge(col("toks"), l, r).as("toks"))
       }
 
-  /** Fresh end-to-end derivation (learn + fold) — the TextSpec
+  /** Fresh end-to-end derivation (learn + fold) — the Round14Spec
     * twin of the served table. */
   private[graft] def encodedWordsDerived(spark: SparkSession, dir: String): DataFrame =
     encodedWordsFrom(spark, dir, learnBpeMerges(spark, dir).map(m => (m._2, m._3)))
@@ -1597,7 +1597,7 @@ object TextAnalysis {
     * Heaps-law vocabulary-sized, the tokenizer's second persisted
     * table (merges = the model, this = the model applied to the
     * vocabulary, the memoized form every encode pass joins against).
-    * Exposed for TextSpec's conservation/monotonicity pins. */
+    * Exposed for Round9Spec's conservation/monotonicity pins. */
   private[graft] def t28EncodedWords(spark: SparkSession, dir: String): DataFrame =
     Pipeline.bpeEncodedWordsArtifact(spark, dir)
 
@@ -1620,7 +1620,7 @@ object TextAnalysis {
     * vocabulary-sized encoded table while [[encodeBytesOf]] its row
     * count fits the threshold; shuffle-on-word past it (Heaps-law
     * growth eventually outruns any executor). Forms are pinned
-    * bit-equal in TextSpec, so the gate can only change a plan,
+    * bit-equal in Round16Spec, so the gate can only change a plan,
     * never an answer. */
   private[graft] def autoBroadcastEncode(spark: SparkSession,
                                          nWords: Long): Boolean =
@@ -1940,7 +1940,7 @@ object TextAnalysis {
     * takes the 1st, 3rd, … occurrence), winners fused / absorbed
     * right-symbols dropped, arrays rebuilt in position order. The
     * island-odd-rank rule IS the fold's greedy left-to-right pass;
-    * TextSpec property-tests the equivalence. seq/tk/best are
+    * Round9Spec property-tests the equivalence. seq/tk/best are
     * MATERIALIZED: each is referenced 2-3× and the chain is
     * [[BpeRounds]] deep — inlining would replicate the whole prefix
     * exponentially (the s16 lesson). */

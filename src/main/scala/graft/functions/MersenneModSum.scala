@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.udaf
   * instead of widening. Correctness is the ring homomorphism: partial
   * sums reduced mod M and then added mod M equal the full sum mod M
   * in ANY partial-aggregation order, so Spark's map-side combine and
-  * a sequential fold agree bit-for-bit (PipelineArtifactsSpec property-tests
+  * a sequential fold agree bit-for-bit (Round13Spec property-tests
   * the fold at the int64-overflow edge against a BigInt reference).
   * No intermediate overflows: buffers live in [0, M) and inputs are
   * reduced on entry, so every addition stays under 2^62 < 2^63.

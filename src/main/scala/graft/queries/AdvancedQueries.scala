@@ -618,7 +618,7 @@ object AdvancedQueries {
     * (columnar store: 11 one-column scans = one 11-column scan). The
     * production swap for NDV is approx_count_distinct (HLL, one
     * pass, no per-value shuffle) — IMPLEMENTED behind `approxNdv`
-    * (e8's wide-flag precedent; AdvancedQueriesSpec measures the relative
+    * (e8's wide-flag precedent; Round13Spec measures the relative
     * error vs exact at both spec SFs); exact counts stay the gate
     * default because the oracle hash-checks them. */
   def q44Profile(spark: SparkSession, dir: String): DataFrame =
@@ -933,7 +933,7 @@ object AdvancedQueries {
     * deterministic salt in [0, 8), the dim side is replicated 8×, and
     * the join key becomes (key, salt) — each hot key spreads over 8
     * partitions. Salting never changes multiplicity, so the rollup
-    * hash-matches a plain-join oracle exactly (and AdvancedQueriesSpec pins
+    * hash-matches a plain-join oracle exactly (and Round5Spec pins
     * salted ≡ unsalted row-for-row plus the salt expansion in the
     * plan). Money in integer cents, divided once at the edge. */
   def q52SkewJoin(spark: SparkSession, dir: String): DataFrame = {

@@ -27,7 +27,7 @@ import graft.ext.{Dedup, Pipeline}
   * a new query resumes from the same checkpoint — so what the
   * driver's hash gate pins every round (against d7's full-rebuild
   * oracle verbatim, e13's law) is maintenance ACROSS a restart, not a
-  * single lucky run. StreamsSpec separately pins the cross-wave
+  * single lucky run. Round11Spec separately pins the cross-wave
   * branch on constructed shingles and the fresh-checkpoint replay
   * (both waves re-delivered, zero pairs re-derived).
   *
@@ -215,7 +215,7 @@ object DocumentsStream {
     * folds it into the cumulative generation 1; the serve reads ONE
     * compacted generation and zero ledger dirs. Oracle = d7's
     * full-rebuild SQL verbatim, so the driver hash-checks
-    * fold∘maintain ≡ rebuild every round. StreamsSpec separately pins
+    * fold∘maintain ≡ rebuild every round. Round12Spec separately pins
     * the crash window (marker present, waves not yet deleted — no
     * double-serve) and the post-compaction replay skip. */
   def st14LedgerCompact(spark: SparkSession, dir: String): DataFrame = {
@@ -373,7 +373,7 @@ object DocumentsStream {
     * append-only packing law — [[Pipeline.appendEpochBins]], ONE
     * definition) and emits e10's refresh census. Oracle = e10's chain
     * VERBATIM — stream-fold ≡ batch-refresh, hash-checked every
-    * round; StreamsSpec pins the flags union ≡ the batch delta slice
+    * round; Round15Spec pins the flags union ≡ the batch delta slice
     * frame-for-frame. Scratch lives at one fixed location per corpus,
     * rebuilt per invocation (st11's no-accumulation discipline). */
   def st20BinsArrive(spark: SparkSession, dir: String): DataFrame = {
@@ -559,7 +559,7 @@ object DocumentsStream {
     * serve runs d22's fold — e14's retraction over the persisted
     * pairs/labels artifacts, the committed pair union folded in as
     * star edges. Oracle = d22's rebuild-with-current-text chain
-    * VERBATIM; StreamsSpec pins stream-fold ≡ the batch d22 verb
+    * VERBATIM; Round15Spec pins stream-fold ≡ the batch d22 verb
     * engine-side. */
   def st21PairUpdate(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.store.scratch(spark, "graft_st21", dir, "arrive/in")
@@ -576,7 +576,7 @@ object DocumentsStream {
     st21Serve(spark, dir, base, rBase)
   }
 
-  /** st21's serve, callable on an existing ledger base (StreamsSpec
+  /** st21's serve, callable on an existing ledger base (Round16Spec
     * re-serves across compactions) — d22's single-CC fold over the
     * committed ledgers: untouched labels as star edges, affected
     * survivors and the committed arrival pairs converge in ONE

@@ -127,7 +127,7 @@ object EmbeddingsStream {
     WaveLedger.stageFrameWave(spark, part, base, s"$base/in", wave)
   }
 
-  /** st15's serve, callable on an existing ledger base (StreamsSpec
+  /** st15's serve, callable on an existing ledger base (Round16Spec
     * re-serves across compactions). */
   private[graft] def st15Serve(spark: SparkSession, dir: String,
                                base: String): DataFrame =
@@ -411,7 +411,7 @@ object EmbeddingsStream {
     * through s28's own kernels — compact without the manifest ids,
     * integrate the committed pair union under the current view.
     * Oracle = s28's update ≡ rebuild-with-current-values chain
-    * VERBATIM; StreamsSpec pins stream-fold ≡ the batch verb
+    * VERBATIM; Round15Spec pins stream-fold ≡ the batch verb
     * engine-side. Scale: per-wave work is wave-sized ranking +
     * blocking against broadcast/persisted model tables; the serve's
     * compact+integrate is |U|-bounded (s28's bound), paid at update
@@ -433,7 +433,7 @@ object EmbeddingsStream {
     st23Serve(spark, dir, base, rBase)
   }
 
-  /** st23's serve, callable on an existing ledger base (StreamsSpec
+  /** st23's serve, callable on an existing ledger base (Round16Spec
     * re-serves across compactions): s28's fold over the committed
     * ledger state (latest compacted generation + live tail).
     * `rBase` is the retract-ledger root (empty = the in-base

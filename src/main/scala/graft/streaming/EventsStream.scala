@@ -400,7 +400,7 @@ object EventsStream {
     // pay. On a FRESH target it still writes: unlike the partitioned
     // form, an empty non-partitioned write emits a schema-carrying
     // part file, and an empty events table must converge to a
-    // READABLE empty snapshot (EventsStreamSpec's law).
+    // READABLE empty snapshot (Round10Spec's law).
     if (batch.isEmpty && fs.exists(dir)) return
     val cols = batch.columns.map(col).toSeq
     val merged =

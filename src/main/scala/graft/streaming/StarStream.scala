@@ -59,7 +59,7 @@ object StarStream {
     * — the census the gate hashes proves the absorption every round
     * (an append path would double the arriving month). Serve = the
     * per-month census of the converged fact ≡ the full-rebuild census
-    * (stream ≡ refresh ≡ rebuild; WarehouseSpec pins the q56 equality).
+    * (stream ≡ refresh ≡ rebuild; Round17Spec pins the q56 equality).
     *
     * Scale: each micro-batch rewrites only its touched partitions —
     * a daily/monthly load stream rewrites one partition per window

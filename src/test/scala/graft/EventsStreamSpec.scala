@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -514,25 +513,5 @@ class EventsStreamSpec extends AnyFunSuite with GraftSuite {
       assert(n === distinctIds)
       assert(n === graft.Tables.events(spark, dir).select("event_id").distinct().count())
     } finally q.stop()
-  }
-
-  test("st11: an empty events table stages two empty batches and yields an " +
-    "empty census — no NPE from the null min/max midpoint") {
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_r10_empty_events"
-    val fs = FileSystem.get(new Path(tmp).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val empty = spark.read.parquet(s"$dir/events.parquet").limit(0)
-    // rewrite the fixture only when it is missing, partial or stale: a
-    // rewrite changes the corpus fingerprint, and st11 would build a
-    // fresh tree
-    val events = new Path(s"$tmp/events.parquet")
-    if (!fs.exists(new Path(events, "_SUCCESS")) ||
-        spark.read.parquet(events.toString).schema != empty.schema) {
-      fs.delete(new Path(tmp), true)
-      empty.write.parquet(events.toString)
-    }
-    val out = EventsStream.st11SnapshotMerge(spark, tmp).collect()
-    assert(out.isEmpty, "empty input converges to an empty snapshot census")
   }
 }

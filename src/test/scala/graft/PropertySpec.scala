@@ -227,7 +227,7 @@ class PropertySpec extends AnyFunSuite with GraftSuite {
     import graft.ext.Dedup
     // arbitrary multigraphs with self-loops pre-filtered: chains, stars,
     // cliques, and disconnected shards all arise under this generator —
-    // the single-seed d19 cases in DedupSpec are subsumed
+    // the single-seed Round9Spec cases are subsumed
     val edgeGen: Gen[List[(Long, Long)]] = for {
       n  <- Gen.chooseNum(2, 30)
       m  <- Gen.chooseNum(1, 60)

@@ -429,41 +429,6 @@ class Round16Spec extends AnyFunSuite with GraftSuite {
     served.unpersist(false)
   }
 
-  // ---------- 7b. retireLegacy — re-keyed roots shed their old disk ----------
-
-  test("retireLegacy: a re-keyed prefix's old trees are swept exactly once, " +
-    "the live-prefix trees (whose names the legacy spelling prefixes) " +
-    "survive, and unrelated prefixes are untouched") {
-    val root = graft.ArtifactRoots.root
-    val f = fs(root)
-    val legacy = new Path(s"$root/graft_r16spec_ret_aaaa_bbbb")
-    val live = new Path(s"$root/graft_r16spec_ret_v1_aaaa_bbbb")
-    val other = new Path(s"$root/graft_r16spec_other_aaaa_bbbb")
-    Seq(legacy, live, other).foreach(p => f.mkdirs(p))
-    // pin the grace seam to eager (Round13Spec's discipline): a host
-    // exporting SPARK_GRAFT_ARTIFACT_GC_GRACE_MS would otherwise
-    // spare the just-created legacy dir and fail this test spuriously
-    val prevGrace = sys.props.get("graft.test.gcGraceMs")
-    sys.props("graft.test.gcGraceMs") = "0"
-    try {
-      graft.ArtifactRoots.retireLegacy("graft_r16spec_ret", "graft_r16spec_ret_v1")
-      assert(!f.exists(legacy), "the retired prefix's tree must be swept")
-      assert(f.exists(live), "the live prefix's tree must survive the sweep " +
-        "(its name starts with the legacy spelling)")
-      assert(f.exists(other), "unrelated prefixes must be untouched")
-      // once-guard: a restored legacy tree is NOT re-swept this session
-      f.mkdirs(legacy)
-      graft.ArtifactRoots.retireLegacy("graft_r16spec_ret", "graft_r16spec_ret_v1")
-      assert(f.exists(legacy), "the sweep must run once per JVM per prefix")
-    } finally {
-      Seq(legacy, live, other).foreach(p => f.delete(p, true))
-      prevGrace match {
-        case Some(v) => sys.props("graft.test.gcGraceMs") = v
-        case None => sys.props -= "graft.test.gcGraceMs"
-      }
-    }
-  }
-
   // ---------- 8. d23 — quality-ranked keeper selection ----------
 
   test("d23: one keeper per duplicate cluster, the keeper is a member and " +

@@ -2,13 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-import graft.etl.{RetailClean, RetailStar, Warehouse}
+import graft.etl.{RetailClean, Warehouse}
 
 class WarehouseSpec extends AnyFunSuite with GraftSuite {
 
@@ -248,245 +247,5 @@ class WarehouseSpec extends AnyFunSuite with GraftSuite {
     val open = hist1.filter(col("is_current")).groupBy("customer_id").count()
       .filter(col("count") > 1)
     assert(open.count() === 0)
-  }
-
-  test("star artifact: the persisted fact and dims serve exactly what the " +
-    "inline ETL build derives (multiset-equal per table), and a re-serve " +
-    "is marker-idempotent") {
-    val built = RetailStar.buildStar(spark, dir)
-    val served = RetailStar.servedStar(spark, dir)
-    assert(sortedRows(served.fact) === sortedRows(built.fact),
-      "persisted fact != inline ETL fact")
-    assert(sortedRows(served.product) === sortedRows(built.product),
-      "persisted dim_product != inline derivation")
-    assert(sortedRows(served.shipping) === sortedRows(built.shipping),
-      "persisted dim_shipping != inline derivation")
-    // marker-gated: a second serve reads the same artifact rows
-    val again = RetailStar.servedStar(spark, dir)
-    assert(sortedRows(again.fact) === sortedRows(served.fact),
-      "re-serve must be idempotent")
-    // schemas survive the parquet round-trip column-for-column
-    // (names + types; parquet widens non-null columns to nullable)
-    assert(served.fact.schema.map(f => (f.name, f.dataType)) ===
-      built.fact.schema.map(f => (f.name, f.dataType)),
-      "artifact fact schema != build schema")
-  }
-
-  test("q56: the refreshed month-partitioned fact's census equals the full " +
-    "rebuild, the layout is one partition dir per month, and a further " +
-    "re-delivery of the arriving month leaves untouched partitions' files " +
-    "and the census byte-identical") {
-    val out = RetailStar.q56StarRefresh(spark, dir)
-    val census = sortedRows(out)
-    // refresh ≡ rebuild: the same census straight off the inline fact
-    val fact = RetailStar.buildStar(spark, dir).fact
-    val direct = sortedRows(fact.groupBy(col("month_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum(col("line_total_amount")), 2).as("total_amount")))
-    assert(census === direct, "post-refresh census != full-rebuild census")
-    // layout: one partition dir per month
-    val root = ArtifactRoots.tagged("graft_starref_v1", dir)
-    val target = s"$root/fact_by_month"
-    val f = fs(target)
-    val parts = f.listStatus(new Path(target))
-      .filter(_.isDirectory).map(_.getPath.getName).toSet
-    val months = fact.select(col("month_key")).distinct()
-      .collect().map(r => s"month_key=${r.getString(0)}").toSet
-    assert(parts === months, s"partition dirs != months: $parts vs $months")
-    // idempotence at the FILE level: re-deliver the arriving month once
-    // more; untouched partitions' files must be byte-identical (same
-    // name, length, mtime) and the census unchanged
-    val lastKey = months.map(_.stripPrefix("month_key=")).toSeq.sorted
-      .map(k => (k.substring(2) + k.substring(0, 2), k)).max._2 // MMyyyy → sort by yyyyMM
-    val untouchedBefore = f.listStatus(new Path(target))
-      .filter(st => st.isDirectory && st.getPath.getName != s"month_key=$lastKey")
-      .flatMap(st => f.listStatus(st.getPath))
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "dynamic")
-    try fact.filter(col("month_key") === lastKey)
-      .write.mode("overwrite").partitionBy("month_key").parquet(target)
-    finally spark.conf.unset(key)
-    val untouchedAfter = f.listStatus(new Path(target))
-      .filter(st => st.isDirectory && st.getPath.getName != s"month_key=$lastKey")
-      .flatMap(st => f.listStatus(st.getPath))
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
-    assert(untouchedAfter === untouchedBefore,
-      "a partition-scoped re-delivery touched other months' files")
-    val again = sortedRows(spark.read.schema(fact.schema).parquet(target)
-      .groupBy(col("month_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum(col("line_total_amount")), 2).as("total_amount")))
-    assert(again === census, "re-delivery changed the census")
-  }
-
-  test("q57: the post-erasure fact holds zero victim rows, the census " +
-    "equals an engine-side rebuild-without-victims, and a RE-ISSUED " +
-    "erasure leaves untouched months' files byte-identical") {
-    val out = sortedRows(RetailStar.q57FactRetention(spark, dir))
-    val fact = RetailStar.buildStar(spark, dir).fact
-    val victims = RetailStar.stagingFromTpch(spark, dir)
-      .filter(pmod(col("Customer_ID"), lit(RetailStar.Q57ErasureMod)) ===
-        RetailStar.Q57ErasureDigit)
-      .select(xxhash64(col("Customer_ID")).as("customer_key")).distinct()
-    assert(victims.count() > 0, "precondition: the erasure slice is live")
-    val rebuilt = fact.join(broadcast(victims), Seq("customer_key"), "left_anti")
-    assert(out === sortedRows(rebuilt.groupBy(col("month_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum(col("line_total_amount")), 2).as("total_amount"))),
-      "post-erasure census != rebuild-without-victims")
-    val root = ArtifactRoots.tagged("graft_starret_v1", dir)
-    val target = s"$root/fact_by_month"
-    val standing = spark.read.schema(fact.schema).parquet(target)
-    assert(standing.join(broadcast(victims), Seq("customer_key"), "left_semi")
-      .count() === 0L, "victim rows survive in the standing fact")
-    // re-issued erasure: repack the touched months again; untouched
-    // months' files must be byte-identical (the request is idempotent
-    // and partition-scoped)
-    val f = fs(target)
-    // the verb's own touched set (pre-erasure) from the inline fact
-    val touchedPre = fact.join(broadcast(victims), Seq("customer_key"))
-      .select(col("month_key")).distinct().collect().map(_.getString(0)).toSet
-    val untouchedBefore = f.listStatus(new Path(target))
-      .filter(st => st.isDirectory &&
-        !touchedPre.contains(st.getPath.getName.stripPrefix("month_key=")))
-      .flatMap(st => f.listStatus(st.getPath))
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
-    val repack = standing
-      .filter(col("month_key").isin(touchedPre.toSeq: _*))
-      .join(broadcast(victims), Seq("customer_key"), "left_anti")
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "dynamic")
-    try repack.write.mode("overwrite").partitionBy("month_key").parquet(target)
-    finally spark.conf.unset(key)
-    val untouchedAfter = f.listStatus(new Path(target))
-      .filter(st => st.isDirectory &&
-        !touchedPre.contains(st.getPath.getName.stripPrefix("month_key=")))
-      .flatMap(st => f.listStatus(st.getPath))
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
-    assert(untouchedAfter === untouchedBefore,
-      "a re-issued erasure touched other months' files")
-    val again = sortedRows(spark.read.schema(fact.schema).parquet(target)
-      .groupBy(col("month_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum(col("line_total_amount")), 2).as("total_amount")))
-    assert(again === out, "re-issued erasure changed the census")
-  }
-
-  test("fact erasure mechanism: a month whose EVERY row is a victim's does " +
-    "not survive as a ghost partition (the dynamic-overwrite deletion gap)") {
-    import spark.implicits._
-    import graft.etl.Warehouse
-    val tmp = tempDir("erase_gap").toString
-    val target = s"$tmp/fact"
-    val df = Seq(
-      (1L, "012020", 10.0), // month 012020: ONLY victim rows
-      (1L, "022020", 5.0), (2L, "022020", 7.0), // month 022020: mixed
-      (2L, "032020", 3.0)) // month 032020: untouched
-      .toDF("customer_key", "month_key", "line_total_amount")
-    Warehouse.writeFactPartitioned(df, target)
-    val touched = Warehouse.eraseFromPartitionedFact(
-      spark, target, df.schema, Seq(1L).toDF("customer_key"))
-    assert(touched.toSet === Set("012020", "022020"),
-      "erasure must touch exactly the victim's months")
-    val f = fs(target)
-    assert(!f.exists(new Path(s"$target/month_key=012020")),
-      "the emptied month survived as a ghost partition")
-    val after = spark.read.schema(df.schema).parquet(target)
-      .select(col("customer_key"), col("month_key"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(after === Set((2L, "022020"), (2L, "032020")),
-      "post-erasure fact must hold exactly the non-victim rows")
-  }
-
-  test("q58: the freshness gate fires exactly the months whose late slice " +
-    "is non-empty (at least one, never all), the post-apply census equals " +
-    "the source on every row, and the verb is deterministic across runs") {
-    val out = RetailStar.q58StarFreshness(spark, dir)
-    val rows = out.collect()
-    val fired = rows.filter(_.getAs[Long]("fired") == 1L)
-    assert(fired.nonEmpty, "the gate must be non-vacuous: no month fired")
-    assert(fired.length < rows.length,
-      "the gate must be selective: every month fired")
-    // fired set == exactly the months holding late rows, engine-side
-    val fact = RetailStar.buildStar(spark, dir).fact
-    val lateKeys = RetailStar.arrivingMonthKeys(spark, dir,
-      RetailStar.Q58LateMonths)
-    val expected = fact
-      .filter(col("month_key").isin(lateKeys: _*) &&
-        pmod(col("transaction_id"), lit(RetailStar.Q58LateMod)) ===
-          RetailStar.Q58LateDigit)
-      .select(col("month_key")).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(fired.map(_.getAs[String]("month_key")).toSet === expected,
-      "fired months != months with a non-empty late slice")
-    // gate ∘ refresh ≡ rebuild, witnessed per row
-    assert(rows.forall(r =>
-      r.getAs[Long]("rows_after") == r.getAs[Long]("rows_source")),
-      "a post-apply month census diverged from the source")
-    // quiet months report zero drift
-    assert(rows.filter(_.getAs[Long]("fired") == 0L)
-      .forall(_.getAs[Long]("late_rows") == 0L),
-      "a quiet month carried drift the gate ignored")
-    assert(sortedRows(RetailStar.q58StarFreshness(spark, dir)) ===
-      rows.map(_.toString).sorted.toSeq, "the verb is not deterministic")
-  }
-
-  test("materializeStar equals buildStar frame-for-frame (fact, product, " +
-    "shipping) — the shared cleaning pass changes nothing") {
-    val lazyStar = RetailStar.buildStar(spark, dir)
-    val shared = RetailStar.materializeStar(spark, dir)
-    assert(sortedRows(shared.fact) == sortedRows(lazyStar.fact),
-      "shared-pass fact must equal the lazy build's fact")
-    assert(sortedRows(shared.product) == sortedRows(lazyStar.product),
-      "shared-pass dim_product must equal the lazy build's")
-    assert(sortedRows(shared.shipping) == sortedRows(lazyStar.shipping),
-      "shared-pass dim_shipping must equal the lazy build's")
-  }
-
-  test("star warehouse substrate: the cloned standing tree equals a fresh " +
-    "writeFactPartitioned row-for-row, and clone-minus-partition equals the " +
-    "filtered write (q56's pre-load state)") {
-    import org.apache.spark.sql.functions._
-    val tmp = s"${tempDir("graft_r17o")}/graft_r17o_starwh_spec"
-    val fact = RetailStar.servedStar(spark, dir).fact
-    // fresh write — the pre-substrate staging the verbs used to run
-    graft.etl.Warehouse.writeFactPartitioned(fact, s"$tmp/direct")
-    // the substrate clone the verbs now start from
-    RetailStar.cloneWarehouse(spark, dir, s"$tmp/clone")
-    def rows(p: String) = sortedRows(
-      spark.read.schema(fact.schema).parquet(p))
-    assert(rows(s"$tmp/clone") == rows(s"$tmp/direct"),
-      "cloned standing warehouse must equal the fresh partitioned write")
-    // q56's pre-load state: clone minus the arriving month's partition
-    // dir ≡ writeFactPartitioned(fact without that month)
-    val lastKey = RetailStar.arrivingMonthKeys(spark, dir, 1).head
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(tmp).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/clone/month_key=$lastKey"), true)
-    graft.etl.Warehouse.writeFactPartitioned(
-      fact.filter(col("month_key") =!= lastKey), s"$tmp/direct_nolast")
-    assert(rows(s"$tmp/clone") == rows(s"$tmp/direct_nolast"),
-      "clone minus the arriving partition must equal the filtered write")
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
-
-  test("q58's staged stale warehouse (clone + late-window repack) equals the " +
-    "full filtered write it replaced") {
-    import org.apache.spark.sql.functions._
-    val tmp = s"${tempDir("graft_r17o")}/graft_r17o_stale_spec"
-    val fact = RetailStar.stageStaleWarehouse(spark, dir, s"$tmp/staged")
-    val lateKeys = RetailStar.arrivingMonthKeys(spark, dir, RetailStar.Q58LateMonths)
-    val isLate = col("month_key").isin(lateKeys: _*) &&
-      pmod(col("transaction_id"), lit(RetailStar.Q58LateMod)) === RetailStar.Q58LateDigit
-    graft.etl.Warehouse.writeFactPartitioned(fact.filter(!isLate), s"$tmp/direct")
-    def rows(p: String) = sortedRows(spark.read.schema(fact.schema).parquet(p))
-    assert(rows(s"$tmp/staged") == rows(s"$tmp/direct"),
-      "clone + late-window repack must equal the full filtered write")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(tmp).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 }
