@@ -35,7 +35,7 @@ object EtlDemo {
     // and the quarantine table: rejected rows WITH reason codes
     RetailClean.quarantine(raw).filter(col("reject_reason").isNotNull)
       .write.mode("overwrite").parquet(s"$out/quarantine")
-    println(s"cleaned=${cleaned.count()} fact=${spark.read.parquet(s"$out/fact_sales").count()} snap=${spark.read.parquet(s"$out/snapshot").count()} audit=${spark.read.parquet(s"$out/audit").count()}")
+    println(s"cleaned=${cleaned.count()} fact=${Tables.read(spark, s"$out/fact_sales").count()} snap=${Tables.read(spark, s"$out/snapshot").count()} audit=${Tables.read(spark, s"$out/audit").count()}")
     spark.stop()
   }
 }

@@ -333,7 +333,7 @@ object RetailStar {
       // never appended (the census hash would double otherwise)
       arriving.write.mode("overwrite").partitionBy("month_key").parquet(target)
     }
-    Warehouse.monthCensus(spark.read.schema(fact.schema).parquet(target))
+    Warehouse.monthCensus(Tables.read(spark, fact.schema, target))
   }
 
   /** The arriving month — the corpus's max month as a "MMyyyy" key
@@ -403,7 +403,7 @@ object RetailStar {
     // deletion gap is handled there, and pinned on a synthetic
     // all-victim month in Round17Spec — this corpus never empties one)
     Warehouse.eraseFromPartitionedFact(spark, target, fact.schema, victims)
-    Warehouse.monthCensus(spark.read.schema(fact.schema).parquet(target))
+    Warehouse.monthCensus(Tables.read(spark, fact.schema, target))
   }
 
   /** The deterministic late-arriving slice q58 measures: ~10% of the
@@ -472,7 +472,7 @@ object RetailStar {
     val decision = Warehouse.refreshDriftedMonths(spark, target,
       fact.schema, fact)
     // post-apply census witnessed from the refreshed warehouse itself
-    val post = Warehouse.monthCensus(spark.read.schema(fact.schema).parquet(target))
+    val post = Warehouse.monthCensus(Tables.read(spark, fact.schema, target))
       .select(col("month_key"), col("n_rows").as("rows_after"),
         col("total_amount").as("amount_after"))
     decision.join(post, Seq("month_key"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** Star-schema builders for the retail warehouse (reference:
   * README.md:38-147 dimensional model). Dimensions are generated or
   * distinct-projected from cleaned staging with deterministic
@@ -375,7 +377,7 @@ object Warehouse {
   def eraseFromPartitionedFact(spark: SparkSession, target: String,
                                schema: org.apache.spark.sql.types.StructType,
                                victims: DataFrame): Array[String] = {
-    val standing = spark.read.schema(schema).parquet(target)
+    val standing = Tables.read(spark, schema, target)
     // ONE pass decides everything (touched months AND the emptied
     // subset): per month, total rows vs victim rows from a broadcast
     // left join — the earlier two-collect form paid a separate
@@ -431,7 +433,7 @@ object Warehouse {
                            source: DataFrame): DataFrame = {
     val src = monthCensus(source)
       .select(col("month_key"), col("n_rows").as("rows_source"))
-    val wh = monthCensus(spark.read.schema(schema).parquet(target))
+    val wh = monthCensus(Tables.read(spark, schema, target))
       .select(col("month_key"), col("n_rows").as("rows_stale"))
     val decision = src.join(wh, Seq("month_key"), "left")
       .na.fill(0L, Seq("rows_stale"))

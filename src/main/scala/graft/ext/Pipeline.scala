@@ -365,6 +365,17 @@ object Pipeline {
         col("s1"), col("s2"), col("s3"), col("s4"), col("s5"), col("rate_ppm"))
   }
 
+  /** Distance from every pool doc's DSIR weight to t21's cut, the one
+    * float compare behind [[docFlagsDerived]]'s s4 (the persisted
+    * dsir_perdoc/dsir_cut tables hold exactly these values) — Round8Spec
+    * asserts it ≫ cross-engine ln/sum drift, as [[e4CutMargin]] does
+    * for e4's frozen cut. */
+  private[graft] def docFlagsCutMargin(spark: SparkSession, dir: String): Double = {
+    val perDoc = TextAnalysis.dsirPerDoc(spark, dir)
+    perDoc.crossJoin(broadcast(TextAnalysis.dsirCut(perDoc)))
+      .agg(min(abs(col("logw") - col("cut")))).collect()(0).getDouble(0)
+  }
+
   /** Per-WAVE docflags under the persisted model tables — st20's
     * micro-batch kernel: the [[docFlagsDerived]] chain restricted to
     * an arrived wave of document rows. Every stage is per-doc given
@@ -899,7 +910,7 @@ object Pipeline {
     val base = e10BaseBins(spark, dir)
     ensureArtifact(spark, dir, "bins_epochs/epoch=1", Seq("shard"))(
       appendEpochBins(docFlagsArtifact(spark, dir).filter(e4DeltaPred), base))
-    spark.read.parquet(e10Root(dir))
+    Tables.read(spark, e10Root(dir))
       .select(col("epoch").cast("int").as("epoch"),
         col("shard").cast("long").as("shard"),
         col("bin"), col("n_docs"), col("n_tokens"))
@@ -975,7 +986,7 @@ object Pipeline {
       binsFrom(docFlagsArtifact(spark, dir).filter(!e4DeltaPred && keep)))
     ensureArtifact(spark, dir, s"$tag/epoch=1", Seq("shard"))(
       appendEpochBins(docFlagsArtifact(spark, dir).filter(e4DeltaPred && keep), base))
-    spark.read.parquet(s"${eArtifactRoot(dir)}/$tag")
+    Tables.read(spark, s"${eArtifactRoot(dir)}/$tag")
       .select(col("epoch").cast("int").as("epoch"),
         col("shard").cast("long").as("shard"),
         col("bin"), col("n_docs"), col("n_tokens"))
@@ -1573,7 +1584,7 @@ object Pipeline {
       binsFrom(offboardDocflags(spark, dir).filter(!e4DeltaPred)))
     ensureArtifact(spark, dir, s"$offboardTag/bins/epoch=1", Seq("shard"))(
       appendEpochBins(offboardDocflags(spark, dir).filter(e4DeltaPred), base))
-    spark.read.parquet(s"${eArtifactRoot(dir)}/$offboardTag/bins")
+    Tables.read(spark, s"${eArtifactRoot(dir)}/$offboardTag/bins")
       .select(col("epoch").cast("int").as("epoch"),
         col("shard").cast("long").as("shard"),
         col("bin"), col("n_docs"), col("n_tokens"))
@@ -1728,7 +1739,7 @@ object Pipeline {
   def e18OffboardCutover(spark: SparkSession, dir: String): DataFrame = {
     val scratch = stageCutoverClone(spark, dir)
     cutoverSubtree(spark, scratch, offboardTag)
-    spark.read.parquet(s"$scratch/labels").orderBy(col("doc_id"))
+    Tables.read(spark, s"$scratch/labels").orderBy(col("doc_id"))
   }
 
   /** Clone the live + offboarded layer tables into the e18 scratch
@@ -1846,8 +1857,8 @@ object Pipeline {
     val dec = spark.createDataFrame(
       java.util.Arrays.asList(decRows: _*), decPlan.schema)
     if (fired) modelCutover(spark, scratch)
-    val perdoc = spark.read.parquet(s"$scratch/model_frozen/dsir_perdoc")
-    val cut = spark.read.parquet(s"$scratch/model_frozen/dsir_cut")
+    val perdoc = Tables.read(spark, s"$scratch/model_frozen/dsir_perdoc")
+    val cut = Tables.read(spark, s"$scratch/model_frozen/dsir_cut")
     val census = perdoc.crossJoin(broadcast(cut))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_scored"),
@@ -1935,7 +1946,7 @@ object Pipeline {
     // by the served rows, not inferred from the decision
     val scratch = stageModelClone(spark, dir, BpeModelLayers, "graft_e20_model")
     modelCutover(spark, scratch, BpeModelLayers)
-    val encPost = spark.read.parquet(s"$scratch/model_frozen/bpe_encoded_words")
+    val encPost = Tables.read(spark, s"$scratch/model_frozen/bpe_encoded_words")
       .select(col("word"), size(col("toks")).cast("long").as("ptok1"))
     val census = TextAnalysis.sourceWordFreqOn(spark, dir, e4DeltaPred)
       .join(encPost, Seq("word"))
@@ -2157,8 +2168,8 @@ object Pipeline {
       if (fired) {
         val scratch = stageModelClone(spark, dir, prefix = "graft_e22_model")
         modelCutover(spark, scratch)
-        (spark.read.parquet(s"$scratch/model_frozen/dsir_perdoc"),
-          spark.read.parquet(s"$scratch/model_frozen/dsir_cut"))
+        (Tables.read(spark, s"$scratch/model_frozen/dsir_perdoc"),
+          Tables.read(spark, s"$scratch/model_frozen/dsir_cut"))
       } else
         (frozenDsirPerDocArtifact(spark, dir), frozenDsirCutArtifact(spark, dir))
     perdoc.crossJoin(broadcast(cut))
@@ -2176,7 +2187,7 @@ object Pipeline {
                                 deltaChars: Map[String, Long]): Long = {
     val scratch = stageModelClone(spark, dir, BpeModelLayers, "graft_e22_bpe")
     modelCutover(spark, scratch, BpeModelLayers)
-    val encPost = spark.read.parquet(s"$scratch/model_frozen/bpe_encoded_words")
+    val encPost = Tables.read(spark, s"$scratch/model_frozen/bpe_encoded_words")
       .select(col("word"), size(col("toks")).cast("long").as("ptok1"))
     val ptok = TextAnalysis.sourceWordFreqOn(spark, dir, e4DeltaPred)
       .join(encPost, Seq("word"))
@@ -2200,7 +2211,7 @@ object Pipeline {
     // law must exercise the scenario q58 actually gates)
     val fact = RetailStar.stageStaleWarehouse(spark, dir, target)
     Warehouse.refreshDriftedMonths(spark, target, fact.schema, fact)
-    spark.read.schema(fact.schema).parquet(target).count()
+    Tables.read(spark, fact.schema, target).count()
   }
 
   /** e22's oracle: the five tiers' single-row (measure, threshold,

@@ -1057,8 +1057,8 @@ object Similarity {
     * append (Round8Spec pins stream ≡ batch on the codes table). */
   def appendIvfPqIndexFrom(spark: SparkSession, emb: DataFrame,
                            idxDir: String): Unit = {
-    val cen = spark.read.parquet(s"$idxDir/coarse_centroids")
-    val pcen = spark.read.parquet(s"$idxDir/pq_codebooks")
+    val cen = Tables.read(spark, s"$idxDir/coarse_centroids")
+    val pcen = Tables.read(spark, s"$idxDir/pq_codebooks")
     writeCodes(quantVecsOf(emb), pqSubVecsOf(emb), cen, pcen, idxDir,
       overwrite = false)
   }
@@ -1096,10 +1096,10 @@ object Similarity {
     * the probed, tombstone-filtered lists), distances exact int64. */
   private def ivfPqCandidateDistances(spark: SparkSession, dir: String,
                                       idxDir: String): DataFrame = {
-    val cen = spark.read.parquet(s"$idxDir/coarse_centroids")
-    val pcen = spark.read.parquet(s"$idxDir/pq_codebooks")
+    val cen = Tables.read(spark, s"$idxDir/coarse_centroids")
+    val pcen = Tables.read(spark, s"$idxDir/pq_codebooks")
     // partition column comes back type-inferred; pin it to long
-    val codes0 = spark.read.parquet(s"$idxDir/codes")
+    val codes0 = Tables.read(spark, s"$idxDir/codes")
       .withColumn("ccid", col("ccid").cast("long"))
     val delPath = new Path(s"$idxDir/deletes")
     val delFs = FileSystem.get(delPath.toUri, spark.sparkContext.hadoopConfiguration)
@@ -1135,7 +1135,7 @@ object Similarity {
     // pending tombstone here never masks a later re-insert.
     val codes =
       if (delFs.exists(delPath))
-        overlaid.join(broadcast(spark.read.parquet(delPath.toString)
+        overlaid.join(broadcast(Tables.read(spark, delPath.toString)
           .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
       else overlaid
     val qQv = quantVecs(spark, dir).filter(col("vec_id") < QueryCount)
@@ -1807,7 +1807,7 @@ object Similarity {
     ensureKnng(spark, dir, "graph_compacted") {
       val root = knngRoot(dir)
       deleteFromKnnGraph(spark, s26DeleteIds(spark, dir), root)
-      val del = spark.read.parquet(s"$root/graph_deletes")
+      val del = Tables.read(spark, s"$root/graph_deletes")
         .select(col("vec_id")).distinct()
       knngCompactKernel(knngGraphFrame(spark, dir), del,
         quantVecs(spark, dir).cache())
@@ -1836,7 +1836,7 @@ object Similarity {
     graft.store.recover(fs, live, next, aside)
     if (!fs.exists(ledger)) return
     val comp = knngCompactedGraph(spark, dir)
-    val del = spark.read.parquet(ledger.toString).select(col("vec_id")).distinct()
+    val del = Tables.read(spark, ledger.toString).select(col("vec_id")).distinct()
     // already-applied ids (a crash between swap and ledger clear, or
     // the builder's own first batch) leave no endpoint behind — skip
     // the rewrite, just clear
@@ -1873,7 +1873,7 @@ object Similarity {
     val served =
       if (fs.exists(ledger))
         knngAntiJoinDeleted(comp,
-          spark.read.parquet(ledger.toString).select(col("vec_id")).distinct())
+          Tables.read(spark, ledger.toString).select(col("vec_id")).distinct())
       else comp
     served.select(col("vec_id"), col("nb_id").as("neighbor_id"),
         col("d2_fp"), col("rank"))
@@ -2160,7 +2160,7 @@ object Similarity {
     val gap = hitReb - hitApp
     val fired = gap * 10000L > S29DriftBp * QueryCount * TopK
     if (fired) graphGenerationCutover(spark, scratch)
-    spark.read.parquet(s"$scratch/serve")
+    Tables.read(spark, s"$scratch/serve")
       .filter(col("vec_id") < QueryCount)
       .select(col("vec_id").as("query_id"), col("neighbor_id"), col("d2_fp"),
         col("rank"), lit(gap).as("hit_gap"),
@@ -2576,7 +2576,7 @@ object Similarity {
       compactIvfPqUpdates(spark, idxDir)
     recoverCompactScratch(fs, s"$idxDir/codes")
     if (!fs.exists(delPath)) return
-    val del = spark.read.parquet(delPath.toString).select(col("vec_id")).distinct()
+    val del = Tables.read(spark, delPath.toString).select(col("vec_id")).distinct()
     compactOutIds(spark, idxDir, del)
     fs.delete(delPath, true) // tombstones applied
   }
@@ -2622,7 +2622,7 @@ object Similarity {
     val codesDir = s"$idxDir/codes"
     val fs = FileSystem.get(new Path(codesDir).toUri,
       spark.sparkContext.hadoopConfiguration)
-    val codes = spark.read.parquet(codesDir).withColumn("ccid", col("ccid").cast("long"))
+    val codes = Tables.read(spark, codesDir).withColumn("ccid", col("ccid").cast("long"))
     val affected = codes.join(broadcast(del), Seq("vec_id"), "left_semi")
       .select(col("ccid")).distinct().collect().map(_.getLong(0)).sorted
     if (affected.nonEmpty) {
@@ -2735,7 +2735,7 @@ object Similarity {
     // stays O(updates).
     val pendingDel = new Path(s"$idxDir/deletes")
     if (fs.exists(pendingDel)) {
-      val overlap = spark.read.parquet(pendingDel.toString)
+      val overlap = Tables.read(spark, pendingDel.toString)
         .join(broadcast(newEmb.select(col("vec_id"))), Seq("vec_id"), "left_semi")
         .limit(1).count() > 0
       if (overlap) compactIvfPqDeletes(spark, idxDir)
@@ -2755,8 +2755,8 @@ object Similarity {
             fs.delete(p, true)
         }
     val nextGen = (committed + 0L).max + 1L
-    val cen = spark.read.parquet(s"$idxDir/coarse_centroids")
-    val pcen = spark.read.parquet(s"$idxDir/pq_codebooks")
+    val cen = Tables.read(spark, s"$idxDir/coarse_centroids")
+    val pcen = Tables.read(spark, s"$idxDir/pq_codebooks")
     val lists = rankCentroids(quantVecsOf(newEmb), cen).filter(col("r") === 1)
       .select(col("vec_id"), col("cid").as("ccid"))
     pqCodes(pqSubVecsOf(newEmb), pcen).join(lists, Seq("vec_id"))
@@ -2803,7 +2803,7 @@ object Similarity {
   private def ledgerLive(spark: SparkSession, genPath: Path): (DataFrame, DataFrame) = {
     val fs = FileSystem.get(genPath.toUri, spark.sparkContext.hadoopConfiguration)
     val committed = committedGens(fs, genPath).toSeq.sorted
-    val gen = spark.read.parquet(genPath.toString)
+    val gen = Tables.read(spark, genPath.toString)
       .select(col("vec_id"), col("sub"), col("cid"),
         col("ccid").cast("long").as("ccid"), col("gen").cast("long").as("gen"))
       .filter(col("gen").isin(committed: _*))
@@ -2932,7 +2932,7 @@ object Similarity {
     val liveEmb =
       if (!fs.exists(delPath)) Tables.embeddings(spark, dir)
       else Tables.embeddings(spark, dir)
-        .join(broadcast(spark.read.parquet(delPath.toString)
+        .join(broadcast(Tables.read(spark, delPath.toString)
           .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
     buildIvfPqIndexOn(spark, liveEmb, staging.toString, lit(true), lit(true))
     // a missing live root is NOT an error — retrain doubles as CREATE
@@ -3092,7 +3092,7 @@ object Similarity {
   private[graft] def e22GraphFiredApply(spark: SparkSession, dir: String): Long = {
     val scratch = stageS29Clone(spark, dir, "graft_e22_graph")
     graphGenerationCutover(spark, scratch)
-    val served = spark.read.parquet(s"$scratch/serve")
+    val served = Tables.read(spark, s"$scratch/serve")
       .filter(col("vec_id") < QueryCount)
       .select(col("vec_id"), col("neighbor_id").as("nb_id"))
     knngExactTruth(spark, dir).select(col("vec_id"), col("nb_id"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
+
 /** Small-file compaction — the maintenance op every incremental
   * warehouse needs: streaming upserts and per-batch appends
   * accumulate kilobyte-sized part files whose per-file open/footer
@@ -47,7 +49,7 @@ object Compact {
       s"no parquet part files directly under $dir — for a partitioned table, " +
         "compact each partition directory")
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(dir)
+    val df = Tables.read(spark, dir)
     val out = if (shuffle) df.repartition(n) else df.coalesce(n)
     out.write.mode("overwrite").parquet(tmp.toString)
     graft.store.swap(fs, p, tmp, old)

@@ -1010,13 +1010,13 @@ object AdvancedQueries {
       writes.foreach(Await.result(_, Duration.Inf))
       val pred = col("l_partkey").between(100, 120)
       def touched(p: String): Long =
-        spark.read.parquet(p).filter(pred).select(input_file_name()).distinct().count()
+        Tables.read(spark, p).filter(pred).select(input_file_name()).distinct().count()
       // the three probe jobs are independent too; the integrity counts
       // fuse into ONE scan of the z-ordered copy (count(when) ≡
       // filter.count: both count exactly the pred-true rows)
       val probes = (
         Future {
-          spark.read.parquet(zed)
+          Tables.read(spark, zed)
             .agg(count(lit(1)), count(when(pred, lit(1)))).collect()(0)
         },
         Future { touched(zed) },

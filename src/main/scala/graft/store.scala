@@ -140,7 +140,7 @@ object store {
       writeTable(build, path.toString, partitionCols)
     val in = fs.open(new Path(path, SchemaSidecar))
     val ddl = try new String(in.readAllBytes(), UTF_8) finally in.close()
-    spark.read.schema(StructType.fromDDL(ddl)).parquet(path.toString)
+    Tables.read(spark, StructType.fromDDL(ddl), path.toString)
   }
 
   /** Write `df` as a complete table at `path` (parquet + sidecar). */
@@ -168,7 +168,7 @@ object store {
     val ok = new Path(table, JobCommit)
     if (!fs.exists(ok)) fs.create(ok, true).close()
     if (!fs.exists(new Path(table, SchemaSidecar)))
-      writeSidecar(fs, table, spark.read.parquet(table.toString).schema.toDDL)
+      writeSidecar(fs, table, Tables.schemaOf(spark, table.toString).toDDL)
   }
 
   // ------------------------------------------------------------------

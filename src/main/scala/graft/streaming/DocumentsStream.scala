@@ -129,7 +129,7 @@ object DocumentsStream {
           .filter(!Pipeline.e4DeltaPredOn("doc_id"))
         val prior =
           if (priorDirs.isEmpty) baseSigs
-          else baseSigs.unionByName(spark.read.parquet(priorDirs: _*))
+          else baseSigs.unionByName(Tables.read(spark, priorDirs: _*))
         val arrived = prior.unionByName(sigsB)
         // broadcastNew: the wave is trigger-bounded, so its band rows
         // broadcast and the corpus-sized arrived bands are never
@@ -448,7 +448,7 @@ object DocumentsStream {
           .join(retired, Seq("doc_id"), "left_anti")
         val priorSigDirs = st.dirs("sigs")
         val arrived = (if (priorSigDirs.isEmpty) survivorSigs
-          else survivorSigs.unionByName(spark.read.parquet(priorSigDirs: _*)))
+          else survivorSigs.unionByName(Tables.read(spark, priorSigDirs: _*)))
           .unionByName(sigsB)
         // broadcastNew: trigger-bounded wave bands vs the corpus-sized
         // survivor state — probe in place, never shuffle it (guide §3.1)
@@ -463,8 +463,7 @@ object DocumentsStream {
         val arrivedDocs = (if (priorDocDirs.isEmpty)
             batch.select(col("doc_id"), col("text"))
           else batch.select(col("doc_id"), col("text"))
-            .unionByName(spark.read.schema(updateDocSchema)
-              .parquet(priorDocDirs: _*)))
+            .unionByName(Tables.read(spark, updateDocSchema, priorDocDirs: _*)))
         val curDocs = Tables.documents(spark, dir)
           .select(col("doc_id"), col("text"))
           .join(retired, Seq("doc_id"), "left_anti")

@@ -68,7 +68,7 @@ object EventsStream {
       else fs.listStatus(st.getPath).exists(hasParquet)
     val rawSchema = schemaOverride.getOrElse {
       if (fs.exists(dirPath) && hasParquet(fs.getFileStatus(dirPath)))
-        spark.read.parquet(dir).schema
+        Tables.schemaOf(spark, dir)
       else defaultRawSchema
     }
     Tables.normalizeEventTs(
@@ -405,7 +405,7 @@ object EventsStream {
     val cols = batch.columns.map(col).toSeq
     val merged =
       if (!fs.exists(dir)) batch.select(cols: _*)
-      else spark.read.parquet(target)
+      else Tables.read(spark, target)
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .select(cols: _*)
         .union(batch.select(cols: _*))
@@ -433,8 +433,8 @@ object EventsStream {
     // an empty update batch cannot change the snapshot — and writing
     // it would POISON a fresh target: a partitionBy write of a
     // zero-row frame creates the dir with only _SUCCESS (no
-    // schema-bearing part file), so every later merge would fail at
-    // spark.read.parquet with "Unable to infer schema" (a
+    // schema-bearing part file), so every later merge's read would fail
+    // with "Unable to infer schema" (a
     // watermark-advance batch on a restarted stream is exactly this)
     if (batch.isEmpty) return
     val dir = new Path(target)
@@ -445,7 +445,7 @@ object EventsStream {
       if (!fs.exists(dir)) withDay.select(cols: _*)
       else {
         val touched = withDay.select(col("day")).distinct()
-        spark.read.parquet(target)
+        Tables.read(spark, target)
           .join(broadcast(touched), Seq("day"), "left_semi")
           .join(withDay.select(keyCols.map(col): _*), keyCols, "left_anti")
           .select(cols: _*)
@@ -550,7 +550,7 @@ object EventsStream {
     // looks like anyway; the convergence argument is unchanged (and
     // strictly: batch-2 rows sit ABOVE batch 1's max ts, so the
     // watermark can never drop one).
-    val all = spark.read.parquet(s"$dir/events.parquet")
+    val all = Tables.read(spark, s"$dir/events.parquet")
     val mm = all.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).collect()(0)
     val lo = mm.getAs[java.time.LocalDateTime]("lo")
     val hi = mm.getAs[java.time.LocalDateTime]("hi")
@@ -591,7 +591,7 @@ object EventsStream {
     }
     // post-merge census: per-window totals rounded to cents FIRST
     // (st1's proven cross-engine edge), then summed and re-rounded
-    spark.read.parquet(target)
+    Tables.read(spark, target)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_windows"),
         sum(col("n_events")).as("n_events"),

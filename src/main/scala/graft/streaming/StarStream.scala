@@ -101,7 +101,7 @@ object StarStream {
     // converged census, schema-pinned read (q56's discipline: the
     // zero-padded MMyyyy partition values must stay strings)
     graft.etl.Warehouse.monthCensus(
-      spark.read.schema(fact.schema).parquet(target))
+      Tables.read(spark, fact.schema, target))
   }
 
   /** st25's second erasure wave (the first is q57's digit-7 slice):
@@ -178,7 +178,7 @@ object StarStream {
       }
     }.stop()
     graft.etl.Warehouse.monthCensus(
-      spark.read.schema(factSchema).parquet(target))
+      Tables.read(spark, factSchema, target))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
+
 /** The content-keyed, marker-gated WAVE-COMMIT protocol — ONE
   * definition shared by every streaming ledger family in the library
   * (the pair graph's st13/st19, the kNN graph's st15/st16, the IVF
@@ -136,7 +138,7 @@ private[graft] object WaveLedger {
     * zero-path parquet read would throw. */
   def readOrEmpty(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame =
     if (dirs.isEmpty) spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
+    else Tables.read(spark, schema, dirs: _*)
 
   /** Run `work` for this wave exactly once (see object doc). An
     * empty wave contributes nothing and is not committed. */
@@ -214,7 +216,7 @@ private[graft] object WaveLedger {
   private[graft] def ledgerState(spark: SparkSession, base: String): LedgerState = {
     val gen = committedGens(spark, base).lastOption
     val folded = gen.map(g =>
-      spark.read.parquet(new Path(g, "folded").toString)
+      Tables.read(spark, new Path(g, "folded").toString)
         .collect().map(_.getString(0)).toSet)
       .getOrElse(Set.empty[String])
     LedgerState(gen, folded,
@@ -259,8 +261,8 @@ private[graft] object WaveLedger {
       import scala.concurrent.duration.Duration
       subs.map { case (sub, schema) =>
         Future {
-          val rd = schema.fold(spark.read)(s => spark.read.schema(s))
-          rd.parquet(st.dirs(sub): _*)
+          val dirs = st.dirs(sub)
+          schema.fold(Tables.read(spark, dirs: _*))(s => Tables.read(spark, s, dirs: _*))
             .write.mode("overwrite").parquet(new Path(next, sub).toString)
         }
       }.foreach(Await.result(_, Duration.Inf))

@@ -193,6 +193,11 @@ class Round8Spec extends AnyFunSuite with GraftSuite {
     assert(margin > 1e-6, s"frozen-cut margin $margin too close to float drift")
   }
 
+  test("docflags s4: every pool doc sits measured-margin clear of t21's cut") {
+    val margin = Pipeline.docFlagsCutMargin(spark, dir)
+    assert(margin > 1e-6, s"t21-cut margin $margin too close to float drift")
+  }
+
   test("m7: a 1-byte-perturbed payload lands in its original's cluster; unrelated stays out") {
     import spark.implicits._
     import graft.ext.Multimodal

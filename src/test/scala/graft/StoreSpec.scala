@@ -264,6 +264,20 @@ class StoreSpec extends AnyFunSuite with GraftSuite {
       "hand-rolled tree copy: route clones through graft.store.cloneTree")
   }
 
+  test("one read path: no `.read.parquet(`, `.read.schema(` or `.read.option(` " +
+    "in src/main outside Tables.scala and its footer shim, but readFactEvolved's " +
+    "mergeSchema read") {
+    val evolved = """spark.read.option("mergeSchema", "true").parquet(path)"""
+    val shim = "org/apache/spark/sql/execution/datasources/parquet/FooterSchema.scala"
+    val hand = Seq(".read.parquet(", ".read.schema(", ".read.option(").flatMap { needle =>
+      offenders(needle, allow = (rel, src) =>
+        if (rel == "graft/etl/Warehouse.scala") src.replace(evolved, "")
+        else allowFiles("graft/Tables.scala", shim)(rel, src))
+    }.distinct
+    assert(hand.isEmpty, s"hand-rolled parquet read in $hand: read through " +
+      "Tables.read/schemaOf, which resolve it without a Spark job")
+  }
+
   test("one month writer: no month_key repartition in src/main outside " +
     "Warehouse.writeFactPartitioned") {
     val needle = "repartition(col(\"month_key\"))"
